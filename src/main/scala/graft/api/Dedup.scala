@@ -155,19 +155,24 @@ object Dedup {
     * Intersection size via the sorted-merge kernel (r18): the shingle
     * arrays are sorted distinct at every producer, so the count equals
     * size(array_intersect(...)) with no per-pair hash set or
-    * intersection-array allocation (AbIntersectKernel: 7.3×). */
-  private[api] def verify(pairs: DataFrame, threshold: Double): DataFrame =
+    * intersection-array allocation (AbIntersectKernel: 7.3×). Output
+    * (self, other, jaccard) for the (doc_a, doc_b) of each pair. */
+  private def verify(pairs: DataFrame, threshold: Double,
+                     self: String = "doc_a", other: String = "doc_b"): DataFrame =
     pairs
       .withColumn("inter", sortedIntersectCount(col("sh_a"), col("sh_b")))
       .withColumn("jx",
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
       .filter(col("jx") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jx"), 6).as("jaccard"))
+      .select(col("doc_a").as(self), col("doc_b").as(other),
+        round(col("jx"), 6).as("jaccard"))
 
-  private[api] def joinBack(cand: DataFrame, docs: DataFrame): DataFrame =
+  /** A (doc_a, doc_b) candidate frame joined with the (doc_id, sh, n)
+    * sets of its a side and its b side. */
+  private def joinBack(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame =
     cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
-      .join(docs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"), col("n").as("n_b")), "doc_b")
+      .join(a.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
+      .join(b.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"), col("n").as("n_b")), "doc_b")
 
   /** EXACT near-dup pairs at Jaccard ≥ threshold via the prefix-filtered
     * similarity join (PPJoin family): index only the ⌊(1-t)·n⌋+1
@@ -221,7 +226,7 @@ object Dedup {
             (col("a.n") + col("b.n")) * lit(threshold / (1 + threshold)) - candEps)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    verify(joinBack(cand, sets), threshold)
+    verify(joinBack(cand, sets, sets), threshold)
   }
 
   /** EXACT directed CONTAINMENT pairs: (inner, outer) where
@@ -721,8 +726,9 @@ object Dedup {
     * re-hash every shingle (the build/append/LSH/suppressor paths —
     * guide §1.2: don't compute the same expensive thing twice).
     *
-    * Two deliberate shape choices, both measured (AbNearDupSuppress /
-    * AbNearDupBuild, first iteration of this rewrite):
+    * Two deliberate shape choices, both measured in the first
+    * iteration of this rewrite (bench_ab_r17_neardup.json,
+    * bench_ab_r17_neardupsuppress.json):
     * - banding is folded INTO the pass, so the materialized row
     *   carries `bands` 8-byte bucket keys (128 B at the 64/16
     *   defaults) instead of the raw `hashes` minhash array (512 B) —
@@ -735,16 +741,19 @@ object Dedup {
     *   expression evaluates exactly once per row (pinned by
     *   ShingleSketchSpec's optimized-plan assertion). */
   private def sketchSig(docs: DataFrame, idCol: String, textCol: String,
-                        shingle: Int, hashes: Int, bands: Int): DataFrame = {
-    require(hashes % bands == 0, "hashes must divide evenly into bands")
-    val rowsPerBand = hashes / bands
+                        shingle: Int, hashes: Int, bands: Int): DataFrame =
     docs.select(col(idCol).as("doc_id"),
         shingleSketch(lower(col(textCol)), shingle, hashes).as("__sk"))
-      .select(col("doc_id"), col("__sk.sh").as("sh"),
-        size(col("__sk.sh")).as("n"),
-        transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, slice(col("__sk.mh"), b * lit(rowsPerBand) + 1,
-            lit(rowsPerBand)))).as("bkeys"))
+      .select(col("doc_id") +: sketchCols("__sk", hashes, bands): _*)
+
+  /** (sh, n, bkeys) from the sketch struct column `sk`. */
+  private def sketchCols(sk: String, hashes: Int, bands: Int): Seq[Column] = {
+    require(hashes % bands == 0, "hashes must divide evenly into bands")
+    val rowsPerBand = hashes / bands
+    Seq(col(s"$sk.sh").as("sh"), size(col(s"$sk.sh")).as("n"),
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => xxhash64(b, slice(col(s"$sk.mh"), b * lit(rowsPerBand) + 1,
+          lit(rowsPerBand)))).as("bkeys"))
   }
 
   /** The [[shingleSets]] schema (doc_id, sh, n) from a [[sketchSig]]
@@ -773,509 +782,194 @@ object Dedup {
       sketchSig(docs, idCol, textCol, shingle, hashes, bands))
     val sets = setsFromSig(sk)
     val bb = bandsFromSig(sk)
-    try {
-      val cand = bb.as("a").join(bb.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      PlanAudit.checkpoint(verify(joinBack(cand, sets), threshold))
-    } finally releaseCheckpoint(sk)
+    try PlanAudit.checkpoint(verify(joinBack(
+      bandCandidates(bb, bb, ordered = true), sets, sets), threshold))
+    finally releaseCheckpoint(sk)
+  }
+
+  /** Distinct (doc_a, doc_b) pairs colliding in some (band, bkey)
+    * bucket; `ordered` keeps only doc_a < doc_b (a self-join). */
+  private def bandCandidates(a: DataFrame, b: DataFrame, ordered: Boolean): DataFrame = {
+    val on = col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey")
+    a.as("a").join(b.as("b"), if (ordered) on && col("a.doc_id") < col("b.doc_id") else on)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  /** The MinHash near-dup family of [[BandedIndex]]. Layout under the
+    * index root:
+    *   sketches/ (doc_id, sh, n) — sorted 64-bit shingle-hash sets for
+    *             exact-Jaccard verification (the price of exactness:
+    *             ~text-sized, but recomputing them per increment would
+    *             cost a full corpus re-read)
+    *   bands/    (doc_id, bkey) partitioned by band — the LSH
+    *             candidate-join side
+    * A doc's band rows land in EVERY band partition (that is what makes
+    * it findable), so deletes rewrite both tables in full. */
+  private object NearDupIndex extends BandedIndex("near-dup",
+      Seq("shingle", "hashes", "bands"),
+      Seq(IndexTable("sketches", None, Seq("doc_id", "sh", "n")),
+        IndexTable("bands", Some("band"), Seq("doc_id", "bkey", "band")))) {
+    def validate(p: Seq[Int]): Unit =
+      require(p(1) % p(2) == 0, "hashes must divide evenly into bands")
+    def partitions(p: Seq[Int]): Int = p(2)
+    def sigFrame(docs: DataFrame, idCol: String, textCol: String, p: Seq[Int]): DataFrame =
+      sketchSig(docs, idCol, textCol, p(0), p(1), p(2))
+    def views(sig: DataFrame): Views =
+      Map("sketches" -> setsFromSig(sig), "bands" -> bandsFromSig(sig))
+    // a lazy lookup reads each form in its own branch: two narrow
+    // projections, not the combined sketch twice
+    override def lookupViews(docs: DataFrame, idCol: String, textCol: String,
+                             p: Seq[Int]): Views =
+      Map("sketches" -> shingleSets(docs, idCol, textCol, p(0)),
+        "bands" -> bandedSignatures(docs, idCol, textCol, p(0), p(1), p(2)))
+    // r18: the sketch rides the batch checkpoint (it is a projection of
+    // the batch — a second checkpoint was a second job per commit)
+    override def batchSketch(textCol: String, p: Seq[Int]): Option[Column] =
+      Some(shingleSketch(lower(col(textCol)), p(0), p(1)))
+    override def batchViews(ck: DataFrame, idCol: String, textCol: String,
+                            p: Seq[Int]): Views =
+      views(ck.select(col(idCol).as("doc_id") +: sketchCols("__gsig", p(1), p(2)): _*))
+    // candidates: banded (band, bkey) equi-join, verified with exact
+    // Jaccard; within a batch, the prefix-filtered PPJoin over the sets
+    def pairs(a: Views, b: Views, p: Seq[Int], threshold: Double, within: Boolean,
+              self: String, other: String): DataFrame =
+      if (within)
+        pairsFromSets(a("sketches"), threshold)
+          .select(col("doc_b").as(self), col("doc_a").as(other), col("jaccard"))
+      else verify(joinBack(bandCandidates(a("bands"), b("bands"), ordered = false),
+        a("sketches"), b("sketches")), threshold, self, other)
+    val explainNames: (String, String) = ("doc_a", "doc_b")
+    val scoreCol = "score"
+    // highest jaccard, ties -> lowest match id (the q162 argmax shape)
+    def best(pairs: DataFrame): DataFrame = pairs
+      .groupBy(col("doc_a"))
+      .agg(max(col("jaccard")).as("score"),
+        min(struct((lit(1d) - col("jaccard")).as("negj"),
+          col("doc_b").as("doc_b"))).as("w"))
+      .select(col("doc_a"), col("w.doc_b").as("match_id"), col("score"))
   }
 
   /** Persisted MinHash-LSH near-dup index — the signature state of an
     * already-curated corpus written ONCE, so daily increments can
     * near-dedup against a 100 TB corpus without re-reading or
     * re-shingling it (the near-dup analogue of [[exactAgainstCorpus]]'s
-    * fingerprint set, and of the persisted IVF index's
-    * build/append/search lifecycle). Layout under `path`:
-    *   bands/    (band, bkey, doc_id) — partitioned by band; the
-    *             LSH candidate-join side (bands × corpus-rows keys)
-    *   sketches/ (doc_id, sh, n) — sorted 64-bit shingle-hash sets for
-    *             exact-Jaccard verification (the price of exactness:
-    *             ~text-sized, proportional to the corpus — recomputing
-    *             them per increment would cost a full corpus re-read)
-    *   params/   one row (shingle, hashes, bands) so increments
-    *             provably hash the same way the index was built
-    *
-    * Crash safety: a fresh build writes the legacy layout at `path`;
-    * once a [[deleteFromNearDupIndex]] has versioned the index (v-dirs
-    * + `_current` pointer, the [[graft.api.Similarity.reindex]]
-    * discipline), every rewrite — including a re-build over the same
-    * path — lands in a fresh version dir and commits atomically, so no
-    * crash can leave bands/sketches inconsistent. */
+    * fingerprint set). One shingling pass materializes the combined
+    * sketch once and both tables derive from it. Layout, versioning and
+    * crash safety: `NearDupIndex` / [[BandedIndex]]. */
   def buildNearDupIndex(docs: DataFrame, path: String,
                         idCol: String = "doc_id", textCol: String = "text",
                         shingle: Int = 3, hashes: Int = 64,
-                        bands: Int = 16): Unit = {
-    require(hashes % bands == 0, "hashes must divide evenly into bands")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val versioned = VersionedIndex.resolveRoot(spark, path) != path
-    val next = if (versioned) Some(VersionedIndex.nextVersion(spark, path)) else None
-    val target = next.fold(path)(v => s"$path/$v")
-    Seq((shingle, hashes, bands)).toDF("shingle", "hashes", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
-    // ONE corpus pass (r17): the legacy build ran two independent write
-    // jobs that each re-read and re-shingled the corpus (bands via
-    // minHashes, sketches via distinctShingleHashes). The combined
-    // sketch materializes once — commit-scoped, released below — and
-    // both tables derive from it; rows are bit-identical (same hash
-    // stream feeds both accumulators).
-    val sk = PlanAudit.checkpoint(
-      sketchSig(docs, idCol, textCol, shingle, hashes, bands))
-    try {
-      bandsFromSig(sk)
-        .write.mode("overwrite").partitionBy("band").parquet(s"$target/bands")
-      setsFromSig(sk)
-        .write.mode("overwrite").parquet(s"$target/sketches")
-    } finally releaseCheckpoint(sk)
-    next.foreach(v => VersionedIndex.commitPointer(spark, path, v))
-  }
+                        bands: Int = 16): Unit =
+    NearDupIndex.build(docs, path, idCol, textCol, Seq(shingle, hashes, bands))
 
   /** Vacuum superseded near-dup index versions (see
     * [[graft.api.Similarity.vacuumIndexVersions]]) — run only when no
     * reader may still hold a pre-swap resolution. */
   def vacuumNearDupIndexVersions(spark: org.apache.spark.sql.SparkSession,
                                  path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path, Seq("params", "bands", "sketches"))
+    NearDupIndex.vacuum(spark, path)
 
-  /** Compact a persisted near-dup index: daily appends leave one file
-    * set per batch, and after months of increments every band-bucket
-    * probe opens hundreds of small parquet files — the classic
-    * small-files tax. Rewrites the CURRENT version's tables into one
-    * file per band partition (and `sketchFiles` sketch files) and
-    * commits behind the same atomic `_current` pointer as delete/
-    * rebuild: readers see the old file set until the one commit point,
-    * a crash leaves the index untouched, and the data is IDENTICAL —
-    * compaction changes layout, never results (pinned by spec).
-    * Vacuum afterwards to reclaim the superseded version. */
+  /** Compact a persisted near-dup index — after months of daily
+    * appends every band-bucket probe opens hundreds of small files —
+    * into one file per band partition (and `sketchFiles` sketch files)
+    * behind the atomic `_current` pointer; the data is IDENTICAL. */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, sketchFiles: Int = 8): Unit = {
     require(sketchFiles >= 1, s"sketchFiles must be >= 1, got $sketchFiles")
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (_, _, bands) = readNearDupParams(spark, root) // loud on missing index
-    val next = VersionedIndex.nextVersion(spark, path)
-    val vdir = s"$path/$next"
-    spark.read.parquet(s"$root/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-    spark.read.parquet(s"$root/sketches")
-      .repartition(sketchFiles)
-      .write.mode("overwrite").parquet(s"$vdir/sketches")
-    // repartition BY band: each task holds only whole bands, so every
-    // band=<b> dir lands as a single file
-    spark.read.parquet(s"$root/bands")
-      .repartition(bands, col("band"))
-      .select(col("doc_id"), col("bkey"), col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$vdir/bands")
-    VersionedIndex.commitPointer(spark, path, next)
-  }
-
-  /** Read params from an already-RESOLVED index root. */
-  private def readNearDupParams(spark: org.apache.spark.sql.SparkSession,
-                                root: String): (Int, Int, Int) = {
-    val rows = spark.read.parquet(s"$root/params")
-      .select("shingle", "hashes", "bands").collect()
-    require(rows.length == 1, s"no near-dup index at $root")
-    (rows(0).getInt(0), rows(0).getInt(1), rows(0).getInt(2))
+    NearDupIndex.compact(spark, path, sketchFiles)
   }
 
   /** Append documents to a persisted near-dup index under the INDEX'S
-    * OWN parameters (hashing differently from the build would silently
-    * disable matching against the old rows). Append the survivors of
-    * [[nearDupAgainstIndex]], not the raw batch, to keep the index
-    * duplicate-free. Sketches append BEFORE bands: a crash in between
-    * leaves orphan sketch rows — inert, since only band rows generate
-    * candidates — whereas the reverse order would leave band rows whose
-    * candidates can never verify. Either way no PREVIOUSLY indexed doc
-    * is affected; re-append the batch after a crash. */
+    * OWN parameters; append the survivors of [[nearDupAgainstIndex]] to
+    * keep it duplicate-free. Sketches append BEFORE bands: a crash in
+    * between leaves orphan sketch rows, inert since only band rows
+    * generate candidates. Re-append the batch after a crash. */
   def appendToNearDupIndex(docs: DataFrame, path: String,
                            idCol: String = "doc_id",
-                           textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (shingle, hashes, bands) = readNearDupParams(spark, root)
-    // one shingling pass for both signature tables (r17); sketches
-    // still append BEFORE bands (the crash rule above)
-    val sk = PlanAudit.checkpoint(
-      sketchSig(docs, idCol, textCol, shingle, hashes, bands))
-    try {
-      setsFromSig(sk)
-        .write.mode("append").parquet(s"$root/sketches")
-      bandsFromSig(sk)
-        .write.mode("append").partitionBy("band").parquet(s"$root/bands")
-    } finally releaseCheckpoint(sk)
-  }
+                           textCol: String = "text"): Unit =
+    NearDupIndex.append(docs, path, idCol, textCol)
 
   /** Delete documents from a persisted near-dup index WITHOUT touching
-    * corpus text (takedowns / re-curation): one distributed anti-join
-    * pass over each signature table. Unlike the IVF cell-store delete,
-    * no partition pruning is possible here: a doc's signature rows land
-    * in EVERY band partition (that is exactly what makes it findable),
-    * so both tables rewrite in full — the honest cost of a delete at
-    * takedown rates; what the index still saves is any re-read or
-    * re-shingle of the corpus.
-    *
-    * CRASH-ATOMIC: survivors are written to a fresh `v<N>` dir and the
-    * `_current` pointer flips by atomic rename (the
-    * [[graft.api.Similarity.reindex]] discipline). A crash at any
-    * earlier point leaves the old version fully live — never a
-    * bands/sketches mix that silently stops matching. Writing to a new
-    * dir also removes the read-then-overwrite hazard, so no
-    * checkpointing of survivors is needed. Returns the number of
-    * indexed docs removed; 0 leaves the index untouched. */
+    * corpus text (takedowns / re-curation): one anti-join rewrite of
+    * each signature table into a fresh version, committed atomically —
+    * never a bands/sketches mix that silently stops matching. Returns
+    * the number of indexed docs removed; 0 leaves the index untouched. */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, ids: DataFrame,
-                             idCol: String = "doc_id"): Long = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    readNearDupParams(spark, root) // fail loudly on a missing index
-    val sketches = spark.read.parquet(s"$root/sketches")
-    // cast the DELETE side to the index's stored id dtype — the index
-    // accepts any id type at build, so casting the index side (or
-    // hard-casting to long) would silently match nothing for e.g.
-    // string ids
-    val idType = sketches.schema("doc_id").dataType
-    val del = ids.select(col(idCol).cast(idType).as("__del_id")).distinct()
-      .localCheckpoint()
-    try {
-      val nDel = sketches
-        .join(del, sketches("doc_id") === del("__del_id"), "left_semi").count()
-      if (nDel == 0) return 0L
-      val next = VersionedIndex.nextVersion(spark, path)
-      val vdir = s"$path/$next"
-      spark.read.parquet(s"$root/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-      sketches
-        .join(del, sketches("doc_id") === del("__del_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$vdir/sketches")
-      val bands = spark.read.parquet(s"$root/bands")
-      bands
-        .join(del, bands("doc_id") === del("__del_id"), "left_anti")
-        .select(col("doc_id"), col("bkey"), col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(s"$vdir/bands")
-      VersionedIndex.commitPointer(spark, path, next)
-      nDel
-    } finally del.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
+                             idCol: String = "doc_id"): Long =
+    NearDupIndex.delete(spark, path, ids, idCol)
 
   /** Incremental NEAR-dup dedup: the fresh batch's rows that have no
     * Jaccard ≥ threshold match in the indexed corpus, original columns
     * intact. Candidates come from the banded equi-join on (band, bkey)
-    * — cost ∝ band collisions, never fresh × corpus — and are verified
-    * with EXACT Jaccard against the stored sketches, so (as with
+    * — cost ∝ band collisions, never fresh × corpus — verified with
+    * EXACT Jaccard against the stored sketches, so (as with
     * [[minHashLshPairs]]) the only error mode is an LSH-missed pair at
-    * the threshold boundary. The fresh side of both joins is a daily
-    * batch — orders of magnitude smaller than the index; AQE broadcasts
-    * it unhinted; the index side reads only the two signature tables,
-    * never corpus text. Within-batch near-dups are out of scope by
-    * design — compose [[minHashLshPairs]] + [[keepOne]] over the
-    * survivors (the within-batch and against-corpus passes answer
-    * different questions; an index op should not hide one inside the
-    * other). */
+    * the threshold boundary; the index side never reads corpus text.
+    * Within-batch near-dups are out of scope by design — compose
+    * [[minHashLshPairs]] + [[keepOne]] over the survivors. */
   def nearDupAgainstIndex(fresh: DataFrame, path: String,
                           threshold: Double = 0.8,
                           idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val spark = fresh.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (shingle, hashes, bands) = readNearDupParams(spark, root)
-    val freshBands = bandedSignatures(fresh, idCol, textCol, shingle, hashes, bands)
-    val indexBands = spark.read.parquet(s"$root/bands")
-    val cand = freshBands.as("a").join(indexBands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val freshSets = shingleSets(fresh, idCol, textCol, shingle)
-    val indexSets = spark.read.parquet(s"$root/sketches")
-    val pairs = cand
-      .join(freshSets.select(col("doc_id").as("doc_a"),
-        col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
-      .join(indexSets.select(col("doc_id").as("doc_b"),
-        col("sh").as("sh_b"), col("n").as("n_b")), "doc_b")
-    val matched = verify(pairs, threshold)
-      .select(col("doc_a").as("__dup_id")).distinct()
-    fresh.join(matched, fresh(idCol) === col("__dup_id"), "left_anti")
-  }
+                          textCol: String = "text"): DataFrame =
+    NearDupIndex.againstIndex(fresh, path, idCol, textCol, threshold)
 
-  /** One commit unit of CONTINUOUS near-dup curation: suppress the
-    * batch against the persisted index, then within itself, then add
-    * the survivors to the index — the per-micro-batch body of
-    * [[nearDupSuppressStream]], public so a scheduler replaying daily
-    * batches gets the identical semantics without a streaming context.
+  /** One commit unit of CONTINUOUS near-dup curation — the
+    * per-micro-batch body of [[nearDupSuppressStream]], public so a
+    * scheduler replaying daily batches gets the identical semantics.
     *
     * Deterministic suppression rule (what the DuckDB oracle replays):
     *  1. drop every batch doc with Jaccard ≥ threshold against any
-    *     ALREADY-indexed doc (batch ids themselves excluded from the
-    *     index side — see replay safety);
+    *     ALREADY-indexed doc (batch ids excluded from the index side);
     *  2. among the remainder, drop every doc with a strictly-lower-id
     *     near-dup in the remainder. Survivors form an independent set
-    *     (no two survivors are near-dups) without the transitive
-    *     over-deletion of component-min election: two docs that each
-    *     match a dropped doc but not each other BOTH survive —
-    *     compose [[keepOne]] downstream for component semantics.
-    *
-    * REPLAY-IDEMPOTENT (crash recovery re-runs a batch): the index
-    * side of step 1 excludes entries whose doc_id is in the current
-    * batch, so survivors a crashed attempt already appended can never
-    * suppress their own replay; the append is gated by a per-batch
-    * idempotence marker ([[AppendLedger]], the ingest `_commits`
-    * pattern) — a replayed completed batch SKIPS the append in O(1), a
-    * fresh batch appends blindly with no index read at all, and only a
-    * batch that crashed INSIDE its append window takes the repair path
-    * (write only signatures missing from each signature table —
-    * sketches and bands repaired independently, a crash between the
-    * two appends must not leave a doc permanently candidate-invisible)
-    * — so re-running a batch changes nothing, and the steady state
-    * never pays the old per-batch whole-index id scan. Requires
-    * globally-unique doc ids across batches — an id reused by a LATER
-    * batch would be silently treated as the replayed original.
-    *
-    * Scale shape: index candidates via the banded equi-join (cost ∝
-    * band collisions; the batch side is commit-sized, AQE broadcasts
-    * it), within-batch pairs via the prefix-filtered PPJoin — never
-    * batch × corpus or batch × batch products; appends are marker-
-    * gated O(batch) writes. Returns the surviving rows (original columns),
-    * materialized BEFORE the index append so callers can write them
-    * without re-planning over the grown index — consume the result,
-    * then call [[releaseMaterialized]] on it (the streaming wrapper
-    * does; a batch scheduler that skips it pins survivor blocks for
-    * the JVM's lifetime). */
+    *     without the transitive over-deletion of component-min
+    *     election — compose [[keepOne]] for component semantics;
+    *  3. append the survivors' signatures under a per-batch
+    *     [[AppendLedger]] marker: a replayed completed batch skips in
+    *     O(1), a fresh batch appends blindly, and only a batch that
+    *     crashed inside its append window pays the repairing diff.
+    * Replay-idempotent; requires globally-unique doc ids across
+    * batches. Index candidates are banded equi-joins, within-batch
+    * pairs the prefix-filtered PPJoin — never a product. Returns the
+    * survivors materialized BEFORE the append; consume them, then call
+    * [[releaseMaterialized]]. Mechanics: [[BandedIndex]]. */
   def nearDupSuppressAndIndex(batch: DataFrame, path: String,
                               threshold: Double = 0.8,
                               idCol: String = "doc_id",
-                              textCol: String = "text"): DataFrame = {
-    val spark = batch.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (shingle, hashes, bands) = readNearDupParams(spark, root)
-    require(hashes % bands == 0, "hashes must divide evenly into bands")
-    // the batch's raw rows and both signature forms each feed 2+
-    // subplans — materialize once, release at exit (a stream calls
-    // this per micro-batch; internal caches would pin blocks for the
-    // stream's lifetime). r17: the two signature forms come from ONE
-    // combined-sketch checkpoint (one shingling pass + one
-    // materialization job per commit instead of two of each). r18: the
-    // batch rows and the sketch ride the SAME checkpoint (the sketch is
-    // a projection of the batch — a second checkpoint was a second
-    // materialization job per commit), and the append ledger's token
-    // aggregates ride it as observe metrics instead of a standalone
-    // aggregation job: 3 jobs per commit folded into 1.
-    val obs = org.apache.spark.sql.Observation()
-    val tokAggs = AppendLedger.tokenAggs(idCol)
-    val ck = PlanAudit.checkpoint(batch
-      .observe(obs, tokAggs.head.as("c"),
-        tokAggs(1).as("h1"), tokAggs(2).as("h2"))
-      .withColumn("__gsig", shingleSketch(lower(col(textCol)), shingle, hashes)))
-    val b = ck.drop("__gsig")
-    val rowsPerBand = hashes / bands
-    // the sketchSig views, derived from the shared checkpoint: sh/mh
-    // are STORED; n and the per-band keys are narrow projections over
-    // them (bit-identical to sketchSig's — same expressions)
-    val sk = ck.select(col(idCol).as("doc_id"), col("__gsig.sh").as("sh"),
-      size(col("__gsig.sh")).as("n"),
-      transform(sequence(lit(0), lit(bands - 1)),
-        bd => xxhash64(bd, slice(col("__gsig.mh"), bd * lit(rowsPerBand) + 1,
-          lit(rowsPerBand)))).as("bkeys"))
-    val freshSets = setsFromSig(sk)
-    val freshBands = bandsFromSig(sk)
-    try {
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      // step 1 — against the index, minus this batch's own (replayed) ids
-      val idxBands = spark.read.parquet(s"$root/bands")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      val cand = freshBands.as("a").join(idxBands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val idxSets = spark.read.parquet(s"$root/sketches")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      val flagged = verify(cand
-          .join(freshSets.select(col("doc_id").as("doc_a"),
-            col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
-          .join(idxSets.select(col("doc_id").as("doc_b"),
-            col("sh").as("sh_b"), col("n").as("n_b")), "doc_b"), threshold)
-        .select(col("doc_a").as("__dup_id")).distinct()
-      val afterIndex =
-        b.join(flagged, b(idCol) === col("__dup_id"), "left_anti")
-      // step 2 — within-batch: any strictly-lower-id near-dup drops a
-      // doc; the PPJoin runs over the already-built sets restricted to
-      // the step-1 survivors
-      val aSets = freshSets.join(
-        afterIndex.select(col(idCol).as("doc_id")), "doc_id")
-      val dropped = pairsFromSets(aSets, threshold)
-        .select(col("doc_b").as("__drop_id")).distinct()
-      val keep = PlanAudit.checkpoint(afterIndex
-        .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti"))
-      // step 3 — marker-gated append (AppendLedger): a fresh batch
-      // writes blindly, a replayed completed batch skips in O(1), and
-      // only a crash inside a previous append window pays the id-diff
-      // repair — each signature table independently gets the survivor
-      // docs it is missing, sliced from the signatures already computed
-      // for this batch. keep is the caller's to consume and then
-      // releaseMaterialized — but on an append failure there is no
-      // caller holding it, so release here.
-      try {
-        val keepIds = keep.select(col(idCol).as("doc_id"))
-        // token from the checkpoint job's observe metrics — the ONE
-        // aggregation formula appendOnce's marker files are keyed by
-        val tok = AppendLedger.tokenFromParts(
-          obs.get("c").asInstanceOf[Long],
-          obs.get("h1").asInstanceOf[java.math.BigDecimal],
-          obs.get("h2").asInstanceOf[java.math.BigDecimal])
-        AppendLedger.appendOnce(spark, path, tok) { repair =>
-          val sk = freshSets.join(keepIds, "doc_id")
-          (if (!repair) sk
-           else {
-             // sketches hold exactly ONE row per doc, so a doc-granular
-             // diff IS row-granular — no committer atomicity assumed
-             val haveSk = spark.read.parquet(s"$root/sketches")
-               .select(col("doc_id").as("__have")).distinct()
-             sk.join(haveSk, col("doc_id") === col("__have"), "left_anti")
-           }).write.mode("append").parquet(s"$root/sketches")
-          val bd = freshBands.join(keepIds, "doc_id")
-          (if (!repair) bd
-           else {
-             // repair diffs at (doc_id, band) granularity against the
-             // FULL band table: a doc's band rows only land atomically
-             // under a v1 committer with no crash during job commit —
-             // with committer v2 (object stores) or a crash mid-commit,
-             // SOME of a doc's bands can be visible, and a doc-granular
-             // diff pruned to band=0 would either re-append rows that
-             // landed (duplicates) or leave higher bands permanently
-             // missing (ADVICE r11). Repair is the rare path — the full
-             // id-column read is the price of being committer-agnostic.
-             val haveBd = spark.read.parquet(s"$root/bands")
-               .select(col("doc_id").as("__have_id"),
-                 col("band").as("__have_band"))
-             bd.join(haveBd, col("doc_id") === col("__have_id") &&
-               col("band") === col("__have_band"), "left_anti")
-           }).select(col("doc_id"), col("bkey"), col("band"))
-            .write.mode("append").partitionBy("band").parquet(s"$root/bands")
-        }
-      } catch { case t: Throwable => releaseCheckpoint(keep); throw t }
-      keep
-    } finally releaseCheckpoint(ck)
-  }
+                              textCol: String = "text"): DataFrame =
+    NearDupIndex.suppressAndIndex(batch, path, idCol, textCol, threshold)
 
   /** DRY-RUN of [[nearDupSuppressAndIndex]] — the per-document
-    * decision table, with NO side effects (nothing appends, nothing
-    * writes): for every batch doc, the verdict the suppressor would
-    * reach and the evidence for it. How an operator tunes `threshold`
-    * before wiring the real pass, and the audit a drop needs when a
-    * creator asks "why was my document removed".
-    *
-    * Output: (<idCol>, verdict, match_id, score) where verdict ∈
-    *  - 'index_dup' — a Jaccard ≥ threshold match among ALREADY-
-    *    indexed docs; match_id/score = the best such match (highest
-    *    jaccard, ties → lowest match id), score rounded to the
-    *    file-wide 6-decimal grid;
-    *  - 'batch_dup' — survived the index pass but has a strictly-
-    *    lower-id near-dup among the index-pass survivors; match_id/
-    *    score = the best such lower-id neighbor (the neighbor's own
-    *    fate is irrelevant — the rule is existence, matching
-    *    [[nearDupSuppressAndIndex]] exactly);
+    * decision table, with NO side effects: how an operator tunes
+    * `threshold`, and the audit a drop needs when a creator asks "why
+    * was my document removed". Output: (<idCol>, verdict, match_id,
+    * score) where verdict ∈
+    *  - 'index_dup' — best Jaccard ≥ threshold match among ALREADY-
+    *    indexed docs (highest jaccard, ties → lowest match id; score on
+    *    the file-wide 6-decimal grid);
+    *  - 'batch_dup' — survived the index pass but has a strictly-lower-
+    *    id near-dup among its survivors; evidence = the best such
+    *    neighbor, whatever its own fate;
     *  - 'kept' — would survive; match_id/score null.
-    *
-    * Same replay exclusion as the real pass (batch ids excluded from
-    * the index side), so explaining a batch a crashed attempt already
-    * half-appended reports the verdicts its replay would enact. Scale
-    * shape: identical to the suppressor (banded candidates, PPJoin
-    * within batch, keyed argmax — the aggregation sees only matched
-    * pairs, never the batch × index product). */
+    * Same replay exclusion and scale shape as the real pass. */
   def nearDupSuppressExplain(batch: DataFrame, path: String,
                              threshold: Double = 0.8,
                              idCol: String = "doc_id",
-                             textCol: String = "text"): DataFrame = {
-    val spark = batch.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (shingle, hashes, bands) = readNearDupParams(spark, root)
-    val b = PlanAudit.checkpoint(batch)
-    // one combined-sketch pass supplies both the sets and the bands of
-    // the batch (r17 — mirrors the real suppressor's plan)
-    val sk = PlanAudit.checkpoint(sketchSig(b, idCol, textCol, shingle, hashes, bands))
-    val freshSets = setsFromSig(sk)
-    var idxBestChk: Option[DataFrame] = None
-    try {
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      val idxBands = spark.read.parquet(s"$root/bands")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      val cand = bandsFromSig(sk)
-        .as("a").join(idxBands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      val idxSets = spark.read.parquet(s"$root/sketches")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      // best index match per flagged doc: highest jaccard, ties ->
-      // lowest match id (the q162 argmax shape)
-      def bestMatch(pairs: DataFrame): DataFrame = pairs
-        .groupBy(col("doc_a"))
-        .agg(max(col("jaccard")).as("score"),
-          min(struct((lit(1d) - col("jaccard")).as("negj"),
-            col("doc_b").as("doc_b"))).as("w"))
-        .select(col("doc_a"), col("w.doc_b").as("match_id"), col("score"))
-      val idxBest = PlanAudit.checkpoint(bestMatch(verify(cand
-        .join(freshSets.select(col("doc_id").as("doc_a"),
-          col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
-        .join(idxSets.select(col("doc_id").as("doc_b"),
-          col("sh").as("sh_b"), col("n").as("n_b")), "doc_b"), threshold)))
-      idxBestChk = Some(idxBest)
-      val afterIndex =
-        b.join(idxBest, b(idCol) === idxBest("doc_a"), "left_anti")
-      val aSets = freshSets.join(
-        afterIndex.select(col(idCol).as("doc_id")), "doc_id")
-      // within-batch: pairsFromSets yields doc_a < doc_b; the DROPPED
-      // side is doc_b, its evidence the best lower-id neighbor
-      val batchBest = bestMatch(pairsFromSets(aSets, threshold)
-        .select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"),
-          col("jaccard")))
-      // materialize BEFORE the finally releases the inputs the lazy
-      // plan reads; the result is the caller's to releaseMaterialized
-      PlanAudit.checkpoint(b.select(col(idCol))
-        .join(idxBest.select(col("doc_a").as(idCol),
-          col("match_id").as("__im"), col("score").as("__is")), Seq(idCol), "left")
-        .join(batchBest.select(col("doc_a").as(idCol),
-          col("match_id").as("__bm"), col("score").as("__bs")), Seq(idCol), "left")
-        .select(col(idCol),
-          when(col("__im").isNotNull, lit("index_dup"))
-            .when(col("__bm").isNotNull, lit("batch_dup"))
-            .otherwise(lit("kept")).as("verdict"),
-          coalesce(col("__im"), col("__bm")).as("match_id"),
-          coalesce(col("__is"), col("__bs")).as("score")))
-    } finally (Seq(b, sk) ++ idxBestChk).foreach(releaseCheckpoint)
-  }
+                             textCol: String = "text"): DataFrame =
+    NearDupIndex.explain(batch, path, idCol, textCol, threshold)
 
   /** Streaming near-dup suppression — dedup-at-ingest against a
     * PERSISTED, GROWING corpus index: each micro-batch runs
-    * [[nearDupSuppressAndIndex]] (index flag → within-batch
-    * independent-set → repairing append) and its survivors land under
-    * `outPath/batch=<id>/` as parquet. The single foreachBatch writer
-    * is the index's natural serializer (the same discipline the ingest
-    * commit loop gives the seen filter); a crash replays the batch
-    * idempotently — survivors recompute identically (own-batch ids are
-    * excluded from the flag pass), the output dir overwrites, and the
-    * append adds only missing signatures. The index must exist (build
-    * it first, over the curated corpus or an empty frame); its stored
-    * params pin the shingle/hash/band scheme so every batch provably
-    * hashes the way the corpus did.
-    *
-    * `compactEveryBatches` > 0 runs [[compactNearDupIndex]] after
-    * every Nth batch: per-batch appends each add a file set per band
-    * partition, so an uncompacted index accumulates
-    * O(batches × bands × partitions) small files and every flag pass
-    * pays the open-file tax on all of them — at micro-batch cadence
-    * the compaction cycle IS the scale story, not an optimization.
-    * Compaction commits behind the index's atomic `_current` pointer
-    * (data identical, crash leaves the old version live); superseded
-    * versions are NOT vacuumed here — external searchers may still
-    * hold a pre-swap resolution; vacuum on the operator's schedule.
-    * The compaction hook ALSO retention-vacuums the append ledger
-    * (keep the newest `ledgerKeepLast` completed markers): without it
-    * the ledger gains two tiny files per batch forever — safe here
-    * because the streaming checkpoint replays at most the most recent
-    * uncommitted batches ([[vacuumSuppressorAppendLedger]]). */
+    * [[nearDupSuppressAndIndex]] and its survivors land under
+    * `outPath/batch=<id>/`. The single foreachBatch writer serializes
+    * the index; a crash replays the batch idempotently. The index must
+    * exist (build it first, over the curated corpus or an empty frame).
+    * `compactEveryBatches` > 0 runs [[compactNearDupIndex]] after every
+    * Nth batch (at micro-batch cadence the compaction cycle IS the scale
+    * story) and retention-vacuums the append ledger to `ledgerKeepLast`
+    * completed markers ([[vacuumSuppressorAppendLedger]]). */
   def nearDupSuppressStream(stream: DataFrame, indexPath: String,
                             outPath: String, checkpointDir: String,
                             threshold: Double = 0.8,
@@ -1284,22 +978,9 @@ object Dedup {
                             compactEveryBatches: Int = 0,
                             ledgerKeepLast: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keep =
-          nearDupSuppressAndIndex(batch, indexPath, threshold, idCol, textCol)
-        try keep.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally releaseMaterialized(keep)
-        if (compactEveryBatches > 0 &&
-            (batchId + 1) % compactEveryBatches == 0) {
-          compactNearDupIndex(batch.sparkSession, indexPath)
-          vacuumSuppressorAppendLedger(batch.sparkSession, indexPath,
-            ledgerKeepLast)
-          ()
-        }
-      }
-      .start()
+    NearDupIndex.stream(stream, indexPath, outPath, checkpointDir,
+      compactEveryBatches, ledgerKeepLast)(
+      nearDupSuppressAndIndex(_, indexPath, threshold, idCol, textCol))
 
   /** Integrity report for a persisted near-dup index — the check an
     * operator runs before trusting a store that outlived crashes,
@@ -1316,8 +997,7 @@ object Dedup {
     * pair joins; safe to run at any corpus size. */
   def nearDupIndexIntegrity(spark: org.apache.spark.sql.SparkSession,
                             path: String): DataFrame = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val (_, _, bands) = readNearDupParams(spark, root)
+    val (root, p) = NearDupIndex.resolve(spark, path)
     val sk = spark.read.parquet(s"$root/sketches")
       .groupBy("doc_id").agg(count(lit(1)).as("n_sk"))
     val bd = spark.read.parquet(s"$root/bands")
@@ -1327,7 +1007,7 @@ object Dedup {
         coalesce(sum(when(col("n_sk").isNotNull, 1L).otherwise(0L)),
           lit(0L)).as("n_docs"),
         (coalesce(sum(when(col("n_sk") =!= 1 ||
-            coalesce(col("n_bd"), lit(-1L)) =!= bands.toLong, 1L)
+            coalesce(col("n_bd"), lit(-1L)) =!= p(2).toLong, 1L)
           .otherwise(0L)), lit(0L)) === 0L).as("structure_ok"),
         (coalesce(sum(when(col("n_sk").isNull || col("n_bd").isNull, 1L)
           .otherwise(0L)), lit(0L)) === 0L).as("consistency_ok"))
@@ -1364,77 +1044,19 @@ object Dedup {
                                    keepLast: Int = 100000): Long =
     AppendLedger.vacuum(spark, path, keepLast)
 
-  /** [[nearDupIndexIntegrity]] for the hamming chunk store: exactly
-    * maxHamming+1 chunk rows per doc (a missing chunk breaks the
-    * pigeonhole guarantee — FALSE NEGATIVES for pairs whose only
-    * intact shared chunk was the lost one) and exactly one distinct
-    * signature per doc (two sigs under one id make delete/search
-    * ambiguous). */
-  def hammingIndexIntegrity(spark: org.apache.spark.sql.SparkSession,
-                            path: String): DataFrame = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root)
-    spark.read.parquet(s"$root/chunks")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("sig")).as("n_sigs"))
-      .agg(count(lit(1)).as("n_docs"),
-        (coalesce(sum(when(col("n_rows") =!= (maxHamming + 1).toLong, 1L)
-          .otherwise(0L)), lit(0L)) === 0L).as("structure_ok"),
-        (coalesce(sum(when(col("n_sigs") =!= 1L, 1L).otherwise(0L)),
-          lit(0L)) === 0L).as("consistency_ok"))
-      .select(lit("hamming").as("store"), col("n_docs"),
-        col("structure_ok"), col("consistency_ok"))
-  }
-
   /** Near-dup pairs ACROSS two persisted indexes, from signature state
     * alone — the federation primitive for merging two independently-
-    * curated corpora: each side was deduped internally when its index
-    * was built, so the remaining question is only cross-corpus, and
-    * both answers sit in the indexes (banded keys for candidates,
-    * shingle sketches for exact-Jaccard verification) — NO re-read or
-    * re-shingle of either corpus. Requires both indexes built with the
-    * same (shingle, hashes, bands) params — verified loudly; a silent
-    * mismatch would make every band key incomparable and report zero
-    * dups. Output: (doc_a from A, doc_b from B, jaccard). Scale shape:
-    * the candidate join is keyed on (band, bkey) — cost ∝ cross-index
-    * band collisions, never |A| × |B|. */
+    * curated corpora: banded keys give candidates, stored sketches the
+    * exact Jaccard; NO re-read or re-shingle of either corpus. Both
+    * indexes must share (shingle, hashes, bands) and have disjoint ids
+    * — verified loudly (mismatched params make every band key
+    * incomparable: silently zero dups). Output: (doc_a from A, doc_b
+    * from B, jaccard); the candidate join is keyed on (band, bkey),
+    * never |A| × |B|. */
   def crossIndexNearDupPairs(spark: org.apache.spark.sql.SparkSession,
                              pathA: String, pathB: String,
-                             threshold: Double = 0.8): DataFrame = {
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val pA = readNearDupParams(spark, rootA)
-    val pB = readNearDupParams(spark, rootB)
-    require(pA == pB,
-      s"index params differ: $pathA has (shingle, hashes, bands)=$pA, " +
-        s"$pathB has $pB — cross-index band keys are incomparable")
-    // ids must be disjoint or a shared id reports itself as a
-    // cross-corpus duplicate (jaccard 1.0 self-pair) — meaningless and
-    // silently wrong for the audit this primitive serves
-    requireDisjointIds(spark.read.parquet(s"$rootA/sketches"),
-      spark.read.parquet(s"$rootB/sketches"), pathA, pathB)
-    crossNearDupPairsCore(spark, rootA, rootB, threshold)
-  }
-
-  /** [[crossIndexNearDupPairs]] body over ALREADY-resolved,
-    * params-verified, id-disjoint roots. */
-  private def crossNearDupPairsCore(spark: org.apache.spark.sql.SparkSession,
-                                    rootA: String, rootB: String,
-                                    threshold: Double): DataFrame = {
-    val cand = spark.read.parquet(s"$rootA/bands").as("a")
-      .join(spark.read.parquet(s"$rootB/bands").as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    verify(cand
-      .join(spark.read.parquet(s"$rootA/sketches")
-        .select(col("doc_id").as("doc_a"),
-          col("sh").as("sh_a"), col("n").as("n_a")), "doc_a")
-      .join(spark.read.parquet(s"$rootB/sketches")
-        .select(col("doc_id").as("doc_b"),
-          col("sh").as("sh_b"), col("n").as("n_b")), "doc_b"), threshold)
-  }
+                             threshold: Double = 0.8): DataFrame =
+    NearDupIndex.crossPairs(spark, pathA, pathB, threshold)
 
   /** Self-merge guard: `outPath` must not alias an input — plain string
     * equality misses trailing slashes, relative-vs-absolute spellings,
@@ -1455,76 +1077,20 @@ object Dedup {
         "merge to a fresh path")
   }
 
-  private def requireDisjointIds(a: DataFrame, b: DataFrame,
-                                 pathA: String, pathB: String): Unit = {
-    val shared = a.select("doc_id").distinct()
-      .join(b.select("doc_id").distinct(), "doc_id", "left_semi").count()
-    require(shared == 0,
-      s"$shared doc ids appear in both $pathA and $pathB — cross-index " +
-        "semantics would be ambiguous; re-id one side")
-  }
-
   /** Merge two near-dup indexes into a NEW index at `outPath` — the
     * corpus-federation step: index A's docs all survive; index B's
     * docs that near-dup A (per [[crossIndexNearDupPairs]], when
     * `dedupAcross`) are dropped, so the merged index is duplicate-free
     * under the same invariant each input maintained. Pure signature
-    * surgery — neither corpus is re-read. Doc ids must be disjoint
-    * across the inputs (verified loudly: a shared id would make the
-    * merged index's delete/search semantics ambiguous). A fresh
-    * outPath gets the legacy build layout (versioning begins with its
-    * first delete/compact); an already-VERSIONED outPath gets a fresh
-    * committed version — writing the legacy layout behind an existing
-    * `_current` pointer would be a silent no-op. Returns the number of
-    * B docs dropped. */
+    * surgery — neither corpus is re-read. Ids must be disjoint and
+    * params equal (verified loudly, even without `dedupAcross`); an
+    * already-VERSIONED outPath gets a fresh committed version. Returns
+    * the number of B docs dropped. */
   def mergeNearDupIndexes(spark: org.apache.spark.sql.SparkSession,
                           pathA: String, pathB: String, outPath: String,
                           threshold: Double = 0.8,
-                          dedupAcross: Boolean = true): Long = {
-    requireDistinctOutPath(spark, outPath, pathA, pathB)
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val pA = readNearDupParams(spark, rootA)
-    val pB = readNearDupParams(spark, rootB)
-    require(pA == pB, // even without dedupAcross: the merged index's
-      // band keys must all hash one way or future searches silently
-      // miss one input's docs
-      s"index params differ: $pathA has (shingle, hashes, bands)=$pA, " +
-        s"$pathB has $pB — the merged index cannot serve both")
-    val skA = spark.read.parquet(s"$rootA/sketches")
-    val skB = spark.read.parquet(s"$rootB/sketches")
-    requireDisjointIds(skA, skB, pathA, pathB)
-    val dropB =
-      if (dedupAcross)
-        crossNearDupPairsCore(spark, rootA, rootB, threshold)
-          .select(col("doc_b").as("__drop_id")).distinct().localCheckpoint()
-      else spark.range(0).select(col("id").as("__drop_id"))
-    try {
-      val nDrop =
-        if (dedupAcross)
-          skB.join(dropB, skB("doc_id") === col("__drop_id"), "left_semi")
-            .count()
-        else 0L
-      val versioned = VersionedIndex.resolveRoot(spark, outPath) != outPath
-      val next =
-        if (versioned) Some(VersionedIndex.nextVersion(spark, outPath))
-        else None
-      val target = next.fold(outPath)(v => s"$outPath/$v")
-      spark.read.parquet(s"$rootA/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
-      skA.unionByName(
-          skB.join(dropB, skB("doc_id") === col("__drop_id"), "left_anti"))
-        .write.mode("overwrite").parquet(s"$target/sketches")
-      val bdA = spark.read.parquet(s"$rootA/bands")
-      val bdB = spark.read.parquet(s"$rootB/bands")
-      bdA.unionByName(
-          bdB.join(dropB, bdB("doc_id") === col("__drop_id"), "left_anti"))
-        .select(col("doc_id"), col("bkey"), col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(s"$target/bands")
-      next.foreach(v => VersionedIndex.commitPointer(spark, outPath, v))
-      nDrop
-    } finally releaseCheckpoint(dropB)
-  }
+                          dedupAcross: Boolean = true): Long =
+    NearDupIndex.merge(spark, pathA, pathB, outPath, dedupAcross, threshold)
 
   /** Release the storage behind a MATERIALIZED result frame returned
     * by [[nearDupSuppressAndIndex]] /
@@ -1625,235 +1191,121 @@ object Dedup {
     } finally releaseCheckpoint(sg)
   }
 
+  /** The hamming family of [[BandedIndex]]: the corpus' pigeonhole
+    * chunk rows (doc_id, sig, cval) partitioned by chunk, plus a one-row
+    * params table pinning maxHamming. Every chunk partition holds a row
+    * per indexed doc, so deletes rewrite the chunk store in full. */
+  private object HammingIndex extends BandedIndex("hamming", Seq("max_hamming"),
+      Seq(IndexTable("chunks", Some("chunk"), Seq("doc_id", "sig", "cval", "chunk")))) {
+    def validate(p: Seq[Int]): Unit =
+      require(p(0) >= 1 && p(0) < 64, s"maxHamming must be in [1, 63], got ${p(0)}")
+    def partitions(p: Seq[Int]): Int = p(0) + 1
+    def sigFrame(sigs: DataFrame, idCol: String, sigCol: String, p: Seq[Int]): DataFrame =
+      sigChunks(sigs, idCol, sigCol, p(0))
+    def views(sig: DataFrame): Views = Map("chunks" -> sig)
+    // candidates: (chunk, cval) equi-join; the distance rides the joined
+    // rows (both sigs are in the candidate row — no second lookup)
+    private def chunkJoin(a: Views, b: Views, within: Boolean): DataFrame = {
+      val on = col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval")
+      a("chunks").as("a").join(b("chunks").as("b"),
+        if (within) on && col("b.doc_id") < col("a.doc_id") else on)
+    }
+    private val distance = bit_count(col("a.sig").bitwiseXOR(col("b.sig")))
+    def pairs(a: Views, b: Views, p: Seq[Int], threshold: Double, within: Boolean,
+              self: String, other: String): DataFrame =
+      chunkJoin(a, b, within)
+        .select(col("a.doc_id").as(self), col("b.doc_id").as(other),
+          distance.as("hamming"))
+        .distinct()
+        .filter(col("hamming") <= p(0))
+    // flag passes filter the joined rows directly: no distinct over pairs
+    override def matched(a: Views, b: Views, p: Seq[Int], threshold: Double,
+                         within: Boolean, as: String): DataFrame =
+      chunkJoin(a, b, within).filter(distance <= p(0))
+        .select(col("a.doc_id").as(as)).distinct()
+    val explainNames: (String, String) = ("doc_id", "mid")
+    val scoreCol = "distance"
+    // lowest distance, ties -> lowest match id (distances are small
+    // ints, so the tie rule is load-bearing)
+    def best(pairs: DataFrame): DataFrame = pairs
+      .groupBy(col("doc_id"))
+      .agg(min(struct(col("hamming").as("hamming"), col("mid").as("mid"))).as("w"))
+      .select(col("doc_id"), col("w.mid").as("match_id"),
+        col("w.hamming").as("distance"))
+  }
+
   /** Persisted HAMMING near-dup index — the third member of the index
     * family (exact fingerprints: [[exactAgainstCorpus]]; Jaccard
     * shingles: [[buildNearDupIndex]]; 64-bit perceptual signatures:
-    * this). Stores the corpus' pigeonhole chunk rows ONCE —
-    * (doc_id, sig, cval) partitioned by chunk, plus a one-row params
-    * table pinning maxHamming — so image/audio batches dedup against a
-    * 100 TB corpus without re-decoding any media: the signature is all
-    * the index ever needs. Build from any (id, sig) frame (e.g.
+    * this). Stores the corpus' pigeonhole chunk rows ONCE, so
+    * image/audio batches dedup against a 100 TB corpus without
+    * re-decoding any media: the signature is all the index ever needs.
+    * Build from any (id, sig) frame (e.g.
     * [[graft.multimodal.Multimodal.imageDHash]] /
-    * [[graft.multimodal.Multimodal.audioPcmHash]] output). */
+    * [[graft.multimodal.Multimodal.audioPcmHash]] output). Lifecycle:
+    * `HammingIndex` / [[BandedIndex]]. */
   def buildHammingIndex(sigs: DataFrame, path: String,
                         idCol: String = "doc_id", sigCol: String = "sig",
-                        maxHamming: Int = 3): Unit = {
-    require(maxHamming >= 1 && maxHamming < 64,
-      s"maxHamming must be in [1, 63], got $maxHamming")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    // same versioning discipline as buildNearDupIndex: a re-build over
-    // an already-versioned index commits atomically via a fresh v-dir
-    val versioned = VersionedIndex.resolveRoot(spark, path) != path
-    val next = if (versioned) Some(VersionedIndex.nextVersion(spark, path)) else None
-    val target = next.fold(path)(v => s"$path/$v")
-    Seq(maxHamming).toDF("max_hamming")
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
-    sigChunks(sigs, idCol, sigCol, maxHamming)
-      .write.mode("overwrite").partitionBy("chunk").parquet(s"$target/chunks")
-    next.foreach(v => VersionedIndex.commitPointer(spark, path, v))
-  }
+                        maxHamming: Int = 3): Unit =
+    HammingIndex.build(sigs, path, idCol, sigCol, Seq(maxHamming))
 
   /** Vacuum superseded hamming index versions (see
     * [[graft.api.Similarity.vacuumIndexVersions]]) — run only when no
     * reader may still hold a pre-swap resolution. */
   def vacuumHammingIndexVersions(spark: org.apache.spark.sql.SparkSession,
                                  path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path, Seq("params", "chunks"))
+    HammingIndex.vacuum(spark, path)
 
   /** Compact a persisted hamming index — the [[compactNearDupIndex]]
     * discipline for the chunk table: one file per chunk partition,
     * atomic pointer commit, results invariant. */
   def compactHammingIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root) // loud on missing index
-    val chunks = maxHamming + 1
-    val next = VersionedIndex.nextVersion(spark, path)
-    val vdir = s"$path/$next"
-    spark.read.parquet(s"$root/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-    spark.read.parquet(s"$root/chunks")
-      .repartition(chunks, col("chunk"))
-      .select(col("doc_id"), col("sig"), col("cval"), col("chunk"))
-      .write.mode("overwrite").partitionBy("chunk").parquet(s"$vdir/chunks")
-    VersionedIndex.commitPointer(spark, path, next)
-  }
-
-  /** Read params from an already-RESOLVED index root. */
-  private def readHammingParams(spark: org.apache.spark.sql.SparkSession,
-                                root: String): Int = {
-    val rows = spark.read.parquet(s"$root/params").select("max_hamming").collect()
-    require(rows.length == 1, s"no hamming index at $root")
-    rows(0).getInt(0)
-  }
+                          path: String): Unit =
+    HammingIndex.compact(spark, path)
 
   /** Append signatures under the index's own persisted maxHamming —
     * chunking differently from the build would silently break matching
     * against the old rows. */
   def appendToHammingIndex(sigs: DataFrame, path: String,
                            idCol: String = "doc_id",
-                           sigCol: String = "sig"): Unit = {
-    val spark = sigs.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root)
-    sigChunks(sigs, idCol, sigCol, maxHamming)
-      .write.mode("append").partitionBy("chunk").parquet(s"$root/chunks")
-  }
+                           sigCol: String = "sig"): Unit =
+    HammingIndex.append(sigs, path, idCol, sigCol)
 
   /** One commit unit of CONTINUOUS MEDIA curation —
-    * [[nearDupSuppressAndIndex]] for the 64-bit signature space,
-    * against a persisted hamming index (the third member of the
-    * suppressor family: Jaccard text / cosine embeddings / hamming
+    * [[nearDupSuppressAndIndex]] for the 64-bit signature space (the
+    * third suppressor: Jaccard text / cosine embeddings / hamming
     * perceptual signatures): drop batch signatures within the index's
-    * maxHamming of an ALREADY-indexed doc (batch ids excluded from
-    * the index side for replay safety), then drop within-batch
-    * signatures with a strictly-lower-id neighbor within the bound,
-    * then append the survivors' chunk rows behind a per-batch
-    * idempotence marker ([[AppendLedger]]) — a replayed completed
-    * batch skips the append in O(1), a fresh batch writes blindly with
-    * no index read, and only a crash inside a previous append window
-    * pays the id-diff repair (itself pruned to the chunk=0 partition:
-    * a doc's chunk rows land in one all-or-nothing job, so chunk 0
-    * alone carries the full have-set). Input is
-    * an (idCol, sigCol) frame — media decode happens upstream
-    * ([[graft.multimodal.Multimodal.imageDHash]] etc.); this pass
-    * never touches bytes. Candidates are pigeonhole (chunk, cval)
-    * equi-joins throughout — never batch × corpus. Returns surviving
-    * rows materialized; consume then [[releaseMaterialized]]. */
+    * maxHamming of an ALREADY-indexed doc (batch ids excluded), then
+    * within-batch signatures with a strictly-lower-id neighbor within
+    * the bound, then append the survivors' chunk rows once under
+    * [[AppendLedger]]. A crash inside a previous append window repairs
+    * by diffing against the FULL chunk table at (doc_id, chunk)
+    * granularity — a doc's chunk rows are not guaranteed to land
+    * all-or-nothing (ADVICE r11). Media decode happens upstream; this
+    * pass never touches bytes. Returns surviving rows materialized;
+    * consume then [[releaseMaterialized]]. */
   def hammingSuppressAndIndex(batch: DataFrame, path: String,
                               idCol: String = "doc_id",
-                              sigCol: String = "sig"): DataFrame = {
-    val spark = batch.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root)
-    // r18: ONE checkpoint per commit — the chunk rows are bit
-    // shifts/masks over the stored sig (trivially recomputed per
-    // consumer, unlike the near-dup sketch), so their own checkpoint
-    // was a pure materialization job; the append ledger's token
-    // aggregates ride the batch checkpoint as observe metrics instead
-    // of a standalone aggregation job. 3 jobs per commit → 1.
-    val tokObs = org.apache.spark.sql.Observation()
-    val tokAggs = AppendLedger.tokenAggs(idCol)
-    val b = PlanAudit.checkpoint(batch.observe(tokObs, tokAggs.head.as("c"),
-      tokAggs(1).as("h1"), tokAggs(2).as("h2")))
-    val freshChunks = sigChunks(b, idCol, sigCol, maxHamming)
-    try {
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      val idxChunks = spark.read.parquet(s"$root/chunks")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      val flagged = freshChunks.as("a").join(idxChunks.as("b"),
-          col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval"))
-        .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= maxHamming)
-        .select(col("a.doc_id").as("__dup_id")).distinct()
-      val afterIndex =
-        b.join(flagged, b(idCol) === col("__dup_id"), "left_anti")
-      val aChunks = freshChunks.join(
-        afterIndex.select(col(idCol).as("doc_id")), "doc_id")
-      val dropped = aChunks.as("a").join(aChunks.as("b"),
-          col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
-            col("b.doc_id") < col("a.doc_id"))
-        .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= maxHamming)
-        .select(col("a.doc_id").as("__drop_id")).distinct()
-      val keep = PlanAudit.checkpoint(afterIndex
-        .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti"))
-      try {
-        AppendLedger.appendOnce(spark, path,
-            AppendLedger.tokenFromParts(
-              tokObs.get("c").asInstanceOf[Long],
-              tokObs.get("h1").asInstanceOf[java.math.BigDecimal],
-              tokObs.get("h2").asInstanceOf[java.math.BigDecimal])) { repair =>
-          val rows = freshChunks
-            .join(keep.select(col(idCol).as("doc_id")), "doc_id")
-          (if (!repair) rows
-           else {
-             // (doc_id, chunk)-granular diff against the FULL chunk
-             // table — same committer-v2/mid-commit-crash reasoning as
-             // the near-dup band repair (ADVICE r11): a doc's chunk
-             // rows are not guaranteed all-or-nothing, so a doc-level
-             // diff pruned to chunk=0 can duplicate or orphan rows.
-             val have = spark.read.parquet(s"$root/chunks")
-               .select(col("doc_id").as("__have_id"),
-                 col("chunk").as("__have_chunk"))
-             rows.join(have, col("doc_id") === col("__have_id") &&
-               col("chunk") === col("__have_chunk"), "left_anti")
-           }).select(col("doc_id"), col("sig"), col("cval"), col("chunk"))
-            .write.mode("append").partitionBy("chunk").parquet(s"$root/chunks")
-        }
-      } catch { case t: Throwable => releaseCheckpoint(keep); throw t }
-      keep
-    } finally releaseCheckpoint(b)
-  }
+                              sigCol: String = "sig"): DataFrame =
+    HammingIndex.suppressAndIndex(batch, path, idCol, sigCol)
 
   /** DRY-RUN of [[hammingSuppressAndIndex]] — the decision table for
     * the perceptual-signature suppressor, completing the explain triad
     * (Jaccard [[nearDupSuppressExplain]], cosine
     * [[graft.api.Similarity.semanticSuppressExplain]]): every batch
     * sig's verdict (kept / index_dup / batch_dup) with best-match
-    * evidence — LOWEST hamming distance, ties → lowest match id — and
-    * no side effects. Distances are small ints, so ties are common
-    * and the tie rule is load-bearing; both sides order by
-    * (distance ASC, id ASC). */
+    * evidence — LOWEST hamming distance, ties → lowest match id, as
+    * (<idCol>, verdict, match_id, distance) — and no side effects. */
   def hammingSuppressExplain(batch: DataFrame, path: String,
                              idCol: String = "doc_id",
-                             sigCol: String = "sig"): DataFrame = {
-    val spark = batch.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root)
-    val b = PlanAudit.checkpoint(batch)
-    val freshChunks =
-      PlanAudit.checkpoint(sigChunks(b, idCol, sigCol, maxHamming))
-    var idxBestChk: Option[DataFrame] = None
-    try {
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      def bestMatch(pairs: DataFrame): DataFrame = pairs
-        .groupBy(col("doc_id"))
-        .agg(min(struct(col("hamming").as("hamming"),
-          col("mid").as("mid"))).as("w"))
-        .select(col("doc_id"), col("w.mid").as("match_id"),
-          col("w.hamming").as("distance"))
-      val idxChunks = spark.read.parquet(s"$root/chunks")
-        .join(bIds, col("doc_id") === col("__bid"), "left_anti")
-      val idxBest = PlanAudit.checkpoint(
-        bestMatch(freshChunks.as("a").join(idxChunks.as("b"),
-          col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval"))
-        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("mid"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= maxHamming)))
-      idxBestChk = Some(idxBest)
-      val afterIndex =
-        b.join(idxBest, b(idCol) === idxBest("doc_id"), "left_anti")
-      val aChunks = freshChunks.join(
-        afterIndex.select(col(idCol).as("doc_id")), "doc_id")
-      val batchBest = bestMatch(aChunks.as("a").join(aChunks.as("b"),
-          col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
-            col("b.doc_id") < col("a.doc_id"))
-        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("mid"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-        .distinct()
-        .filter(col("hamming") <= maxHamming))
-      PlanAudit.checkpoint(b.select(col(idCol))
-        .join(idxBest.select(col("doc_id").as(idCol),
-          col("match_id").as("__im"), col("distance").as("__id")), Seq(idCol), "left")
-        .join(batchBest.select(col("doc_id").as(idCol),
-          col("match_id").as("__bm"), col("distance").as("__bd")), Seq(idCol), "left")
-        .select(col(idCol),
-          when(col("__im").isNotNull, lit("index_dup"))
-            .when(col("__bm").isNotNull, lit("batch_dup"))
-            .otherwise(lit("kept")).as("verdict"),
-          coalesce(col("__im"), col("__bm")).as("match_id"),
-          coalesce(col("__id"), col("__bd")).as("distance")))
-    } finally (Seq(b, freshChunks) ++ idxBestChk).foreach(releaseCheckpoint)
-  }
+                             sigCol: String = "sig"): DataFrame =
+    HammingIndex.explain(batch, path, idCol, sigCol)
 
   /** Streaming media dedup — [[nearDupSuppressStream]] for signature
     * frames: each micro-batch runs [[hammingSuppressAndIndex]],
     * survivors land under `outPath/batch=<id>/`, and
     * `compactEveryBatches` > 0 runs [[compactHammingIndex]] every Nth
-    * batch (per-batch appends add a file set per chunk partition —
-    * the same small-file scale story as the other two suppressors)
-    * and retention-vacuums the append ledger to `ledgerKeepLast`
+    * batch and retention-vacuums the append ledger to `ledgerKeepLast`
     * completed markers ([[vacuumSuppressorAppendLedger]]). */
   def hammingSuppressStream(stream: DataFrame, indexPath: String,
                             outPath: String, checkpointDir: String,
@@ -1862,174 +1314,71 @@ object Dedup {
                             compactEveryBatches: Int = 0,
                             ledgerKeepLast: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keep = hammingSuppressAndIndex(batch, indexPath, idCol, sigCol)
-        try keep.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally releaseMaterialized(keep)
-        if (compactEveryBatches > 0 &&
-            (batchId + 1) % compactEveryBatches == 0) {
-          compactHammingIndex(batch.sparkSession, indexPath)
-          vacuumSuppressorAppendLedger(batch.sparkSession, indexPath,
-            ledgerKeepLast)
-          ()
-        }
-      }
-      .start()
+    HammingIndex.stream(stream, indexPath, outPath, checkpointDir,
+      compactEveryBatches, ledgerKeepLast)(
+      hammingSuppressAndIndex(_, indexPath, idCol, sigCol))
+
+  /** [[nearDupIndexIntegrity]] for the hamming chunk store: exactly
+    * maxHamming+1 chunk rows per doc (a missing chunk breaks the
+    * pigeonhole guarantee — FALSE NEGATIVES for pairs whose only
+    * intact shared chunk was the lost one) and exactly one distinct
+    * signature per doc (two sigs under one id make delete/search
+    * ambiguous). */
+  def hammingIndexIntegrity(spark: org.apache.spark.sql.SparkSession,
+                            path: String): DataFrame = {
+    val (root, p) = HammingIndex.resolve(spark, path)
+    spark.read.parquet(s"$root/chunks")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_rows"),
+        countDistinct(col("sig")).as("n_sigs"))
+      .agg(count(lit(1)).as("n_docs"),
+        (coalesce(sum(when(col("n_rows") =!= (p(0) + 1).toLong, 1L)
+          .otherwise(0L)), lit(0L)) === 0L).as("structure_ok"),
+        (coalesce(sum(when(col("n_sigs") =!= 1L, 1L).otherwise(0L)),
+          lit(0L)) === 0L).as("consistency_ok"))
+      .select(lit("hamming").as("store"), col("n_docs"),
+        col("structure_ok"), col("consistency_ok"))
+  }
 
   /** Near-dup pairs ACROSS two persisted hamming indexes, from chunk
     * state alone — [[crossIndexNearDupPairs]] for the 64-bit signature
-    * space: candidates from the pigeonhole (chunk, cval) keys both
-    * indexes store, distances from the stored signatures, no re-decode
-    * of any media on either side. Requires equal maxHamming (the chunk
-    * LAYOUTS differ otherwise — every key incomparable, silent zero
-    * matches). Output: (doc_a from A, doc_b from B, hamming). */
+    * space: candidates from the stored pigeonhole keys, distances from
+    * the stored signatures, no media re-decode. Requires equal
+    * maxHamming (the chunk LAYOUTS differ otherwise — every key
+    * incomparable) and disjoint ids. Output: (doc_a from A, doc_b from
+    * B, hamming). */
   def crossIndexHammingPairs(spark: org.apache.spark.sql.SparkSession,
-                             pathA: String, pathB: String): DataFrame = {
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val hA = readHammingParams(spark, rootA)
-    val hB = readHammingParams(spark, rootB)
-    require(hA == hB,
-      s"maxHamming differs: $pathA has $hA, $pathB has $hB — " +
-        "pigeonhole chunk keys are incomparable")
-    // disjoint ids or a shared id reports itself as a hamming-0 pair
-    requireDisjointIds(spark.read.parquet(s"$rootA/chunks"),
-      spark.read.parquet(s"$rootB/chunks"), pathA, pathB)
-    crossHammingPairsCore(spark, rootA, rootB, hA)
-  }
-
-  /** [[crossIndexHammingPairs]] body over ALREADY-resolved, verified
-    * roots. */
-  private def crossHammingPairsCore(spark: org.apache.spark.sql.SparkSession,
-                                    rootA: String, rootB: String,
-                                    maxHamming: Int): DataFrame =
-    spark.read.parquet(s"$rootA/chunks").as("a")
-      .join(spark.read.parquet(s"$rootB/chunks").as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+                             pathA: String, pathB: String): DataFrame =
+    HammingIndex.crossPairs(spark, pathA, pathB)
 
   /** Merge two hamming indexes into a NEW index at `outPath` —
     * [[mergeNearDupIndexes]] for the signature space: A's docs all
     * survive, B's cross-dups (per [[crossIndexHammingPairs]], when
     * `dedupAcross`) drop, chunk rows union under A's params. Pure
-    * chunk-store surgery — no media re-decode. Doc ids must be
-    * disjoint; params must match even without dedup (a mixed-layout
-    * chunk store silently misses one side). An already-VERSIONED
-    * outPath (a prior delete/compact left a `_current` pointer) gets a
-    * fresh committed version — writing the legacy layout there would
-    * be a silent no-op behind the pointer. Returns B docs dropped. */
+    * chunk-store surgery — no media re-decode. Returns B docs dropped. */
   def mergeHammingIndexes(spark: org.apache.spark.sql.SparkSession,
                           pathA: String, pathB: String, outPath: String,
-                          dedupAcross: Boolean = true): Long = {
-    requireDistinctOutPath(spark, outPath, pathA, pathB)
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val hA = readHammingParams(spark, rootA)
-    val hB = readHammingParams(spark, rootB)
-    require(hA == hB,
-      s"maxHamming differs: $pathA has $hA, $pathB has $hB — " +
-        "the merged chunk store cannot serve both layouts")
-    val chA = spark.read.parquet(s"$rootA/chunks")
-    val chB = spark.read.parquet(s"$rootB/chunks")
-    requireDisjointIds(chA, chB, pathA, pathB)
-    val dropB =
-      if (dedupAcross)
-        crossHammingPairsCore(spark, rootA, rootB, hA)
-          .select(col("doc_b").as("__drop_id")).distinct().localCheckpoint()
-      else spark.range(0).select(col("id").as("__drop_id"))
-    try {
-      val nDrop =
-        if (dedupAcross)
-          chB.select("doc_id").distinct()
-            .join(dropB, col("doc_id") === col("__drop_id"), "left_semi")
-            .count()
-        else 0L
-      val versioned = VersionedIndex.resolveRoot(spark, outPath) != outPath
-      val next =
-        if (versioned) Some(VersionedIndex.nextVersion(spark, outPath))
-        else None
-      val target = next.fold(outPath)(v => s"$outPath/$v")
-      spark.read.parquet(s"$rootA/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
-      chA.unionByName(
-          chB.join(dropB, chB("doc_id") === col("__drop_id"), "left_anti"))
-        .select(col("doc_id"), col("sig"), col("cval"), col("chunk"))
-        .write.mode("overwrite").partitionBy("chunk").parquet(s"$target/chunks")
-      next.foreach(v => VersionedIndex.commitPointer(spark, outPath, v))
-      nDrop
-    } finally releaseCheckpoint(dropB)
-  }
+                          dedupAcross: Boolean = true): Long =
+    HammingIndex.merge(spark, pathA, pathB, outPath, dedupAcross)
 
-  /** Delete signatures from a persisted hamming index: one distributed
-    * anti-join rewrite of the chunk store (every chunk partition holds
-    * a row per indexed doc by design, so — like the Jaccard index's
-    * bands — no partition pruning is possible; the full rewrite is the
-    * takedown-rate cost).
-    *
-    * CRASH-ATOMIC like [[deleteFromNearDupIndex]]: survivors land in a
-    * fresh `v<N>` dir, the `_current` pointer flips by atomic rename,
-    * and a crash at any earlier point leaves the old version fully
-    * live. Returns the number of indexed docs removed; 0 leaves the
-    * index untouched. */
+  /** Delete signatures from a persisted hamming index: one anti-join
+    * rewrite of the chunk store into a fresh version, committed
+    * atomically like [[deleteFromNearDupIndex]]. Returns the number of
+    * indexed docs removed; 0 leaves the index untouched. */
   def deleteFromHammingIndex(spark: org.apache.spark.sql.SparkSession,
                              path: String, ids: DataFrame,
-                             idCol: String = "doc_id"): Long = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    readHammingParams(spark, root) // fail loudly on a missing index
-    val chunks = spark.read.parquet(s"$root/chunks")
-    // delete side casts to the index's stored id dtype (see
-    // deleteFromNearDupIndex) — string-id indexes delete correctly
-    val idType = chunks.schema("doc_id").dataType
-    val del = ids.select(col(idCol).cast(idType).as("__del_id")).distinct()
-      .localCheckpoint()
-    try {
-      val nDel = chunks
-        .join(del, chunks("doc_id") === del("__del_id"), "left_semi")
-        .select(col("doc_id")).distinct().count()
-      if (nDel == 0) return 0L
-      val next = VersionedIndex.nextVersion(spark, path)
-      val vdir = s"$path/$next"
-      spark.read.parquet(s"$root/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-      chunks
-        .join(del, chunks("doc_id") === del("__del_id"), "left_anti")
-        .select(col("doc_id"), col("sig"), col("cval"), col("chunk"))
-        .write.mode("overwrite").partitionBy("chunk").parquet(s"$vdir/chunks")
-      VersionedIndex.commitPointer(spark, path, next)
-      nDel
-    } finally del.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
+                             idCol: String = "doc_id"): Long =
+    HammingIndex.delete(spark, path, ids, idCol)
 
   /** Incremental perceptual dedup: the fresh signatures with NO index
     * match within the index's maxHamming, original columns intact.
     * Candidates come from the (chunk, cval) equi-join — cost ∝ chunk
-    * collisions, never fresh × corpus — and the hamming verification
-    * rides the joined rows directly (both sigs are already in the
-    * candidate row; no second lookup). The fresh side is a batch,
-    * orders of magnitude smaller than the index — AQE broadcasts it
-    * unhinted. */
+    * collisions, never fresh × corpus; the fresh side is a batch, AQE
+    * broadcasts it unhinted. */
   def hammingAgainstIndex(fresh: DataFrame, path: String,
                           idCol: String = "doc_id",
-                          sigCol: String = "sig"): DataFrame = {
-    val spark = fresh.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val maxHamming = readHammingParams(spark, root)
-    val freshChunks = sigChunks(fresh, idCol, sigCol, maxHamming)
-    val indexChunks = spark.read.parquet(s"$root/chunks")
-    val matched = freshChunks.as("a").join(indexChunks.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval"))
-      .filter(bit_count(col("a.sig").bitwiseXOR(col("b.sig"))) <= maxHamming)
-      .select(col("a.doc_id").as("__dup_id")).distinct()
-    fresh.join(matched, fresh(idCol) === col("__dup_id"), "left_anti")
-  }
+                          sigCol: String = "sig"): DataFrame =
+    HammingIndex.againstIndex(fresh, path, idCol, sigCol)
 
   /** Benchmark-contamination profile: for every corpus document, how
     * many of its distinct lowercase word n-shingles also occur anywhere

@@ -358,7 +358,9 @@ class PlanShapeSpec extends AnyFunSuite {
   // PlanAudit.checkpoint; capturing the pre-checkpoint plans pins the
   // candidate stages (banded / cell-keyed / chunk-keyed equi-joins) of
   // the whole family: no BroadcastNestedLoopJoin, no CartesianProduct
-  // anywhere in any stage.
+  // anywhere in any stage. The index merges (q165/q166) materialize
+  // their cross-index drop set through the same probe, which pins that
+  // candidate join keyed too.
   private def capturedPlans(run: => Unit): Seq[String] =
     capturedBoth(run).map(_._1)
 
@@ -377,7 +379,8 @@ class PlanShapeSpec extends AnyFunSuite {
   for (q <- Seq("q164_streaming_neardup_suppress",
       "q168_streaming_semantic_suppress", "q170_suppress_explain",
       "q171_semantic_suppress_explain", "q172_hamming_suppress",
-      "q173_hamming_suppress_explain"))
+      "q173_hamming_suppress_explain", "q165_merge_neardup_indexes",
+      "q166_merge_hamming_indexes"))
     test(s"$q inner stages are keyed equi-joins — no product anywhere") {
       val plans = capturedPlans {
         SparkEntry.queries(q)(spark, sf).queryExecution.toRdd.count()

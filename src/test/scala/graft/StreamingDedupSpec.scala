@@ -561,7 +561,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(AppendLedger.skippedAppends.get == skip0 + 1)
     assert(AppendLedger.repairAppends.get == repair0)
     assert(spark.read.parquet(s"$idx/chunks").count() == rows)
-    // crash window -> chunk=0-pruned id diff, exactly-once rows
+    // crash window -> (doc_id, chunk) diff against the full table, exactly-once rows
     val tok = AppendLedger.token(batch, "doc_id")
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
