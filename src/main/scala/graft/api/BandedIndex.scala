@@ -81,11 +81,21 @@ private[api] abstract class BandedIndex(val name: String,
     * to the lowest id. */
   def best(pairs: DataFrame): DataFrame
 
+  /** The one-row `params` table: non-null int columns named by
+    * [[paramCols]]. Read with this known schema, so no schema-inference
+    * job runs; a missing directory still fails the read. */
+  private def paramsSchema: StructType =
+    StructType(paramCols.map(StructField(_, IntegerType, nullable = false)))
+
+  private def readParamsTable(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(paramsSchema).parquet(s"$root/params")
+
   /** Params of an already-RESOLVED root; a missing index fails loudly. */
   private def readParams(spark: SparkSession, root: String): Seq[Int] = {
-    val rows = spark.read.parquet(s"$root/params")
-      .select(paramCols.map(col): _*).collect()
+    val rows = readParamsTable(spark, root).collect()
     require(rows.length == 1, s"no $name index at $root")
+    require(!rows(0).anyNull,
+      s"$name index params at $root lack one of ${paramCols.mkString(", ")}")
     val p = paramCols.indices.map(rows(0).getInt)
     validate(p)
     p
@@ -111,7 +121,7 @@ private[api] abstract class BandedIndex(val name: String,
     df.select(t.cols.map(col): _*)
 
   private def copyParams(spark: SparkSession, from: String, to: String): Unit =
-    spark.read.parquet(s"$from/params")
+    readParamsTable(spark, from)
       .coalesce(1).write.mode("overwrite").parquet(s"$to/params")
 
   /** Run `body` on the directory a rewrite of `path` writes, then commit:
@@ -147,8 +157,7 @@ private[api] abstract class BandedIndex(val name: String,
     validate(p)
     val spark = docs.sparkSession
     rewrite(spark, path, version = false) { target =>
-      spark.createDataFrame(java.util.List.of(Row.fromSeq(p)),
-          StructType(paramCols.map(StructField(_, IntegerType, nullable = false))))
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(p)), paramsSchema)
         .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
       writeSignatures(docs, idCol, valueCol, p, target, "overwrite")
     }

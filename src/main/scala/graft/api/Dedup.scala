@@ -2152,19 +2152,27 @@ object Dedup {
       version: String, shards: Int, items: Long, fpp: Double,
       filters: IndexedSeq[org.apache.spark.util.sketch.BloomFilter])
 
-  /** `stat.bloomFilter` that tolerates EMPTY input: Spark's
-    * bloom_filter_agg yields NULL over zero rows and stat.bloomFilter
-    * NPEs deserializing it — but an empty batch (a stream's first
-    * trigger, a shard no batch id routed to) must produce an empty
-    * same-parameter filter (bit-compatible for merge), not a crash.
-    * Emptiness is checked EXPLICITLY (limit-1 scan) rather than by
-    * catching the NPE: a swallowed NPE from a NON-empty build would
-    * silently substitute an empty filter — un-flagged committed ids,
-    * the exact false negative the filter contract forbids. */
-  private def bloomOf(df: DataFrame, c: Column, items: Long,
-                      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
-    if (df.isEmpty) org.apache.spark.util.sketch.BloomFilter.create(items, fpp)
-    else df.stat.bloomFilter(c, items, fpp)
+  /** `stat.bloomFilter` that tolerates EMPTY input, in one job: the
+    * same `bloom_filter_agg(c, items, optimalNumOfBits(items, fpp))`
+    * aggregate Spark's stat.bloomFilter selects, but its NULL result —
+    * which bloom_filter_agg yields over zero rows only, and on which
+    * stat.bloomFilter NPEs — maps to an empty same-parameter filter
+    * (bit-compatible for merge), so an empty batch (a stream's first
+    * trigger, a shard no batch id routed to) needs no separate
+    * emptiness scan. A failed non-empty build still throws: nothing
+    * here can substitute an empty filter for one holding ids. */
+  private[graft] def bloomOf(df: DataFrame, c: Column, items: Long,
+                             fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+    import org.apache.spark.sql.GraftExprBridge
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.util.sketch.BloomFilter
+    val agg = new BloomFilterAggregate(GraftExprBridge.expression(c),
+      GraftExprBridge.expression(lit(items)),
+      GraftExprBridge.expression(lit(BloomFilter.optimalNumOfBits(items, fpp))))
+    val bytes = df.select(GraftExprBridge.column(agg.toAggregateExpression()))
+      .head().getAs[Array[Byte]](0)
+    if (bytes == null) BloomFilter.create(items, fpp) else BloomFilter.readFrom(bytes)
+  }
 
   /** Per-shard Bloom filters over xxhash64(id); shard = pmod(hash,
     * shards). The multi-shard pass caches the narrow (hash, shard)

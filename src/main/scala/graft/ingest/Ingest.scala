@@ -94,8 +94,8 @@ final case class IngestConfig(
     // the commit marker (overwritten on crash-replay — deterministic
     // content, so replays are idempotent; marker-skipped replays never
     // rewrite it). Read back via [[Ingest.piiLedger]]. Cost when
-    // enabled: one extra aggregate pass over the projected batch (the
-    // count action); empty = zero overhead.
+    // enabled: the regexes inside the write; the counts ride the write
+    // as observe metrics, no extra pass; empty = zero overhead.
     redactPiiColumns: Seq[String] = Nil,
     // Near-dup suppression wired INTO the commit path (VERDICT r15 #7,
     // the q161/q209 wiring point): name a generated STRING column and
@@ -375,51 +375,50 @@ object Ingest {
       else Some(CommitPhases.timed(CommitPhases.dedupNs) {
         suppressNearDupRows(cfg, path, token, batch, fs) })
     try {
-    // Batch size via observe metrics riding the staging write (r18):
-    // the standalone batch.count() re-ran the generator projection over
-    // the whole micro-batch — measured 0.7 s of the ~3.4 s commit path
-    // (ProbeIngest phase attribution), ~20% of commit wall for a number
-    // the write job computes anyway. With suppression on, the count is
-    // the suppressor's kept total (already computed in its accounting
-    // aggregate). With expectations on, the quarantine write consumes
-    // the same subtree first and fires the metric — same rows either
-    // way (deterministic frame, counted above the quarantine split).
-    val obsN = org.apache.spark.sql.Observation()
-    val working = dedupInfo.fold(
-      batch.observe(obsN, count(lit(1)).as("n")))(_.kept)
     // PII scrub FIRST (policy is absolute: quarantined rows persist
     // too, so they must be as redacted as published ones), then the
     // expectations split on the scrubbed frame.
     //
-    // DETERMINISM INVARIANT (ADVICE r15): redactAndCount executes the
-    // batch once for the ledger counts, and the staged/quarantine
-    // writes execute it again — the `_pii` ledger matches the
-    // published bytes ONLY because the generator is deterministic per
-    // (token, row index): Gen's pools are pure functions of the row
-    // value and every replay of a token reproduces identical text.
-    // Caching the scrubbed micro-batch would buy nothing here and tax
-    // the hot commit path; any FUTURE nondeterministic source wired
-    // into this loop MUST persist the scrubbed frame across the
-    // count+write pair instead, or the ledger silently desynchronizes.
-    val (scrubbed, piiCounts) = redactAndCount(routeAndProject(working, cfg), cfg)
+    // Every count this commit records rides a write it runs anyway, as
+    // observe metrics. The batch size `n` and the per-type PII match
+    // counts are observed on the routed, scrubbed frame: above the
+    // routing exchange, in the write's result stage, where a re-run map
+    // task cannot count twice. So the `_pii` totals come from the
+    // execution that wrote the bytes and no longer rely on regeneration
+    // being deterministic. With expectations on, the quarantine write
+    // runs this subtree first and fires the observation; its metrics
+    // node sits below the quarantine split, so it counts the whole
+    // batch (the staged slice is a second execution of the same rows:
+    // the split itself, as ever, relies on Gen being deterministic per
+    // row index). An empty micro-batch (a stream's warm-up trigger) can
+    // complete with no metrics row at all — that is genuinely 0 rows.
+    val obs = org.apache.spark.sql.Observation()
+    val (redacted, piiAliases) =
+      redactWithCounts(routeAndProject(dedupInfo.fold(batch)(_.kept), cfg), cfg)
+    val scrubbed = redacted
+      .observe(obs, count(lit(1)).as("n"),
+        piiAliases.map { case (a, _) => sum(col(a)).as(a) }: _*)
+      .drop(piiAliases.map(_._1): _*)
     // Expectations split: tag the PROJECTED rows, land the violators
     // in the quarantine (their own token dir, overwritten on replay)
-    // before anything publishes, and stage only the clean slice.
-    val (toStage, nQuarantined) =
-      if (cfg.expectations.isEmpty) (scrubbed, 0L)
+    // before anything publishes, and stage only the clean slice. The
+    // quarantined count is observed on the frame that write consumes.
+    val (toStage, obsQ) =
+      if (cfg.expectations.isEmpty) (scrubbed, None)
       else {
         val qp = cfg.quarantinePath.getOrElse(sys.error(
           "ingest expectations configured without quarantinePath"))
         val tagged = graft.api.Profiling
           .applyExpectations(scrubbed, cfg.expectations)
+        val oq = org.apache.spark.sql.Observation()
         tagged.filter(col("quarantined"))
           .withColumn("violations", array_join(col("violations"), ","))
           .drop("quarantined")
           .withColumn("batch_token", lit(token))
+          .observe(oq, count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$qp/batch=$token")
-        val nq = spark.read.parquet(s"$qp/batch=$token").count()
-        (tagged.filter(!col("quarantined"))
-          .drop("violations", "quarantined"), nq)
+        (tagged.filter(!col("quarantined")).drop("violations", "quarantined"),
+          Some(oq))
       }
     val staging = new Path(s"$path/_staging/$token")
     CommitPhases.timed(CommitPhases.stageNs) {
@@ -430,13 +429,13 @@ object Ingest {
         .partitionBy("year", "month")
         .save(staging.toString)
     }
-    // the observe metric is available once a write over the subtree has
-    // run (the staging write at the latest); an EMPTY micro-batch (a
-    // stream's warm-up trigger) can complete with no metrics row at all
-    // — that is genuinely 0 rows, not an error
-    val n = CommitPhases.timed(CommitPhases.countNs) {
-      dedupInfo.fold(
-        obsN.get.getOrElse("n", 0L).asInstanceOf[Long])(_.nKept) }
+    val (n, nQuarantined, piiCounts) = CommitPhases.timed(CommitPhases.countNs) {
+      val m = observed(obs)
+      (m("n"),
+        obsQ.fold(0L)(observed(_)("n")),
+        graft.api.Curation.PiiPatterns.map { case (t, _, _) =>
+          t -> piiAliases.collect { case (a, `t`) => m(a) }.sum })
+    }
     val nCommitted = n - nQuarantined
     CommitPhases.timed(CommitPhases.publishNs) {
     val stagingQualified = fs.makeQualified(staging).toString
@@ -565,10 +564,9 @@ object Ingest {
     * PRE-scrub content), keep-first within the batch (min row value
     * per fingerprint — deterministic under replay), then a codegen'd
     * Bloom probe against the PINNED version of the fingerprint filter
-    * for cross-batch suppression. One accounting aggregate per commit;
-    * the kept frame re-derives deterministically for the downstream
-    * stage/publish executions (the redactAndCount determinism
-    * invariant, same argument).
+    * for cross-batch suppression. The accounting is observed on the
+    * checkpoint's own job, and the kept frame reads that checkpoint, so
+    * the `_dedup` counts describe exactly the rows the commit stages.
     *
     * CONCURRENT COMMIT GROUPS (VERDICT r16 #7): the version consult,
     * the accounting, the `_dedup` ledger write, and the fingerprint
@@ -641,21 +639,23 @@ object Ingest {
             pinned.filter(_ != "none")
           } else graft.api.Dedup.seenFilterVersion(spark, fpPath)
         // flagged reads the CHECKPOINTED rank — one cheap codegen'd
-        // Bloom pass; its own checkpoint is what the staged write and
-        // the accounting both consume. Released by commitBatch after
-        // the marker lands.
+        // Bloom pass; its own checkpoint is what the staged write
+        // consumes, and the accounting rides that checkpoint's job as
+        // observe metrics. Released by commitBatch after the marker
+        // lands.
+        val acc = org.apache.spark.sql.Observation()
         val flagged = (basedOn match {
           case Some(v) => graft.api.Dedup.markSeen(spark, ranked, "__fp",
             fpPath, "__seen", version = Some(v))
           case None => ranked.withColumn("__seen", lit(false))
-        }).localCheckpoint()
-        try {
-          val acc = flagged.agg(
+        }).observe(acc,
             sum(when(col("__rn") > 1, 1L).otherwise(0L)).as("w"),
             sum(when(col("__rn") === 1 && col("__seen"), 1L).otherwise(0L)).as("s"),
-            count(lit(1)).as("t")).head()
-          def at(i: Int): Long = if (acc.isNullAt(i)) 0L else acc.getLong(i)
-          val (nWithin, nSeen, total) = (at(0), at(1), at(2))
+            count(lit(1)).as("t"))
+          .localCheckpoint()
+        try {
+          val m = observed(acc)
+          val (nWithin, nSeen, total) = (m("w"), m("s"), m("t"))
           val keptFlagged = flagged.filter(col("__rn") === 1 && !col("__seen"))
           val keptFps = keptFlagged.select(col("__fp").as("fp"))
           val nKept = total - nWithin - nSeen
@@ -713,36 +713,29 @@ object Ingest {
   }
 
   /** The commit-path PII scrub (cfg.redactPiiColumns): redact each
-    * named column with [[graft.api.Curation.redactPii]], SUM the
-    * per-type match counts across the batch (one aggregate action),
-    * and drop the count columns so the staged schema is identical to
-    * the un-redacted path's. Returns (scrubbed frame, per-type totals
-    * in PiiPatterns order). */
-  private def redactAndCount(projected: DataFrame, cfg: IngestConfig)
-      : (DataFrame, Seq[(String, Long)]) = {
-    if (cfg.redactPiiColumns.isEmpty) return (projected, Nil)
+    * named column with [[graft.api.Curation.redactPii]], keeping its
+    * per-row match count of each type as column `__pii_<col>_<type>`.
+    * Returns the frame and its (count column, PII type) pairs; the
+    * caller observes their sums and drops them, so the staged schema
+    * is identical to the un-redacted path's. */
+  private def redactWithCounts(projected: DataFrame, cfg: IngestConfig)
+      : (DataFrame, Seq[(String, String)]) = {
     val types = graft.api.Curation.PiiPatterns.map(_._1)
-    var d = projected
-    val aliases = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    cfg.redactPiiColumns.foreach { c =>
-      d = graft.api.Curation.redactPii(d, c)
-      types.foreach { t =>
-        val a = s"__pii_${c}_$t"
-        d = d.withColumnRenamed(s"n_$t", a)
-        aliases += ((a, t))
-      }
+    val redacted = cfg.redactPiiColumns.foldLeft(projected) { (d, c) =>
+      types.foldLeft(graft.api.Curation.redactPii(d, c))((d1, t) =>
+        d1.withColumnRenamed(s"n_$t", s"__pii_${c}_$t"))
     }
-    // aliases is non-empty whenever redactPiiColumns is (every column
-    // contributes one alias per type), so head/tail is total
-    val aggCols = aliases.toSeq.map { case (a, _) => sum(col(a)).as(a) }
-    val sums = d.agg(aggCols.head, aggCols.tail: _*).head()
-    val totals = types.map { t =>
-      t -> aliases.filter(_._2 == t).map { case (a, _) =>
-        val i = sums.fieldIndex(a)
-        if (sums.isNullAt(i)) 0L else sums.getLong(i)
-      }.sum
+    (redacted, for (c <- cfg.redactPiiColumns; t <- types) yield (s"__pii_${c}_$t", t))
+  }
+
+  /** An observation's metrics as longs; a metric with no value (no
+    * metrics row, or a sum over zero rows) reads 0. */
+  private def observed(o: org.apache.spark.sql.Observation): String => Long = {
+    val m = o.get
+    k => m.get(k) match {
+      case Some(v: Long) => v
+      case _ => 0L
     }
-    (d.drop(aliases.map(_._1).toSeq: _*), totals)
   }
 
   /** The `_pii` redaction ledger of an ingest table: one row per
