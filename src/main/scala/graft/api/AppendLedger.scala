@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Commit
+
 /** Per-batch idempotence ledger for the suppressor index appends — the
   * ingest `_commits` discipline (graft.ingest.Ingest staged publish)
   * applied to the three persisted suppressor stores (MinHash near-dup,
@@ -102,9 +104,8 @@ private[graft] object AppendLedger {
   /** Write the intent marker — MUST complete before any append row
     * lands, so a crash mid-append always leaves the repair signpost. */
   def begin(spark: SparkSession, path: String, tok: String): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(marker(path, tok, "intent"), true)
-    out.close()
+    Commit.createExclusive(fs(spark, path), marker(path, tok, "intent"))
+    ()
   }
 
   /** Flip intent → done once every table's append for the batch has
@@ -113,8 +114,7 @@ private[graft] object AppendLedger {
     * first, so the batch still reads as completed. */
   def finish(spark: SparkSession, path: String, tok: String): Unit = {
     val f = fs(spark, path)
-    val out = f.create(marker(path, tok, "done"), true)
-    out.close()
+    Commit.createExclusive(f, marker(path, tok, "done"))
     f.delete(marker(path, tok, "intent"), false)
     ()
   }
@@ -131,6 +131,7 @@ private[graft] object AppendLedger {
     if (!f.exists(dir)) Seq.empty
     else {
       val names = f.listStatus(dir).map(_.getPath.getName).toSeq
+        .filterNot(Commit.hidden)
       val done = names.collect { case n if n.endsWith(".done") =>
         n.stripSuffix(".done") }.toSet
       names.flatMap {

@@ -1840,8 +1840,11 @@ object Dedup {
     *
     * Sharding (`shards` > 1) bounds PER-FILTER driver memory for
     * builds and appends: ids route to `pmod(xxhash64(id), shards)`,
-    * each shard sized `expectedItems / shards` — size shards so each
-    * stays under ~10^8 ids (~120 MB). [[markSeen]] handles any shard
+    * each shard sized `expectedItems / shards`, which Spark's Bloom
+    * aggregate clamps to 4M ids and 64 Mi bits (8 MiB;
+    * spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits) —
+    * size shards so each stays under ~4M ids, past which a shard's fpp
+    * degrades. [[markSeen]] handles any shard
     * count transparently (each id probes exactly its own shard via one
     * CASE dispatch); note the marking PLAN carries every shard's bytes
     * (total ~1.2 B/id regardless of shard count) — at extreme corpus
@@ -1887,14 +1890,7 @@ object Dedup {
     seenLock(path).synchronized {
       if (!seenFilterExists(df.sparkSession, path))
         buildSeenFilter(df, idCol, path, expectedItems, fpp, shards)
-      else {
-        val spark = df.sparkSession
-        val st = readSeenState(spark, path)
-        val batch = shardFilters(df, idCol, st.shards,
-          math.max(1L, st.items / st.shards), st.fpp)
-        st.filters.zip(batch).foreach { case (old, b) => old.mergeInPlace(b) }
-        commitSeenVersion(spark, path, st)
-      }
+      else appendToSeenFilter(df, idCol, path)
     }
 
   /** Merge two persisted seen filters into a NEW filter at `outPath`
@@ -1919,11 +1915,7 @@ object Dedup {
   def mergeSeenFilters(spark: org.apache.spark.sql.SparkSession,
                        pathA: String, pathB: String, outPath: String): Unit =
     seenLock(outPath).synchronized {
-      def currentAt(p: String): Option[String] = {
-        val r = VersionedIndex.resolveRoot(spark, p)
-        if (r == p) None else Some(r.stripPrefix(s"$p/"))
-      }
-      val based = currentAt(outPath)
+      val based = seenFilterVersion(spark, outPath)
       val a = readSeenState(spark, pathA)
       val b = readSeenState(spark, pathB)
       require(a.shards == b.shards && a.items == b.items && a.fpp == b.fpp,
@@ -1932,22 +1924,7 @@ object Dedup {
           s"(${b.shards}, ${b.items}, ${b.fpp}) — Bloom bit arrays are " +
           "not bit-compatible; rebuild one side to match")
       a.filters.zip(b.filters).foreach { case (fa, fb) => fa.mergeInPlace(fb) }
-      withSeenPathLock(spark, outPath) {
-        val next = VersionedIndex.nextVersion(spark, outPath)
-        writeSeenVersion(spark, outPath, next, a.shards, a.items, a.fpp,
-          a.filters)
-        if (currentAt(outPath) != based) {
-          import org.apache.hadoop.fs.Path
-          val base = new Path(outPath)
-          val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.delete(new Path(base, next), true)
-          throw new IllegalStateException(
-            s"concurrent seen-filter write at $outPath during merge: based " +
-              s"on ${based.getOrElse("<none>")} — committing would drop the " +
-              "racer's ids; retry the merge")
-        }
-        VersionedIndex.commitPointer(spark, outPath, next)
-      }
+      commitSeenVersion(spark, outPath, a, based)
     }
 
   /** True when a committed filter exists at `path`. */
@@ -2024,20 +2001,21 @@ object Dedup {
     * `fpp`, the exact-check tier behind [[markSeen]] starts paying for
     * filter exhaustion — rebuild bigger. `est_ids` is the
     * Swamidass–Baldi cardinality estimate -(m/k)·ln(1 − X/m) per shard
-    * (k re-derived from the build geometry exactly as the filter's
-    * constructor chose it: max(1, round(m/n·ln 2)) with n =
-    * expected_items/shards); a shard at full saturation reports
+    * (k re-derived exactly as the filter's constructor chose it:
+    * max(1, round(m/n·ln 2)) over the shard's clamped geometry
+    * [[seenGeometry]] — n = expected_items/shards capped at Spark's
+    * maxNumItems); a shard at full saturation reports
     * Long.MaxValue — the estimate is unbounded there, which is itself
     * the signal. Driver-side metadata read (≤4096 shard headers +
     * popcounts), no Spark jobs, no shuffle. */
   def seenFilterStats(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame = {
     val st = readSeenState(spark, path)
-    val perShardItems = math.max(1L, st.items / st.shards)
+    val (n, bits) = seenGeometry(spark, math.max(1L, st.items / st.shards), st.fpp)
+    val k = math.max(1L, math.round(bits.toDouble / n * math.log(2.0)))
     val rows = st.filters.zipWithIndex.map { case (bf, s) =>
       val m = bf.bitSize()
       val x = bf.cardinality()
-      val k = math.max(1L, math.round(m.toDouble / perShardItems * math.log(2.0)))
       val est =
         if (x >= m) Long.MaxValue
         else math.round(-(m.toDouble / k) * math.log1p(-(x.toDouble / m)))
@@ -2106,7 +2084,6 @@ object Dedup {
     import org.apache.hadoop.fs.Path
     val base = new Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(base)
     val lock = new Path(base, "_lock")
     val staleMs = spark.conf
       .getOption("spark.graft.seenFilter.lockStaleMs").map(_.toLong)
@@ -2115,34 +2092,29 @@ object Dedup {
       try Some(System.currentTimeMillis() -
         fs.getFileStatus(lock).getModificationTime)
       catch { case _: java.io.IOException => None } // racing holder released
-    var acquired = false
     var attempts = 0
-    while (!acquired) {
-      try { fs.create(lock, false).close(); acquired = true }
-      catch {
-        case _: java.io.IOException =>
-          val age = lockAgeMs()
-          if (staleMs > 0 && age.exists(_ > staleMs)) {
-            // break-or-alert: the operator opted into an age bound, and
-            // this lock has outlived it — declare the holder crashed
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"breaking stale seen-filter lock $lock (age ${age.get} ms " +
-                s"> spark.graft.seenFilter.lockStaleMs=$staleMs) — if a " +
-                "writer was live, its commit may now race this one")
-            fs.delete(lock, false)
-            // loop retries the exclusive create — another waiter may
-            // win the broken lock first, which is fine
-          } else {
-            attempts += 1
-            if (attempts >= 100) throw new IllegalStateException(
-              s"could not acquire seen-filter lock $lock after ~10 s — " +
-                "another writer holds it, or a crashed writer left it " +
-                s"behind (lock age: ${age.map(_ + " ms").getOrElse("unknown")}; " +
-                "remove the stale _lock manually after confirming no " +
-                "writer is live, or opt into automated breaking via " +
-                "spark.graft.seenFilter.lockStaleMs)")
-            Thread.sleep(100)
-          }
+    while (!graft.core.Commit.createExclusive(fs, lock)) {
+      val age = lockAgeMs()
+      if (staleMs > 0 && age.exists(_ > staleMs)) {
+        // break-or-alert: the operator opted into an age bound, and
+        // this lock has outlived it — declare the holder crashed
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"breaking stale seen-filter lock $lock (age ${age.get} ms " +
+            s"> spark.graft.seenFilter.lockStaleMs=$staleMs) — if a " +
+            "writer was live, its commit may now race this one")
+        fs.delete(lock, false)
+        // loop retries the exclusive create — another waiter may
+        // win the broken lock first, which is fine
+      } else {
+        attempts += 1
+        if (attempts >= 100) throw new IllegalStateException(
+          s"could not acquire seen-filter lock $lock after ~10 s — " +
+            "another writer holds it, or a crashed writer left it " +
+            s"behind (lock age: ${age.map(_ + " ms").getOrElse("unknown")}; " +
+            "remove the stale _lock manually after confirming no " +
+            "writer is live, or opt into automated breaking via " +
+            "spark.graft.seenFilter.lockStaleMs)")
+        Thread.sleep(100)
       }
     }
     try body finally { fs.delete(lock, false); () }
@@ -2152,26 +2124,41 @@ object Dedup {
       version: String, shards: Int, items: Long, fpp: Double,
       filters: IndexedSeq[org.apache.spark.util.sketch.BloomFilter])
 
+  /** The (items, bits) geometry a Bloom filter for `items` ids at `fpp`
+    * really gets from Spark's `bloom_filter_agg` (and so from
+    * `stat.bloomFilter`): both are clamped to
+    * spark.sql.optimizer.runtime.bloomFilter.maxNumItems / maxNumBits
+    * (4M ids, 64 Mi bits by default). */
+  private def seenGeometry(spark: org.apache.spark.sql.SparkSession, items: Long,
+                           fpp: Double): (Long, Long) = {
+    def cap(k: String) =
+      spark.conf.get(s"spark.sql.optimizer.runtime.bloomFilter.$k").toLong
+    (math.min(items, cap("maxNumItems")),
+      math.min(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, fpp),
+        cap("maxNumBits")))
+  }
+
   /** `stat.bloomFilter` that tolerates EMPTY input, in one job: the
-    * same `bloom_filter_agg(c, items, optimalNumOfBits(items, fpp))`
-    * aggregate Spark's stat.bloomFilter selects, but its NULL result —
-    * which bloom_filter_agg yields over zero rows only, and on which
-    * stat.bloomFilter NPEs — maps to an empty same-parameter filter
-    * (bit-compatible for merge), so an empty batch (a stream's first
-    * trigger, a shard no batch id routed to) needs no separate
-    * emptiness scan. A failed non-empty build still throws: nothing
-    * here can substitute an empty filter for one holding ids. */
+    * same `bloom_filter_agg` aggregate Spark's stat.bloomFilter
+    * selects, given the clamped [[seenGeometry]] it would build, but
+    * its NULL result — which bloom_filter_agg yields over zero rows
+    * only, and on which stat.bloomFilter NPEs — maps to an empty filter
+    * of that same geometry (bit-compatible for merge), so an empty
+    * batch (a stream's first trigger, a shard no batch id routed to)
+    * needs no separate emptiness scan. A failed non-empty build still
+    * throws: nothing here can substitute an empty filter for one
+    * holding ids. */
   private[graft] def bloomOf(df: DataFrame, c: Column, items: Long,
                              fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     import org.apache.spark.sql.GraftExprBridge
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.util.sketch.BloomFilter
+    val (n, bits) = seenGeometry(df.sparkSession, items, fpp)
     val agg = new BloomFilterAggregate(GraftExprBridge.expression(c),
-      GraftExprBridge.expression(lit(items)),
-      GraftExprBridge.expression(lit(BloomFilter.optimalNumOfBits(items, fpp))))
+      GraftExprBridge.expression(lit(n)), GraftExprBridge.expression(lit(bits)))
     val bytes = df.select(GraftExprBridge.column(agg.toAggregateExpression()))
       .head().getAs[Array[Byte]](0)
-    if (bytes == null) BloomFilter.create(items, fpp) else BloomFilter.readFrom(bytes)
+    if (bytes == null) BloomFilter.create(n, bits) else BloomFilter.readFrom(bytes)
   }
 
   /** Per-shard Bloom filters over xxhash64(id); shard = pmod(hash,
@@ -2218,55 +2205,52 @@ object Dedup {
   }
 
   /** Write the (already-merged) state as a new version and CAS the
-    * pointer: if `_current` moved since the state was read, delete the
-    * staged version and fail loudly — ids were NOT lost (the racer's
-    * commit stands; this append must retry on a fresh read). */
+    * pointer from the version `st` was read at. */
   private[graft] def commitSeenVersion(spark: org.apache.spark.sql.SparkSession,
                                 path: String, st: SeenFilterState): Unit =
+    commitSeenVersion(spark, path, st, Some(st.version))
+
+  /** Write `st` as a new version at `path` and CAS the pointer: if
+    * `_current` is no longer `based` (None: no filter yet), delete the
+    * staged version and fail loudly — ids were NOT lost (the racer's
+    * commit stands; committing would drop its ids, so the append or
+    * merge must retry on a fresh read). */
+  private def commitSeenVersion(spark: org.apache.spark.sql.SparkSession,
+                                path: String, st: SeenFilterState,
+                                based: Option[String]): Unit =
     withSeenPathLock(spark, path) {
       import org.apache.hadoop.fs.Path
       val next = VersionedIndex.nextVersion(spark, path)
       writeSeenVersion(spark, path, next, st.shards, st.items, st.fpp, st.filters)
-      val cur = VersionedIndex.resolveRoot(spark, path).stripPrefix(s"$path/")
-      if (cur != st.version) {
+      val cur = seenFilterVersion(spark, path)
+      if (cur != based) {
         val base = new Path(path)
         val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(new Path(base, next), true)
         throw new IllegalStateException(
-          s"concurrent seen-filter append at $path: based on ${st.version}, " +
-            s"now $cur — retry the append (no ids were lost)")
+          s"concurrent seen-filter write at $path: based on " +
+            s"${based.getOrElse("<none>")}, now ${cur.getOrElse("<none>")} — " +
+            "retry on a fresh read (no ids were lost)")
       }
       VersionedIndex.commitPointer(spark, path, next)
     }
 
   private[graft] def readSeenState(spark: org.apache.spark.sql.SparkSession,
-                            path: String): SeenFilterState = {
-    import org.apache.hadoop.fs.Path
-    val root = VersionedIndex.resolveRoot(spark, path)
-    if (root == path) {
-      // distinguish "never built" from "pre-versioned single file" so
-      // the user gets the right one-step fix, not a misleading
-      // build-then-fail-again loop
-      val p = new Path(path)
-      val pfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      require(!(pfs.exists(p) && pfs.getFileStatus(p).isFile),
-        s"seen-filter at $path uses the pre-versioned single-file " +
-          "layout — delete it and rebuild with buildSeenFilter")
-      require(false, s"no committed seen-filter at $path — buildSeenFilter first")
+                            path: String): SeenFilterState =
+    seenFilterVersion(spark, path) match {
+      case Some(v) => readSeenStateAt(spark, path, v)
+      case None =>
+        // distinguish "never built" from "pre-versioned single file" so
+        // the user gets the right one-step fix, not a misleading
+        // build-then-fail-again loop
+        val p = new org.apache.hadoop.fs.Path(path)
+        val pfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        require(!(pfs.exists(p) && pfs.getFileStatus(p).isFile),
+          s"seen-filter at $path uses the pre-versioned single-file " +
+            "layout — delete it and rebuild with buildSeenFilter")
+        throw new IllegalArgumentException(
+          s"no committed seen-filter at $path — buildSeenFilter first")
     }
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaIn = new java.io.DataInputStream(fs.open(new Path(root, "_meta")))
-    val (shards, items, fpp) =
-      try (metaIn.readInt(), metaIn.readLong(), metaIn.readDouble())
-      finally metaIn.close()
-    val filters = (0 until shards).map { s =>
-      val in = new java.io.DataInputStream(
-        fs.open(new Path(root, f"filter-$s%04d")))
-      try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-      finally in.close()
-    }
-    SeenFilterState(root.stripPrefix(s"$path/"), shards, items, fpp, filters)
-  }
 
   /** Current committed seen-filter version name at `path`, None when
     * no filter exists — the handle a replay-deterministic consumer

@@ -1,21 +1,22 @@
 package graft.api
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Versioned-directory index layout with an atomic `_current` pointer —
   * the crash-safety discipline shared by every persisted index in this
   * package (IVF/IVF+PQ vector indexes, the MinHash near-dup index, the
-  * hamming perceptual index).
+  * hamming perceptual index, the Bloom seen filter).
   *
   * Layout: a fresh build lives at `path` itself (legacy/simple layout);
   * any rewriting operation (reindex, delete) writes a complete new tree
-  * under `path/v<N>` and then commits by writing `path/_current` via
-  * temp-file + rename-with-overwrite — atomic on local FS and HDFS.
-  * Readers resolve through [[resolveRoot]], so a rewrite becomes
-  * visible at exactly one commit point: a crash at ANY earlier moment
-  * leaves the previous version fully live and the half-written v-dir
-  * invisible (the next writer skips past it when numbering).
+  * under `path/v<N>` and then commits by replacing `path/_current`
+  * with [[graft.core.Commit.writeAtomically]] (hidden temp sibling,
+  * then rename-with-overwrite). Readers resolve through
+  * [[resolveRoot]], so a rewrite becomes visible at exactly one commit
+  * point: a crash at ANY earlier moment leaves the previous version
+  * fully live and the half-written v-dir invisible (the next writer
+  * skips past it when numbering).
   */
 private[graft] object VersionedIndex {
 
@@ -48,18 +49,13 @@ private[graft] object VersionedIndex {
     s"v${(0L +: existing).max + 1}"
   }
 
-  /** Commit point: flip `path/_current` to `version` by temp file +
-    * atomic rename-with-overwrite. Everything under `path/$version`
-    * must already be fully written. */
+  /** Commit point: atomically replace `path/_current` with `version`.
+    * Everything under `path/$version` must already be fully written. */
   def commitPointer(spark: SparkSession, path: String, version: String): Unit = {
     val base = new Path(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(base, s"._current.$version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    FileContext.getFileContext(base.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(base, "_current"), Options.Rename.OVERWRITE)
+    graft.core.Commit.writeAtomically(fs, new Path(base, "_current"),
+      version.getBytes("UTF-8"), replace = true)
   }
 
   /** Delete every superseded version dir (and, once a pointer exists,

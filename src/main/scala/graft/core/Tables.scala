@@ -139,7 +139,7 @@ object Tables {
       kids.foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory) {
-          if (descendHidden || !(n.startsWith("_") || n.startsWith(".")))
+          if (descendHidden || !Commit.hidden(n))
             rec(st.getPath)
         } else visit(st)
       }
@@ -495,16 +495,16 @@ object Tables {
       val f = st.getPath
       val rel = f.toString.stripPrefix(rootQualified).stripPrefix("/")
       val segs = rel.split('/')
-      val visible = !segs.exists(seg => seg.startsWith("_") || seg.startsWith("."))
+      val visible = !segs.exists(Commit.hidden)
       f.getName match {
         case batchFile(id) if visible && committed(id) => files += st
         case _ => ()
       }
-      if (schemaDonor.isEmpty && !f.getName.startsWith(".") && !f.getName.startsWith("_")) {
+      if (schemaDonor.isEmpty && !Commit.hidden(f.getName)) {
         if (visible && batchFile.pattern.matcher(f.getName).matches())
           schemaDonor = Some((f.toString, path))
         else if (segs.headOption.contains("_staging") && segs.length > 2 &&
-          !segs.drop(2).exists(seg => seg.startsWith("_") || seg.startsWith(".")))
+          !segs.drop(2).exists(Commit.hidden))
           schemaDonor = Some((f.toString, s"$path/_staging/${segs(1)}"))
       }
     }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.core.Tables
+import graft.core.{Commit, Tables}
 
 /** Small-file maintenance for the staged-commit ingest layout
   * (reference behavior delegated to Hive ACID compactor,
@@ -26,15 +26,18 @@ import graft.core.Tables
   *     nothing else would — plain unmarked `b<id>-*` files are left to
   *     commitBatch's own replay scrub);
   *  3. rewrite the snapshot through `_staging/c<stamp>` and publish
-  *     the files as `bc<stamp>-*` renames — invisible so far, no
-  *     marker exists;
-  *  4. write marker `_commits/c<stamp>` whose CONTENT is T, via
-  *     temp-file + atomic rename. This single rename is the commit
-  *     point: a reader resolves either {T live} or {T superseded,
-  *     c<stamp> live} — never both, never neither.
+  *     the files as `bc<stamp>-*` renames ([[graft.core.Commit.publish]])
+  *     — invisible so far, no marker exists;
+  *  4. write marker `_commits/c<stamp>` whose CONTENT is T with
+  *     [[graft.core.Commit.writeAtomically]]: the hidden temp
+  *     `_commits/.c<stamp>.tmp`, then one rename over the marker name.
+  *     That rename is the commit point: a reader resolves either
+  *     {T live} or {T superseded, c<stamp> live} — never both, never
+  *     neither.
   *
-  * Crash before step 4 leaves only invisible files (step 2 of the next
-  * run scrubs them); crash after is a completed compaction. Batches
+  * Crash before step 4's rename leaves only invisible files (step 2 of
+  * the next run scrubs the data files; every marker lister skips the
+  * hidden temp); crash after is a completed compaction. Batches
   * committed CONCURRENTLY with the rewrite are not in T, so they stay
   * live alongside the compacted token — compaction never loses a
   * commit. Superseded files stay on disk (readers mid-listing may
@@ -111,7 +114,7 @@ object Compact {
           .sortWithinPartitions(keys: _*)
           .drop("_z")
       } else df.repartition(partitionCols.map(col): _*)
-    val published = publishRewrite(spark, fs, root, token, arranged,
+    val published = publishRewrite(fs, root, token, arranged,
       partitionCols, format, compression, live)
     Some(CompactResult(token, rows, liveFiles.size, published))
   }
@@ -119,13 +122,12 @@ object Compact {
   /** Shared rewrite-commit publisher (steps 3–4 of the object doc):
     * write `df` through `_staging/<token>`, publish the files as
     * `b<token>-*` renames (invisible — no marker yet), then land marker
-    * `_commits/<token>` whose CONTENT is `superseded` via temp-file +
-    * atomic rename — the single commit point. Used by [[compact]] and
-    * by [[Mutate]]'s row-level rewrites (a mutation is a compaction of
-    * the affected tokens that drops/replaces rows on the way through).
-    * Returns the published file count. */
-  private[ingest] def publishRewrite(spark: SparkSession,
-                                     fs: org.apache.hadoop.fs.FileSystem,
+    * `_commits/<token>` whose CONTENT is `superseded` atomically — the
+    * single commit point. Used by [[compact]] and by [[Mutate]]'s
+    * row-level rewrites (a mutation is a compaction of the affected
+    * tokens that drops/replaces rows on the way through). Returns the
+    * published file count. */
+  private[ingest] def publishRewrite(fs: org.apache.hadoop.fs.FileSystem,
                                      root: Path, token: String,
                                      df: org.apache.spark.sql.DataFrame,
                                      partitionCols: Seq[String], format: String,
@@ -136,31 +138,9 @@ object Compact {
       .option("compression", compression)
       .partitionBy(partitionCols: _*)
       .save(staging.toString)
-    val stagingQualified = fs.makeQualified(staging).toString
-    var published = 0
-    val stagedFiles = scala.collection.mutable.ArrayBuffer.empty[Path]
-    Tables.walkStatuses(fs, staging)(st => stagedFiles += st.getPath)
-    stagedFiles.foreach { f =>
-      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-        val rel = f.toString.stripPrefix(stagingQualified).stripPrefix("/")
-        val relDir = rel.split('/').dropRight(1).mkString("/")
-        val destDir = if (relDir.isEmpty) root else new Path(root, relDir)
-        fs.mkdirs(destDir)
-        val dest = new Path(destDir, s"b$token-${f.getName}")
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"rewrite publish failed: $f -> $dest")
-        published += 1
-      }
-    }
-    fs.delete(staging, true)
-    val marker = new Path(root, s"_commits/$token")
-    val tmp = new Path(root, s"_commits/.$token.tmp")
-    fs.mkdirs(marker.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(superseded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmp, marker))
-      throw new java.io.IOException(s"rewrite marker rename failed: $marker")
+    val published = Commit.publish(fs, staging, root, token)
+    Commit.writeAtomically(fs, new Path(root, s"_commits/$token"),
+      superseded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
     published
   }
 
@@ -197,36 +177,13 @@ object Compact {
     // it only ever touches superseded-and-marked tokens).
     val filterVacuumed = Seq("_neardup_filter").map { n =>
       val p = new Path(root, n)
-      if (fs.exists(p) && graft.api.Dedup.seenFilterExists(spark, p.toString))
-        graft.api.Dedup.vacuumSeenFilter(spark, p.toString,
-          keepVersions = replayPinnedFilterVersions(fs, root)).size
-      else 0
+      if (fs.exists(p) && graft.api.Dedup.seenFilterExists(spark, p.toString)) {
+        val pinned = Ingest.readLedgerDir(spark, path, "_dedup", !marked.contains(_))
+          .flatMap(_._2.get("basedOnVersion")).filter(_ != "none").toSet
+        graft.api.Dedup.vacuumSeenFilter(spark, p.toString, keepVersions = pinned).size
+      } else 0
     }.sum
     superseded.size + filterVacuumed
-  }
-
-  /** Filter versions pinned by `_dedup` ledgers of batches whose commit
-    * marker has NOT landed — the set a crashed commit's replay will
-    * re-consult (`Ingest.suppressNearDupRows`); metadata-sized read. */
-  private[ingest] def replayPinnedFilterVersions(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path): Set[String] = {
-    val dedupDir = new Path(root, "_dedup")
-    if (!fs.exists(dedupDir)) return Set.empty
-    fs.listStatus(dedupDir).toSeq.filter(_.isFile).flatMap { st =>
-      val token = st.getPath.getName
-      if (fs.exists(new Path(root, s"_commits/$token"))) None
-      else {
-        val in = fs.open(st.getPath)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        lines.collectFirst {
-          case l if l.startsWith("basedOnVersion=") &&
-            l.stripPrefix("basedOnVersion=") != "none" =>
-            l.stripPrefix("basedOnVersion=")
-        }
-      }
-    }.toSet
   }
 
   /** Operational entry point: `runMain graft.ingest.Compact <dir>

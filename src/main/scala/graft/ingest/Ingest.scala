@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.core.Commit
+
 /** Job configuration, mirroring the reference CLI's twelve knobs and
   * their defaults (reference `core/CulvertCLI.java:36-47`) plus the
   * sink location (we write partitioned ORC/parquet directories instead
@@ -70,7 +72,10 @@ final case class IngestConfig(
     seenFilterColumn: Option[String] = None,
     // Sizing for the filter's lazy first build (lifetime id count —
     // a Bloom filter never shrinks; overshooting costs bits, not
-    // correctness).
+    // correctness). Spark's Bloom aggregate clamps one filter to 4M ids
+    // and 64 Mi bits (spark.sql.optimizer.runtime.bloomFilter
+    // .maxNumItems/maxNumBits), so the default builds that clamped
+    // filter; past ~4M ids its fpp degrades.
     seenFilterExpectedItems: Long = 10000000L,
     // Write-path expectations (graft.api.Profiling.applyExpectations,
     // row-decidable rules only): rows violating any rule divert to
@@ -91,9 +96,9 @@ final case class IngestConfig(
     // the expectations split, so neither the published table nor the
     // quarantine ever persists un-redacted PII. Per-batch per-type
     // redaction counts land in a `_pii/<token>` ledger entry before
-    // the commit marker (overwritten on crash-replay — deterministic
-    // content, so replays are idempotent; marker-skipped replays never
-    // rewrite it). Read back via [[Ingest.piiLedger]]. Cost when
+    // the commit marker (written once with a temp file and a rename;
+    // a crash-replay's entry has the same deterministic content, so
+    // replays are idempotent). Read back via [[Ingest.piiLedger]]. Cost when
     // enabled: the regexes inside the write; the counts ride the write
     // as observe metrics, no extra pass; empty = zero overhead.
     redactPiiColumns: Seq[String] = Nil,
@@ -119,8 +124,9 @@ final case class IngestConfig(
     // deliberately its own knob (ADVICE r16): markSeen serializes the
     // whole pinned filter into every commit's plan as literals, a
     // per-commit cost proportional to FILTER size, not batch size, so
-    // inheriting seenFilterExpectedItems' 10M default (~12 MB of plan
-    // literals per commit) taxed the hot path 10× for tables whose
+    // inheriting seenFilterExpectedItems' 10M default (clamped to 64 Mi
+    // bits by Spark's Bloom aggregate: 8 MiB of plan literals per
+    // commit) taxed the hot path ~7× for tables whose
     // distinct-content count is nowhere near their id count. Same
     // Bloom contract: overshooting costs bits, undershooting degrades
     // fpp (over-suppression), never correctness.
@@ -437,28 +443,10 @@ object Ingest {
           t -> piiAliases.collect { case (a, `t`) => m(a) }.sum })
     }
     val nCommitted = n - nQuarantined
+    // a failed publish rename fails the commit; the replay scrubs and
+    // re-publishes
     CommitPhases.timed(CommitPhases.publishNs) {
-    val stagingQualified = fs.makeQualified(staging).toString
-    val stagedFiles = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    graft.core.Tables.walkStatuses(fs, staging)(st => stagedFiles += st.getPath)
-    stagedFiles.foreach { f =>
-      if (!f.getName.startsWith("_") && !f.getName.startsWith(".")) {
-        // staging/<year=Y/month=M>/part-… → path/<year=Y/month=M>/b<id>-part-…
-        val rel = f.toString.stripPrefix(stagingQualified).stripPrefix("/")
-        val relDir = rel.split('/').dropRight(1).mkString("/")
-        val destDir = if (relDir.isEmpty) new Path(path) else new Path(s"$path/$relDir")
-        fs.mkdirs(destDir)
-        val dest = new Path(destDir, s"b$token-${bucketSuffixed(cfg, f.getName)}")
-        // rename reports failure by RETURN VALUE on many filesystems;
-        // ignoring it would delete staging, write the marker, and count
-        // rows that never reached the table — fail the commit instead
-        // (the replay protocol scrubs and re-publishes)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"publish rename failed: $f -> $dest")
-      }
-    }
-    fs.delete(staging, true)
+      Commit.publish(fs, staging, new Path(path), token, bucketSuffixed(cfg, _))
     }
     // Seen-filter append BEFORE the marker: if the process dies between
     // the two, the replayed batch re-appends the same ids (bloom merge
@@ -474,17 +462,13 @@ object Ingest {
     CommitPhases.timed(CommitPhases.sideNs) {
     if (rawN > 0) cfg.seenFilterPath.foreach(fp => appendSeenIds(cfg, fp, batch))
     // PII ledger entry BEFORE the marker (same ordering argument as
-    // the seen filter: a crash between the two is repaired by the
-    // replay overwriting the same deterministic content; a committed
+    // the seen filter: a crash between the two leaves the entry or
+    // none, never a torn file; a replay's entry has the same
+    // deterministic content, so an existing one stands; a committed
     // batch can never lack its redaction accounting)
-    if (cfg.redactPiiColumns.nonEmpty) {
-      val ledger = new Path(s"$path/_pii/$token")
-      fs.mkdirs(ledger.getParent)
-      val out = fs.create(ledger, true)
-      try out.write(piiCounts.map { case (t, c) => s"$t=$c" }
-        .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    if (cfg.redactPiiColumns.nonEmpty)
+      Commit.writeAtomically(fs, new Path(s"$path/_pii/$token"),
+        piiCounts.map { case (t, c) => s"$t=$c" }.mkString("\n").getBytes("UTF-8"))
     // (The dedup ledger + fingerprint-filter append moved INTO the
     // suppression critical section — before staging — in r17: see
     // suppressNearDupRows. The ledger still pins the consulted filter
@@ -493,22 +477,16 @@ object Ingest {
     // Bucket-layout metadata, once per table (read side: Tables
     // .committedViewBucketed — VERDICT r16 #3): create-if-absent is
     // race-benign (every writer of this table writes identical
-    // content; a loser's IOException is swallowed).
-    if (cfg.buckets > 0) {
-      val specFile = new Path(s"$path/_bucketspec")
-      if (!fs.exists(specFile))
-        try {
-          val out = fs.create(specFile, false)
-          try out.write(
-            s"buckets=${cfg.buckets}\ncolumn=${dataColumns(cfg).head.name}"
-              .getBytes("UTF-8"))
-          finally out.close()
-        } catch { case _: java.io.IOException => () }
-    }
+    // content; a loser's create just reports false). The existence
+    // check keeps the steady state to one stat per commit.
+    val specFile = new Path(s"$path/_bucketspec")
+    if (cfg.buckets > 0 && !fs.exists(specFile))
+      Commit.createExclusive(fs, specFile,
+        s"buckets=${cfg.buckets}\ncolumn=${dataColumns(cfg).head.name}"
+          .getBytes("UTF-8"))
     }
     CommitPhases.timed(CommitPhases.markerNs) {
-      fs.mkdirs(marker.getParent)
-      fs.create(marker).close()
+      Commit.createExclusive(fs, marker)
     }
     nCommitted
     } finally dedupInfo.foreach(_.release.unpersist(blocking = false))
@@ -617,25 +595,20 @@ object Ingest {
         // consulted — re-consult THAT state, not whatever is current
         // now (our own crashed append may already have advanced it)
         val ledger = new Path(s"$path/_dedup/$token")
+        val replayed = fs.exists(ledger)
         val basedOn: Option[String] =
-          if (fs.exists(ledger)) {
-            val in = fs.open(ledger)
-            val lines =
-              try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-              finally in.close()
-            val pinned = lines.collectFirst {
-              case l if l.startsWith("basedOnVersion=") =>
-                l.stripPrefix("basedOnVersion=") }
-            // a ledger file with no pin line is a truncated crash
-            // artifact: treating it as "consulted no filter" would
-            // silently disable cross-batch suppression for the replay
-            // and re-admit duplicates forever (review r16) — fail
-            // loudly instead; the operator deletes the torn ledger to
-            // let the replay re-consult the current filter state
+          if (replayed) {
+            val pinned = readLedger(fs, ledger).get("basedOnVersion")
+            // the ledger is written atomically, so a crash cannot leave
+            // one without its pin line; a file that has none was written
+            // or edited outside the protocol. Treating it as "consulted
+            // no filter" would silently disable cross-batch suppression
+            // for the replay and re-admit duplicates forever (review
+            // r16) — fail loudly instead
             if (pinned.isEmpty) throw new IllegalStateException(
               s"_dedup ledger $ledger exists but carries no basedOnVersion " +
-                "line (truncated write?) — delete it to let the replay " +
-                "re-consult the current filter state")
+                "line (not written by the commit protocol) — delete it to " +
+                "let the replay re-consult the current filter state")
             pinned.filter(_ != "none")
           } else graft.api.Dedup.seenFilterVersion(spark, fpPath)
         // flagged reads the CHECKPOINTED rank — one cheap codegen'd
@@ -660,16 +633,14 @@ object Ingest {
           val keptFps = keptFlagged.select(col("__fp").as("fp"))
           val nKept = total - nWithin - nSeen
           // ledger BEFORE the append (the pin must exist before the
-          // filter can move past it); deterministic per token, so
-          // replays overwrite byte-identically
-          val dl = new Path(s"$path/_dedup/$token")
-          fs.mkdirs(dl.getParent)
-          val out = fs.create(dl, true)
-          try out.write((s"basedOnVersion=${basedOn.getOrElse("none")}\n" +
-            s"suppressed_within=$nWithin\n" +
-            s"suppressed_seen=$nSeen\n" +
-            s"kept=$nKept").getBytes("UTF-8"))
-          finally out.close()
+          // filter can move past it). A replay keeps the ledger it read
+          // its pin from, so no crash of the replay can lose the pin
+          if (!replayed)
+            Commit.writeAtomically(fs, ledger,
+              (s"basedOnVersion=${basedOn.getOrElse("none")}\n" +
+                s"suppressed_within=$nWithin\n" +
+                s"suppressed_seen=$nSeen\n" +
+                s"kept=$nKept").getBytes("UTF-8"))
           if (nKept > 0)
             graft.api.Dedup.buildOrAppendSeenFilter(keptFps, "fp", fpPath,
               expectedItems = cfg.nearDupFilterExpectedItems)
@@ -761,32 +732,41 @@ object Ingest {
   }
 
   /** Driver-side read of a `<path>/<sub>` ledger dir: one (fileName,
-    * key→value map) per file — '='-separated lines, malformed lines
-    * skipped with a loud note rather than failing the whole read
-    * (ADVICE r15; shared by the `_pii` and `_dedup` readers so the
-    * tolerance is implemented once — review r16). */
-  private def readLedgerDir(spark: SparkSession, path: String, sub: String)
+    * [[readLedger]]) per ledger file whose name passes `keep` (read
+    * only those); hidden temp names are not entries. */
+  private[ingest] def readLedgerDir(spark: SparkSession, path: String, sub: String,
+                                    keep: String => Boolean = _ => true)
       : Seq[(String, Map[String, String])] = {
     import org.apache.hadoop.fs.Path
     val dir = new Path(s"$path/$sub")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.isFile).map { st =>
-      val in = fs.open(st.getPath)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      val kv = lines.filter(_.nonEmpty).flatMap { l =>
-        val p = l.split('=')
-        if (p.length == 2) Some(p(0) -> p(1))
-        else {
-          System.err.println(s"[ingest] malformed $sub ledger line in" +
-            s" ${st.getPath}: '$l' — skipped")
-          None
-        }
-      }.toMap
-      (st.getPath.getName, kv)
-    }
+    else fs.listStatus(dir).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !Commit.hidden(n) && keep(n)
+      }
+      .map(st => (st.getPath.getName, readLedger(fs, st.getPath)))
+  }
+
+  /** One ledger file as key→value: '='-separated lines, malformed lines
+    * skipped with a loud note rather than failing the whole read
+    * (ADVICE r15; shared by every `_pii` and `_dedup` reader so the
+    * tolerance is implemented once — review r16). */
+  private def readLedger(fs: org.apache.hadoop.fs.FileSystem,
+                         file: org.apache.hadoop.fs.Path): Map[String, String] = {
+    val in = fs.open(file)
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.filter(_.nonEmpty).flatMap { l =>
+      val p = l.split('=')
+      if (p.length == 2) Some(p(0) -> p(1))
+      else {
+        System.err.println(s"[ingest] malformed ledger line in $file: '$l' — skipped")
+        None
+      }
+    }.toMap
   }
 
   /** Upfront validation of ingest expectations — a bad rule column or

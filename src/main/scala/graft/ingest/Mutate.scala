@@ -337,7 +337,7 @@ object Mutate {
     // it any value locality the caller arranged for file skipping)
     val arranged = if (partitionCols.nonEmpty)
       df.repartition(partitionCols.map(col): _*) else df
-    Compact.publishRewrite(spark, fs, root, token, arranged,
+    Compact.publishRewrite(fs, root, token, arranged,
       partitionCols, format, compression, superseded)
     val (matched, inserted, rewrittenRows) = counts()
     MutateResult(token, superseded.toSeq.sorted, matched, inserted,

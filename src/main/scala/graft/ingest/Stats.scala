@@ -95,13 +95,8 @@ object Stats {
             s"$base\t$c\t${types(c)}\t$mn\t$mx\t$nulls\t$n"
           }
         }
-        val tmp = new Path(root, s"_stats/.$token.tsv.tmp")
-        fs.mkdirs(tmp.getParent)
-        val out = fs.create(tmp, true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-        if (!fs.rename(tmp, manifest(root, token)))
-          throw new java.io.IOException(s"stats manifest rename failed: $token")
+        graft.core.Commit.writeAtomically(fs, manifest(root, token),
+          (lines.mkString("\n") + "\n").getBytes("UTF-8"))
         written += 1
       }
     }

@@ -57,14 +57,17 @@ object CommitMarkerSource {
     StructField("superseded", org.apache.spark.sql.types.ArrayType(
       StringType, containsNull = false), nullable = false)))
 
-  /** (name, mtimeMs) of every file currently in the marker dir. */
+  /** (name, mtimeMs) of every marker file in the marker dir — hidden
+    * names (a compaction's temp marker a crash left behind) are not
+    * markers. */
   private def listMarkers(dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(
       SparkSession.active.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.collect {
-      case st if st.isFile => (st.getPath.getName, st.getModificationTime)
+      case st if st.isFile && !graft.core.Commit.hidden(st.getPath.getName) =>
+        (st.getPath.getName, st.getModificationTime)
     }
   }
 

@@ -3,7 +3,8 @@ package graft
 import java.net.URI
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, Path, PathFilter, RawLocalFileSystem}
 
 /** Local filesystem with instrumented METADATA calls, registered under
   * the `graftcount` scheme — the probe behind CommitNoListingSpec
@@ -21,7 +22,11 @@ import org.apache.hadoop.fs.{FileStatus, Path, PathFilter, RawLocalFileSystem}
   * in local mode a "distributed listing job" still executes in this
   * JVM, on threads named `Executor task launch worker-*`, so the
   * executor-thread counter is exactly the signature of the regression
-  * this spec exists to catch. */
+  * this spec exists to catch.
+  *
+  * It is also a failpoint filesystem: with `failRenameAt` = N, the Nth
+  * rename since `reset()` throws, which is how CommitPointSpec crashes
+  * an ingest commit at every rename it makes. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -68,6 +73,15 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def globStatus(pathPattern: Path, filter: PathFilter): Array[FileStatus] = {
     countList(); super.globStatus(pathPattern, filter)
   }
+  // failpoint: the Nth rename since reset() throws, as a crash at that
+  // point would stop the commit; FileContext renames (bound through
+  // CountingFs) land here too
+  override def rename(src: Path, dst: Path): Boolean = {
+    val n = renameCalls.incrementAndGet()
+    if (n == failRenameAt.get)
+      throw new java.io.IOException(s"injected failure at rename $n: $src -> $dst")
+    super.rename(src, dst)
+  }
   override def getFileStatus(f: Path): FileStatus = {
     if (CountingFileSystem.listDepth.get == 0) {
       statCalls.incrementAndGet()
@@ -82,11 +96,21 @@ object CountingFileSystem {
   val statCalls = new AtomicLong(0L)
   val executorListCalls = new AtomicLong(0L)
   val executorStatCalls = new AtomicLong(0L)
+  val renameCalls = new AtomicLong(0L)
+  /** 0 = no failpoint; N = the Nth rename after reset() throws. */
+  val failRenameAt = new AtomicLong(0L)
   private[graft] val listDepth: ThreadLocal[Int] =
     ThreadLocal.withInitial(() => 0)
 
   def reset(): Unit = {
     listCalls.set(0L); statCalls.set(0L)
     executorListCalls.set(0L); executorStatCalls.set(0L)
+    renameCalls.set(0L); failRenameAt.set(0L)
   }
 }
+
+/** [[CountingFileSystem]] as a `FileContext` filesystem, for
+  * `fs.AbstractFileSystem.graftcount.impl`: a versioned index's
+  * `_current` pointer moves by a `FileContext` rename with overwrite. */
+class CountingFs(uri: URI, conf: Configuration)
+    extends DelegateToFileSystem(uri, new CountingFileSystem, conf, "graftcount", false)

@@ -42,4 +42,21 @@ class SeenFilterBloomSpec extends AnyFunSuite {
     assert(hs.forall(empty.mightContainLong))
     assert(bytes(empty).sameElements(bytes(built)))
   }
+
+  test("past Spark's Bloom clamp: an empty filter merges with a built one, stats use the clamp") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-seen-clamp")
+    def p(n: String) = base.resolve(n).toString
+    try {
+      // 10M expected ids at fpp 0.01 ask for more than the aggregate's
+      // 4M-id, 64 Mi-bit cap
+      Dedup.buildSeenFilter(spark.range(0).toDF("id"), "id", p("empty"), 10000000L)
+      Dedup.buildSeenFilter(spark.range(100).toDF("id"), "id", p("built"), 10000000L)
+      Dedup.mergeSeenFilters(spark, p("empty"), p("built"), p("merged"))
+      assert(Dedup.markSeen(spark, spark.range(100).toDF("id"), "id", p("merged"))
+        .filter(!col("probably_seen")).isEmpty)
+      val est = Dedup.seenFilterStats(spark, p("built")).head().getAs[Long]("est_ids")
+      assert(math.abs(est - 100L) <= 10L, s"est_ids $est for 100 ids")
+    } finally graft.IngestProbes.rmrfQuiet(base.toFile)
+  }
 }
