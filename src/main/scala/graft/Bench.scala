@@ -132,8 +132,8 @@ private[graft] object BenchLine {
   /** Compact line for the log: `q44_near_dup_pairs` → `q44`, 10 ms
     * precision, no sample arrays — degrading precision, then SHEDDING
     * THE FASTEST queries (the slow ones are the performance signal;
-    * `"q_omitted":N` records the shed count, every omitted query faster
-    * than every kept one), then dropping the map entirely, and as the
+    * `"q_omitted":N` records the shed count, no omitted query prints
+    * slower than a kept one), then dropping the map entirely, and as the
     * FINAL rungs shedding `extras` segments from the END (ADVICE r15:
     * the always-on extras grow linearly with probe reps and smoke
     * stage count, so with elevated reps even the no-map render could
@@ -169,9 +169,12 @@ private[graft] object BenchLine {
     if (c2.length <= MaxLen) return c2
     val c1 = at(f1, results, keepExtras)
     if (c1.length <= MaxLen) return c1
-    // shed fastest-first: failures (-1) sort as slowest so they are
-    // never shed — a red query must stay visible in the map
-    var keep = results.sortBy { case (_, t) => if (t < 0) Double.MinValue else -t }
+    // shed fastest-first by the time the line prints (0.1 s, f1), then
+    // by name: queries that print the same time shed in one fixed order
+    // whatever their sub-print jitter. Failures (-1) sort as slowest so
+    // they are never shed — a red query must stay visible in the map
+    var keep = results.sortBy { case (k, t) =>
+      (if (t < 0) Long.MinValue else -math.round(f1(t).toDouble * 10), k) }
     var line = c1
     while (line.length > MaxLen && keep.nonEmpty) {
       keep = keep.dropRight(math.max(1, keep.size / 10))

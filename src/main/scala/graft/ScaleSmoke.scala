@@ -199,7 +199,7 @@ object ScaleSmoke {
   }
 
   /** √n clamped to [lo, hi] — the standard IVF cell-count sizing. */
-  private[graft] def cellsFor(n: Long, lo: Int, hi: Int): Int =
+  private def cellsFor(n: Long, lo: Int, hi: Int): Int =
     math.max(lo, math.min(hi, math.sqrt(n.toDouble).toInt))
 
   /** Stage timer WITH load provenance (VERDICT r14 #1: the smoke was

@@ -155,7 +155,7 @@ object Dedup {
     * Intersection size via the sorted-merge kernel (r18): the shingle
     * arrays are sorted distinct at every producer, so the count equals
     * size(array_intersect(...)) with no per-pair hash set or
-    * intersection-array allocation (AbIntersectKernel: 7.3×). Output
+    * intersection-array allocation (bench_ab_r18_intersect.json). Output
     * (self, other, jaccard) for the (doc_a, doc_b) of each pair. */
   private def verify(pairs: DataFrame, threshold: Double,
                      self: String = "doc_a", other: String = "doc_b"): DataFrame =
@@ -1681,13 +1681,14 @@ object Dedup {
     * ≥ component min) forces the constant to be the component min.
     *
     * Scale hygiene and per-round shape (re-derived from the r14
-    * stage-timing A/B at 10M chain nodes — `graft.tools.ProbeCC`):
+    * stage-timing A/B at 10M chain nodes — SURVEY.md; the declared-
+    * versus-undeclared layout A/B is bench_ab_r18_cc.json):
     *  - the edge set is materialized once via localCheckpoint,
     *    SYMMETRIZED, SELF-LOOPED, and PRE-PARTITIONED on the per-round
     *    join key, with the layout DECLARED past the checkpoint
     *    (PlanAudit.checkpointHash — localCheckpoint records
-    *    UnknownPartitioning under AQE, measured in r17 by
-    *    graft.tools.ProbePartitioning, so without the declaration
+    *    UnknownPartitioning under AQE, measured in r17 —
+    *    OPTIMIZATION_r17.md — so without the declaration
     *    every round re-shuffled the edges). The edge rows shuffle once
     *    for the whole run, not once per round. The self-loops fold
     *    each node's own label into the

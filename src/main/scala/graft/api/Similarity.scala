@@ -204,8 +204,8 @@ object Similarity {
   /** Bounded deterministic sample of the embedding column: hash-order
     * by xxhash64(id, seed), take the first `sampleN` — one TakeOrdered
     * job, driver memory bounded at any corpus size. */
-  private[graft] def sampleVectors(e: DataFrame, atLeast: Int, seed: Long,
-                                 sampleN: Int): Array[Array[Double]] =
+  private def sampleVectors(e: DataFrame, atLeast: Int, seed: Long,
+                            sampleN: Int): Array[Array[Double]] =
     e.select(col("embedding"))
       .orderBy(xxhash64(col("vec_id"), lit(seed)))
       .limit(math.max(atLeast, sampleN))
@@ -216,7 +216,7 @@ object Similarity {
     * centroid; if the sample is smaller than `cells` the trailing
     * centroids repeat (ties break to the lowest cell id, extras stay
     * empty). */
-  private[graft] def lloyds(sample: Array[Array[Double]], cells: Int, seed: Long,
+  private def lloyds(sample: Array[Array[Double]], cells: Int, seed: Long,
                      maxIter: Int): Array[Array[Float]] = {
     val dim = sample.head.length
     val k = math.min(cells, sample.length)
@@ -481,7 +481,7 @@ object Similarity {
     * the coarse cell absorbs the vector's location, so the codebooks
     * only model the much smaller within-cell spread — materially
     * better reconstruction at the same code budget. */
-  private[graft] def fitResidualCodebooks(
+  private def fitResidualCodebooks(
       sample: Array[Array[Double]], centroids: Array[Array[Float]],
       m: Int, ksub: Int, seed: Long, maxIter: Int): Array[Array[Array[Float]]] = {
     val dim = sample.head.length

@@ -43,7 +43,7 @@ object TextFunctions {
   /** Punctuation character ratio. Native one-pass kernel (r18,
     * expr.PunctRatioRaw): the interpreted regexp_replace form
     * materialized the stripped string just to measure it — 71 s per
-    * 2M docs vs one code-point walk (ProbeQuality; QualityScoreSpec
+    * 2M docs vs one code-point walk (probes_r18.json; QualityScoreSpec
     * pins bit equality). */
   def punctRatio(text: Column): Column =
     org.apache.spark.sql.GraftExprBridge.column(
@@ -75,7 +75,7 @@ object TextFunctions {
     * count, stopword filter, its size guard), ran an interpreted HOF
     * filter with a per-token isin chain, and materialized the
     * punctuation-stripped string just to measure it — ~35× the cost of
-    * one tokenization (ProbeQuality; QualityScoreSpec pins bit-equality
+    * one tokenization (probes_r18.json; QualityScoreSpec pins bit-equality
     * against the interpreted form). Spark's own `round` composes above
     * the raw double, so the rounding rule stays Spark's. */
   def qualityScore(text: Column, stopwords: Seq[String]): Column =

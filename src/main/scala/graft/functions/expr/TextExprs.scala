@@ -766,7 +766,7 @@ object TextStats {
   * same order. The interpreted chain re-split the text three times,
   * ran an interpreted HOF filter with a per-token isin chain, and a
   * regexp_replace that materialized the stripped string just to take
-  * its length — ~35× the cost of one tokenization (ProbeQuality). */
+  * its length — ~35× the cost of one tokenization (probes_r18.json). */
 case class QualityScoreRaw(child: Expression, stopwords: Seq[String])
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
@@ -895,7 +895,7 @@ case class LangIdMarker(child: Expression, markers: Seq[(String, Seq[String])])
   * the same IEEE op. The interpreted form ran the regex engine over
   * every character and MATERIALIZED the stripped string just to take
   * its length — measured 71 s per 2M × 60-token docs at 8 cores
-  * (ProbeQuality), the single most expensive projection in the engine;
+  * (probes_r18.json), the single most expensive projection in the engine;
   * this is one code-point walk. */
 case class PunctRatioRaw(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -989,7 +989,7 @@ case class MeanTokenLenRaw(child: Expression)
   * sequence is exactly (maximal ASCII-letter run | maximal ASCII-digit
   * run | one non-alnum non-`\s` code point), which this single
   * code-point scan reproduces without materializing the match array
-  * (the interpreted form: 19 s per 2M × 60-token docs — ProbeQuality). */
+  * (the interpreted form: 19 s per 2M × 60-token docs — probes_r18.json). */
 case class BpeishTokenCount(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = IntegerType

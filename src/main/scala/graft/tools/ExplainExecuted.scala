@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** EXECUTED-plan dump for the most expensive bench queries (VERDICT
   * r13 #5): PLANS.md captures pre-execution AQE plans
@@ -16,7 +18,14 @@ import org.apache.spark.sql.DataFrame
   * localCheckpoint executes the stage, so the captured plan is final
   * by the time the query returns).
   *
-  * Usage: runMain graft.tools.ExplainExecuted [sfDir] > PLANS_EXECUTED.md
+  * Usage, two modes:
+  *   runMain graft.tools.ExplainExecuted [sfDir] > PLANS_EXECUTED.md
+  *     the top bench queries, at most six inner stages each;
+  *   runMain graft.tools.ExplainExecuted <outDir> <suffix> [sfDir] [q ...]
+  *     one `<outDir>/<q>_<suffix>.txt` per named query (default: the
+  *     top list) with every inner stage. Run it at the before and the
+  *     after commit with suffixes `before`/`after` and the files diff
+  *     as code diffs — the `plans/r18` twins are in this format.
   */
 object ExplainExecuted {
 
@@ -42,47 +51,62 @@ object ExplainExecuted {
     .map(l => if (l.length > 300) l.take(300) + " ...<truncated>" else l)
     .mkString("\n")
 
-  private def executedString(df: DataFrame): String = {
-    // post-execution: the formatted string of the executed plan shows
-    // AdaptiveSparkPlan isFinalPlan=true with Reused* nodes resolved
-    df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+  // post-execution: the formatted string of the executed plan shows
+  // AdaptiveSparkPlan isFinalPlan=true with Reused* nodes resolved
+  private def executedString(df: DataFrame): String = cap(
+    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+
+  /** Runs query `name` and renders its executed plan under
+    * `## name (label)`, then the first `maxStages` inner stages the
+    * PlanAudit probe captured (eager checkpoints executed during
+    * construction, so their plans are final; the first batch carries
+    * the shapes). */
+  private def dump(spark: SparkSession, sfDir: String, name: String,
+                   label: String, maxStages: Int): String = {
+    val stages = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    graft.api.PlanAudit.probe = Some(d => stages += d)
+    val df =
+      try graft.SparkEntry.queries(name)(spark, sfDir)
+      finally graft.api.PlanAudit.probe = None
+    df.queryExecution.toRdd.count()
+    val sb = new StringBuilder(s"## $name ($label)\n\n```\n${executedString(df)}\n```\n")
+    stages.take(maxStages).zipWithIndex.foreach { case (d, i) =>
+      sb ++= s"\n### $name inner stage ${i + 1}/${stages.length} (executed)\n\n" +
+        s"```\n${executedString(d)}\n```\n"
+    }
+    if (stages.length > maxStages)
+      sb ++= s"\n(${stages.length - maxStages} later-batch stages omitted - " +
+        "identical shapes to the first batch's)\n"
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    sb.toString
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val perFile = args.length >= 2
+    val sfDir = args.lift(if (perFile) 2 else 0).getOrElse("/root/testdata/sf0.01")
     val spark = graft.core.Sessions.local("graft-explain-executed",
       defaultCpus = "8")
     spark.sparkContext.setLogLevel("ERROR")
-    println("# EXECUTED physical plans (generated by `graft.tools.ExplainExecuted` - do not edit)")
-    println(s"\nScale factor dir: `$sfDir`. Unlike PLANS.md (pre-execution,")
-    println("isFinalPlan=false), every plan here was dumped AFTER running the")
-    println("query to completion - AQE final plans, including ReusedExchange /")
-    println("coalesce / skew decisions. Top bench queries by recorded time.")
-    top.foreach { name =>
-      val stages = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      graft.api.PlanAudit.probe = Some(d => stages += d)
-      val df =
-        try graft.SparkEntry.queries(name)(spark, sfDir)
-        finally graft.api.PlanAudit.probe = None
-      df.queryExecution.toRdd.count()
-      println(s"\n## $name (executed)\n")
-      println("```")
-      println(cap(executedString(df)))
-      println("```")
-      // inner stages: eager checkpoints executed during construction,
-      // so their plans are final; the first batch carries the shapes
-      stages.take(6).zipWithIndex.foreach { case (d, i) =>
-        println(s"\n### $name inner stage ${i + 1}/${stages.length} (executed)\n")
-        println("```")
-        println(cap(executedString(d)))
-        println("```")
+    if (!perFile) {
+      println("# EXECUTED physical plans (generated by `graft.tools.ExplainExecuted` - do not edit)")
+      println(s"\nScale factor dir: `$sfDir`. Unlike PLANS.md (pre-execution,")
+      println("isFinalPlan=false), every plan here was dumped AFTER running the")
+      println("query to completion - AQE final plans, including ReusedExchange /")
+      println("coalesce / skew decisions. Top bench queries by recorded time.")
+      top.foreach(q => print("\n" + dump(spark, sfDir, q, "executed", 6)))
+    } else {
+      val Array(outDir, suffix) = args.take(2)
+      Files.createDirectories(Paths.get(outDir))
+      val names = if (args.length > 3) args.drop(3).toSeq else top
+      names.foreach { q =>
+        try {
+          val out = Paths.get(outDir, s"${q}_$suffix.txt")
+          Files.writeString(out, dump(spark, sfDir, q, s"executed, $suffix", Int.MaxValue))
+          System.err.println(s"[explain] wrote $out")
+        } catch { case t: Throwable =>
+          System.err.println(s"[explain] $q FAILED: ${t.getMessage}") }
       }
-      if (stages.length > 6)
-        println(s"\n(${stages.length - 6} later-batch stages omitted - " +
-          "identical shapes to the first batch's)")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     spark.stop()
   }

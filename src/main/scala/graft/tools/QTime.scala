@@ -1,11 +1,11 @@
 package graft.tools
 
-
 import graft.SparkEntry
 
 /** One-off query timer: `runMain graft.tools.QTime <sfDir> q48 q47 ...`
   * — runs each named query (after one warmup pass of the first) and
-  * prints wall seconds, for A/B plan comparisons without a full bench. */
+  * prints wall seconds, for A/B plan comparisons without a full bench.
+  * Reps: repeat a name (`q48 q48 q48`). */
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head

@@ -9,8 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `Dataset.localCheckpoint` records the checkpointed rows behind a
   * `LogicalRDD` whose `outputPartitioning` is taken from the plan's
   * `AdaptiveSparkPlanExec` wrapper — which reports
-  * `UnknownPartitioning(0)` (measured: `graft.tools.ProbePartitioning`,
-  * Spark 4.1.2). So a frame that was explicitly
+  * `UnknownPartitioning(0)` (measured on Spark 4.1.2, recorded in
+  * OPTIMIZATION_r17.md). So a frame that was explicitly
   * `repartition(np, key)`-ed immediately before checkpointing loses its
   * layout declaration, and every downstream keyed join or aggregation
   * re-shuffles rows that are ALREADY hash-placed — for an iterative
@@ -39,20 +39,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   * constructor); no Spark internals are modified — the
   * [[GraftExprBridge]] pattern. */
 object GraftCheckpointBridge {
-  /** A/B kill-switch (r18 graph_cc adjudication): `-Dgraft.declareHash=off`
-    * (or env GRAFT_DECLARE_HASH=off) makes every declaration a no-op, so a
-    * probe can run the EXACT shipped code with only the layout declaration
-    * removed. Read per call — a probe may flip it between legs. Default on. */
-  private def enabled: Boolean = {
-    val v = sys.props.get("graft.declareHash")
-      .orElse(sys.env.get("GRAFT_DECLARE_HASH")).getOrElse("on")
-    v != "off" && v != "0" && v != "false"
-  }
-
   def declareHashPartitioning(df: DataFrame, keys: Seq[String],
                               np: Int): DataFrame =
-    if (!enabled) df
-    else df.queryExecution.analyzed match {
+    df.queryExecution.analyzed match {
       case lr @ LogicalRDD(output, rdd, _, ordering, isStreaming, stream)
           if rdd.getNumPartitions == np =>
         val attrs = keys.map(k => output.find(_.name == k).getOrElse(

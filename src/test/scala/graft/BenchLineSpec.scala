@@ -63,6 +63,25 @@ class BenchLineSpec extends AnyFunSuite {
     assert(node.get("ingest_rows_per_sec").asLong() == 1500000L)
   }
 
+  test("queries that print the same 0.1 s time shed by name, not by jitter") {
+    // every time prints 100000.0, so the shed boundary falls between two
+    // queries that print the same time; their raw order runs against
+    // name order in one run and with it in the other
+    def kept(jitter: Int => Double): Seq[String] = {
+      val results = (1 to 150).map(i => (f"q$i%03d_x", 100000.0 + jitter(i)))
+      val line = BenchLine.compact(headline("/root/testdata/sf0.1"), results)
+      assert(line.length <= BenchLine.MaxLen, s"line ran ${line.length} chars")
+      val q = parse(line).get("queries")
+      (1 to 150).map(i => f"q$i%03d").filter(q.has)
+    }
+    val rising = kept(i => i * 0.0002)
+    val falling = kept(i => (151 - i) * 0.0002)
+    assert(rising.nonEmpty && rising.size < 150, s"partial map expected, got ${rising.size}")
+    assert(rising == falling, "sub-0.1 s jitter must not rotate the shed set")
+    assert(rising == (1 to rising.size).map(i => f"q$i%03d"),
+      "within a printed-time tie the first names are kept")
+  }
+
   test("the 157-query suite shape keeps a slowest-first map with q_omitted") {
     // three-digit ids + realistic times: the post-r9 suite no longer
     // fits complete — the line must keep the slow (informative) tail
