@@ -823,7 +823,7 @@ object ScaleSmoke {
           val appendChild = graft.tools.RaceChild.spawn(
             Seq("race-append", raceFilter, rv,
               (2 * idsPer).toString, idsPer.toString), appendOut)
-          // wait for the child's stale read, then move the pointer
+          // wait for the child's stale read, then commit a new version
           val deadline = System.currentTimeMillis() + 120000
           while (!Files.exists(Paths.get(rv, "child_read")) &&
                  System.currentTimeMillis() < deadline) Thread.sleep(100)

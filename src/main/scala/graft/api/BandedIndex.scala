@@ -23,11 +23,10 @@ private[api] final case class IndexTable(name: String, partitionBy: Option[Strin
   * verification ([[pairs]]) and the ordering of its explain evidence
   * ([[best]]). Every step below exists once.
   *
-  * Layout and crash safety ([[VersionedIndex]]): a fresh build writes
-  * the legacy layout at `path`; compact and delete write a complete
-  * `v<N>` tree and commit it by flipping `_current`, and once a
-  * pointer exists, build and merge do the same — a crash at any
-  * earlier point leaves the previous version fully live. */
+  * Layout and crash safety ([[VersionedIndex]]): build, compact, delete
+  * and merge each write a complete `v<N>` tree and commit it with its
+  * commit marker, so a crash at any earlier point leaves the
+  * previous version fully live; appends land in the current version. */
 private[api] abstract class BandedIndex(val name: String,
                                         val paramCols: Seq[String],
                                         val tables: Seq[IndexTable]) {
@@ -124,19 +123,6 @@ private[api] abstract class BandedIndex(val name: String,
     readParamsTable(spark, from)
       .coalesce(1).write.mode("overwrite").parquet(s"$to/params")
 
-  /** Run `body` on the directory a rewrite of `path` writes, then commit:
-    * a fresh `v<N>` behind `_current` when `version` is set or `path` is
-    * already versioned, the legacy root otherwise. */
-  private def rewrite(spark: SparkSession, path: String, version: Boolean)
-                     (body: String => Unit): Unit = {
-    val next =
-      if (version || VersionedIndex.resolveRoot(spark, path) != path)
-        Some(VersionedIndex.nextVersion(spark, path))
-      else None
-    body(next.fold(path)(v => s"$path/$v"))
-    next.foreach(VersionedIndex.commitPointer(spark, path, _))
-  }
-
   /** Indexed docs of `idTab` whose id is in `ids(c)`. */
   private def countDocs(idTab: DataFrame, ids: DataFrame, c: String): Long = {
     val hit = idTab.join(ids, idTab("doc_id") === ids(c), "left_semi")
@@ -156,7 +142,7 @@ private[api] abstract class BandedIndex(val name: String,
             p: Seq[Int]): Unit = {
     validate(p)
     val spark = docs.sparkSession
-    rewrite(spark, path, version = false) { target =>
+    VersionedIndex.rewrite(spark, path) { target =>
       spark.createDataFrame(java.util.List.of(Row.fromSeq(p)), paramsSchema)
         .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
       writeSignatures(docs, idCol, valueCol, p, target, "overwrite")
@@ -189,7 +175,7 @@ private[api] abstract class BandedIndex(val name: String,
     * the data is identical. */
   def compact(spark: SparkSession, path: String, files: Int = 8): Unit = {
     val (root, p) = resolve(spark, path)
-    rewrite(spark, path, version = true) { vdir =>
+    VersionedIndex.rewrite(spark, path) { vdir =>
       copyParams(spark, root, vdir)
       tables.foreach { t =>
         val df = spark.read.parquet(s"$root/${t.name}")
@@ -202,7 +188,7 @@ private[api] abstract class BandedIndex(val name: String,
   }
 
   def vacuum(spark: SparkSession, path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path, "params" +: tables.map(_.name))
+    VersionedIndex.vacuum(spark, path)
 
   /** Anti-join `ids` out of every table into a fresh committed version;
     * returns the indexed docs removed (0 leaves the index untouched). A
@@ -219,7 +205,7 @@ private[api] abstract class BandedIndex(val name: String,
       .distinct())
     try {
       val nDel = countDocs(idTab, del, "__del_id")
-      if (nDel > 0) rewrite(spark, path, version = true) { vdir =>
+      if (nDel > 0) VersionedIndex.rewrite(spark, path) { vdir =>
         copyParams(spark, root, vdir)
         tables.foreach(t =>
           write(inOrder(without(tabs(t.name), del, "__del_id"), t), t, vdir, "overwrite"))
@@ -272,7 +258,7 @@ private[api] abstract class BandedIndex(val name: String,
       else spark.range(0).select(col("id").as("__drop_id"))
     try {
       val nDrop = if (dedupAcross) countDocs(tB(idTable.name), dropB, "__drop_id") else 0L
-      rewrite(spark, outPath, version = false) { target =>
+      VersionedIndex.rewrite(spark, outPath) { target =>
         copyParams(spark, rootA, target)
         tables.foreach(t => write(inOrder(tA(t.name)
           .unionByName(without(tB(t.name), dropB, "__drop_id")), t), t, target, "overwrite"))

@@ -409,68 +409,64 @@ object Dedup {
     *             verification (orphan-inert: written BEFORE postings on
     *             append, like the near-dup index's sketch-first rule)
     *
-    * A fresh build writes the legacy layout at `path`; once
-    * [[deleteFromContainmentIndex]] has versioned it (v-dirs +
-    * `_current`, the [[graft.api.Similarity.reindex]] discipline)
-    * every rewrite commits atomically. */
+    * Build, delete and compact each write a complete `v<N>` and commit
+    * it atomically ([[VersionedIndex.rewrite]]). */
   def buildContainmentIndex(docs: DataFrame, path: String,
                             idCol: String = "doc_id",
                             textCol: String = "text",
                             shingle: Int = 3): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val versioned = VersionedIndex.resolveRoot(spark, path) != path
-    val next = if (versioned) Some(VersionedIndex.nextVersion(spark, path)) else None
-    val target = next.fold(path)(v => s"$path/$v")
-    Seq(Tuple1(shingle)).toDF("shingle")
-      .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
-    // sketches land FIRST, straight from the shingling plan: one pass
-    // over the corpus text into compressed columnar output. This
-    // REPLACES the corpus-sized localCheckpoint the build used to pin
-    // (VERDICT r15 #2): at 50M the deserialized MEMORY_AND_DISK spill
-    // physically wrote a multiple of the final parquet bytes and made
-    // the stage's wall time a function of page-cache/writeback state.
-    // The token passes below re-read the snappy parquet instead —
-    // two column-pruned scans of data the write just warmed. Order
-    // also now matches the append path's sketch-first crash rule
-    // (orphan sketches are inert; postings without sketches would
-    // generate candidates that can never verify).
-    shingleSets(docs, idCol, textCol, shingle)
-      .write.mode("overwrite").parquet(s"$target/sketches")
-    val sets = spark.read.parquet(s"$target/sketches")
-    val toks = sets.select(col("doc_id"), col("n"), explode(col("sh")).as("tok"))
-    // Postings without the checkpoint pin or the window sort (r18,
-    // guide §2.4/§1.2): the old shape aggregated dfc, PINNED it in a
-    // vocabulary-sized localCheckpoint (at 10M docs the trigram
-    // vocabulary is itself corpus-sized — most shingles are unique to
-    // one content id), sort-merge-joined it back onto the token frame,
-    // and ranked positions with a row_number window — a full sort of
-    // every token row. Now dfc stays an in-plan aggregation (bounded
-    // O(1) state per token — NOT a per-token collect_list of the doc
-    // list, which would build one unbounded, non-spillable buffer for
-    // a boilerplate shingle shared by millions of docs), joins back,
-    // and the per-doc position under the (dfc, tok) order is an ARRAY
-    // sort of that doc's ~n tokens after the doc-keyed regroup —
-    // per-DOC arrays bounded by document length, nothing pins, no
-    // partition-wide sort. Positions are bit-identical: tok is unique
-    // per doc (sh is a set), so the struct(dfc, tok) order is total,
-    // exactly row_number's orderBy(dfc, tok) − 1.
-    val dfcB = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
-    toks.join(dfcB, "tok")
-      .groupBy(col("doc_id"), col("n"))
-      .agg(sort_array(collect_list(struct(col("dfc"), col("tok")))).as("arr"))
-      .select(col("doc_id"), col("n"), posexplode(col("arr")))
-      .select(col("doc_id"), col("n"), col("col.tok").as("tok"),
-        col("pos").cast("int").as("pos"))
-      .write.mode("overwrite").parquet(s"$target/postings")
-    // dfreq re-derives from the postings just written (one row per
-    // (doc, tok), so rows-per-tok IS the document frequency): a
-    // column-pruned scan of compressed longs instead of a second
-    // shingling pass over the corpus text.
-    spark.read.parquet(s"$target/postings")
-      .groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
-      .write.mode("overwrite").parquet(s"$target/dfreq")
-    next.foreach(v => VersionedIndex.commitPointer(spark, path, v))
+    VersionedIndex.rewrite(spark, path) { target =>
+      Seq(Tuple1(shingle)).toDF("shingle")
+        .coalesce(1).write.mode("overwrite").parquet(s"$target/params")
+      // sketches land FIRST, straight from the shingling plan: one pass
+      // over the corpus text into compressed columnar output. This
+      // REPLACES the corpus-sized localCheckpoint the build used to pin
+      // (VERDICT r15 #2): at 50M the deserialized MEMORY_AND_DISK spill
+      // physically wrote a multiple of the final parquet bytes and made
+      // the stage's wall time a function of page-cache/writeback state.
+      // The token passes below re-read the snappy parquet instead —
+      // two column-pruned scans of data the write just warmed. Order
+      // also now matches the append path's sketch-first crash rule
+      // (orphan sketches are inert; postings without sketches would
+      // generate candidates that can never verify).
+      shingleSets(docs, idCol, textCol, shingle)
+        .write.mode("overwrite").parquet(s"$target/sketches")
+      val sets = spark.read.parquet(s"$target/sketches")
+      val toks = sets.select(col("doc_id"), col("n"), explode(col("sh")).as("tok"))
+      // Postings without the checkpoint pin or the window sort (r18,
+      // guide §2.4/§1.2): the old shape aggregated dfc, PINNED it in a
+      // vocabulary-sized localCheckpoint (at 10M docs the trigram
+      // vocabulary is itself corpus-sized — most shingles are unique to
+      // one content id), sort-merge-joined it back onto the token frame,
+      // and ranked positions with a row_number window — a full sort of
+      // every token row. Now dfc stays an in-plan aggregation (bounded
+      // O(1) state per token — NOT a per-token collect_list of the doc
+      // list, which would build one unbounded, non-spillable buffer for
+      // a boilerplate shingle shared by millions of docs), joins back,
+      // and the per-doc position under the (dfc, tok) order is an ARRAY
+      // sort of that doc's ~n tokens after the doc-keyed regroup —
+      // per-DOC arrays bounded by document length, nothing pins, no
+      // partition-wide sort. Positions are bit-identical: tok is unique
+      // per doc (sh is a set), so the struct(dfc, tok) order is total,
+      // exactly row_number's orderBy(dfc, tok) − 1.
+      val dfcB = toks.groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
+      toks.join(dfcB, "tok")
+        .groupBy(col("doc_id"), col("n"))
+        .agg(sort_array(collect_list(struct(col("dfc"), col("tok")))).as("arr"))
+        .select(col("doc_id"), col("n"), posexplode(col("arr")))
+        .select(col("doc_id"), col("n"), col("col.tok").as("tok"),
+          col("pos").cast("int").as("pos"))
+        .write.mode("overwrite").parquet(s"$target/postings")
+      // dfreq re-derives from the postings just written (one row per
+      // (doc, tok), so rows-per-tok IS the document frequency): a
+      // column-pruned scan of compressed longs instead of a second
+      // shingling pass over the corpus text.
+      spark.read.parquet(s"$target/postings")
+        .groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
+        .write.mode("overwrite").parquet(s"$target/dfreq")
+    }
   }
 
   private def readContainmentParams(spark: org.apache.spark.sql.SparkSession,
@@ -587,8 +583,8 @@ object Dedup {
 
   /** Delete documents from a persisted containment index (takedowns):
     * one anti-join pass over postings and sketches, committed as a
-    * fresh version behind the atomic `_current` pointer (the
-    * [[deleteFromNearDupIndex]] discipline). `params` and `dfreq` copy
+    * fresh version (the [[deleteFromNearDupIndex]] discipline).
+    * `params` and `dfreq` copy
     * through unchanged — the frozen order is immutable by design, so a
     * delete never re-ranks surviving docs. Returns docs removed; 0
     * leaves the index untouched. */
@@ -605,52 +601,49 @@ object Dedup {
       val nDel = sketches
         .join(del, sketches("doc_id") === del("__del_id"), "left_semi").count()
       if (nDel == 0) return 0L
-      val next = VersionedIndex.nextVersion(spark, path)
-      val vdir = s"$path/$next"
-      spark.read.parquet(s"$root/params")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-      spark.read.parquet(s"$root/dfreq")
-        .write.mode("overwrite").parquet(s"$vdir/dfreq")
-      sketches
-        .join(del, sketches("doc_id") === del("__del_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$vdir/sketches")
-      val post = spark.read.parquet(s"$root/postings")
-      post.join(del, post("doc_id") === del("__del_id"), "left_anti")
-        .select(col("doc_id"), col("n"), col("tok"), col("pos"))
-        .write.mode("overwrite").parquet(s"$vdir/postings")
-      VersionedIndex.commitPointer(spark, path, next)
+      VersionedIndex.rewrite(spark, path) { vdir =>
+        spark.read.parquet(s"$root/params")
+          .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+        spark.read.parquet(s"$root/dfreq")
+          .write.mode("overwrite").parquet(s"$vdir/dfreq")
+        sketches
+          .join(del, sketches("doc_id") === del("__del_id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$vdir/sketches")
+        val post = spark.read.parquet(s"$root/postings")
+        post.join(del, post("doc_id") === del("__del_id"), "left_anti")
+          .select(col("doc_id"), col("n"), col("tok"), col("pos"))
+          .write.mode("overwrite").parquet(s"$vdir/postings")
+      }
       nDel
     } finally releaseCheckpoint(del)
   }
 
   /** Compact a persisted containment index: per-batch appends leave a
     * file set per batch; rewrite the CURRENT version's tables into
-    * `files` files each behind the atomic pointer (layout changes,
+    * `files` files each as a fresh version (layout changes,
     * data identical — the [[compactNearDupIndex]] contract). */
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
                               path: String, files: Int = 8): Unit = {
     require(files >= 1, s"files must be >= 1, got $files")
     val root = VersionedIndex.resolveRoot(spark, path)
     readContainmentParams(spark, root)
-    val next = VersionedIndex.nextVersion(spark, path)
-    val vdir = s"$path/$next"
-    spark.read.parquet(s"$root/params")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
-    spark.read.parquet(s"$root/dfreq")
-      .repartition(files).write.mode("overwrite").parquet(s"$vdir/dfreq")
-    spark.read.parquet(s"$root/sketches")
-      .repartition(files).write.mode("overwrite").parquet(s"$vdir/sketches")
-    spark.read.parquet(s"$root/postings")
-      .repartition(files).write.mode("overwrite").parquet(s"$vdir/postings")
-    VersionedIndex.commitPointer(spark, path, next)
+    VersionedIndex.rewrite(spark, path) { vdir =>
+      spark.read.parquet(s"$root/params")
+        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+      spark.read.parquet(s"$root/dfreq")
+        .repartition(files).write.mode("overwrite").parquet(s"$vdir/dfreq")
+      spark.read.parquet(s"$root/sketches")
+        .repartition(files).write.mode("overwrite").parquet(s"$vdir/sketches")
+      spark.read.parquet(s"$root/postings")
+        .repartition(files).write.mode("overwrite").parquet(s"$vdir/postings")
+    }
   }
 
   /** Vacuum superseded containment index versions (run only when no
     * reader may hold a pre-swap resolution). */
   def vacuumContainmentIndexVersions(spark: org.apache.spark.sql.SparkSession,
                                      path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path,
-      Seq("params", "dfreq", "sketches", "postings"))
+    VersionedIndex.vacuum(spark, path)
 
   /** Integrity report for a persisted containment index: n_docs,
     * structure_ok (each doc has exactly one sketch row and exactly n
@@ -873,7 +866,7 @@ object Dedup {
   /** Compact a persisted near-dup index — after months of daily
     * appends every band-bucket probe opens hundreds of small files —
     * into one file per band partition (and `sketchFiles` sketch files)
-    * behind the atomic `_current` pointer; the data is IDENTICAL. */
+    * as a fresh committed version; the data is IDENTICAL. */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, sketchFiles: Int = 8): Unit = {
     require(sketchFiles >= 1, s"sketchFiles must be >= 1, got $sketchFiles")
@@ -1083,9 +1076,9 @@ object Dedup {
     * `dedupAcross`) are dropped, so the merged index is duplicate-free
     * under the same invariant each input maintained. Pure signature
     * surgery — neither corpus is re-read. Ids must be disjoint and
-    * params equal (verified loudly, even without `dedupAcross`); an
-    * already-VERSIONED outPath gets a fresh committed version. Returns
-    * the number of B docs dropped. */
+    * params equal (verified loudly, even without `dedupAcross`); the
+    * merge lands as a fresh committed version of outPath. Returns the
+    * number of B docs dropped. */
   def mergeNearDupIndexes(spark: org.apache.spark.sql.SparkSession,
                           pathA: String, pathB: String, outPath: String,
                           threshold: Double = 0.8,
@@ -1258,7 +1251,7 @@ object Dedup {
 
   /** Compact a persisted hamming index — the [[compactNearDupIndex]]
     * discipline for the chunk table: one file per chunk partition,
-    * atomic pointer commit, results invariant. */
+    * one committed version, results invariant. */
   def compactHammingIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit =
     HammingIndex.compact(spark, path)
@@ -1826,15 +1819,15 @@ object Dedup {
     * Persistence uses the [[VersionedIndex]] discipline shared with
     * the near-dup/hamming/IVF indexes: each build/append writes a
     * COMPLETE new `path/v<N>` tree (shard files + `_meta`) and commits
-    * by flipping the `path/_current` pointer — a crash at any earlier
+    * it by creating its commit marker — a crash at any earlier
     * moment leaves the previous version fully live. Appends serialize
-    * on a per-path JVM lock, and the pointer commit re-checks the
-    * based-on version first, so a cross-process racing append FAILS
+    * on a per-path JVM lock, and the commit re-checks the based-on
+    * version first, so a cross-process racing append FAILS
     * LOUDLY (IllegalStateException; retry it) instead of silently
     * dropping the other writer's ids — the false-negative hazard a
     * plain read-merge-write file has. The stage-recheck-commit
     * sequence itself runs under an exclusive-create `_lock` file, so
-    * two processes cannot land inside the check-then-rename window
+    * two processes cannot land inside the check-then-commit window
     * and both commit; a crashed holder leaves a stale `_lock` to
     * remove manually (loud bounded-wait failure, never silent theft).
     * Superseded versions accumulate until [[vacuumSeenFilter]].
@@ -1856,15 +1849,14 @@ object Dedup {
     val spark = df.sparkSession
     val filters = shardFilters(df, idCol, shards,
       math.max(1L, expectedItems / shards), fpp)
-    val next = VersionedIndex.nextVersion(spark, path)
-    writeSeenVersion(spark, path, next, shards, expectedItems, fpp, filters)
     // rebuild semantics: a build replaces whatever was current
-    VersionedIndex.commitPointer(spark, path, next)
+    VersionedIndex.rewrite(spark, path)(
+      writeSeenVersion(spark, _, shards, expectedItems, fpp, filters))
   }
 
   /** Merge a new batch into the persisted filter (same-parameter
     * per-shard batch filters → bit-compatible mergeInPlace → new
-    * version + CAS pointer commit). Size for the LIFETIME id count at
+    * version + based-on-checked commit). Size for the LIFETIME id count at
     * build: a Bloom filter never shrinks, and appending past
     * expectedItems degrades fpp, never correctness. Throws
     * IllegalStateException if a concurrent writer committed between
@@ -1916,7 +1908,7 @@ object Dedup {
   def mergeSeenFilters(spark: org.apache.spark.sql.SparkSession,
                        pathA: String, pathB: String, outPath: String): Unit =
     seenLock(outPath).synchronized {
-      val based = seenFilterVersion(spark, outPath)
+      val based = VersionedIndex.current(spark, outPath)
       val a = readSeenState(spark, pathA)
       val b = readSeenState(spark, pathB)
       require(a.shards == b.shards && a.items == b.items && a.fpp == b.fpp,
@@ -1930,12 +1922,8 @@ object Dedup {
 
   /** True when a committed filter exists at `path`. */
   def seenFilterExists(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(p, "_current"))
-  }
+                       path: String): Boolean =
+    VersionedIndex.current(spark, path).isDefined
 
   /** Delete superseded filter versions (every append leaves one). Run
     * only when no reader may still hold a pre-swap resolution.
@@ -1945,7 +1933,7 @@ object Dedup {
   def vacuumSeenFilter(spark: org.apache.spark.sql.SparkSession,
                        path: String,
                        keepVersions: Set[String] = Set.empty): Seq[String] =
-    VersionedIndex.vacuum(spark, path, Seq.empty, keepVersions)
+    VersionedIndex.vacuum(spark, path, keepVersions)
 
   /** Flag each row's id against the persisted filter: `flagCol` true =
     * PROBABLY seen (verify exactly), false = GUARANTEED new. The
@@ -2050,9 +2038,9 @@ object Dedup {
     * specs need the uncached read path). */
   private[graft] def clearSeenStateCache(): Unit = seenStateCache.clear()
 
-  /** Per-path append locks: in-process writers serialize here; the CAS
-    * on the `_current` pointer plus [[withSeenPathLock]] catch
-    * cross-process racers. */
+  /** Per-path append locks: in-process writers serialize here; the
+    * based-on check of [[commitSeenVersion]] under [[withSeenPathLock]]
+    * catches cross-process racers. */
   private val seenFilterLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def seenLock(path: String): Object =
@@ -2062,7 +2050,7 @@ object Dedup {
     * stage-recheck-commit sequence: an exclusive-create `_lock` file
     * under `path` (atomic on HDFS; effectively so on local FS), held
     * across version numbering, the staged write, the based-on recheck,
-    * and the pointer rename — closing the check-then-rename window two
+    * and the commit marker — closing the check-then-commit window two
     * processes could previously land inside (both would commit and one
     * append's ids silently dropped, the false negative the filter
     * contract forbids). Bounded wait, then a LOUD failure: a crashed
@@ -2182,86 +2170,56 @@ object Dedup {
     }
   }
 
+  /** Shard files and `_meta` of one filter version, into `dir`. */
   private def writeSeenVersion(spark: org.apache.spark.sql.SparkSession,
-                               path: String, version: String, shards: Int,
-                               items: Long, fpp: Double,
+                               dir: String, shards: Int, items: Long, fpp: Double,
                                filters: Seq[org.apache.spark.util.sketch.BloomFilter]): Unit = {
     import org.apache.hadoop.fs.Path
-    val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(base) || fs.getFileStatus(base).isDirectory,
-      s"seen-filter path $path is a plain file (pre-versioned layout) — " +
-        "delete it and rebuild with buildSeenFilter")
-    val vdir = new Path(base, version)
-    fs.mkdirs(vdir)
+    val vdir = new Path(dir)
+    val fs = vdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     filters.zipWithIndex.foreach { case (bf, s) =>
       val out = new java.io.DataOutputStream(
         fs.create(new Path(vdir, f"filter-$s%04d"), true))
       try bf.writeTo(out) finally out.close()
     }
-    // _meta last — but completeness is anyway gated by the pointer
+    // _meta last — but completeness is anyway gated by the commit marker
     val out = new java.io.DataOutputStream(fs.create(new Path(vdir, "_meta"), true))
     try { out.writeInt(shards); out.writeLong(items); out.writeDouble(fpp) }
     finally out.close()
   }
 
-  /** Write the (already-merged) state as a new version and CAS the
-    * pointer from the version `st` was read at. */
+  /** Write the (already-merged) state as a new version, committed only
+    * if the current version is still the one `st` was read at. */
   private[graft] def commitSeenVersion(spark: org.apache.spark.sql.SparkSession,
                                 path: String, st: SeenFilterState): Unit =
     commitSeenVersion(spark, path, st, Some(st.version))
 
-  /** Write `st` as a new version at `path` and CAS the pointer: if
-    * `_current` is no longer `based` (None: no filter yet), delete the
-    * staged version and fail loudly — ids were NOT lost (the racer's
-    * commit stands; committing would drop its ids, so the append or
-    * merge must retry on a fresh read). */
+  /** Write `st` as a new version at `path`, committed only if the
+    * current version is still `based` (None: no filter yet); otherwise
+    * the staged version is deleted and the write fails loudly — ids
+    * were NOT lost (the racer's commit stands; committing would drop
+    * its ids, so the append or merge must retry on a fresh read). */
   private def commitSeenVersion(spark: org.apache.spark.sql.SparkSession,
                                 path: String, st: SeenFilterState,
                                 based: Option[String]): Unit =
     withSeenPathLock(spark, path) {
-      import org.apache.hadoop.fs.Path
-      val next = VersionedIndex.nextVersion(spark, path)
-      writeSeenVersion(spark, path, next, st.shards, st.items, st.fpp, st.filters)
-      val cur = seenFilterVersion(spark, path)
-      if (cur != based) {
-        val base = new Path(path)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.delete(new Path(base, next), true)
-        throw new IllegalStateException(
+      VersionedIndex.rewrite(spark, path) { dir =>
+        writeSeenVersion(spark, dir, st.shards, st.items, st.fpp, st.filters)
+        val cur = VersionedIndex.current(spark, path)
+        if (cur != based) throw new IllegalStateException(
           s"concurrent seen-filter write at $path: based on " +
             s"${based.getOrElse("<none>")}, now ${cur.getOrElse("<none>")} — " +
             "retry on a fresh read (no ids were lost)")
       }
-      VersionedIndex.commitPointer(spark, path, next)
     }
 
   private[graft] def readSeenState(spark: org.apache.spark.sql.SparkSession,
                             path: String): SeenFilterState =
-    seenFilterVersion(spark, path) match {
+    VersionedIndex.current(spark, path) match {
       case Some(v) => readSeenStateAt(spark, path, v)
-      case None =>
-        // distinguish "never built" from "pre-versioned single file" so
-        // the user gets the right one-step fix, not a misleading
-        // build-then-fail-again loop
-        val p = new org.apache.hadoop.fs.Path(path)
-        val pfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        require(!(pfs.exists(p) && pfs.getFileStatus(p).isFile),
-          s"seen-filter at $path uses the pre-versioned single-file " +
-            "layout — delete it and rebuild with buildSeenFilter")
-        throw new IllegalArgumentException(
-          s"no committed seen-filter at $path — buildSeenFilter first")
+      case None => throw new IllegalArgumentException(
+        s"no committed seen-filter at $path — buildSeenFilter first")
     }
-
-  /** Current committed seen-filter version name at `path`, None when
-    * no filter exists — the handle a replay-deterministic consumer
-    * (the ingest near-dup suppressor's `_dedup` ledger) pins before
-    * consulting. */
-  private[graft] def seenFilterVersion(spark: org.apache.spark.sql.SparkSession,
-                                       path: String): Option[String] = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    if (root == path) None else Some(root.stripPrefix(s"$path/"))
-  }
 
   /** [[readSeenState]] pinned to an explicit version dir — the replay
     * path of version-recorded consumers. A vacuumed-away version fails

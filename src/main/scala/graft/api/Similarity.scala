@@ -324,17 +324,51 @@ object Similarity {
     */
   def buildIvfIndex(emb: DataFrame, path: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    cells: Int = 16, seed: Long = 42, maxIter: Int = 5): Unit = {
-    val spark = emb.sparkSession
+                    cells: Int = 16, seed: Long = 42, maxIter: Int = 5): Unit =
+    VersionedIndex.rewrite(emb.sparkSession, path)(writeIvfTree(
+      emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")), _,
+      cells, None, seed, maxIter))
+
+  /** The complete tree of an IVF index over (vec_id, embedding) rows,
+    * into the version directory `root` — `centroids` and `vectors/`,
+    * plus, with `pq` = (m, ksub), the IVF+PQ half: `codebooks` and
+    * `codes/`. ONE bounded sample feeds both the coarse quantizer and
+    * the residual codebooks (deterministic in (seed, corpus), without
+    * re-running the TakeOrdered sample job per model). Shared by the
+    * builds and [[reindex]]. */
+  private def writeIvfTree(e: DataFrame, root: String, cells: Int,
+                           pq: Option[(Int, Int)], seed: Long, maxIter: Int): Unit = {
+    val spark = e.sparkSession
     import spark.implicits._
-    val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    require(e.head(1).nonEmpty, "cannot build an IVF index over an empty corpus")
-    val centroids = fitCentroids(e, cells, seed, maxIter)
+    require(e.head(1).nonEmpty,
+      s"cannot build an ${if (pq.isEmpty) "IVF" else "IVF+PQ"} index over an empty corpus")
+    val sample = sampleVectors(e, math.max(cells, pq.fold(0)(_._2)), seed, 4096)
+    val centroids = lloyds(sample, cells, seed, maxIter)
     centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
       .toDF("cell", "centroid")
       .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    writeVectors(e, centroids, path, "overwrite")
+      .write.mode("overwrite").parquet(s"$root/centroids")
+    writeVectors(e, centroids, root, "overwrite")
+    pq.foreach { case (m, ksub) =>
+      val codebooks = fitResidualCodebooks(sample, centroids, m, ksub, seed, maxIter)
+      codebooks.zipWithIndex.flatMap { case (cb, i) =>
+        cb.zipWithIndex.map { case (w, c) => (i, c, w.toSeq) }
+      }.toSeq.toDF("subspace", "codeword", "weights")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$root/codebooks")
+      // Encode pass from the JUST-WRITTEN cell-partitioned vectors
+      // (sketch-first, r17): the pre-r17 build re-scanned the SOURCE,
+      // re-ran the cells × dim assignment dots over the whole corpus,
+      // and paid a SECOND corpus exchange — but vectors/ already holds
+      // every row cell-local (one file set per cell), so the encode
+      // reads cell-clustered splits, needs no assignment, and shuffles
+      // nothing at all. The stored cell is by construction the same
+      // assignment the second pass would have recomputed.
+      val stored = spark.read.parquet(s"$root/vectors")
+        .select(col("vec_id"), col("embedding"), col("cell"))
+      writeCodes(stored, centroids, codebooks, root, "overwrite",
+        exchangeByCell = false)
+    }
   }
 
   /** The cell-partitioned `vectors/` write shared by the IVF builds
@@ -390,7 +424,7 @@ object Similarity {
                      queries: DataFrame, idCol: String = "vec_id",
                      vecCol: String = "embedding", k: Int = 3,
                      nprobe: Int = 2): DataFrame = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length)
     val q = withNorm(queries, idCol, vecCol)
@@ -526,43 +560,10 @@ object Similarity {
                       // subspaces halve the residual the codebook must
                       // model, at the same 16x memory claim
                       cells: Int = 16, m: Int = 16, ksub: Int = 16,
-                      seed: Long = 42, maxIter: Int = 5): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    require(e.head(1).nonEmpty, "cannot build an IVF+PQ index over an empty corpus")
-    // ONE bounded sample feeds both the coarse quantizer and the
-    // residual codebooks (identical to what buildIvfIndex would fit —
-    // deterministic in (seed, corpus) — without re-running the
-    // TakeOrdered sample job per model)
-    val sample = sampleVectors(e, math.max(cells, ksub), seed, 4096)
-    val centroids = lloyds(sample, cells, seed, maxIter)
-    val codebooks = fitResidualCodebooks(sample, centroids, m, ksub, seed, maxIter)
-    // centroids + raw vectors: the buildIvfIndex layout, byte-for-byte —
-    // ivfSearchIndex and the exact-rescore path read this half
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    writeVectors(e, centroids, path, "overwrite")
-    codebooks.zipWithIndex.flatMap { case (cb, i) =>
-      cb.zipWithIndex.map { case (w, c) => (i, c, w.toSeq) }
-    }.toSeq.toDF("subspace", "codeword", "weights")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    // Encode pass from the JUST-WRITTEN cell-partitioned vectors
-    // (sketch-first, r17): the pre-r17 build re-scanned the SOURCE,
-    // re-ran the cells × dim assignment dots over the whole corpus,
-    // and paid a SECOND corpus exchange — but vectors/ already holds
-    // every row cell-local (one file set per cell), so the encode
-    // reads cell-clustered splits, needs no assignment, and shuffles
-    // nothing at all. The stored cell is by construction the same
-    // assignment the second pass would have recomputed.
-    val stored = spark.read.parquet(s"$path/vectors")
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    writeCodes(stored, centroids, codebooks, path, "overwrite",
-      exchangeByCell = false)
-  }
+                      seed: Long = 42, maxIter: Int = 5): Unit =
+    VersionedIndex.rewrite(emb.sparkSession, path)(writeIvfTree(
+      emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")), _,
+      cells, Some((m, ksub)), seed, maxIter))
 
   /** The IVF+PQ encode pass: residual codes + reconstruction norm per
     * vector, written partitionBy(cell) under `path`/codes with the
@@ -665,7 +666,7 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     e.head(1).foreach { r =>
@@ -742,7 +743,7 @@ object Similarity {
                                vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length,
       s"nprobe must be in [1, ${centroids.length}]")
@@ -870,7 +871,7 @@ object Similarity {
                               vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length,
       s"nprobe must be in [1, ${centroids.length}]")
@@ -947,35 +948,34 @@ object Similarity {
     * open-file tax on all of them. Rewrites the CURRENT version's
     * cell stores into one file per cell under the SAME frozen
     * quantizer (data and assignments identical — unlike [[reindex]],
-    * nothing re-clusters) and commits behind the atomic `_current`
-    * pointer; a crash leaves the old version fully live. Compacts the
+    * nothing re-clusters) and commits it as a fresh version; a crash
+    * leaves the old version fully live. Compacts the
     * PQ `codes` half too when present. Vacuum afterwards to reclaim
     * superseded versions, only once no searcher holds a pre-swap
     * resolution. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit = {
     import org.apache.hadoop.fs.Path
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val cells = readCentroids(spark, root).length // loud on missing index
-    val next = VersionedIndex.nextVersion(spark, path)
-    val vdir = s"$path/$next"
-    spark.read.parquet(s"$root/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
-    spark.read.parquet(s"$root/vectors")
-      .repartition(cells, col("cell"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/vectors")
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(root, "codebooks"))) {
-      spark.read.parquet(s"$root/codebooks")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebooks")
-      val codes = spark.read.parquet(s"$root/codes")
-      codes.repartition(cells, col("cell"))
-        .select(codes.columns.filterNot(_ == "cell").map(col) :+ col("cell"): _*)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/codes")
+    VersionedIndex.rewrite(spark, path) { vdir =>
+      spark.read.parquet(s"$root/centroids")
+        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
+      spark.read.parquet(s"$root/vectors")
+        .repartition(cells, col("cell"))
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/vectors")
+      if (fs.exists(new Path(root, "codebooks"))) {
+        spark.read.parquet(s"$root/codebooks")
+          .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebooks")
+        val codes = spark.read.parquet(s"$root/codes")
+        codes.repartition(cells, col("cell"))
+          .select(codes.columns.filterNot(_ == "cell").map(col) :+ col("cell"): _*)
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/codes")
+      }
     }
-    VersionedIndex.commitPointer(spark, path, next)
   }
 
   /** Near-dup pairs ACROSS two persisted IVF indexes, from stored
@@ -1001,8 +1001,8 @@ object Similarity {
                               threshold: Double = 0.9,
                               nprobe: Int = 2): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val rootA = resolveIndexRoot(spark, pathA)
-    val rootB = resolveIndexRoot(spark, pathB)
+    val rootA = VersionedIndex.resolveRoot(spark, pathA)
+    val rootB = VersionedIndex.resolveRoot(spark, pathB)
     val cA = readCentroids(spark, rootA)
     val dimB = readCentroids(spark, rootB).head.length
     require(cA.head.length == dimB,
@@ -1060,8 +1060,8 @@ object Similarity {
     * disjoint; dimensions must match. PQ-coded indexes refuse loudly —
     * B's codes are valid only under B's codebooks, and re-encoding
     * needs the original vectors the `codes` table does not carry;
-    * rebuild instead. A fresh outPath gets the legacy build layout; an
-    * already-VERSIONED outPath gets a fresh committed version. The
+    * rebuild instead. The merge lands as a fresh committed version of
+    * outPath (v1 on a fresh path). The
     * merged index's cells keep A's geometry even where B's corpus
     * drifts from it — watch [[ivfDriftProfile]] and [[reindex]] on the
     * merge, the same trade every append already makes. Returns the
@@ -1072,8 +1072,8 @@ object Similarity {
                       dedupAcross: Boolean = true): Long = {
     import org.apache.hadoop.fs.Path
     Dedup.requireDistinctOutPath(spark, outPath, pathA, pathB)
-    val rootA = resolveIndexRoot(spark, pathA)
-    val rootB = resolveIndexRoot(spark, pathB)
+    val rootA = VersionedIndex.resolveRoot(spark, pathA)
+    val rootB = VersionedIndex.resolveRoot(spark, pathB)
     val fs = new Path(pathA)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(pathA -> rootA, pathB -> rootB).foreach { case (p, r) =>
@@ -1097,23 +1097,19 @@ object Similarity {
       else spark.range(0).select(col("id").as("__drop_id"))
     try {
       val nDrop = if (dedupAcross) dropB.count() else 0L
-      val versioned = resolveIndexRoot(spark, outPath) != outPath
-      val next =
-        if (versioned) Some(VersionedIndex.nextVersion(spark, outPath))
-        else None
-      val target = next.fold(outPath)(v => s"$outPath/$v")
-      spark.read.parquet(s"$rootA/centroids")
-        .coalesce(1).write.mode("overwrite").parquet(s"$target/centroids")
-      val a = spark.read.parquet(s"$rootA/vectors")
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      val bKeep = spark.read.parquet(s"$rootB/vectors")
-        .join(dropB, col("vec_id") === col("__drop_id"), "left_anti")
-        .select(col("vec_id"), col("embedding"), col("nrm"),
-          nearestCell(col("embedding"), cA).as("cell"))
-      a.unionByName(bKeep)
-        .repartition(col("cell")) // one file set per cell, not per task x cell
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$target/vectors")
-      next.foreach(v => VersionedIndex.commitPointer(spark, outPath, v))
+      VersionedIndex.rewrite(spark, outPath) { target =>
+        spark.read.parquet(s"$rootA/centroids")
+          .coalesce(1).write.mode("overwrite").parquet(s"$target/centroids")
+        val a = spark.read.parquet(s"$rootA/vectors")
+          .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+        val bKeep = spark.read.parquet(s"$rootB/vectors")
+          .join(dropB, col("vec_id") === col("__drop_id"), "left_anti")
+          .select(col("vec_id"), col("embedding"), col("nrm"),
+            nearestCell(col("embedding"), cA).as("cell"))
+        a.unionByName(bKeep)
+          .repartition(col("cell")) // one file set per cell, not per task x cell
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$target/vectors")
+      }
       nDrop
     } finally Dedup.releaseCheckpoint(dropB)
   }
@@ -1169,7 +1165,7 @@ object Similarity {
     * One aggregation over the vectors table; no pair joins. */
   def ivfIndexIntegrity(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val cells = readCentroids(spark, root).length
     val v = spark.read.parquet(s"$root/vectors")
     val perDoc = v.groupBy("vec_id").agg(count(lit(1)).as("n_rows"))
@@ -1206,7 +1202,7 @@ object Similarity {
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, ids: DataFrame,
                          idCol: String = "vec_id"): Long = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val del = ids.select(col(idCol).cast("long").as("__del_id")).distinct()
     deleteByIdFromCellStore(spark, s"$root/vectors", del, "vec_id")
   }
@@ -1220,7 +1216,7 @@ object Similarity {
   def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, ids: DataFrame,
                            idCol: String = "vec_id"): Long = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val del = ids.select(col(idCol).cast("long").as("__del_id")).distinct()
     val n = deleteByIdFromCellStore(spark, s"$root/vectors", del, "vec_id")
     deleteByIdFromCellStore(spark, s"$root/codes", del, "neighbor_id")
@@ -1282,7 +1278,7 @@ object Similarity {
                          idCol: String = "vec_id",
                          vecCol: String = "embedding"): Unit = {
     val spark = emb.sparkSession
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     val codebooks = readCodebooks(spark, root)
     val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
@@ -1372,7 +1368,7 @@ object Similarity {
                           queries: DataFrame, idCol: String, vecCol: String,
                           depth: Int, nprobe: Int)
       : (Option[DataFrame], Seq[Int], DataFrame, String) = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length)
     val codebooks = readCodebooks(spark, root)
@@ -1443,17 +1439,7 @@ object Similarity {
       .select(col("vec_id"), col("neighbor_id"), col("cos")), k)
   }
 
-  // ---- index lifecycle: version resolution, drift profiling, reindex ----
-
-  /** Resolve the CURRENT root of a possibly-versioned index. A freshly
-    * built index lives at `path` itself (legacy/simple layout); after
-    * the first [[reindex]] the live version is `path/v<N>` and
-    * `path/_current` (written by atomic rename) names it. Every reader
-    * and appender in this package resolves through here, so a reindex
-    * becomes visible to them at exactly one commit point. */
-  def resolveIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                       path: String): String =
-    VersionedIndex.resolveRoot(spark, path)
+  // ---- index lifecycle: drift profiling, reindex, vacuum ----
 
   /** Per-cell health of a persistent IVF(+PQ) index — the signal that
     * says WHEN to [[reindex]]: appends under the frozen quantizer
@@ -1472,7 +1458,7 @@ object Similarity {
     * max_err) where err = 1 − cos(vector, its centroid). */
   def ivfDriftProfile(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame = {
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     val cells = centroids.length
     val cLit = typedLit(centroids.map(_.toSeq).toSeq)
@@ -1497,10 +1483,9 @@ object Similarity {
   }
 
   /** Rebuild a drifted index from its CURRENT live vectors into a new
-    * version directory, then swap the `_current` pointer by ATOMIC
-    * rename — concurrent searchers resolve either the old version or
-    * the new one, never a half-built tree (the old version's files are
-    * untouched until [[vacuumIndexVersions]]). Refits the coarse
+    * committed version — concurrent searchers resolve either the old
+    * version or the new one, never a half-built tree (the old version's
+    * files are untouched until [[vacuumIndexVersions]]). Refits the coarse
     * quantizer (and, for an IVF+PQ index — detected by the presence of
     * codebooks — the residual codebooks, preserving m/ksub) on the
     * current corpus. `cells` = 0 keeps the current cell count.
@@ -1508,34 +1493,23 @@ object Similarity {
   def reindex(spark: org.apache.spark.sql.SparkSession, path: String,
               cells: Int = 0, seed: Long = 42, maxIter: Int = 5): String = {
     import org.apache.hadoop.fs.Path
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val nCells = if (cells > 0) cells else readCentroids(spark, root).length
+    val pq = if (!fs.exists(new Path(root, "codebooks"))) None else {
+      val cb = readCodebooks(spark, root)
+      Some((cb.length, cb.head.length))
+    }
     val live = spark.read.parquet(s"$root/vectors")
       .select(col("vec_id"), col("embedding"))
-    val next = VersionedIndex.nextVersion(spark, path)
-    if (fs.exists(new Path(root, "codebooks"))) {
-      val cb = readCodebooks(spark, root)
-      buildIvfPqIndex(live, s"$path/$next", cells = nCells,
-        m = cb.length, ksub = cb.head.length, seed = seed, maxIter = maxIter)
-    } else
-      buildIvfIndex(live, s"$path/$next", cells = nCells,
-        seed = seed, maxIter = maxIter)
-    // commit point — a crash before this line leaves the old version
-    // live and the half-built v<N+1> dir invisible (the next reindex
-    // skips past it)
-    VersionedIndex.commitPointer(spark, path, next)
-    next
+    VersionedIndex.rewrite(spark, path)(writeIvfTree(live, _, nCells, pq, seed, maxIter))
   }
 
-  /** Delete every superseded index version (and the legacy root-layout
-    * halves, once a `_current` pointer exists) — run only when no
-    * searcher may still hold a pre-swap resolution. Returns what was
-    * deleted. */
+  /** Delete every superseded index version — run only when no searcher
+    * may still hold a pre-swap resolution. Returns what was deleted. */
   def vacuumIndexVersions(spark: org.apache.spark.sql.SparkSession,
                           path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path,
-      Seq("centroids", "vectors", "codebooks", "codes"))
+    VersionedIndex.vacuum(spark, path)
 
   /** All embedding pairs at-or-above a cosine threshold — brute-force
     * exact baseline (labelled; candidate generation at scale belongs to
@@ -1648,7 +1622,7 @@ object Similarity {
       benchIdCol: String = "vec_id", benchVecCol: String = "embedding",
       threshold: Double = 0.9, nprobe: Int = 2): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = resolveIndexRoot(spark, path)
+    val root = VersionedIndex.resolveRoot(spark, path)
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length)
     val q = withNorm(benchmark.filter(col(benchVecCol).isNotNull),
@@ -1757,8 +1731,8 @@ object Similarity {
   }
 
   /** [[semanticDedup]] under a PERSISTED index's frozen quantizer:
-    * cell assignment comes from the index at `path` (resolved through
-    * `_current` like every other reader), so dedup geometry matches
+    * cell assignment comes from the index at `path` (its current
+    * version, like every other reader), so dedup geometry matches
     * the serving index exactly — dedup, search and drift profiling
     * all speak the same cells, and no second quantizer is fit. */
   def semanticDedupWithIndex(spark: org.apache.spark.sql.SparkSession,
@@ -1767,7 +1741,7 @@ object Similarity {
                              vecCol: String = "embedding",
                              threshold: Double = 0.9): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val centroids = readCentroids(spark, resolveIndexRoot(spark, path))
+    val centroids = readCentroids(spark, VersionedIndex.resolveRoot(spark, path))
     semanticDedupAssigned(emb, withNorm(emb, idCol, vecCol), centroids,
       idCol, threshold)
   }
@@ -1917,24 +1891,22 @@ object Similarity {
       eps, stats.m2.toArray)
   }
 
-  /** Persist a fitted whitening model under the shared
-    * versioned-pointer layout: each save writes a complete
-    * `path/v<N>/model` parquet then atomically flips `path/_current` —
-    * a re-fit (the weekly refresh) publishes at exactly one commit
-    * point while readers of the previous version stay live, the same
-    * crash discipline as every persisted index in this package. The
-    * model is a few KB; one file. */
+  /** Persist a fitted whitening model under the shared versioned
+    * layout: each save writes a complete `path/v<N>/model` parquet and
+    * commits it ([[VersionedIndex.rewrite]]) — a re-fit (the weekly
+    * refresh) publishes at exactly one commit point while readers of
+    * the previous version stay live, the same crash discipline as every
+    * persisted index in this package. The model is a few KB; one file. */
   def savePcaWhitening(spark: org.apache.spark.sql.SparkSession,
                        model: PcaWhitenModel, path: String): Unit = {
-    val next = VersionedIndex.nextVersion(spark, path)
     import spark.implicits._
-    Seq((model.dim, model.components, model.n, model.mean.toSeq,
-        model.eigenvalues.toSeq, model.basis.map(_.toSeq).toSeq, model.eps,
-        model.m2.toSeq))
-      .toDF("dim", "components", "n", "mean", "eigenvalues", "basis", "eps",
-        "m2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/$next/model")
-    VersionedIndex.commitPointer(spark, path, next)
+    VersionedIndex.rewrite(spark, path)(dir =>
+      Seq((model.dim, model.components, model.n, model.mean.toSeq,
+          model.eigenvalues.toSeq, model.basis.map(_.toSeq).toSeq, model.eps,
+          model.m2.toSeq))
+        .toDF("dim", "components", "n", "mean", "eigenvalues", "basis", "eps",
+          "m2")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/model"))
   }
 
   /** Load the CURRENT version of a persisted whitening model. */
@@ -1961,8 +1933,7 @@ object Similarity {
     * partial buffers, so a daily-append corpus re-fits without ever
     * re-scanning history), re-eigen-decompose driver-side, and
     * publish as a new version. Returns the refreshed model. Readers
-    * of the previous version stay live until the atomic pointer
-    * flip. */
+    * of the previous version stay live until the new one commits. */
   def appendToPcaWhitening(spark: org.apache.spark.sql.SparkSession,
                            fresh: DataFrame, path: String,
                            vecCol: String = "embedding"): PcaWhitenModel = {
@@ -1981,7 +1952,7 @@ object Similarity {
     * hold a pre-swap resolution). Returns what was deleted. */
   def vacuumPcaWhitening(spark: org.apache.spark.sql.SparkSession,
                          path: String): Seq[String] =
-    VersionedIndex.vacuum(spark, path, Seq.empty)
+    VersionedIndex.vacuum(spark, path)
 
   /** Apply a fitted whitening model: `out_r = (x·U_r − μ·U_r) /
     * √(λ_r + eps)` for the top `model.components` eigenpairs —

@@ -1,82 +1,92 @@
 package graft.api
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Versioned-directory index layout with an atomic `_current` pointer —
-  * the crash-safety discipline shared by every persisted index in this
-  * package (IVF/IVF+PQ vector indexes, the MinHash near-dup index, the
-  * hamming perceptual index, the Bloom seen filter).
+/** The one on-disk layout of every persisted store in this package (the
+  * near-dup, hamming, containment, IVF and IVF+PQ indexes, the Bloom
+  * seen filter and the PCA whitening model), and its one commit step.
   *
-  * Layout: a fresh build lives at `path` itself (legacy/simple layout);
-  * any rewriting operation (reindex, delete) writes a complete new tree
-  * under `path/v<N>` and then commits by replacing `path/_current`
-  * with [[graft.core.Commit.writeAtomically]] (hidden temp sibling,
-  * then rename-with-overwrite). Readers resolve through
-  * [[resolveRoot]], so a rewrite becomes visible at exactly one commit
-  * point: a crash at ANY earlier moment leaves the previous version
-  * fully live and the half-written v-dir invisible (the next writer
-  * skips past it when numbering).
+  * Layout: `path/v<N>/...`, one complete tree per version. Every build,
+  * rewrite, merge, reindex, compaction and save writes a new `v<N>`
+  * through [[rewrite]], which commits it by creating `v<N>/_committed`
+  * ([[graft.core.Commit.createExclusive]]). Readers resolve the highest
+  * `v<N>` holding that marker, so a version becomes visible at exactly
+  * one create: a crash at any earlier moment leaves the previous version
+  * current and the half-written `v<N>` invisible (the next writer
+  * numbers past it). Hidden names (`_appends`, `_lock`) may sit beside
+  * the versions; anything else at the root is an old layout.
   */
 private[graft] object VersionedIndex {
 
-  /** The CURRENT root of a possibly-versioned index: `path/v<N>` when a
-    * `_current` pointer exists, `path` itself otherwise. */
-  def resolveRoot(spark: SparkSession, path: String): String = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(root, "_current")
-    if (!fs.exists(cur)) path
-    else {
-      val in = fs.open(cur)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(v.matches("v\\d+"), s"corrupt _current pointer at $path: '$v'")
-      s"$path/$v"
-    }
+  private val VersionDir = "v(\\d+)".r
+
+  private def fsOf(spark: SparkSession, base: Path): FileSystem =
+    base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Version numbers under `base`, highest first, committed or not —
+    * after failing loudly on an old layout: a `_current` pointer,
+    * visible tables at the root, or a single-file seen filter. */
+  private def versions(fs: FileSystem, base: Path): Seq[Long] = {
+    val entries =
+      try fs.listStatus(base)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    val names = entries.map(_.getPath.getName)
+    def table(n: String) = !graft.core.Commit.hidden(n) && !VersionDir.matches(n)
+    if (entries.exists(e => e.isFile && e.getPath.toUri.getPath == base.toUri.getPath) ||
+        names.exists(n => n == "_current" || table(n)))
+      throw new IllegalStateException(s"$base holds a store in the old unversioned " +
+        "layout (a _current pointer, tables at its root, or a single-file seen " +
+        "filter), which is no longer read — delete it and rebuild")
+    names.toSeq.collect { case VersionDir(n) => n.toLong }.sorted.reverse
   }
 
-  /** Next unused version name under `path` — one past the max of every
-    * `v<N>` dir present, COMMITTED OR NOT, so an abandoned half-write
-    * is never reused. */
-  def nextVersion(spark: SparkSession, path: String): String = {
+  /** The committed current version of `path` (the highest `v<N>` with a
+    * `_committed` marker); None when nothing is committed there yet. */
+  def current(spark: SparkSession, path: String): Option[String] = {
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing: Seq[Long] =
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).map(_.getPath.getName).toSeq
-        .collect { case n if n.matches("v\\d+") => n.stripPrefix("v").toLong }
-    s"v${(0L +: existing).max + 1}"
+    val fs = fsOf(spark, base)
+    versions(fs, base).find(n => fs.exists(new Path(base, s"v$n/_committed"))).map(n => s"v$n")
   }
 
-  /** Commit point: atomically replace `path/_current` with `version`.
-    * Everything under `path/$version` must already be fully written. */
-  def commitPointer(spark: SparkSession, path: String, version: String): Unit = {
+  /** The directory of the current version of `path`; a missing store
+    * fails loudly. */
+  def resolveRoot(spark: SparkSession, path: String): String =
+    current(spark, path).map(v => s"$path/$v")
+      .getOrElse(throw new IllegalArgumentException(s"nothing committed at $path"))
+
+  /** One past the max of every `v<N>` present, COMMITTED OR NOT, so an
+    * abandoned half-write is never reused. */
+  private def nextVersion(fs: FileSystem, base: Path): String =
+    s"v${(0L +: versions(fs, base)).max + 1}"
+
+  /** Write a complete new version of `path` with `body` (given its
+    * directory), then commit it; returns its name. A `body` that throws
+    * leaves nothing behind: its staged version is deleted. */
+  def rewrite(spark: SparkSession, path: String)(body: String => Unit): String = {
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.Commit.writeAtomically(fs, new Path(base, "_current"),
-      version.getBytes("UTF-8"), replace = true)
+    val fs = fsOf(spark, base)
+    val v = nextVersion(fs, base)
+    val dir = new Path(base, v)
+    try body(s"$path/$v")
+    catch { case t: Throwable => fs.delete(dir, true); throw t }
+    if (!graft.core.Commit.createExclusive(fs, new Path(dir, "_committed")))
+      throw new IllegalStateException(s"$path/$v was committed by a concurrent writer")
+    v
   }
 
-  /** Delete every superseded version dir (and, once a pointer exists,
-    * the named legacy root-layout tables) — run only when no reader may
-    * still hold a pre-swap resolution. `keep` names superseded versions
-    * that must SURVIVE the vacuum: version-pinned replay consumers (the
+  /** Delete every version but the current one and `keep` — run only when
+    * no reader may still hold an older resolution. `keep` names older
+    * versions that must SURVIVE: version-pinned replay consumers (the
     * ingest `_dedup` ledger) record the version their crashed commit
     * consulted, and deleting it would wedge the otherwise-automatic
     * replay (ADVICE r16). Returns what was deleted. */
   def vacuum(spark: SparkSession, path: String,
-             legacyTables: Seq[String],
              keep: Set[String] = Set.empty): Seq[String] = {
     val base = new Path(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current = resolveRoot(spark, path)
-    if (current == path) return Seq.empty // unversioned: nothing superseded
-    val currentName = current.stripPrefix(s"$path/")
-    val doomed = fs.listStatus(base).map(_.getPath.getName).filter { n =>
-      ((n.matches("v\\d+") && n != currentName) || legacyTables.contains(n)) &&
-        !keep.contains(n)
-    }.toSeq
+    val fs = fsOf(spark, base)
+    val live = keep ++ current(spark, path)
+    val doomed = versions(fs, base).map(n => s"v$n").filterNot(live)
     doomed.foreach(n => fs.delete(new Path(base, n), true))
     doomed.sorted
   }

@@ -1,11 +1,11 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 
 /** How a commit point becomes visible on disk: the one implementation
   * behind every on-disk protocol here (the ingest commit, compaction and
-  * row-level rewrites, stats manifests, the versioned-index `_current`
-  * pointer, the seen filter's lock, the suppressor append ledger).
+  * row-level rewrites, stats manifests, the versioned stores' commit
+  * marker, the seen filter's lock, the suppressor append ledger).
   * Every lister skips [[hidden]] names, so a temp file a crash left
   * behind is never read as a commit or a ledger entry.
   */
@@ -42,20 +42,14 @@ private[graft] object Commit {
   }
 
   /** Land `bytes` at `dest`, never as a torn file: write `.<name>.tmp`
-    * beside it, then rename. Write-once by default: a checked rename,
-    * and an existing `dest` (a replay's: write-once files here are
-    * deterministic per name) stands. `replace` moves a pointer
-    * (`_current`) by a `FileContext` rename with overwrite, which on
-    * some filesystems deletes `dest` first, so a crash can leave none. */
-  def writeAtomically(fs: FileSystem, dest: Path, bytes: Array[Byte],
-                      replace: Boolean = false): Unit = {
+    * beside it, then rename. Write-once: a checked rename, and an
+    * existing `dest` (a replay's: write-once files here are
+    * deterministic per name) stands. */
+  def writeAtomically(fs: FileSystem, dest: Path, bytes: Array[Byte]): Unit = {
     val tmp = new Path(dest.getParent, s".${dest.getName}.tmp")
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
-    if (replace)
-      FileContext.getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, dest, Options.Rename.OVERWRITE)
-    else if (!fs.rename(tmp, dest)) {
+    if (!fs.rename(tmp, dest)) {
       if (!fs.exists(dest))
         throw new java.io.IOException(s"metadata rename failed: $tmp -> $dest")
       fs.delete(tmp, false)

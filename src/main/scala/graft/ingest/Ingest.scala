@@ -65,7 +65,7 @@ final case class IngestConfig(
     // unflagged (a false negative, the one thing the filter forbids).
     // The commit loop is the filter's natural single writer: in-process
     // commit groups serialize on the per-path filter lock, and a
-    // cross-process racer fails the pointer CAS loudly.
+    // cross-process racer fails the based-on version check loudly.
     seenFilterPath: Option[String] = None,
     // Id column for the seen filter — must name a generated data
     // column; None = the first data column (the bucket/cluster key).
@@ -610,7 +610,7 @@ object Ingest {
                 "line (not written by the commit protocol) — delete it to " +
                 "let the replay re-consult the current filter state")
             pinned.filter(_ != "none")
-          } else graft.api.Dedup.seenFilterVersion(spark, fpPath)
+          } else graft.api.VersionedIndex.current(spark, fpPath)
         // flagged reads the CHECKPOINTED rank — one cheap codegen'd
         // Bloom pass; its own checkpoint is what the staged write
         // consumes, and the accounting rides that checkpoint's job as

@@ -827,7 +827,8 @@ object Pipeline {
       rmTree(merged)
       val dropped = graft.api.Dedup.mergeNearDupIndexes(
         s, idxA, idxB, merged.getAbsolutePath)
-      s.read.parquet(merged.getAbsolutePath + "/sketches").select("doc_id")
+      s.read.parquet(graft.api.VersionedIndex.resolveRoot(s, merged.getAbsolutePath) +
+          "/sketches").select("doc_id")
         .withColumn("n_dropped", lit(dropped))
         .orderBy("doc_id")
     }),
@@ -901,7 +902,8 @@ object Pipeline {
       rmTree(merged)
       val dropped = graft.api.Similarity.mergeIvfIndexes(
         s, idxA, idxB, merged.getAbsolutePath, threshold = 0.45, nprobe = 8)
-      s.read.parquet(merged.getAbsolutePath + "/vectors").select("vec_id")
+      s.read.parquet(graft.api.VersionedIndex.resolveRoot(s, merged.getAbsolutePath) +
+          "/vectors").select("vec_id")
         .withColumn("n_dropped", lit(dropped))
         .orderBy("vec_id")
     }),
@@ -968,7 +970,8 @@ object Pipeline {
       graft.api.Dedup.buildHammingIndex(b, p("b"))
       val dropped =
         graft.api.Dedup.mergeHammingIndexes(s, p("a"), p("b"), p("m"))
-      s.read.parquet(p("m") + "/chunks").select("doc_id").distinct()
+      s.read.parquet(graft.api.VersionedIndex.resolveRoot(s, p("m")) + "/chunks")
+        .select("doc_id").distinct()
         .withColumn("n_dropped", lit(dropped))
         .orderBy("doc_id")
     }),
@@ -1399,6 +1402,7 @@ object Pipeline {
           .select(col("media_id"), col("name"), col("dhash"))
       }
       val idx = new java.io.File(base, "index").getAbsolutePath
+      rmTree(new java.io.File(idx))
       graft.api.Dedup.buildHammingIndex(
         hashes(corpusDir, _ == "a.png"), idx, idCol = "media_id", sigCol = "dhash")
       graft.api.Dedup.appendToHammingIndex(
@@ -1602,6 +1606,7 @@ object Pipeline {
     "q128_neardup_index" -> ((s, d) => {
       val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
         "graft-ndidx-" + d.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+      rmTree(new java.io.File(dir))
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val m4 = col("doc_id") % 4
       graft.api.Dedup.buildNearDupIndex(

@@ -56,11 +56,24 @@ object ExplainExecuted {
   private def executedString(df: DataFrame): String = cap(
     df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
 
+  private val sessionIds =
+    Seq("#(\\d+)", "plan_id=(\\d+)", "codegen id : (\\d+)", "RDD\\[(\\d+)\\]").map(_.r)
+
+  /** `dump` with the ids that depend on what ran earlier in the session
+    * — expression ids (`#217L`), `plan_id=`, codegen stage ids and RDD
+    * ids — renumbered in first-seen order, each kind on its own, so the
+    * twin of an unchanged plan diffs clean. */
+  private def renumber(dump: String): String = sessionIds.foldLeft(dump) { (s, id) =>
+    val seen = scala.collection.mutable.Map.empty[String, Int]
+    id.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(m.matched.replace(
+      m.group(1), seen.getOrElseUpdate(m.group(1), seen.size + 1).toString)))
+  }
+
   /** Runs query `name` and renders its executed plan under
     * `## name (label)`, then the first `maxStages` inner stages the
     * PlanAudit probe captured (eager checkpoints executed during
     * construction, so their plans are final; the first batch carries
-    * the shapes). */
+    * the shapes), with session ids renumbered. */
   private def dump(spark: SparkSession, sfDir: String, name: String,
                    label: String, maxStages: Int): String = {
     val stages = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -79,7 +92,7 @@ object ExplainExecuted {
         "identical shapes to the first batch's)\n"
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    sb.toString
+    renumber(sb.toString)
   }
 
   def main(args: Array[String]): Unit = {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * were spec-proven against a SIMULATED racer inside one JVM only —
   * this main is a real second JVM racing the smoke's parent process
   * on the same table / index paths, so the on-disk protocols (marker
-  * files, `_lock` exclusive-create, `_current` pointer CAS) are
+  * files, `_lock` exclusive-create, the based-on version check) are
   * exercised across genuine process boundaries.
   *
   * Subcommands (driven by [[graft.ScaleSmoke]], rendezvous via files):
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *  - `race-append <filterPath> <rvDir> <idStart> <idCount>` — the
   *    deterministic conflicting pair: read the filter state (based-on
   *    version), signal `<rv>/child_read`, WAIT for `<rv>/go` (the
-  *    parent appends in between, moving the pointer), then try to
-  *    commit the stale state — the CAS MUST fail loudly
+  *    parent appends in between, committing a new version), then try to
+  *    commit the stale state — the check MUST fail loudly
   *    (`CONFLICT_LOUD` printed on IllegalStateException), after which
   *    the child retries through the public append on a fresh read
   *    (`RETRY_OK`). Exactly one racer of the conflicting pair fails,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{Dedup, Joins, Similarity, TextAnalysis}
+import graft.api.{Dedup, Joins, Similarity, TextAnalysis, VersionedIndex}
 
 /** The `graft.api` operators must work on ANY DataFrame with the right
   * column types — not just the driver fixtures the oracle-checked
@@ -215,7 +215,7 @@ class ApiSpec extends AnyFunSuite {
     val cols = Dedup.nearDupAgainstIndex(fresh, dir, idCol = "id", textCol = "body").columns
     assert(cols.toSeq == Seq("id", "body"))
     // increments hash under the index's own persisted params
-    val params = spark.read.parquet(s"$dir/params").collect().head
+    val params = spark.read.parquet(s"$dir/v1/params").collect().head
     assert((params.getInt(0), params.getInt(1), params.getInt(2)) == ((3, 64, 16)))
     // a missing index fails loudly, not with an empty result
     intercept[Exception] {
@@ -247,30 +247,31 @@ class ApiSpec extends AnyFunSuite {
       (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (101L, "one two three four five six seven eight nine ten")).toDF("id", "body")
 
-    // delete versions the index: v1 committed, legacy tables UNTOUCHED
+    // the delete commits v2 beside the build's v1, which it leaves UNTOUCHED
     assert(Dedup.deleteFromNearDupIndex(spark, dir, Seq(1L).toDF("id"), idCol = "id") == 1L)
-    assert(Files.exists(Paths.get(dir, "_current")))
-    assert(new String(Files.readAllBytes(Paths.get(dir, "_current")), "UTF-8").trim == "v1")
+    assert(Files.exists(Paths.get(dir, "v2", "_committed")))
+    assert(VersionedIndex.current(spark, dir) == Some("v2"))
     // the pre-delete version still holds ALL the build-time docs — a
-    // crash before the pointer flip would have served it consistently
-    assert(spark.read.parquet(s"$dir/sketches").count() == 3L)
-    assert(spark.read.parquet(s"$dir/v1/sketches").count() == 2L)
+    // crash before the commit marker would have served it consistently
+    assert(spark.read.parquet(s"$dir/v1/sketches").count() == 3L)
+    assert(spark.read.parquet(s"$dir/v2/sketches").count() == 2L)
     val afterDel = Dedup.nearDupAgainstIndex(copies, dir, idCol = "id", textCol = "body")
       .select("id").as[Long].collect().sorted
     assert(afterDel.toSeq == Seq(100L), s"got ${afterDel.toSeq}")
 
     // simulate a crash MID-DELETE: a half-written version dir (sketches
-    // only, no bands, no pointer flip) must be invisible to readers...
+    // only, no bands, no commit marker) must be invisible to readers...
     val junk = Paths.get(dir, "v99", "sketches")
     Files.createDirectories(junk)
-    spark.read.parquet(s"$dir/v1/sketches").limit(1)
+    spark.read.parquet(s"$dir/v2/sketches").limit(1)
       .write.mode("overwrite").parquet(junk.toString)
     val midCrash = Dedup.nearDupAgainstIndex(copies, dir, idCol = "id", textCol = "body")
       .select("id").as[Long].collect().sorted
     assert(midCrash.toSeq == Seq(100L), "half-written version dir must not affect reads")
     // ...and the next delete numbers PAST it, never reusing the junk dir
     assert(Dedup.deleteFromNearDupIndex(spark, dir, Seq(2L).toDF("id"), idCol = "id") == 1L)
-    assert(new String(Files.readAllBytes(Paths.get(dir, "_current")), "UTF-8").trim == "v100")
+    assert(Files.exists(Paths.get(dir, "v100", "_committed")))
+    assert(VersionedIndex.current(spark, dir) == Some("v100"))
     val afterDel2 = Dedup.nearDupAgainstIndex(copies, dir, idCol = "id", textCol = "body")
       .select("id").as[Long].collect().sorted
     assert(afterDel2.toSeq == Seq(100L, 101L), s"got ${afterDel2.toSeq}")
@@ -278,26 +279,27 @@ class ApiSpec extends AnyFunSuite {
     // append + re-build land in the live version / a fresh committed one
     Dedup.appendToNearDupIndex(docs.filter($"id" === 3L), dir, idCol = "id", textCol = "body")
     Dedup.buildNearDupIndex(docs, dir, idCol = "id", textCol = "body")
-    assert(new String(Files.readAllBytes(Paths.get(dir, "_current")), "UTF-8").trim == "v101")
+    assert(VersionedIndex.current(spark, dir) == Some("v101"))
     assert(Dedup.nearDupAgainstIndex(copies, dir, idCol = "id", textCol = "body").count() == 0L)
 
-    // vacuum drops superseded versions + legacy tables; reads survive
+    // vacuum drops every superseded version, the junk dir too; reads survive
     val dropped = Dedup.vacuumNearDupIndexVersions(spark, dir)
-    assert(dropped.contains("v1") && dropped.contains("sketches") && !dropped.contains("v101"))
+    assert(dropped == Seq("v1", "v100", "v2", "v99"), s"got $dropped")
     assert(Dedup.nearDupAgainstIndex(copies, dir, idCol = "id", textCol = "body").count() == 0L)
 
-    // hamming index: same pointer discipline
+    // hamming index: same commit discipline
     val hdir = Files.createTempDirectory("graft-atomic-hspec").toString
     Dedup.buildHammingIndex(Seq((1L, 0L), (2L, -1L)).toDF("id", "h"),
       hdir, idCol = "id", sigCol = "h")
     assert(Dedup.deleteFromHammingIndex(spark, hdir, Seq(1L).toDF("id"), idCol = "id") == 1L)
-    assert(new String(Files.readAllBytes(Paths.get(hdir, "_current")), "UTF-8").trim == "v1")
-    assert(spark.read.parquet(s"$hdir/chunks").select("doc_id").distinct().count() == 2L,
-      "legacy chunk table untouched by the versioned delete")
+    assert(Files.exists(Paths.get(hdir, "v2", "_committed")))
+    assert(VersionedIndex.current(spark, hdir) == Some("v2"))
+    assert(spark.read.parquet(s"$hdir/v1/chunks").select("doc_id").distinct().count() == 2L,
+      "the build's chunk table untouched by the versioned delete")
     val hsurv = Dedup.hammingAgainstIndex(Seq((100L, 0L), (101L, -1L)).toDF("id", "h"),
       hdir, idCol = "id", sigCol = "h").select("id").as[Long].collect().sorted
     assert(hsurv.toSeq == Seq(100L), s"got ${hsurv.toSeq}")
-    assert(Dedup.vacuumHammingIndexVersions(spark, hdir).contains("chunks"))
+    assert(Dedup.vacuumHammingIndexVersions(spark, hdir) == Seq("v1"))
     assert(Dedup.hammingAgainstIndex(Seq((101L, -1L)).toDF("id", "h"),
       hdir, idCol = "id", sigCol = "h").count() == 0L)
   }
@@ -387,7 +389,7 @@ class ApiSpec extends AnyFunSuite {
     val emb = graft.core.Tables.embeddings(spark, TestSpark.sf)
     Similarity.buildIvfIndex(emb, dir)
     // the index is cell-partitioned on disk — the partition-pruning unit
-    val cellDirs = new java.io.File(s"$dir/vectors").listFiles()
+    val cellDirs = new java.io.File(s"$dir/v1/vectors").listFiles()
     assert(cellDirs != null && cellDirs.exists(_.getName.startsWith("cell=")))
     val got = Similarity.ivfSearchIndex(spark, dir, emb, k = 3, nprobe = 2)
     assert(got.columns.sameElements(Array("vec_id", "rank", "neighbor_id", "cos")))
@@ -415,9 +417,9 @@ class ApiSpec extends AnyFunSuite {
     val emb = graft.core.Tables.embeddings(spark, TestSpark.sf)
     Similarity.buildIvfPqIndex(emb, dir)
     // layout: codes cell-partitioned (the pruning unit) + codebooks model
-    val codeDirs = new java.io.File(s"$dir/codes").listFiles()
+    val codeDirs = new java.io.File(s"$dir/v1/codes").listFiles()
     assert(codeDirs != null && codeDirs.exists(_.getName.startsWith("cell=")))
-    assert(new java.io.File(s"$dir/codebooks").exists())
+    assert(new java.io.File(s"$dir/v1/codebooks").exists())
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val exact = pairs(Similarity.cosineTopKExact(emb))
@@ -513,14 +515,14 @@ class ApiSpec extends AnyFunSuite {
 
     val ivf = java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
     Similarity.buildIvfIndex(base, ivf)
-    val centroidsBefore = spark.read.parquet(s"$ivf/centroids").collect()
+    val centroidsBefore = spark.read.parquet(s"$ivf/v1/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
     Similarity.appendToIvfIndex(held, ivf)
     // quantizer frozen, index grown to the full corpus
-    val centroidsAfter = spark.read.parquet(s"$ivf/centroids").collect()
+    val centroidsAfter = spark.read.parquet(s"$ivf/v1/centroids").collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
     assert(centroidsAfter == centroidsBefore, "append must not refit the quantizer")
-    assert(spark.read.parquet(s"$ivf/vectors").count() == emb.count())
+    assert(spark.read.parquet(s"$ivf/v1/vectors").count() == emb.count())
     // searching with a held-out vector as the query now finds appended
     // residents: its top neighbors may legally be other held-out rows
     val got = Similarity.ivfSearchIndex(spark, ivf, emb, k = 3, nprobe = 2)
@@ -532,8 +534,8 @@ class ApiSpec extends AnyFunSuite {
     Similarity.buildIvfPqIndex(base, pq)
     Similarity.appendToIvfPqIndex(held, pq)
     // both halves grow in lockstep: ADC codes and exact-rescore vectors
-    assert(spark.read.parquet(s"$pq/vectors").count() == emb.count())
-    assert(spark.read.parquet(s"$pq/codes").count() == emb.count())
+    assert(spark.read.parquet(s"$pq/v1/vectors").count() == emb.count())
+    assert(spark.read.parquet(s"$pq/v1/codes").count() == emb.count())
     val adc = Similarity.ivfPqSearchIndex(spark, pq, emb, k = 3, nprobe = 2)
     assert(adc.collect().exists(r => heldIds.contains(r.getLong(2))),
       "appended vectors must surface through ADC search")
@@ -575,13 +577,13 @@ class ApiSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ivf-ckpt").toString
     Similarity.buildIvfIndex(emb.limit(200), idx)
-    val before = spark.read.parquet(s"$idx/vectors").count()
+    val before = spark.read.parquet(s"$idx/v1/vectors").count()
     val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
     val q = Similarity.appendStreamToIvfIndex(stream, idx, ckpt)
     q.awaitTermination()
-    val after = spark.read.parquet(s"$idx/vectors").count()
+    val after = spark.read.parquet(s"$idx/v1/vectors").count()
     assert(after == before + emb.count(), "every streamed vector appended once")
     // appended vectors are immediately searchable through the same index
     val got = Similarity.ivfSearchIndex(spark, idx, emb.limit(5), k = 3, nprobe = 2)
@@ -1928,12 +1930,13 @@ class ApiSpec extends AnyFunSuite {
       .select("id").as[Long].collect().sorted.toSeq
     val before = survivors()
     assert(before == Seq(102L))
-    val filesBefore = parquetFiles(s"$dir/bands")
+    val filesBefore = parquetFiles(s"$dir/v1/bands")
     Dedup.compactNearDupIndex(spark, dir)
-    // compaction commits a version: pointer exists, old root untouched
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_current")))
-    assert(parquetFiles(s"$dir/bands") == filesBefore, "pre-compaction files untouched")
-    val filesAfter = parquetFiles(s"$dir/v1/bands")
+    // compaction commits a version: v2 is current, the build's v1 untouched
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v2", "_committed")))
+    assert(VersionedIndex.current(spark, dir) == Some("v2"))
+    assert(parquetFiles(s"$dir/v1/bands") == filesBefore, "pre-compaction files untouched")
+    val filesAfter = parquetFiles(s"$dir/v2/bands")
     assert(filesAfter < filesBefore,
       s"compaction must shrink the file count: $filesBefore -> $filesAfter")
     assert(survivors() == before, "compaction must never change results")
@@ -1952,10 +1955,10 @@ class ApiSpec extends AnyFunSuite {
     def matches() = Dedup.hammingAgainstIndex(probe, hdir, idCol = "id", sigCol = "s")
       .select("id").as[Long].collect().sorted.toSeq
     val hBefore = matches()
-    val hFilesBefore = parquetFiles(s"$hdir/chunks")
+    val hFilesBefore = parquetFiles(s"$hdir/v1/chunks")
     Dedup.compactHammingIndex(spark, hdir)
     assert(matches() == hBefore, "hamming compaction must never change results")
-    assert(parquetFiles(s"$hdir/v1/chunks") < hFilesBefore)
+    assert(parquetFiles(s"$hdir/v2/chunks") < hFilesBefore)
   }
 
   test("Dedup.triangleStats: clique census, ordered once-counting, empty graph") {
@@ -2159,7 +2162,7 @@ class ApiSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 10L, 1)))
     val dropped = Dedup.mergeHammingIndexes(spark, p("a"), p("b"), p("m"))
     assert(dropped == 1L)
-    val members = spark.read.parquet(p("m") + "/chunks")
+    val members = spark.read.parquet(p("m") + "/v1/chunks")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(members == Set(1L, 2L, 11L))
     // the merged index serves searches: a near-copy of an A doc flags,

@@ -8,11 +8,11 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.Dedup
+import graft.api.{Dedup, VersionedIndex}
 
-/** On-disk layout of the near-dup and hamming indexes: table and
-  * partition directories, the `_current` pointer a delete introduces,
-  * and every table's parquet schema (names, order, physical types,
+/** On-disk layout of the near-dup and hamming indexes: version,
+  * table and partition directories, the `_committed` marker of each
+  * version, and every table's parquet schema (names, order, physical types,
   * repetition). Indexes written by earlier builds must stay readable,
   * so any change here is a format change. */
 class BandedIndexLayoutSpec extends AnyFunSuite {
@@ -78,22 +78,22 @@ class BandedIndexLayoutSpec extends AnyFunSuite {
     "chunks" -> ((parts("chunk", 4), msg("required int64 doc_id;", "required int64 sig;",
       "required int64 cval;"), "struct<doc_id:bigint,sig:bigint,cval:bigint,chunk:int>")))
 
-  /** Build, check the legacy layout, delete doc 2, check the `v1` one. */
+  /** Build, check `v1`, delete doc 2, check `v2` and an untouched `v1`. */
   private def check(prefix: String, expected: Map[String, (String, String, String)])
                    (build: String => Unit)(delete: (String, Seq[Long]) => Long): Unit = {
     val dir = Files.createTempDirectory(s"graft-layout-$prefix").toString
     build(dir)
     val tables = expected.keySet
-    assert(ls(dir) == tables, "a fresh build is the legacy layout")
-    assert(layout(dir, tables) == expected)
+    assert(ls(dir) == Set("v1"), "a fresh build is v1 alone")
+    assert(ls(s"$dir/v1") == tables + "_committed")
+    assert(layout(s"$dir/v1", tables) == expected)
     assert(delete(dir, Seq(2L)) == 1L)
-    assert(ls(dir) == tables ++ Set("v1", "_current"),
-      "a delete writes v1 beside the untouched legacy tables")
-    assert(new String(Files.readAllBytes(new File(dir, "_current").toPath),
-      "UTF-8") == "v1")
-    assert(ls(s"$dir/v1") == tables)
-    assert(layout(s"$dir/v1", tables) == rewritten(expected))
-    assert(spark.read.parquet(s"$dir/v1/${tables.filter(_ != "params").head}")
+    assert(ls(dir) == Set("v1", "v2"), "a delete writes v2 beside the untouched v1")
+    assert(VersionedIndex.current(spark, dir) == Some("v2"))
+    assert(ls(s"$dir/v2") == tables + "_committed")
+    assert(layout(s"$dir/v1", tables) == expected)
+    assert(layout(s"$dir/v2", tables) == rewritten(expected))
+    assert(spark.read.parquet(s"$dir/v2/${tables.filter(_ != "params").head}")
       .select("doc_id").distinct().as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 

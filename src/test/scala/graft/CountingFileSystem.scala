@@ -3,8 +3,8 @@ package graft
 import java.net.URI
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 
 /** Local filesystem with instrumented METADATA calls, registered under
   * the `graftcount` scheme — the probe behind CommitNoListingSpec
@@ -25,8 +25,9 @@ import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, Path, PathFilter,
   * this spec exists to catch.
   *
   * It is also a failpoint filesystem: with `failRenameAt` = N, the Nth
-  * rename since `reset()` throws, which is how CommitPointSpec crashes
-  * an ingest commit at every rename it makes. */
+  * rename since `reset()` throws, and with `failCreateAt` = N the Nth
+  * file create, which is how CommitPointSpec crashes an ingest commit
+  * at every rename and create it makes. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -73,14 +74,25 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def globStatus(pathPattern: Path, filter: PathFilter): Array[FileStatus] = {
     countList(); super.globStatus(pathPattern, filter)
   }
-  // failpoint: the Nth rename since reset() throws, as a crash at that
-  // point would stop the commit; FileContext renames (bound through
-  // CountingFs) land here too
+  // failpoints: the Nth rename or create since reset() throws, as a
+  // crash at that point would stop the commit
   override def rename(src: Path, dst: Path): Boolean = {
     val n = renameCalls.incrementAndGet()
     if (n == failRenameAt.get)
       throw new java.io.IOException(s"injected failure at rename $n: $src -> $dst")
     super.rename(src, dst)
+  }
+  // every create of a new file, from any create overload, opens its
+  // stream here; an exclusive create of an existing file fails before
+  override protected def createOutputStreamWithMode(f: Path, append: Boolean,
+                                                    permission: FsPermission)
+      : java.io.OutputStream = {
+    if (!append) {
+      val n = createCalls.incrementAndGet()
+      if (n == failCreateAt.get)
+        throw new java.io.IOException(s"injected failure at create $n: $f")
+    }
+    super.createOutputStreamWithMode(f, append, permission)
   }
   override def getFileStatus(f: Path): FileStatus = {
     if (CountingFileSystem.listDepth.get == 0) {
@@ -97,8 +109,11 @@ object CountingFileSystem {
   val executorListCalls = new AtomicLong(0L)
   val executorStatCalls = new AtomicLong(0L)
   val renameCalls = new AtomicLong(0L)
+  val createCalls = new AtomicLong(0L)
   /** 0 = no failpoint; N = the Nth rename after reset() throws. */
   val failRenameAt = new AtomicLong(0L)
+  /** 0 = no failpoint; N = the Nth create after reset() throws. */
+  val failCreateAt = new AtomicLong(0L)
   private[graft] val listDepth: ThreadLocal[Int] =
     ThreadLocal.withInitial(() => 0)
 
@@ -106,11 +121,6 @@ object CountingFileSystem {
     listCalls.set(0L); statCalls.set(0L)
     executorListCalls.set(0L); executorStatCalls.set(0L)
     renameCalls.set(0L); failRenameAt.set(0L)
+    createCalls.set(0L); failCreateAt.set(0L)
   }
 }
-
-/** [[CountingFileSystem]] as a `FileContext` filesystem, for
-  * `fs.AbstractFileSystem.graftcount.impl`: a versioned index's
-  * `_current` pointer moves by a `FileContext` rename with overwrite. */
-class CountingFs(uri: URI, conf: Configuration)
-    extends DelegateToFileSystem(uri, new CountingFileSystem, conf, "graftcount", false)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.Similarity
+import graft.api.{Similarity, VersionedIndex}
 
 /** Persistent-index lifecycle: drift profiling after frozen-quantizer
   * appends, atomic versioned reindex, post-reindex routing of searches
@@ -55,11 +55,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val skewed = Similarity.ivfDriftProfile(spark, dir).collect()
 
     val v = Similarity.reindex(spark, dir)
-    assert(v == "v1")
-    assert(new java.io.File(dir, "_current").exists())
-    assert(Similarity.resolveIndexRoot(spark, dir) == s"$dir/v1")
-    // old layout untouched until vacuum — in-flight readers stay valid
-    assert(new java.io.File(dir, "centroids").exists())
+    assert(v == "v2")
+    assert(new java.io.File(dir, "v2/_committed").exists())
+    assert(VersionedIndex.resolveRoot(spark, dir) == s"$dir/v2")
+    // the build's v1 untouched until vacuum — in-flight readers stay valid
+    assert(new java.io.File(dir, "v1/centroids").exists())
 
     // every vector survived the rebuild, and the refit quantizer models
     // the hot blob: occupancy skew drops
@@ -80,14 +80,13 @@ class IndexLifecycleSpec extends AnyFunSuite {
       .map(_.getAs[Long]("n")).sum
     assert(v1Total == re.map(_.getAs[Long]("n")).sum + 10)
 
-    // a second reindex chains to v2
-    assert(Similarity.reindex(spark, dir) == "v2")
-    assert(Similarity.resolveIndexRoot(spark, dir) == s"$dir/v2")
+    // a second reindex chains to v3
+    assert(Similarity.reindex(spark, dir) == "v3")
+    assert(VersionedIndex.resolveRoot(spark, dir) == s"$dir/v3")
 
-    // vacuum drops v1 + the legacy root halves, keeps v2
+    // vacuum drops v1 and v2, keeps v3
     val deleted = Similarity.vacuumIndexVersions(spark, dir)
-    assert(deleted.contains("v1") && deleted.contains("centroids") &&
-      deleted.contains("vectors") && !deleted.contains("v2"))
+    assert(deleted == Seq("v1", "v2"), s"got $deleted")
     assert(Similarity.ivfSearchIndex(spark, dir, emb.limit(3), k = 3, nprobe = 2)
       .count() > 0, "search must survive vacuum")
   }
@@ -97,11 +96,11 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val emb = graft.core.Tables.embeddings(spark, sf)
     Similarity.buildIvfPqIndex(emb, dir, m = 8, ksub = 8)
     Similarity.appendToIvfPqIndex(hotBlob(emb, 100), dir)
-    assert(Similarity.reindex(spark, dir) == "v1")
+    assert(Similarity.reindex(spark, dir) == "v2")
     // the rebuilt version carries both halves of the index
-    assert(new java.io.File(s"$dir/v1/codebooks").exists())
-    assert(new java.io.File(s"$dir/v1/codes").exists())
-    val cb = spark.read.parquet(s"$dir/v1/codebooks")
+    assert(new java.io.File(s"$dir/v2/codebooks").exists())
+    assert(new java.io.File(s"$dir/v2/codes").exists())
+    val cb = spark.read.parquet(s"$dir/v2/codebooks")
     import org.apache.spark.sql.functions._
     val dims = cb.agg(countDistinct("subspace"), countDistinct("codeword"))
       .collect().head
@@ -111,10 +110,47 @@ class IndexLifecycleSpec extends AnyFunSuite {
     assert(got.count() > 0)
   }
 
+  private def driftCount(dir: String): Long =
+    Similarity.ivfDriftProfile(spark, dir).collect().map(_.getAs[Long]("n")).sum
+
+  test("an IVF rebuild after a compaction is what readers see, before and after vacuum") {
+    val (dir, emb) = freshIndex()
+    assert(emb.count() > 100)
+    Similarity.compactIvfIndex(spark, dir)
+    Similarity.buildIvfIndex(emb.orderBy("vec_id").limit(100), dir)
+    assert(driftCount(dir) == 100L)
+    Similarity.vacuumIndexVersions(spark, dir)
+    assert(driftCount(dir) == 100L)
+  }
+
+  test("an IVF+PQ rebuild after a compaction is what readers see, before and after vacuum") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("graft-lifecycle-pq-rebuild").toString
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    Similarity.buildIvfPqIndex(emb, dir, m = 8, ksub = 8)
+    Similarity.compactIvfIndex(spark, dir)
+    val kept = emb.orderBy("vec_id").limit(100)
+    Similarity.buildIvfPqIndex(kept, dir, m = 8, ksub = 8)
+    val keptIds = kept.select("vec_id").collect().map(_.getLong(0)).toSet
+    // queries the first build held and the rebuild does not: a search
+    // of the stale version would find them
+    val q = emb.orderBy(col("vec_id").desc).limit(5)
+    def check(): Unit = {
+      assert(driftCount(dir) == 100L)
+      val hits = Similarity.ivfPqSearchIndex(spark, dir, q,
+        k = 3, nprobe = 2, rescoreDepth = 9)
+        .select("neighbor_id").collect().map(_.getLong(0)).toSet
+      assert(hits.nonEmpty && hits.subsetOf(keptIds), s"hits outside the rebuild: $hits")
+    }
+    check()
+    Similarity.vacuumIndexVersions(spark, dir)
+    check()
+  }
+
   test("deleteFromIvfIndex rewrites only affected cells; emptied cells vanish") {
     import org.apache.spark.sql.functions._
     val (dir, emb) = freshIndex()
-    val all = spark.read.parquet(s"$dir/vectors")
+    val all = spark.read.parquet(s"$dir/v1/vectors")
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1))
     val byCell = all.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
@@ -123,7 +159,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val wipeCell = cellsSorted.head            // delete EVERY vector here
     val partialCell = cellsSorted(1)           // delete one vector here
     val untouchedCell = cellsSorted(2)         // delete nothing here
-    val untouchedFiles = new java.io.File(s"$dir/vectors/cell=$untouchedCell")
+    val untouchedFiles = new java.io.File(s"$dir/v1/vectors/cell=$untouchedCell")
       .listFiles().map(f => f.getName -> f.lastModified).toSet
     val doomed = byCell(wipeCell) ++ byCell(partialCell).take(1)
     val s = spark
@@ -132,7 +168,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val n = Similarity.deleteFromIvfIndex(spark, dir,
       (doomed.toSeq :+ 999999999L).toDF("vec_id"))
     assert(n == doomed.length, "returns vectors actually deleted")
-    val after = spark.read.parquet(s"$dir/vectors")
+    val after = spark.read.parquet(s"$dir/v1/vectors")
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1))
     assert(after.length == all.length - doomed.length)
@@ -140,10 +176,10 @@ class IndexLifecycleSpec extends AnyFunSuite {
       "no deleted id survives")
     // the emptied cell's directory is GONE — dynamic overwrite alone
     // would have silently resurrected its old files
-    assert(!new java.io.File(s"$dir/vectors/cell=$wipeCell").exists(),
+    assert(!new java.io.File(s"$dir/v1/vectors/cell=$wipeCell").exists(),
       "a fully-deleted cell must not keep serving old vectors")
     // untouched cells: same files, same mtimes — never rewritten
-    val untouchedAfter = new java.io.File(s"$dir/vectors/cell=$untouchedCell")
+    val untouchedAfter = new java.io.File(s"$dir/v1/vectors/cell=$untouchedCell")
       .listFiles().map(f => f.getName -> f.lastModified).toSet
     assert(untouchedAfter == untouchedFiles, "untouched cells are not rewritten")
     // searches keep working against the pruned index
@@ -177,7 +213,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val dropped = Similarity.mergeIvfIndexes(spark, p("a"), p("b"), p("m"),
       threshold = 0.9, nprobe = 2)
     assert(dropped == 1L)
-    val members = spark.read.parquet(p("m") + "/vectors")
+    val members = spark.read.parquet(p("m") + "/v1/vectors")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(members == Set(1L, 2L, 11L))
     // the merged index serves searches under A's quantizer: a probe
@@ -216,9 +252,9 @@ class IndexLifecycleSpec extends AnyFunSuite {
     import s.implicits._
     val n = Similarity.deleteFromIvfPqIndex(spark, dir, doomed.toDF("vec_id"))
     assert(n == doomed.length)
-    val liveVec = spark.read.parquet(s"$dir/vectors")
+    val liveVec = spark.read.parquet(s"$dir/v1/vectors")
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val liveCodes = spark.read.parquet(s"$dir/codes")
+    val liveCodes = spark.read.parquet(s"$dir/v1/codes")
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(liveVec.intersect(doomed.toSet).isEmpty, "vectors half pruned")
     assert(liveCodes.intersect(doomed.toSet).isEmpty, "codes half pruned")

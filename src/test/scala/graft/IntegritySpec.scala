@@ -30,12 +30,12 @@ class IntegritySpec extends AnyFunSuite {
       Seq(1L -> words("a"), 2L -> words("b")).toDF("doc_id", "text"), idx)
     assert(report(Dedup.nearDupIndexIntegrity(spark, idx)) == (2L, true, true))
     // tear doc 2's band rows (the candidate-invisible torn append)
-    val bands = spark.read.parquet(s"$idx/bands")
+    val bands = spark.read.parquet(s"$idx/v1/bands")
       .filter(col("doc_id") =!= 2L).collect()
-    val schema = spark.read.parquet(s"$idx/bands").schema
+    val schema = spark.read.parquet(s"$idx/v1/bands").schema
     spark.createDataFrame(
         spark.sparkContext.parallelize(bands.toIndexedSeq), schema)
-      .write.mode("overwrite").partitionBy("band").parquet(s"$idx/bands")
+      .write.mode("overwrite").partitionBy("band").parquet(s"$idx/v1/bands")
     val (n, st, co) = report(Dedup.nearDupIndexIntegrity(spark, idx))
     assert(n == 2L && !st && !co)
   }
@@ -47,12 +47,12 @@ class IntegritySpec extends AnyFunSuite {
       Seq((1L, 7L), (2L, -1L)).toDF("doc_id", "sig"), idx)
     assert(report(Dedup.hammingIndexIntegrity(spark, idx)) == (2L, true, true))
     // drop one chunk row of doc 1: pigeonhole hole -> structure_ok false
-    val rows = spark.read.parquet(s"$idx/chunks")
+    val rows = spark.read.parquet(s"$idx/v1/chunks")
       .filter(!(col("doc_id") === 1L && col("chunk") === 0)).collect()
-    val schema = spark.read.parquet(s"$idx/chunks").schema
+    val schema = spark.read.parquet(s"$idx/v1/chunks").schema
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows.toIndexedSeq), schema)
-      .write.mode("overwrite").partitionBy("chunk").parquet(s"$idx/chunks")
+      .write.mode("overwrite").partitionBy("chunk").parquet(s"$idx/v1/chunks")
     val (_, st1, co1) = report(Dedup.hammingIndexIntegrity(spark, idx))
     assert(!st1 && co1)
     // a second signature under doc 2's id -> consistency_ok false
@@ -76,13 +76,13 @@ class IntegritySpec extends AnyFunSuite {
     val (n, st, co) = report(Similarity.ivfIndexIntegrity(spark, idx))
     assert(n == 2L && !st && co)
     // corrupt the stored norms -> consistency_ok false
-    val v = spark.read.parquet(s"$idx/vectors")
+    val v = spark.read.parquet(s"$idx/v1/vectors")
       .select(col("vec_id"), col("embedding"),
         (col("nrm") * 2).as("nrm"), col("cell")).collect()
-    val schema = spark.read.parquet(s"$idx/vectors").schema
+    val schema = spark.read.parquet(s"$idx/v1/vectors").schema
     spark.createDataFrame(
         spark.sparkContext.parallelize(v.toIndexedSeq), schema)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$idx/vectors")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$idx/v1/vectors")
     val (_, _, co2) = report(Similarity.ivfIndexIntegrity(spark, idx))
     assert(!co2)
   }

@@ -144,7 +144,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(viaSql == Seq(1L -> "index_dup", 20L -> "kept"))
     // a SQL SELECT must never grow the index
-    assert(spark.read.parquet(s"$idx/chunks").select("doc_id").distinct()
+    assert(spark.read.parquet(s"$idx/v1/chunks").select("doc_id").distinct()
       .count() == 1)
   }
 

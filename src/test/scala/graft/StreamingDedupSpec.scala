@@ -87,13 +87,13 @@ class StreamingDedupSpec extends AnyFunSuite {
     val first = Dedup.nearDupSuppressAndIndex(batch, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val afterFirst = indexedIds(idx)
-    val sketchRows = spark.read.parquet(s"$idx/sketches").count()
+    val sketchRows = spark.read.parquet(s"$idx/v1/sketches").count()
     val replay = Dedup.nearDupSuppressAndIndex(batch, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(replay == first)
     assert(indexedIds(idx) == afterFirst)
-    assert(spark.read.parquet(s"$idx/sketches").count() == sketchRows)
-    assert(spark.read.parquet(s"$idx/bands")
+    assert(spark.read.parquet(s"$idx/v1/sketches").count() == sketchRows)
+    assert(spark.read.parquet(s"$idx/v1/bands")
       .groupBy("doc_id").count().filter(col("count") > 16).isEmpty)
   }
 
@@ -149,7 +149,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     // compaction swapped in a version dir, and every band partition of
     // the current version holds exactly one parquet file
     val root = graft.api.VersionedIndex.resolveRoot(spark, idx)
-    assert(root != idx)
+    assert(root != s"$idx/v1")
     val bandDirs = new java.io.File(s"$root/bands").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("band="))
     assert(bandDirs.nonEmpty)
@@ -199,7 +199,7 @@ class StreamingDedupSpec extends AnyFunSuite {
   }
 
   private def ivfIds(idx: String): Set[Long] = {
-    val root = graft.api.Similarity.resolveIndexRoot(spark, idx)
+    val root = graft.api.VersionedIndex.resolveRoot(spark, idx)
     spark.read.parquet(s"$root/vectors").select("vec_id")
       .collect().map(_.getLong(0)).toSet
   }
@@ -220,7 +220,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(ivfIds(idx) == Set(100L, 5L, 20L))
     // replay: same survivors, no index growth, no duplicate rows
     assert(run() == Set(5L, 20L, 30L))
-    val root = graft.api.Similarity.resolveIndexRoot(spark, idx)
+    val root = graft.api.VersionedIndex.resolveRoot(spark, idx)
     assert(spark.read.parquet(s"$root/vectors").count() == 3)
     // a later batch: copy of a prior survivor flags via the index
     val kept2 = graft.api.Similarity.semanticSuppressAndIndex(
@@ -365,9 +365,9 @@ class StreamingDedupSpec extends AnyFunSuite {
         s"${graft.api.VersionedIndex.resolveRoot(spark, idx)}/chunks")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(members == Set(100L, 5L, 20L))
-    val rows = spark.read.parquet(s"$idx/chunks").count()
+    val rows = spark.read.parquet(s"$idx/v1/chunks").count()
     assert(run() == Set(5L, 20L)) // replay: same survivors
-    assert(spark.read.parquet(s"$idx/chunks").count() == rows) // no growth
+    assert(spark.read.parquet(s"$idx/v1/chunks").count() == rows) // no growth
     // streaming wrapper with in-loop compaction
     val out = Files.createTempDirectory("graft-hamstream-out").toString
     val ckpt = Files.createTempDirectory("graft-hamstream-ckpt").toString
@@ -384,7 +384,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/kept")
       .select("doc_id").collect().map(_.getLong(0)).toSet == Set(31L))
     assert(members == Set(100L, 5L, 20L, 31L))
-    assert(graft.api.VersionedIndex.resolveRoot(spark, idx) != idx)
+    assert(graft.api.VersionedIndex.resolveRoot(spark, idx) != s"$idx/v1")
   }
 
   test("hammingSuppressExplain: verdicts match the real pass, lowest-distance evidence, dry-run") {
@@ -403,7 +403,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(explained(6L) == ("batch_dup", 5L))
     assert(explained(20L) == ("kept", -1L))
     // dry-run: index untouched; the real pass enacts the verdicts
-    assert(spark.read.parquet(s"$idx/chunks").select("doc_id").distinct()
+    assert(spark.read.parquet(s"$idx/v1/chunks").select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet == Set(100L))
     val kept = Dedup.hammingSuppressAndIndex(batch, idx)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -442,13 +442,13 @@ class StreamingDedupSpec extends AnyFunSuite {
     // version the merged index (the compaction a stream would run)
     Dedup.compactNearDupIndex(spark, p("m"))
     val root1 = graft.api.VersionedIndex.resolveRoot(spark, p("m"))
-    assert(root1 != p("m"))
+    assert(root1 == s"${p("m")}/v2")
     // grow input B, re-merge: the result must be SERVED, not buried
-    // under the stale _current pointer as a legacy-layout write
+    // behind the stale version
     Dedup.appendToNearDupIndex(docsDF(12L -> words("delta")), p("b"))
     Dedup.mergeNearDupIndexes(spark, p("a"), p("b"), p("m"))
     assert(indexedIds(p("m")) == Set(1L, 2L, 11L, 12L))
-    assert(graft.api.VersionedIndex.resolveRoot(spark, p("m")) != root1)
+    assert(graft.api.VersionedIndex.resolveRoot(spark, p("m")) == s"${p("m")}/v3")
     // self-merge and shared-id guards on the Jaccard side too
     intercept[IllegalArgumentException](
       Dedup.mergeNearDupIndexes(spark, p("a"), p("b"), p("a")))
@@ -462,8 +462,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     val idx = freshIndex()
     val batch = docsDF(5L -> words("pair"), 20L -> words("unique"))
     def counts(): (Long, Long) = (
-      spark.read.parquet(s"$idx/sketches").count(),
-      spark.read.parquet(s"$idx/bands").count())
+      spark.read.parquet(s"$idx/v1/sketches").count(),
+      spark.read.parquet(s"$idx/v1/bands").count())
     val (blind0, repair0, skip0) = (AppendLedger.blindAppends.get,
       AppendLedger.repairAppends.get, AppendLedger.skippedAppends.get)
     val first = Dedup.nearDupSuppressAndIndex(batch, idx)
@@ -556,11 +556,11 @@ class StreamingDedupSpec extends AnyFunSuite {
       AppendLedger.repairAppends.get, AppendLedger.skippedAppends.get)
     Dedup.hammingSuppressAndIndex(batch, idx)
     assert(AppendLedger.blindAppends.get == blind0 + 1)
-    val rows = spark.read.parquet(s"$idx/chunks").count()
+    val rows = spark.read.parquet(s"$idx/v1/chunks").count()
     Dedup.hammingSuppressAndIndex(batch, idx) // replay -> skip
     assert(AppendLedger.skippedAppends.get == skip0 + 1)
     assert(AppendLedger.repairAppends.get == repair0)
-    assert(spark.read.parquet(s"$idx/chunks").count() == rows)
+    assert(spark.read.parquet(s"$idx/v1/chunks").count() == rows)
     // crash window -> (doc_id, chunk) diff against the full table, exactly-once rows
     val tok = AppendLedger.token(batch, "doc_id")
     val fs = new org.apache.hadoop.fs.Path(idx)
@@ -569,7 +569,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     AppendLedger.begin(spark, idx, tok)
     Dedup.hammingSuppressAndIndex(batch, idx)
     assert(AppendLedger.repairAppends.get == repair0 + 1)
-    assert(spark.read.parquet(s"$idx/chunks").count() == rows)
+    assert(spark.read.parquet(s"$idx/v1/chunks").count() == rows)
     val rep = Dedup.hammingIndexIntegrity(spark, idx).head()
     assert(rep.getBoolean(2) && rep.getBoolean(3))
   }
@@ -629,8 +629,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(streamed == Set(5L, 20L))
     assert(ivfIds(idx) == Set(100L, 5L, 20L))
     // compaction versioned the index and left one file per cell dir
-    val root = graft.api.Similarity.resolveIndexRoot(spark, idx)
-    assert(root != idx)
+    val root = graft.api.VersionedIndex.resolveRoot(spark, idx)
+    assert(root != s"$idx/v1")
     val cellDirs = new java.io.File(s"$root/vectors").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.nonEmpty)
@@ -638,7 +638,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       assert(d.listFiles().count(_.getName.endsWith(".parquet")) == 1,
         s"cell dir ${d.getName} not compacted to one file")
     }
-    // the compacted index still serves flag passes through the pointer
+    // the compacted index still serves flag passes through its current version
     val kept = graft.api.Similarity.semanticSuppressAndIndex(
         Seq(40L -> vec(2), 41L -> vec(3)).toDF("vec_id", "embedding"),
         idx, threshold = 0.9, nprobe = 1)

@@ -2,15 +2,17 @@ package graft.ingest
 
 import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
-import graft.{CountingFileSystem, CountingFs, IngestProbes, TestSpark}
+import graft.{CountingFileSystem, IngestProbes, TestSpark}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** How an ingest commit point becomes visible: listers never read a temp
-  * file a crash left behind, and a crash at any rename of the commit,
-  * or of its replay, replays with no manual step to exactly the clean
-  * run's table. */
+  * file a crash left behind, and a crash at any rename (or, with a seen
+  * filter, any create) of the commit, or of its replay, replays with no
+  * manual step to exactly the clean run's table. */
 class CommitPointSpec extends AnyFunSuite {
   import TestSpark.spark
 
@@ -49,7 +51,6 @@ class CommitPointSpec extends AnyFunSuite {
   private def crashPoints(body: (() => String) => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.graftcount.impl", classOf[CountingFileSystem].getName)
-    conf.set("fs.AbstractFileSystem.graftcount.impl", classOf[CountingFs].getName)
     val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
     def fresh(): String = {
       val local = Files.createTempDirectory("graft-crash-point")
@@ -66,20 +67,25 @@ class CommitPointSpec extends AnyFunSuite {
   private def commit(cfg: IngestConfig, path: String): Unit =
     Ingest.runBatchCommitted(spark, cfg.copy(outputPath = Some(path)), 10, batches = 1)
 
-  /** Commits with the failpoint at rename `n` (0 = none); the renames made. */
-  private def commitFailingAt(cfg: IngestConfig, path: String, n: Long): Long = {
+  /** Runs `body` with the failpoint `fail` at call `n` (0 = none) of the
+    * operation `made` counts; the calls made. */
+  private def failingAt(n: Long, fail: AtomicLong, made: AtomicLong)(body: => Unit): Long = {
     CountingFileSystem.reset()
-    CountingFileSystem.failRenameAt.set(n)
-    if (n == 0) commit(cfg, path)
+    fail.set(n)
+    if (n == 0) body
     else {
-      val crash = intercept[Exception](commit(cfg, path))
-      assert(CountingFileSystem.renameCalls.get >= n,
-        s"rename $n: the commit failed before it: $crash")
+      val crash = intercept[Exception](body)
+      assert(made.get >= n, s"call $n: the commit failed before it: $crash")
     }
-    val made = CountingFileSystem.renameCalls.get
+    val count = made.get
     CountingFileSystem.reset()
-    made
+    count
   }
+
+  /** Commits with the failpoint at rename `n` (0 = none); the renames made. */
+  private def commitFailingAt(cfg: IngestConfig, path: String, n: Long): Long =
+    failingAt(n, CountingFileSystem.failRenameAt, CountingFileSystem.renameCalls)(
+      commit(cfg, path))
 
   private def copyTree(from: String, to: String): Unit = {
     val (src, dst) = (Paths.get(new URI(from).getPath), Paths.get(new URI(to).getPath))
@@ -144,6 +150,50 @@ class CommitPointSpec extends AnyFunSuite {
         commitFailingAt(cfg, path, n) // the replay crashes too
         commit(cfg, path)
         assert(table(path) == expected, s"second replay after a replay crash at rename $n")
+      }
+    }
+  }
+
+  test("a crash at every rename and create of a seen-filter batch replays to the clean run") {
+    val cfg = IngestConfig(outputPath = None, parallelism = 1, seenFilterExpectedItems = 1000L)
+    // batch b commits rows [10b, 10b + 10) and appends their ids to `path/_seen`
+    def batch(path: String, b: Int): Unit =
+      Ingest.commitBatch(cfg.copy(outputPath = Some(path), seenFilterPath = Some(s"$path/_seen")),
+        path, spark.range(10L * b, 10L * b + 10, 1, 1)
+          .select(col("id").as("value"), spark_partition_id().as("__pid")), b)
+    // the committed rows, and whether the filter flags every committed id
+    def state(path: String): (Seq[String], Boolean) = {
+      val view = graft.core.Tables.committedView(spark, path)
+      (rows(view), graft.api.Dedup.markSeen(spark, view.select("user_id"), "user_id",
+        s"$path/_seen").filter(!col("probably_seen")).isEmpty)
+    }
+    crashPoints { fresh =>
+      val first = fresh()
+      batch(first, 0)
+      def fromFirst(): String = {
+        val path = fresh()
+        copyTree(first, path)
+        path
+      }
+      val clean = fromFirst()
+      CountingFileSystem.reset()
+      batch(clean, 1)
+      val (renames, creates) =
+        (CountingFileSystem.renameCalls.get, CountingFileSystem.createCalls.get)
+      CountingFileSystem.reset()
+      val (expected, cleanFlagged) = state(clean)
+      assert(expected.size == 20 && cleanFlagged)
+      info(s"batch 2: $renames renames, $creates creates")
+      val points = Seq(
+        ("rename", CountingFileSystem.failRenameAt, CountingFileSystem.renameCalls, renames),
+        ("create", CountingFileSystem.failCreateAt, CountingFileSystem.createCalls, creates))
+      for ((op, fail, made, total) <- points; n <- 1L to total) {
+        val path = fromFirst()
+        failingAt(n, fail, made)(batch(path, 1))
+        batch(path, 1) // the replay: same batch, no manual step
+        val (committed, flagged) = state(path)
+        assert(committed == expected, s"committed rows after a crash at $op $n")
+        assert(flagged, s"a committed id does not flag after a crash at $op $n")
       }
     }
   }
