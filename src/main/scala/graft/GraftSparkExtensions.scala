@@ -588,26 +588,20 @@ object GraftSparkExtensions {
         spark.table(strLit("graft_redact_pii", "table", args(0))),
         textCol, types)
     },
-    // the commit protocol's history from one SELECT: rides the DSv2
-    // commit-marker source (format "graft-commits"), enriched with the
-    // marker kind and the LIVE resolution (a compaction supersedes its
-    // input tokens) — so the release registry, integrity checks, and
-    // commit history are all SELECT-reachable
+    // the commit protocol's history from one SELECT: the marker log
+    // with each marker's kind and its LIVE resolution (a compaction
+    // supersedes its input tokens), as a local frame over one
+    // commit-log snapshot — nothing executes at resolution
     tvf("graft_commit_log",
       "graft_commit_log(tablePath) - commit history of a staged-publish " +
         "ingest table: one row per marker (token, mtime_ms, kind " +
         "commit|compaction, live); live=false means a compaction " +
         "superseded the token (its files are vacuum candidates). Rows " +
         "and live flags come from ONE snapshot of the marker dir, " +
-        "taken at resolution time" +
-        "; materializes at resolution - release via graft_release_materialized()") { args =>
+        "taken at resolution time") { args =>
       require(args.length == 1,
         s"graft_commit_log expects (tablePath), got ${args.length} args")
       val spark = org.apache.spark.sql.SparkSession.active
-      // rows + liveness from one consistent marker-scan snapshot
-      // (ADVICE r14): Tables.commitLog materializes the scan and
-      // derives both from it — no separate eager liveTokens pass that
-      // a concurrent commit/compaction could straddle
       graft.core.Tables.commitLog(spark,
         strLit("graft_commit_log", "tablePath", args(0)))
     },

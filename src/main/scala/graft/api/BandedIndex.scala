@@ -167,7 +167,7 @@ private[api] abstract class BandedIndex(val name: String,
     try {
       val v = views(ck.getOrElse(sig))
       tables.foreach(t => write(v(t.name), t, root, mode))
-    } finally ck.foreach(Dedup.releaseCheckpoint)
+    } finally ck.foreach(Dedup.releaseMaterialized)
   }
 
   /** Rewrite the current version into one file per partition directory
@@ -211,7 +211,7 @@ private[api] abstract class BandedIndex(val name: String,
           write(inOrder(without(tabs(t.name), del, "__del_id"), t), t, vdir, "overwrite"))
       }
       nDel
-    } finally Dedup.releaseCheckpoint(del)
+    } finally Dedup.releaseMaterialized(del)
   }
 
   /** Both indexes resolved and read, after the guards every cross-index
@@ -264,7 +264,7 @@ private[api] abstract class BandedIndex(val name: String,
           .unionByName(without(tB(t.name), dropB, "__drop_id")), t), t, target, "overwrite"))
       }
       nDrop
-    } finally Dedup.releaseCheckpoint(dropB)
+    } finally Dedup.releaseMaterialized(dropB)
   }
 
   /** The batch rows with no verified match in the index, original
@@ -334,9 +334,9 @@ private[api] abstract class BandedIndex(val name: String,
             write(inOrder(missing, t), t, root, "append")
           }
         }
-      } catch { case e: Throwable => Dedup.releaseCheckpoint(keep); throw e }
+      } catch { case e: Throwable => Dedup.releaseMaterialized(keep); throw e }
       keep
-    } finally Dedup.releaseCheckpoint(ck)
+    } finally Dedup.releaseMaterialized(ck)
   }
 
   /** Dry run of [[suppressAndIndex]], no side effects: (idCol,
@@ -371,7 +371,7 @@ private[api] abstract class BandedIndex(val name: String,
             .otherwise(lit("kept")).as("verdict"),
           coalesce(col("__im"), col("__bm")).as("match_id"),
           coalesce(col(is), col(bs)).as(scoreCol)))
-    } finally (Seq(b, sig) ++ idxBestChk).foreach(Dedup.releaseCheckpoint)
+    } finally (Seq(b, sig) ++ idxBestChk).foreach(Dedup.releaseMaterialized)
   }
 
   /** foreachBatch wrapper ([[Dedup.nearDupSuppressStream]]).

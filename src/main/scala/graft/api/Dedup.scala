@@ -192,7 +192,7 @@ object Dedup {
                         shingle: Int = 3): DataFrame = {
     val sets = PlanAudit.checkpoint(shingleSets(docs, idCol, textCol, shingle))
     try PlanAudit.checkpoint(pairsFromSets(sets, threshold))
-    finally releaseCheckpoint(sets)
+    finally releaseMaterialized(sets)
   }
 
   /** The PPJoin body of [[nearDupPairsExact]] over an ALREADY-built
@@ -307,8 +307,8 @@ object Dedup {
             col("n_outer"),
             round(col("inter").cast("double") / col("n_inner"), 6)
               .as("containment")))
-      } finally releaseCheckpoint(ranked)
-    } finally releaseCheckpoint(sets)
+      } finally releaseMaterialized(ranked)
+    } finally releaseMaterialized(sets)
   }
 
   /** Incremental form of [[containmentPairs]] — the ingestion filter:
@@ -378,8 +378,8 @@ object Dedup {
             col("n_f") >= threshold)
           .select(col("doc_f").as(idCol)).distinct()
         PlanAudit.checkpoint(fresh.join(flagged, Seq(idCol), "left_anti"))
-      } finally releaseCheckpoint(ranked)
-    } finally Seq(cs, fs).foreach(releaseCheckpoint)
+      } finally releaseMaterialized(ranked)
+    } finally Seq(cs, fs).foreach(releaseMaterialized)
   }
 
   /** Persisted CONTAINMENT posting index — the artifact
@@ -525,7 +525,7 @@ object Dedup {
           sets.select(col("doc_id"), col("n"), explode(col("sh")).as("tok")),
           dfreq)
         .write.mode("append").parquet(s"$root/postings")
-    } finally releaseCheckpoint(sets)
+    } finally releaseMaterialized(sets)
   }
 
   /** The containment INGESTION filter against a persisted index: drop
@@ -578,7 +578,7 @@ object Dedup {
         .select(col("doc_f").as("__flagged")).distinct()
       PlanAudit.checkpoint(
         b.join(flagged, b(idCol) === col("__flagged"), "left_anti"))
-    } finally Seq(b, fs).foreach(releaseCheckpoint)
+    } finally Seq(b, fs).foreach(releaseMaterialized)
   }
 
   /** Delete documents from a persisted containment index (takedowns):
@@ -615,7 +615,7 @@ object Dedup {
           .write.mode("overwrite").parquet(s"$vdir/postings")
       }
       nDel
-    } finally releaseCheckpoint(del)
+    } finally releaseMaterialized(del)
   }
 
   /** Compact a persisted containment index: per-batch appends leave a
@@ -777,7 +777,7 @@ object Dedup {
     val bb = bandsFromSig(sk)
     try PlanAudit.checkpoint(verify(joinBack(
       bandCandidates(bb, bb, ordered = true), sets, sets), threshold))
-    finally releaseCheckpoint(sk)
+    finally releaseMaterialized(sk)
   }
 
   /** Distinct (doc_a, doc_b) pairs colliding in some (band, bkey)
@@ -1106,9 +1106,6 @@ object Dedup {
     }.foreach(id => df.sparkSession.sparkContext.getPersistentRDDs
       .get(id).foreach(_.unpersist(false)))
 
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    releaseMaterialized(df)
-
   /** Pigeonhole chunk layout: 64 bits partitioned into `chunksN`
     * NONEMPTY contiguous chunks, as (shift, mask) pairs. Bits are
     * distributed evenly (64/n or 64/n+1 per chunk) — a ceil-width
@@ -1181,7 +1178,7 @@ object Dedup {
           bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
         .distinct()
         .filter(col("hamming") <= maxHamming))
-    } finally releaseCheckpoint(sg)
+    } finally releaseMaterialized(sg)
   }
 
   /** The hamming family of [[BandedIndex]]: the corpus' pigeonhole
@@ -1703,25 +1700,13 @@ object Dedup {
     *  - superseded rounds release their blocks.
     * Fails loudly if convergence exceeds maxIter. */
   def keepOne(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // The checkpointed RDD behind a localCheckpoint()'d frame, read off
-    // its own plan (LogicalRDD) — unpersisting by a global
-    // getPersistentRDDs diff would race concurrent threads caching on
-    // the same session and could truncate THEIR only copy of a
-    // checkpointed lineage.
-    def ownRddId(df: DataFrame): Option[Int] =
-      df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }
-    def release(id: Option[Int]): Unit = id.foreach(i =>
-      sc.getPersistentRDDs.get(i).foreach(_.unpersist(false)))
     val np = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val sym = pairs.select(col("doc_a"), col("doc_b"))
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     val edges = PlanAudit.checkpointHash(sym
       .union(sym.select(col("doc_a"), col("doc_a").as("doc_b")).distinct())
       .repartition(np, col("doc_b")), np, Seq("doc_b"))
-    var prevId: Option[Int] = None
+    var prev: Option[DataFrame] = None
     var labels = edges.select(col("doc_a").as("node")).distinct()
       .withColumn("label", col("node"))
     // decimal(38,0) exact convergence sum: strictly decreasing until
@@ -1757,24 +1742,23 @@ object Dedup {
           sum(col("label").cast("decimal(38,0)")).as("s"))))
       }
       val chased1 = chase(stepped, None)
-      release(ownRddId(stepped))
+      releaseMaterialized(stepped)
       val sumObs = org.apache.spark.sql.Observation()
       val next = chase(chased1, Some(sumObs))
-      release(ownRddId(chased1))
+      releaseMaterialized(chased1)
       val s = sumObs.get("s").asInstanceOf[java.math.BigDecimal]
       converged = (s == null && prevSum == null) ||
         (s != null && prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
-      release(prevId)
-      prevId = ownRddId(next)
+      prev.foreach(releaseMaterialized)
+      prev = Some(next)
       labels = next
       iter += 1
     }
     // the edge materialization only feeds the loop — release it; the
     // final labels stay MATERIALIZED for the caller
     // ([[releaseMaterialized]] contract)
-    ownRddId(edges).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    releaseMaterialized(edges)
     require(converged,
       s"connected-components did not converge within $maxIter iterations")
     labels.select(col("node").as("doc_id"), col("label").as("canonical_id"))

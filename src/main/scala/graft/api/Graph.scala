@@ -37,10 +37,6 @@ object Graph {
                damping: Double = 0.85, iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters must be in [1,100], got $iters")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0,1), got $damping")
-    def ownRddId(df: DataFrame): Option[Int] =
-      df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }
     val spark = edges.sparkSession
     // Co-partition the loop-invariant frames on one explicit partition
     // count (r17): edges hash-partitioned on src (the per-iteration
@@ -73,10 +69,10 @@ object Graph {
       .subtract(java.math.BigDecimal.valueOf(damping))).doubleValue()
     var ranks = nodes.select(col("node"),
       round(lit(1.0) / lit(n.toDouble), 12).as("score"))
-    // id of the LOOP-OWNED checkpoint behind `ranks` — None for the
-    // initial frame, whose first LogicalRDD is the shared `nodes`
-    // checkpoint and must never be truncated from here
-    var ranksOwnedId: Option[Int] = None
+    // the LOOP-OWNED checkpoint behind `ranks` — None for the initial
+    // frame, whose first LogicalRDD is the shared `nodes` checkpoint
+    // and must never be truncated from here
+    var ranksOwned: Option[DataFrame] = None
     (1 to iters).foreach { _ =>
       val contribs = e.join(ranks, e("src") === ranks("node"))
         .join(outDeg, "src")
@@ -95,9 +91,8 @@ object Graph {
         .select(col("node"),
           round(lit(oneMinusD / n.toDouble) + lit(damping) *
             coalesce(col("in_sum").cast("double"), lit(0.0)), 12).as("score")))
-      ranksOwnedId.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(false)))
-      ranksOwnedId = ownRddId(next)
+      ranksOwned.foreach(Dedup.releaseMaterialized)
+      ranksOwned = Some(next)
       ranks = next
     }
     // Final scores project at 6 decimals (the package rule): engines
@@ -143,10 +138,6 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
                        dstCol: String = "dst", iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 100, s"iters must be in [1,100], got $iters")
-    def ownRddId(df: DataFrame): Option[Int] =
-      df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-      }
     val spark = edges.sparkSession
     // Co-partitioned loop-invariant frames (the pageRank discipline,
     // r17): edges pinned on src (the per-iteration vote-join key),
@@ -169,7 +160,7 @@ object Graph {
       col("node").as("dst")))
       .repartition(np, col("src")).distinct(), np, Seq("src"))
     var labels = nodes.select(col("node"), col("node").as("label"))
-    var labelsOwnedId: Option[Int] = None
+    var labelsOwned: Option[DataFrame] = None
     (1 to iters).foreach { _ =>
       val cand = e.join(labels, e("src") === labels("node"))
         .groupBy(col("dst").as("node"), col("label"))
@@ -187,9 +178,8 @@ object Graph {
       val next = PlanAudit.checkpoint(labels.join(best, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("new_label"), col("label")).as("label")))
-      labelsOwnedId.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(false)))
-      labelsOwnedId = ownRddId(next)
+      labelsOwned.foreach(Dedup.releaseMaterialized)
+      labelsOwned = Some(next)
       labels = next
     }
     labels

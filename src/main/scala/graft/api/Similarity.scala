@@ -184,7 +184,7 @@ object Similarity {
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"), col("nrm").as("nb")), "neighbor_id")
       .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
     PlanAudit.checkpoint(topK(pairs, k))
-    } finally Dedup.releaseCheckpoint(e)
+    } finally Dedup.releaseMaterialized(e)
   }
 
   /** Fit the coarse k-means quantizer DRIVER-SIDE on a bounded,
@@ -311,7 +311,7 @@ object Similarity {
         .filter(col("vec_id") =!= col("neighbor_id"))
         .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
       PlanAudit.checkpoint(topK(pairs, k))
-    } finally Dedup.releaseCheckpoint(e)
+    } finally Dedup.releaseMaterialized(e)
   }
 
   /** Build a PERSISTENT IVF index under `path`: fit the coarse
@@ -811,7 +811,7 @@ object Similarity {
           PlanAudit.checkpoint(afterIndex
             .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti"))
         } catch {
-          case t: Throwable => Dedup.releaseCheckpoint(aAssigned); throw t
+          case t: Throwable => Dedup.releaseMaterialized(aAssigned); throw t
         }
       // keep is the caller's to consume then releaseMaterialized; on
       // an append failure no caller holds it — release here
@@ -844,10 +844,10 @@ object Similarity {
             .repartition(col("cell")) // one file set per cell per batch
             .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
         }
-      } catch { case t: Throwable => Dedup.releaseCheckpoint(keep); throw t }
-      finally Dedup.releaseCheckpoint(aAssigned)
+      } catch { case t: Throwable => Dedup.releaseMaterialized(keep); throw t }
+      finally Dedup.releaseMaterialized(aAssigned)
       keep
-    } finally (Seq(b, q) ++ afterIndexChk).foreach(Dedup.releaseCheckpoint)
+    } finally (Seq(b, q) ++ afterIndexChk).foreach(Dedup.releaseMaterialized)
   }
 
   /** DRY-RUN of [[semanticSuppressAndIndex]] —
@@ -937,7 +937,7 @@ object Similarity {
             .otherwise(lit("kept")).as("verdict"),
           coalesce(col("__im"), col("__bm")).as("match_id"),
           coalesce(col("__is"), col("__bs")).as("score")))
-    } finally (Seq(b, q) ++ idxBestChk).foreach(Dedup.releaseCheckpoint)
+    } finally (Seq(b, q) ++ idxBestChk).foreach(Dedup.releaseMaterialized)
   }
 
   /** Compact a persisted IVF index — layout-only maintenance for the
@@ -1111,7 +1111,7 @@ object Similarity {
           .write.mode("overwrite").partitionBy("cell").parquet(s"$target/vectors")
       }
       nDrop
-    } finally Dedup.releaseCheckpoint(dropB)
+    } finally Dedup.releaseMaterialized(dropB)
   }
 
   /** Streaming semantic suppression — [[graft.api.Dedup.nearDupSuppressStream]]
@@ -1231,8 +1231,7 @@ object Similarity {
     * old rows. The survivor frame is localCheckpoint'd: the rewrite
     * overwrites the very partitions it reads (Spark rejects a
     * file-source self-overwrite) and materialization stays bounded at
-    * the affected cells; released by own-RDD id (the keepOne
-    * discipline — a global diff would race). */
+    * the affected cells; released with [[Dedup.releaseMaterialized]]. */
   private def deleteByIdFromCellStore(spark: org.apache.spark.sql.SparkSession,
                                       store: String, del: DataFrame,
                                       idName: String): Long = {
@@ -1246,9 +1245,6 @@ object Similarity {
     val survivors = rows.filter(col("cell").isin(cells: _*))
       .join(del, col(idName) === del("__del_id"), "left_anti")
       .localCheckpoint()
-    val survRdd = survivors.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }
     try {
       val present = survivors.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSet
@@ -1264,8 +1260,7 @@ object Similarity {
           p.getFileSystem(conf).delete(p, true)
         }
       }
-    } finally survRdd.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    } finally Dedup.releaseMaterialized(survivors)
     affected.values.sum
   }
 

@@ -1252,7 +1252,7 @@ object TextAnalysis {
           .drop("__id")
           .withColumn("dsir_logw", coalesce(col("dsir_logw"), lit(0.0)))
           .withColumn("n_features", coalesce(col("n_features"), lit(0L))))
-    } finally graft.api.Dedup.releaseCheckpoint(grams)
+    } finally graft.api.Dedup.releaseMaterialized(grams)
   }
 
   /** Freeze the DSIR model: per-feature 6dp-rounded log-ratio terms as

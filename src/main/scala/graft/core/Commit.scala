@@ -33,7 +33,7 @@ private[graft] object Commit {
       val relDir = rel.split('/').dropRight(1).mkString("/")
       val destDir = if (relDir.isEmpty) root else new Path(root, relDir)
       fs.mkdirs(destDir)
-      val dest = new Path(destDir, s"b$token-${name(f.getName)}")
+      val dest = new Path(destDir, CommitLog.dataFileName(token, name(f.getName)))
       if (!fs.rename(f, dest))
         throw new java.io.IOException(s"publish rename failed: $f -> $dest")
     }

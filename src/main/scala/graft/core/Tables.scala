@@ -59,75 +59,20 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Committed-only view of an ingest output directory: reads ONLY the
-    * files published by batches whose `_commits/<batchId>` marker exists
-    * — the atomic-visibility half of the staged-commit protocol (the
-    * reference delegates this contract to hive-streaming transactions,
-    * `Culvert.java:213-231`; SURVEY §2.3.1). A crash mid-publish leaves
-    * `b<id>-*` files with no marker; this reader never sees them, and a
-    * replayed commit first scrubs them (Ingest.commitBatch).
-    *
-    * Listing cost is one recursive enumeration of the table directory —
-    * the same listing every Spark file-source scan performs; the marker
-    * set is one extra small-directory listing.
-    *
-    * Zero-committed-batches behavior (ADVICE r3): the frame is still
-    * TYPED — schema comes from `schema` if given, else is inferred from
-    * any data file already present (staged or uncommitted files have
-    * the sink's schema even before their commit lands), so downstream
-    * column references behave identically on the empty and populated
-    * paths. Only a sink with no files at all and no declared schema
-    * degrades to `spark.emptyDataFrame` (nothing to infer from).
-    */
-  /** Data files carry their batch token in the name: `<batchId>`
-    * (single-query sink), `g<i>-<batchId>` (concurrent commit groups),
-    * or `c<stamp>` (a compaction batch, Compact.compact). */
-  private[graft] val batchFileRe = "^b((?:g\\d+-)?\\d+|c\\d+)-.*$".r
-
-  /** Resolve the LIVE batch-token set of an ingest directory: every
-    * plain commit marker, minus tokens superseded by compactions. A
-    * compaction marker `_commits/c<stamp>` lists the tokens its
-    * rewrite replaced (its file CONTENT — written atomically via
-    * temp+rename, so a reader sees either the old tokens or the
-    * compacted one, never both); markers apply in stamp order so
-    * compactions chain (a later compaction supersedes an earlier
-    * compaction's token like any other). */
-  private[graft] def liveTokens(fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path): Set[String] = {
-    import org.apache.hadoop.fs.Path
-    val commitsDir = new Path(root, "_commits")
-    if (!fs.exists(commitsDir)) return Set.empty
-    val names = fs.listStatus(commitsDir).map(_.getPath.getName)
-    var live = names.filter(_.matches("(?:g\\d+-)?\\d+")).toSet
-    val compactions = names.collect {
-      case n if n.matches("c\\d+") => (n.stripPrefix("c").toLong, n)
-    }.sortBy(_._1)
-    compactions.foreach { case (_, name) =>
-      val in = fs.open(new Path(commitsDir, name))
-      val superseded =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .filter(_.nonEmpty).toSet
-        finally in.close()
-      live = live -- superseded + name
-    }
-    live
-  }
-
-
   /** Recursive data-file walk via per-directory `listStatus` — NOT
     * `fs.listFiles`: that returns LocatedFileStatus, whose constructor
     * eagerly loads permissions, which Hadoop's local filesystem
     * implements by FORKING `ls` once per file (~3.6 ms each; 9 s to
     * walk a 2.5k-file table, measured r14 — 92× slower than this walk
     * at the same file count). `listStatus` stays lazy about
-    * permissions on every scheme. Hidden (`_`/`.`) directories are
-    * not descended unless `descendHidden` (the committedView schema-
-    * donor peek into `_staging` needs them). Missing directories read
-    * as empty — a concurrent vacuum/compaction may remove a dir
-    * mid-walk. */
+    * permissions on every scheme. Only directories whose name passes
+    * `descend` are entered (default: not hidden `_`/`.` ones; the
+    * committedView schema-donor peek also enters `_staging`). Missing
+    * directories read as empty — a concurrent vacuum/compaction may
+    * remove a dir mid-walk. */
   private[graft] def walkStatuses(fs: org.apache.hadoop.fs.FileSystem,
                                   root: org.apache.hadoop.fs.Path,
-                                  descendHidden: Boolean = false)
+                                  descend: String => Boolean = n => !Commit.hidden(n))
       (visit: org.apache.hadoop.fs.FileStatus => Unit): Unit = {
     def rec(p: org.apache.hadoop.fs.Path): Unit = {
       val kids =
@@ -137,46 +82,41 @@ object Tables {
             Array.empty[org.apache.hadoop.fs.FileStatus]
         }
       kids.foreach { st =>
-        val n = st.getPath.getName
         if (st.isDirectory) {
-          if (descendHidden || !Commit.hidden(n))
-            rec(st.getPath)
+          if (descend(st.getPath.getName)) rec(st.getPath)
         } else visit(st)
       }
     }
     rec(root)
   }
 
-  /** Recursive listing of the data files belonging to a given set of
-    * batch tokens (the `b<token>-*` naming contract), hidden dirs
-    * skipped — the resolution step shared by snapshot reads and the
-    * commit-log stream. One directory walk per call, same cost as any
-    * file-source listing. */
-  private[graft] def tokenDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                                    root: org.apache.hadoop.fs.Path,
-                                    tokens: Set[String]): Seq[String] =
-    tokenDataStatuses(fs, root, tokens).map(_.getPath.toString)
-
-  /** Status-preserving form of [[tokenDataFiles]] — callers that go on
-    * to BUILD A FRAME over the resolved files must use this +
-    * [[manifestFrame]], not per-file `load(paths: _*)`: above 32 roots
-    * the reader path launches a distributed listing job re-discovering
-    * statuses this walk already holds (the r14 committedView bug; a
-    * commit-log STREAM hits it once per micro-batch at production
-    * commit sizes — 512-file commits are the bench's own shape). */
-  private[graft] def tokenDataStatuses(fs: org.apache.hadoop.fs.FileSystem,
-                                       root: org.apache.hadoop.fs.Path,
-                                       tokens: Set[String])
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
+  /** Every published data file under `root` with its batch token (the
+    * `b<token>-*` naming contract, [[CommitLog.DataFile]]), hidden dirs
+    * skipped: one directory walk, the same cost as any file-source
+    * listing. Callers that go on to BUILD A FRAME over some of these
+    * files must use [[manifestFrame]], not per-file `load(paths: _*)`:
+    * above 32 roots the reader path launches a distributed listing job
+    * re-discovering statuses this walk already holds (the r14
+    * committedView bug; a commit-log STREAM hits it once per
+    * micro-batch at production commit sizes — 512-file commits are the
+    * bench's own shape). */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                               root: org.apache.hadoop.fs.Path)
+      : Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(org.apache.hadoop.fs.FileStatus, String)]
     walkStatuses(fs, root) { st =>
       st.getPath.getName match {
-        case batchFileRe(id) if tokens(id) => files += st
+        case CommitLog.DataFile(token) => out += ((st, token))
         case _ => ()
       }
     }
-    files.toSeq
+    out.toSeq
+  }
+
+  private def commitLogOf(spark: SparkSession, path: String): CommitLog.Snapshot = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    CommitLog.read(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
 
   /** Snapshot (time-travel) read: the table as of ingest batch
@@ -197,33 +137,22 @@ object Tables {
                         schema: Option[org.apache.spark.sql.types.StructType] = None,
                         mergeSchemas: Boolean = false)
       : DataFrame =
-    committedViewRange(spark, path, Long.MinValue, upToBatch, format, schema,
-      mergeSchemas)
+    committedViewRange(spark, path, commitLogOf(spark, path), Long.MinValue,
+      upToBatch, format, schema, mergeSchemas)
 
   /** Resolve an AS-OF timestamp to a batch id: the max batch id among
-    * commit markers whose mtime ≤ `tsMillis`. Markers are written at
-    * commit time and never touched again, so the mtime IS the commit
-    * stamp. A timestamp that predates the FIRST commit fails loudly —
-    * "the table as it stood before it existed" is a caller bug, not an
-    * empty table. Commit-group caveat (single-writer sequential ids
-    * have none): groups commit the same batch id at different moments,
-    * and the snapshot-by-id contract then includes every id ≤ the
-    * resolved one even if some group's marker for a smaller id landed
-    * after `tsMillis` — resolution is by marker stamp, inclusion by
-    * batch id, the same rule [[committedViewAsOf]] documents. */
-  def resolveBatchAt(spark: SparkSession, path: String, tsMillis: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val commitsDir = new Path(new Path(path), "_commits")
-    val fs = commitsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batchToken = "(?:g\\d+-)?(\\d+)".r
-    val stamps =
-      if (!fs.exists(commitsDir)) Array.empty[(Long, Long)]
-      else fs.listStatus(commitsDir).flatMap { st =>
-        st.getPath.getName match {
-          case batchToken(id) => Some((id.toLong, st.getModificationTime))
-          case _ => None
-        }
-      }
+    * commit markers whose stamp ≤ `tsMillis`. A timestamp that
+    * predates the FIRST commit fails loudly — "the table as it stood
+    * before it existed" is a caller bug, not an empty table.
+    * Commit-group caveat (single-writer sequential ids have none):
+    * groups commit the same batch id at different moments, and the
+    * snapshot-by-id contract then includes every id ≤ the resolved one
+    * even if some group's marker for a smaller id landed after
+    * `tsMillis` — resolution is by marker stamp, inclusion by batch id,
+    * the same rule [[committedViewAsOf]] documents. */
+  private def resolveBatchAt(log: CommitLog.Snapshot, path: String,
+                             tsMillis: Long): Long = {
+    val stamps = log.batches.map { case (_, id, stamp) => (id, stamp) }
     require(stamps.nonEmpty, s"no commits at $path — nothing to time-travel to")
     val eligible = stamps.collect { case (id, m) if m <= tsMillis => id }
     if (eligible.isEmpty) {
@@ -237,13 +166,16 @@ object Tables {
 
   /** Timestamp-addressed snapshot ([[committedViewAsOf]] with the
     * batch id resolved by [[resolveBatchAt]]) — the standard lakehouse
-    * AS-OF-timestamp read; same vacuum-fails-loudly contract. */
+    * AS-OF-timestamp read; same vacuum-fails-loudly contract. Window
+    * and files resolve from one commit-log snapshot. */
   def committedViewAt(spark: SparkSession, path: String, tsMillis: Long,
                       format: String = "orc",
                       schema: Option[org.apache.spark.sql.types.StructType] = None,
-                      mergeSchemas: Boolean = false): DataFrame =
-    committedViewAsOf(spark, path, resolveBatchAt(spark, path, tsMillis),
-      format, schema, mergeSchemas)
+                      mergeSchemas: Boolean = false): DataFrame = {
+    val log = commitLogOf(spark, path)
+    committedViewRange(spark, path, log, Long.MinValue,
+      resolveBatchAt(log, path, tsMillis), format, schema, mergeSchemas)
+  }
 
   /** Timestamp-addressed snapshot DIFF: the rows ADDED in the time
     * window `(fromTs, toTs]` — [[committedViewDelta]] with both
@@ -261,12 +193,13 @@ object Tables {
                            schema: Option[org.apache.spark.sql.types.StructType] = None,
                            mergeSchemas: Boolean = false): DataFrame = {
     require(fromTs <= toTs, s"fromTs $fromTs must be <= toTs $toTs")
-    val to = resolveBatchAt(spark, path, toTs)
+    val log = commitLogOf(spark, path)
+    val to = resolveBatchAt(log, path, toTs)
     val from =
-      try resolveBatchAt(spark, path, fromTs)
+      try resolveBatchAt(log, path, fromTs)
       catch { case _: IllegalArgumentException => Long.MinValue }
-    committedViewDelta(spark, path, math.min(from, to), to, format, schema,
-      mergeSchemas)
+    committedViewRange(spark, path, log, math.min(from, to), to, format,
+      schema, mergeSchemas)
   }
 
   /** Snapshot DIFF: the rows ADDED between two batch boundaries — the
@@ -287,48 +220,25 @@ object Tables {
                          mergeSchemas: Boolean = false): DataFrame = {
     require(fromBatch <= toBatch,
       s"fromBatch $fromBatch must be <= toBatch $toBatch")
-    committedViewRange(spark, path, fromBatch, toBatch, format, schema,
-      mergeSchemas)
+    committedViewRange(spark, path, commitLogOf(spark, path), fromBatch,
+      toBatch, format, schema, mergeSchemas)
   }
 
   private def committedViewRange(spark: SparkSession, path: String,
+                                 log: CommitLog.Snapshot,
                                  afterBatch: Long, upToBatch: Long,
                                  format: String,
                                  schema: Option[org.apache.spark.sql.types.StructType],
                                  mergeSchemas: Boolean): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
+    val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commitsDir = new Path(root, "_commits")
-    val batchToken = "(?:g\\d+-)?(\\d+)".r
-    val names =
-      if (fs.exists(commitsDir)) fs.listStatus(commitsDir).map(_.getPath.getName)
-      else Array.empty[String]
-    val wanted = names.collect {
-      case t @ batchToken(id) if id.toLong > afterBatch && id.toLong <= upToBatch => t
+    val wanted = log.batches.collect {
+      case (t, id, _) if id > afterBatch && id <= upToBatch => t
     }.toSet
-    // every token any compaction has (transitively) superseded — its
-    // files are vacuum candidates, so absence means "destroyed", not
-    // "empty commit"
-    val superseded = names.collect {
-      case n if n.matches("c\\d+") => (n.stripPrefix("c").toLong, n)
-    }.sortBy(_._1).flatMap { case (_, name) =>
-      val in = fs.open(new Path(commitsDir, name))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).toSeq
-      finally in.close()
-    }.toSet
-    val files = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    val tokensSeen = scala.collection.mutable.Set.empty[String]
-    walkStatuses(fs, root) { st =>
-      st.getPath.getName match {
-        case batchFileRe(id) if wanted(id) =>
-          files += st; tokensSeen += id
-        case _ => ()
-      }
-    }
-    val destroyed = (wanted -- tokensSeen).filter(superseded)
+    val files = dataFiles(fs, root).filter { case (_, t) => wanted(t) }
+    // a wanted token some compaction superseded has vacuum-candidate
+    // files, so their absence means "destroyed", not "empty commit"
+    val destroyed = (wanted -- files.map(_._2)).filter(log.superseded)
     if (destroyed.nonEmpty) {
       val window = if (afterBatch == Long.MinValue) s"as of batch $upToBatch"
         else s"delta ($afterBatch, $upToBatch]"
@@ -338,19 +248,10 @@ object Tables {
           "vacuumed — historical reads survive compaction only until vacuum")
     }
     if (files.nonEmpty)
-      manifestFrame(spark, path, files.toSeq, format, mergeSchemas)
-    else committedView(spark, path, format, schema, mergeSchemas).limit(0)
+      manifestFrame(spark, path, files.map(_._1), format, mergeSchemas)
+    else committedViewOf(spark, path, log.live, format, schema, mergeSchemas).limit(0)
   }
 
-  /** Shared reader for committed batch files. With `mergeSchemas` the
-    * view is the UNION-BY-NAME of every committed batch's schema —
-    * schema evolution: a column added in a later commit reads as null
-    * for earlier batches, and an INCOMPATIBLE redefinition (the same
-    * column at a different type) fails loudly at load time (the
-    * source's schema-merge rejects it) instead of silently winning by
-    * whichever file the sampler picked. Off by default: merging reads
-    * every file's footer up front, which a fixed-schema table need
-    * not pay. */
   /** Frame over a resolved committed-file manifest. Default path: a
     * manifest-backed FileIndex (org.apache.spark.sql.execution
     * .datasources.GraftCommitFileIndex) serving the statuses the
@@ -378,37 +279,30 @@ object Tables {
     if (mergeSchemas) r.option("mergeSchema", "true") else r
   }
 
+  private val commitLogSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("token",
+      org.apache.spark.sql.types.StringType, nullable = false),
+    org.apache.spark.sql.types.StructField("mtime_ms",
+      org.apache.spark.sql.types.LongType, nullable = false),
+    org.apache.spark.sql.types.StructField("kind",
+      org.apache.spark.sql.types.StringType, nullable = false),
+    org.apache.spark.sql.types.StructField("live",
+      org.apache.spark.sql.types.BooleanType, nullable = false)))
+
   /** Commit history of a staged-publish ingest table: one row per
-    * marker — (token, mtime_ms, kind ∈ commit|compaction, live).
+    * marker file — (token, mtime_ms, kind ∈ commit|compaction, live).
     * `live=false` means a compaction superseded the token (its files
     * are vacuum candidates) or the file is not a protocol marker.
-    *
-    * Consistency (ADVICE r14): rows AND live flags derive from ONE
-    * materialized scan of the `graft-commits` source — the scan is
-    * localCheckpoint'd and liveness is an anti-join of the tokens
-    * against the SAME snapshot's `superseded` lists, so a commit or
-    * compaction landing mid-query can never pair a marker row with a
-    * stale flag. Liveness algebra: tokens are unique and a compaction
-    * only lists tokens that predate it, so `live = protocol-marker ∧
-    * token ∉ ⋃(compaction contents)` — exactly [[liveTokens]]'s
-    * fold. Markers are bytes-per-commit metadata; the checkpoint and
-    * join are metadata-sized. Returns a MATERIALIZED frame — consume,
-    * then [[graft.api.Dedup.releaseMaterialized]] (SQL callers:
-    * `graft_release_materialized()`). */
+    * A local frame built from ONE commit-log snapshot, so a marker row
+    * can never pair with a liveness flag from another moment, and
+    * nothing executes or stays pinned: no release needed. */
   def commitLog(spark: SparkSession, path: String): DataFrame = {
-    val markers = graft.api.PlanAudit.checkpoint(
-      spark.read.format("graft-commits").load(s"$path/_commits"))
-    val dead = markers
-      .select(explode(col("superseded")).as("token"))
-      .distinct()
-      .withColumn("__dead", lit(true))
-    markers.join(dead, Seq("token"), "left")
-      .select(col("token"), col("mtime_ms"),
-        when(col("token").rlike("^c\\d+$"), lit("compaction"))
-          .otherwise(lit("commit")).as("kind"),
-        (col("__dead").isNull &&
-          (col("token").rlike("^(?:g\\d+-)?\\d+$") ||
-            col("token").rlike("^c\\d+$"))).as("live"))
+    val log = commitLogOf(spark, path)
+    val rows = log.markers.map { m =>
+      org.apache.spark.sql.Row(m.token, m.stampMs,
+        if (m.isRewrite) "compaction" else "commit", log.live(m.token))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), commitLogSchema)
   }
 
   /** BUCKET-AWARE committed view (VERDICT r16 #3): the ingest write
@@ -457,8 +351,8 @@ object Tables {
     } yield (b, c)
     if (spec.isEmpty) return fallback(s"unparseable _bucketspec: $kv")
     val (buckets, bucketCol) = spec.get
-    val committed = liveTokens(fs, root)
-    val files = tokenDataStatuses(fs, root, committed)
+    val live = CommitLog.read(fs, root).live
+    val files = dataFiles(fs, root).collect { case (st, t) if live(t) => st }
     if (files.isEmpty) return committedView(spark, path, format)
     val unattributable = files.filter { st =>
       org.apache.spark.sql.execution.datasources.GraftCommitFileIndex
@@ -475,14 +369,48 @@ object Tables {
       .getOrElse(fallback(s"no V1 FileFormat for '$format'"))
   }
 
+  /** Committed-only view of an ingest output directory: reads ONLY the
+    * files published by batches whose `_commits/<batchId>` marker exists
+    * — the atomic-visibility half of the staged-commit protocol (the
+    * reference delegates this contract to hive-streaming transactions,
+    * `Culvert.java:213-231`; SURVEY §2.3.1). A crash mid-publish leaves
+    * `b<id>-*` files with no marker; this reader never sees them, and a
+    * replayed commit first scrubs them (Ingest.commitBatch).
+    *
+    * Listing cost is one recursive enumeration of the table directory —
+    * the same listing every Spark file-source scan performs; the marker
+    * set is one extra small-directory listing.
+    *
+    * Zero-committed-batches behavior (ADVICE r3): the frame is still
+    * TYPED — schema comes from `schema` if given, else is inferred from
+    * any data file already present (staged or uncommitted files have
+    * the sink's schema even before their commit lands), so downstream
+    * column references behave identically on the empty and populated
+    * paths. Only a sink with no files at all and no declared schema
+    * degrades to `spark.emptyDataFrame` (nothing to infer from).
+    *
+    * With `mergeSchemas` the view is the UNION-BY-NAME of every
+    * committed batch's schema — schema evolution: a column added in a
+    * later commit reads as null for earlier batches, and an
+    * INCOMPATIBLE redefinition (the same column at a different type)
+    * fails loudly at load time (the source's schema-merge rejects it)
+    * instead of silently winning by whichever file the sampler picked.
+    * Off by default: merging reads every file's footer up front, which
+    * a fixed-schema table need not pay.
+    */
   def committedView(spark: SparkSession, path: String, format: String = "orc",
                     schema: Option[org.apache.spark.sql.types.StructType] = None,
-                    mergeSchemas: Boolean = false): DataFrame = {
+                    mergeSchemas: Boolean = false): DataFrame =
+    committedViewOf(spark, path, commitLogOf(spark, path).live, format, schema,
+      mergeSchemas)
+
+  private def committedViewOf(spark: SparkSession, path: String,
+                              committed: Set[String], format: String,
+                              schema: Option[org.apache.spark.sql.types.StructType],
+                              mergeSchemas: Boolean): DataFrame = {
     import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = liveTokens(fs, root)
-    val batchFile = batchFileRe
     val rootQualified = fs.makeQualified(root).toString
     val files = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.hadoop.fs.FileStatus]
@@ -491,17 +419,17 @@ object Tables {
     // partition layout (basePath = table root); a staged file sits under
     // _staging/<id>/<partition dirs> (basePath = the staging batch dir)
     var schemaDonor: Option[(String, String)] = None
-    walkStatuses(fs, root, descendHidden = true) { st =>
+    walkStatuses(fs, root, n => !Commit.hidden(n) || n == "_staging") { st =>
       val f = st.getPath
       val rel = f.toString.stripPrefix(rootQualified).stripPrefix("/")
       val segs = rel.split('/')
       val visible = !segs.exists(Commit.hidden)
       f.getName match {
-        case batchFile(id) if visible && committed(id) => files += st
+        case CommitLog.DataFile(id) if visible && committed(id) => files += st
         case _ => ()
       }
       if (schemaDonor.isEmpty && !Commit.hidden(f.getName)) {
-        if (visible && batchFile.pattern.matcher(f.getName).matches())
+        if (visible && CommitLog.DataFile.pattern.matcher(f.getName).matches())
           schemaDonor = Some((f.toString, path))
         else if (segs.headOption.contains("_staging") && segs.length > 2 &&
           !segs.drop(2).exists(Commit.hidden))

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.core.{Commit, Tables}
+import graft.core.{Commit, CommitLog, Tables}
 
 /** Small-file maintenance for the staged-commit ingest layout
   * (reference behavior delegated to Hive ACID compactor,
@@ -29,7 +29,7 @@ import graft.core.{Commit, Tables}
   *     the files as `bc<stamp>-*` renames ([[graft.core.Commit.publish]])
   *     — invisible so far, no marker exists;
   *  4. write marker `_commits/c<stamp>` whose CONTENT is T with
-  *     [[graft.core.Commit.writeAtomically]]: the hidden temp
+  *     [[graft.core.CommitLog.markRewrite]]: the hidden temp
   *     `_commits/.c<stamp>.tmp`, then one rename over the marker name.
   *     That rename is the commit point: a reader resolves either
   *     {T live} or {T superseded, c<stamp> live} — never both, never
@@ -52,20 +52,6 @@ object Compact {
   final case class CompactResult(token: String, rows: Long,
                                  filesBefore: Int, filesAfter: Int)
 
-  private[ingest] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                                    root: Path)
-      : Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[(org.apache.hadoop.fs.FileStatus, String)]
-    Tables.walkStatuses(fs, root) { st =>
-      st.getPath.getName match {
-        case Tables.batchFileRe(token) => out += ((st, token))
-        case _ => ()
-      }
-    }
-    out.toSeq
-  }
-
   /** Rewrite the committed rows into one file per partition directory
     * and publish the rewrite as a superseding commit (see object doc).
     * No-op (None) when nothing is committed. `partitionCols` must be
@@ -86,17 +72,15 @@ object Compact {
               zorderFiles: Int = 0): Option[CompactResult] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Tables.liveTokens(fs, root)
+    val live = CommitLog.read(fs, root).live
     if (live.isEmpty) return None
-    val files = listDataFiles(fs, root)
+    val files = Tables.dataFiles(fs, root)
     // step 2: scrub a crashed compaction's unmarked leftovers
-    files.filter { case (_, t) => t.startsWith("c") && !live.contains(t) }
+    files.filter { case (_, t) => CommitLog.isRewrite(t) && !live.contains(t) }
       .foreach { case (f, _) => fs.delete(f.getPath, false) }
     val liveFiles = files.collect { case (f, t) if live.contains(t) => f }
     if (liveFiles.isEmpty) return None
-    var stamp = System.currentTimeMillis()
-    while (fs.exists(new Path(root, s"_commits/c$stamp"))) stamp += 1
-    val token = s"c$stamp"
+    val token = CommitLog.nextRewriteToken(fs, root)
     // manifest-backed read: the rewrite's input file set is already
     // resolved — no re-listing job (VERDICT r13 #2)
     val df = Tables.manifestFrame(spark, path, liveFiles, format,
@@ -139,8 +123,7 @@ object Compact {
       .partitionBy(partitionCols: _*)
       .save(staging.toString)
     val published = Commit.publish(fs, staging, root, token)
-    Commit.writeAtomically(fs, new Path(root, s"_commits/$token"),
-      superseded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+    CommitLog.markRewrite(fs, root, token, superseded)
     published
   }
 
@@ -155,15 +138,10 @@ object Compact {
   def vacuum(spark: SparkSession, path: String): Int = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Tables.liveTokens(fs, root)
-    val commitsDir = new Path(root, "_commits")
-    val marked: Set[String] =
-      if (fs.exists(commitsDir))
-        fs.listStatus(commitsDir).map(_.getPath.getName)
-          .filter(n => n.matches("(?:g\\d+-)?\\d+") || n.matches("c\\d+")).toSet
-      else Set.empty
-    val superseded = listDataFiles(fs, root).filter { case (_, t) =>
-      marked.contains(t) && !live.contains(t)
+    val log = CommitLog.read(fs, root)
+    val marked = log.tokens
+    val superseded = Tables.dataFiles(fs, root).filter { case (_, t) =>
+      marked.contains(t) && !log.live.contains(t)
     }
     superseded.foreach { case (f, _) => fs.delete(f.getPath, false) }
     // the commit loop's ingest-owned filters version once PER COMMIT

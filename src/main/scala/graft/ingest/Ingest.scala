@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.core.Commit
+import graft.core.{Commit, CommitLog}
 
 /** Job configuration, mirroring the reference CLI's twelve knobs and
   * their defaults (reference `core/CulvertCLI.java:36-47`) plus the
@@ -359,17 +359,17 @@ object Ingest {
     // A commit group tags its batches (`g1-42`) so ids from parallel
     // queries — each with its own 0-based micro-batch counter — can
     // never collide in file names or markers.
-    val token = groupTag.fold(batchId.toString)(g => s"$g-$batchId")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(s"$path/_commits/$token")
-    if (fs.exists(marker)) return 0L
+    val token = CommitLog.batchToken(batchId, groupTag)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (CommitLog.committed(fs, root, token)) return 0L
     CommitPhases.commits.incrementAndGet()
     // A prior attempt may have crashed mid-publish (some files renamed,
     // marker absent): delete any half-published b<token>-* files first
     // so the replay cannot leave duplicates visible to plain directory
     // readers. Partition layout is always <year=Y>/<month=M>, two levels.
     CommitPhases.timed(CommitPhases.staleGlobNs) {
-      val stale = fs.globStatus(new Path(s"$path/*/*/b$token-*"))
+      val stale = fs.globStatus(new Path(s"$path/*/*/${CommitLog.dataFileName(token, "*")}"))
       if (stale != null) stale.foreach(st => fs.delete(st.getPath, false))
     }
     // Near-dup suppression FIRST (cfg.suppressNearDups): rows a prior
@@ -486,7 +486,7 @@ object Ingest {
           .getBytes("UTF-8"))
     }
     CommitPhases.timed(CommitPhases.markerNs) {
-      Commit.createExclusive(fs, marker)
+      CommitLog.markCommitted(fs, root, token)
     }
     nCommitted
     } finally dedupInfo.foreach(_.release.unpersist(blocking = false))
@@ -714,7 +714,7 @@ object Ingest {
     * n_redacted). Ledger entries are written before their commit
     * marker; tokens with no entry predate the redaction config (or it
     * was off). Metadata-sized: bytes per commit, read driver-side like
-    * [[graft.core.Tables.liveTokens]]. */
+    * the commit log ([[graft.core.CommitLog]]). */
   def piiLedger(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val rows = readLedgerDir(spark, path, "_pii").flatMap { case (token, kv) =>
@@ -794,39 +794,24 @@ object Ingest {
   /** Upfront validation of the commit-path PII scrub — a typo'd or
     * non-string column fails at startup, not mid-commit. */
   private def validateRedactPii(cfg: IngestConfig): Unit =
-    if (cfg.redactPiiColumns.nonEmpty) {
-      import Gen.ColType._
-      val stringTypes: Set[Gen.ColType] = Set(StringName, StringDict,
-        StringIp, StringUuidPool, TimestampIso)
-      val byName = dataColumns(cfg).map(s => s.name -> s).toMap
-      cfg.redactPiiColumns.foreach { c =>
-        val spec = byName.getOrElse(c, sys.error(
-          s"redactPii column '$c' is not a generated data column " +
-            s"(have: ${byName.keys.mkString(", ")})"))
-        require(stringTypes.contains(spec.tpe),
-          s"redactPii column '$c' is not a string column (${spec.tpe})")
-      }
-    }
+    cfg.redactPiiColumns.foreach(requireStringColumn(cfg, "redactPii", _))
 
   /** Upfront validation of the commit-path near-dup suppressor — a
     * typo'd or non-string column fails at startup, not mid-commit. */
   private def validateSuppressNearDups(cfg: IngestConfig): Unit =
-    cfg.suppressNearDups.foreach { c =>
-      import Gen.ColType._
-      val stringTypes: Set[Gen.ColType] = Set(StringName, StringDict,
-        StringIp, StringUuidPool, TimestampIso)
-      val byName = dataColumns(cfg).map(s => s.name -> s).toMap
-      val spec = byName.getOrElse(c, sys.error(
-        s"suppressNearDups column '$c' is not a generated data column " +
-          s"(have: ${byName.keys.mkString(", ")})"))
-      require(stringTypes.contains(spec.tpe),
-        s"suppressNearDups column '$c' is not a string column (${spec.tpe})")
-      // commitGroups > 1 is supported since r17 (VERDICT r16 #7): the
-      // consult→decide→ledger→append sequence runs as one per-filter-
-      // path critical section (suppressNearDupRows), so concurrent
-      // groups can never both pin the same filter version and each
-      // admit the same content — the r16 upfront rejection is gone.
-    }
+    cfg.suppressNearDups.foreach(requireStringColumn(cfg, "suppressNearDups", _))
+
+  private def requireStringColumn(cfg: IngestConfig, option: String, c: String): Unit = {
+    import Gen.ColType._
+    val stringTypes: Set[Gen.ColType] = Set(StringName, StringDict,
+      StringIp, StringUuidPool, TimestampIso)
+    val byName = dataColumns(cfg).map(s => s.name -> s).toMap
+    val spec = byName.getOrElse(c, sys.error(
+      s"$option column '$c' is not a generated data column " +
+        s"(have: ${byName.keys.mkString(", ")})"))
+    require(stringTypes.contains(spec.tpe),
+      s"$option column '$c' is not a string column (${spec.tpe})")
+  }
 
   /** Resolve (and VALIDATE) the seen-filter id column against the
     * generated schema. Called upfront by [[run]]/[[runBatchCommitted]]
@@ -877,7 +862,7 @@ object Ingest {
           s"commitGroups=$g must divide parallelism=${cfg.parallelism}")
         val perGroup = cfg.parallelism / g
         (0 until g).toList.flatMap { i =>
-          val tag = if (g == 1) None else Some(s"g$i")
+          val tag = if (g == 1) None else Some(CommitLog.groupTag(i))
           val gcfg = cfg.copy(parallelism = perGroup,
             streamIndexOffset = cfg.streamIndexOffset + i * perGroup)
           // start failures are isolated per group, like a reference

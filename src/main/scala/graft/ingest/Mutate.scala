@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{CommitLog, Tables}
 
 /** Row-level DELETE and MERGE (upsert) on the staged-commit table —
   * the copy-on-write half of the lakehouse contract (the reference
@@ -16,7 +16,7 @@ import graft.core.Tables
   * Both operations publish through [[Compact.publishRewrite]] as a
   * `c<stamp>` rewrite-class commit whose marker CONTENT lists the
   * tokens it supersedes — so every existing reader already resolves
-  * them: `Tables.liveTokens` chains the marker, `committedView` sees
+  * them: `CommitLog`'s liveness chains the marker, `committedView` sees
   * post-mutation rows atomically at the marker rename, `Compact.vacuum`
   * reclaims the replaced files, a crashed mutation's unmarked
   * `bc<stamp>-*` leftovers are scrubbed by the next compaction, and the
@@ -287,9 +287,9 @@ object Mutate {
       : Option[(org.apache.hadoop.fs.FileSystem, Path, Set[String], DataFrame)] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Tables.liveTokens(fs, root)
+    val live = CommitLog.read(fs, root).live
     if (live.isEmpty) return None
-    val files = Compact.listDataFiles(fs, root)
+    val files = Tables.dataFiles(fs, root)
       .collect { case (f, t) if live.contains(t) => (f, t) }
     if (files.isEmpty) return None
     // bind the file-path pseudo-column BEFORE the probe runs: _metadata
@@ -306,7 +306,7 @@ object Mutate {
     // resolve through it instead of comparing full URIs
     val affectedTokens = affectedFiles.flatMap { fp =>
       new Path(fp).getName match {
-        case Tables.batchFileRe(t) => Some(t)
+        case CommitLog.DataFile(t) => Some(t)
         case _ => None
       }
     }.toSet
@@ -329,9 +329,7 @@ object Mutate {
                       format: String, compression: String,
                       superseded: Set[String])
                      (counts: () => (Long, Long, Long)): MutateResult = {
-    var stamp = System.currentTimeMillis()
-    while (fs.exists(new Path(root, s"_commits/c$stamp"))) stamp += 1
-    val token = s"c$stamp"
+    val token = CommitLog.nextRewriteToken(fs, root)
     // partitioned layout: one task per partition-value vector, like
     // compact; unpartitioned: keep the source's partitioning (and with
     // it any value locality the caller arranged for file skipping)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{CommitLog, Tables}
 
 /** File-level column statistics and reader-side data skipping for the
   * staged-commit table — the manifest half of scan pruning (the
@@ -55,10 +55,10 @@ object Stats {
     require(cols.nonEmpty, "need at least one column to profile")
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Tables.liveTokens(fs, root)
+    val live = CommitLog.read(fs, root).live
     val missing = live.filter(t => !fs.exists(manifest(root, t)))
     if (missing.isEmpty) return 0
-    val files = Compact.listDataFiles(fs, root)
+    val files = Tables.dataFiles(fs, root)
       .collect { case (f, t) if missing.contains(t) => f }
     if (files.isEmpty) return 0
     val aggs = Seq(count(lit(1)).as("__rows")) ++ cols.flatMap(c => Seq(
@@ -78,7 +78,7 @@ object Stats {
       .collect() // metadata-sized: one row per NEW file
     val byToken = perFile.toSeq.groupBy { r =>
       new Path(r.getString(0)).getName match {
-        case Tables.batchFileRe(t) => t
+        case CommitLog.DataFile(t) => t
         case _ => "" // unreachable: only b<token>-* files were loaded
       }
     }
@@ -129,9 +129,9 @@ object Stats {
                           format: String = "orc"): DataFrame = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = Tables.liveTokens(fs, root)
+    val live = CommitLog.read(fs, root).live
     val predicate = col(column).between(lit(lo), lit(hi))
-    val files = Compact.listDataFiles(fs, root)
+    val files = Tables.dataFiles(fs, root)
       .collect { case (f, t) if live.contains(t) => (f, t) }
     if (files.isEmpty)
       return Tables.committedView(spark, path, format).filter(predicate)

@@ -57,64 +57,23 @@ object CommitMarkerSource {
     StructField("superseded", org.apache.spark.sql.types.ArrayType(
       StringType, containsNull = false), nullable = false)))
 
-  /** (name, mtimeMs) of every marker file in the marker dir — hidden
-    * names (a compaction's temp marker a crash left behind) are not
-    * markers. */
-  private def listMarkers(dir: String): Seq[(String, Long)] = {
+  /** One [[graft.core.CommitLog]] snapshot of the marker dir: rows and
+    * supersession come from the same listing, so a consumer resolves
+    * liveness from one consistent scan. The batch read is strict (a
+    * compaction marker deleted between listing and open fails it); the
+    * stream reads `lenient` (see [[graft.core.CommitLog.readDir]]). */
+  private def markers(dir: String, open: String => Boolean, lenient: Boolean)
+      : Seq[graft.core.CommitLog.Marker] = {
     val p = new Path(dir)
-    val fs = p.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.collect {
-      case st if st.isFile && !graft.core.Commit.hidden(st.getPath.getName) =>
-        (st.getPath.getName, st.getModificationTime)
-    }
+    graft.core.CommitLog.readDir(
+      p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      p, open, lenient).markers
   }
 
-  /** Row payload: (token, mtimeMs, superseded tokens). `superseded` is
-    * the CONTENT of a compaction marker — the tokens its rewrite
-    * replaced (empty for plain commits) — loaded in the SAME listing
-    * pass so a consumer can resolve liveness from one consistent scan
-    * (ADVICE r14: graft_commit_log previously read liveness in a
-    * separate eager pass that could straddle a concurrent compaction).
-    * Contents are bytes-per-commit metadata; only `c<stamp>` names are
-    * opened. An unreadable compaction marker FAILS the scan loudly —
-    * swallowing it would report every token that compaction superseded
-    * as live, silently diverging from the strict [[graft.core.Tables
-    * .liveTokens]] fold that vacuum decisions run on (a file named
-    * `c<stamp>` is protocol-owned by contract; there is no legitimate
-    * foreign-but-unreadable case to degrade for). The one benign read
-    * failure is a marker deleted between listing and open (only a
-    * foreign actor deletes markers). In the BATCH path it surfaces as
-    * FileNotFoundException to keep the cause visible; the STREAMING
-    * path passes `lenient = true` and degrades the vanished marker to
-    * an empty superseded list with a loud stderr note instead — a
-    * long-running query must not die for a foreign deletion the same
-    * path already tolerates at the re-stat step (mtime 0), and the
-    * contract there documents exactly that (ADVICE r15). */
-  private def loadRows(dir: String, names: Seq[(String, Long)],
-                       lenient: Boolean = false): Array[(String, Long, Array[String])] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
-    names.map { case (n, m) =>
-      val superseded =
-        if (!n.matches("c\\d+")) Array.empty[String]
-        else try {
-          val in = fs.open(new Path(p, n))
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-            .filter(_.nonEmpty).toArray
-          finally in.close()
-        } catch {
-          case e: java.io.FileNotFoundException if lenient =>
-            System.err.println(s"[graft-commits] compaction marker $dir/$n" +
-              s" vanished between listing and open (foreign deletion?) —" +
-              s" emitting it with an empty superseded list: ${e.getMessage}")
-            Array.empty[String]
-        }
-      (n, m, superseded)
-    }.toArray
-  }
+  /** Row payload: (token, mtimeMs, superseded tokens). */
+  private def rows(markers: Seq[graft.core.CommitLog.Marker])
+      : Array[(String, Long, Array[String])] =
+    markers.map(m => (m.token, m.stampMs, m.superseded.toArray)).toArray
 
   private class MarkerTable(path: String) extends Table with SupportsRead {
     require(path != null, "graft-commits needs load(<table>/_commits)")
@@ -154,7 +113,7 @@ object CommitMarkerSource {
 
   private class MarkerBatch(path: String) extends Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      Array(MarkerPartition(loadRows(path, listMarkers(path).sortBy(_._1))))
+      Array(MarkerPartition(rows(markers(path, _ => true, lenient = false))))
     override def createReaderFactory(): PartitionReaderFactory = MarkerReaderFactory
   }
 
@@ -174,21 +133,23 @@ object CommitMarkerSource {
   private class MarkerMicroBatchStream(path: String) extends MicroBatchStream {
     override def initialOffset(): Offset = MarkerOffset(Set.empty)
     override def latestOffset(): Offset =
-      MarkerOffset(listMarkers(path).map(_._1).filterNot(_.contains('\n')).toSet)
+      MarkerOffset(markers(path, _ => false, lenient = true)
+        .map(_.token).filterNot(_.contains('\n')).toSet)
     override def deserializeOffset(json: String): Offset = MarkerOffset.parse(json)
     override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
       val newNames = end.asInstanceOf[MarkerOffset].seen --
         start.asInstanceOf[MarkerOffset].seen
       if (newNames.isEmpty) Array.empty
       else {
-        // re-stat for mtimes: markers are never renamed/deleted, so a
+        // re-list for mtimes: markers are never renamed/deleted, so a
         // replay after restart finds the same files (a foreign deletion
-        // surfaces as mtime 0, not a crash — and lenient loadRows keeps
-        // the same promise for a marker deleted between list and open)
-        val byName = listMarkers(path).toMap
-        Array(MarkerPartition(loadRows(path,
-          newNames.toSeq.sorted.map(n => (n, byName.getOrElse(n, 0L))),
-          lenient = true)))
+        // surfaces as mtime 0 with no superseded list, not a crash —
+        // and the lenient read keeps the same promise for a marker
+        // deleted between list and open)
+        val byName = markers(path, newNames, lenient = true)
+          .map(m => m.token -> m).toMap
+        Array(MarkerPartition(rows(newNames.toSeq.sorted.map(n =>
+          byName.getOrElse(n, graft.core.CommitLog.Marker(n, 0L, Nil))))))
       }
     }
     override def createReaderFactory(): PartitionReaderFactory = MarkerReaderFactory

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.Tables
+import graft.core.{CommitLog, Tables}
 
 /** Incremental consumption of an ingest table's commit log — the
   * change-data-feed half of the staged-commit protocol (the write half
@@ -41,20 +41,17 @@ import graft.core.Tables
   */
 object CommitLogStream {
 
-  private val plainToken = "^(?:g\\d+-)?\\d+$"
-  private val compactionToken = "^c\\d+$"
-
   /** Streaming frame of newly landed commit markers, one row per
     * marker file: (token, kind ∈ commit|compaction|unknown,
-    * committed_at). Built on `binaryFile` rather than `text` because a
-    * plain commit marker is an EMPTY file — a text source would emit
-    * zero rows for it and the commit would be invisible. */
+    * committed_at). Read through the `graft-commits` source, which
+    * emits every marker file, the EMPTY plain-commit markers included
+    * (a file-content source would emit no row for them). */
   def markers(spark: SparkSession, table: String): DataFrame =
     spark.readStream.format("graft-commits").load(s"$table/_commits")
       .select(
         col("token"),
-        when(col("token").rlike(compactionToken), "compaction")
-          .when(col("token").rlike(plainToken), "commit")
+        when(col("token").rlike(CommitLog.Rewrite.regex), "compaction")
+          .when(col("token").rlike(CommitLog.Plain.regex), "commit")
           .otherwise("unknown").as("kind"),
         timestamp_millis(col("mtime_ms")).as("committed_at"))
 
@@ -77,18 +74,16 @@ object CommitLogStream {
           import org.apache.hadoop.fs.Path
           val root = new Path(table)
           val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val files = Tables.tokenDataStatuses(fs, root, toks.toSet)
-          val found: Set[String] = files.flatMap { st =>
-            st.getPath.getName match {
-              case Tables.batchFileRe(id) => Some(id); case _ => None }
-          }.toSet
+          val wanted = toks.toSet
+          val files = Tables.dataFiles(fs, root).filter { case (_, t) => wanted(t) }
+          val found = files.map(_._2).toSet
           // a token with no files is either a legitimately empty commit
           // or a batch whose originals were compacted away and vacuumed
           // before this consumer saw them — only the latter loses rows,
           // and it must not pass silently
           val missing = toks.filterNot(found)
           if (missing.nonEmpty) {
-            val live = Tables.liveTokens(fs, root)
+            val live = CommitLog.read(fs, root).live
             val destroyed = missing.filterNot(live.contains)
             if (destroyed.nonEmpty)
               throw new IllegalStateException(
@@ -103,7 +98,7 @@ object CommitLogStream {
           // listing job once past 32 files, ONCE PER MICRO-BATCH
           val rows =
             if (files.nonEmpty)
-              Tables.manifestFrame(spark, table, files, format,
+              Tables.manifestFrame(spark, table, files.map(_._1), format,
                 mergeSchemas = false)
             else Tables.committedView(spark, table, format).limit(0)
           f(rows, toks, epochId)

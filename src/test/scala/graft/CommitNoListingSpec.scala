@@ -71,7 +71,7 @@ class CommitNoListingSpec extends AnyFunSuite {
         s"$execList listing call(s) ran on executor threads — a " +
           "distributed listing job is back in the committedView path")
       // driver listing = the commit-log walk (one listStatus per
-      // directory, + the _commits listing in liveTokens, + FS-internal
+      // directory, + the one _commits listing of CommitLog.read, + FS-internal
       // globbing slack) — structurally independent of the file count
       assert(listTotal <= dirs * 2 + 8,
         s"committedView listed $listTotal times for $dirs directories — " +

@@ -17,7 +17,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * not wait for the next 100 TB profile.
   *
   * Counts the listing family (listStatus / listStatusIterator /
-  * listLocatedStatus / globStatus) and getFileStatus separately, and
+  * listLocatedStatus / globStatus), recording each listed path (or glob
+  * pattern) in `listedPaths`, and getFileStatus separately, and
   * tracks whether any listing call ran on an executor task thread —
   * in local mode a "distributed listing job" still executes in this
   * JVM, on threads named `Executor task launch worker-*`, so the
@@ -37,8 +38,9 @@ class CountingFileSystem extends RawLocalFileSystem {
   private def onExecutorThread: Boolean =
     Thread.currentThread().getName.startsWith("Executor task launch")
 
-  private def countList(): Unit = {
+  private def countList(f: Path): Unit = {
     listCalls.incrementAndGet()
+    listedPaths.add(f.toUri.getPath.stripSuffix("/"))
     if (onExecutorThread) executorListCalls.incrementAndGet()
   }
 
@@ -55,24 +57,24 @@ class CountingFileSystem extends RawLocalFileSystem {
   }
 
   override def listStatus(f: Path): Array[FileStatus] = {
-    countList(); inList(super.listStatus(f))
+    countList(f); inList(super.listStatus(f))
   }
   override def listStatus(f: Path, filter: PathFilter): Array[FileStatus] = {
-    countList(); inList(super.listStatus(f, filter))
+    countList(f); inList(super.listStatus(f, filter))
   }
   override def listStatusIterator(p: Path)
       : org.apache.hadoop.fs.RemoteIterator[FileStatus] = {
-    countList(); super.listStatusIterator(p)
+    countList(p); super.listStatusIterator(p)
   }
   override def listLocatedStatus(f: Path)
       : org.apache.hadoop.fs.RemoteIterator[org.apache.hadoop.fs.LocatedFileStatus] = {
-    countList(); super.listLocatedStatus(f)
+    countList(f); super.listLocatedStatus(f)
   }
   override def globStatus(pathPattern: Path): Array[FileStatus] = {
-    countList(); super.globStatus(pathPattern)
+    countList(pathPattern); super.globStatus(pathPattern)
   }
   override def globStatus(pathPattern: Path, filter: PathFilter): Array[FileStatus] = {
-    countList(); super.globStatus(pathPattern, filter)
+    countList(pathPattern); super.globStatus(pathPattern, filter)
   }
   // failpoints: the Nth rename or create since reset() throws, as a
   // crash at that point would stop the commit
@@ -110,6 +112,9 @@ object CountingFileSystem {
   val executorStatCalls = new AtomicLong(0L)
   val renameCalls = new AtomicLong(0L)
   val createCalls = new AtomicLong(0L)
+  /** The path part of every listed path or glob pattern since reset(),
+    * without a trailing slash. */
+  val listedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   /** 0 = no failpoint; N = the Nth rename after reset() throws. */
   val failRenameAt = new AtomicLong(0L)
   /** 0 = no failpoint; N = the Nth create after reset() throws. */
@@ -122,5 +127,6 @@ object CountingFileSystem {
     executorListCalls.set(0L); executorStatCalls.set(0L)
     renameCalls.set(0L); failRenameAt.set(0L)
     createCalls.set(0L); failCreateAt.set(0L)
+    listedPaths.clear()
   }
 }

@@ -573,34 +573,6 @@ class PlanShapeSpec extends AnyFunSuite {
       val d = graft.api.Dedup.containmentFilterAgainstIndex(fresh, idx)
       graft.api.Dedup.releaseMaterialized(d)
     }(s"SELECT * FROM graft_containment_filter('tvfplan_fresh', '$idx')")
-
-    // commit_log moved to the materializing family (r15): rows + live
-    // flags now derive from ONE localCheckpoint'd marker scan (ADVICE
-    // r14 consistency fix), so the pin compares the captured
-    // pre-checkpoint stage plans like every other materializing TVF.
-    val clog = java.nio.file.Files
-      .createTempDirectory("graft-tvfplan-clog").toString
-    graft.ingest.Ingest.runBatchCommitted(spark,
-      graft.ingest.IngestConfig(outputPath = Some(clog), parallelism = 2,
-        buckets = 2), 200, batches = 2)
-    graft.ingest.Compact.compact(spark, clog)
-    tvfMatchesTwin("commit_log") {
-      val d = graft.core.Tables.commitLog(spark, clog)
-      graft.api.Dedup.releaseMaterialized(d)
-    }(s"SELECT * FROM graft_commit_log('$clog')")
-    // and the one-snapshot liveness algebra matches the fold liveTokens
-    // runs (live = protocol marker ∉ any compaction's superseded list)
-    locally {
-      val root = new org.apache.hadoop.fs.Path(clog)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val expected = graft.core.Tables.liveTokens(fs, root)
-      val d = graft.core.Tables.commitLog(spark, clog)
-      val got = d.filter(org.apache.spark.sql.functions.col("live"))
-        .select("token").collect().map(_.getString(0)).toSet
-      graft.api.Dedup.releaseMaterialized(d)
-      assert(got == expected,
-        s"commitLog live set $got != liveTokens fold $expected")
-    }
   }
 
   // --- non-materializing TVF == Scala-twin plan equality (VERDICT r13
@@ -634,8 +606,29 @@ class PlanShapeSpec extends AnyFunSuite {
       graft.api.Profiling.runChecks(spark.table("tvfplan_prof_docs"),
         Seq(Check.NotNull("lang"), Check.Unique(Seq("doc_id")),
           Check.InRange("n_chars", 0, 100000))))
-    // (commit_log moved to the materializing-TVF test above — its rows
-    // and live flags now come from one checkpointed marker scan)
+    // commit_log: a local frame over one commit-log snapshot, so rows
+    // and live flags cannot straddle a concurrent commit, and there are
+    // no checkpoint stages to capture
+    val clog = java.nio.file.Files
+      .createTempDirectory("graft-tvfplan-clog").toString
+    graft.ingest.Ingest.runBatchCommitted(spark,
+      graft.ingest.IngestConfig(outputPath = Some(clog), parallelism = 2,
+        buckets = 2), 200, batches = 2)
+    graft.ingest.Compact.compact(spark, clog)
+    pin("commit_log", s"SELECT * FROM graft_commit_log('$clog')",
+      graft.core.Tables.commitLog(spark, clog))
+    // and its live flags are the commit log's liveness fold
+    // (live = protocol marker ∉ any compaction's superseded list)
+    locally {
+      val root = new org.apache.hadoop.fs.Path(clog)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val expected = graft.core.CommitLog.read(fs, root).live
+      val got = graft.core.Tables.commitLog(spark, clog)
+        .filter(col("live"))
+        .select("token").collect().map(_.getString(0)).toSet
+      assert(got == expected,
+        s"commitLog live set $got != CommitLog fold $expected")
+    }
     pin("redact_pii",
       "SELECT * FROM graft_redact_pii('tvfplan_prof_docs', 'text', 'email,ip')",
       graft.api.Curation.redactPii(

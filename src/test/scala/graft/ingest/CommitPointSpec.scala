@@ -29,11 +29,9 @@ class CommitPointSpec extends AnyFunSuite {
     put(new Path(dir, "_commits/.c9.tmp"), "0\n1")
     val log = graft.core.Tables.commitLog(spark, dir)
     val tokens = log.collect().map(r => r.getAs[String]("token") -> r.getAs[Boolean]("live"))
-    graft.api.Dedup.releaseMaterialized(log)
     assert(tokens.toSet == Set("0" -> true, "1" -> true))
     val sql = spark.sql(s"SELECT token FROM graft_commit_log('$dir')")
     assert(sql.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1"))
-    spark.sql("SELECT * FROM graft_release_materialized()").collect()
   }
 
   test("a leftover _pii temp file is not a ledger entry") {
