@@ -163,10 +163,11 @@ object GraftSparkExtensions {
     * handle on the frame, so every SELECT would otherwise pin a
     * result-sized RDD block for the session's lifetime — a recurring
     * per-batch ops-console use of graft_containment_filter would
-    * accumulate unbounded pinned storage. Each TVF call registers its
-    * result's checkpoint RDD ids here; `SELECT * FROM
+    * accumulate unbounded pinned storage. Each TVF call registers the
+    * pins its own call made and left persisted (never a checkpoint its
+    * input reads: a lazy TVF registers nothing); `SELECT * FROM
     * graft_release_materialized()` unpersists them all. Release only
-    * AFTER consuming results: a localCheckpoint'd frame is not
+    * AFTER consuming results: a checkpointed frame is not
     * recomputable once its blocks are dropped. */
   // Keyed by SparkContext, NOT SparkSession (ADVICE r13): persisted
   // RDD blocks live in the context, which cloned sessions
@@ -179,18 +180,12 @@ object GraftSparkExtensions {
     new java.util.WeakHashMap[org.apache.spark.SparkContext,
       scala.collection.mutable.Set[Int]]()
 
-  private def materialized(df: org.apache.spark.sql.DataFrame): LogicalPlan = {
+  private def materialized(build: => org.apache.spark.sql.DataFrame): LogicalPlan = {
+    val (df, made) = graft.api.PlanAudit.pinsDuring(build)
     val sc = df.sparkSession.sparkContext
-    val pinned = sc.getPersistentRDDs
-    val ids = df.queryExecution.analyzed.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.filter(pinned.contains)
+    val ids = made.filter(sc.getPersistentRDDs.contains)
     if (ids.nonEmpty) tvfPinned.synchronized {
-      val set = Option(tvfPinned.get(sc)).getOrElse {
-        val s = scala.collection.mutable.Set.empty[Int]
-        tvfPinned.put(sc, s); s
-      }
-      set ++= ids
+      tvfPinned.computeIfAbsent(sc, _ => scala.collection.mutable.Set.empty[Int]) ++= ids
     }
     df.queryExecution.logical
   }
@@ -201,11 +196,9 @@ object GraftSparkExtensions {
       spark: org.apache.spark.sql.SparkSession): Int = {
     val sc = spark.sparkContext
     val ids = tvfPinned.synchronized {
-      val s = Option(tvfPinned.get(sc)).map(_.toSeq).getOrElse(Seq.empty)
-      Option(tvfPinned.get(sc)).foreach(_.clear())
-      s
+      Option(tvfPinned.remove(sc)).map(_.toSeq).getOrElse(Seq.empty)
     }
-    ids.count(id => spark.sparkContext.getPersistentRDDs.get(id) match {
+    ids.count(id => sc.getPersistentRDDs.get(id) match {
       case Some(rdd) => rdd.unpersist(blocking = false); true
       case None => false
     })
@@ -423,7 +416,8 @@ object GraftSparkExtensions {
     tvf("graft_page_rank",
       "graft_page_rank(edgesTable[, damping, iters]) - fixed-iteration " +
         "PageRank over an (src, dst) edge table; dangling mass not " +
-        "redistributed; scores at the 6-decimal output grain") { args =>
+        "redistributed; scores at the 6-decimal output grain" +
+        "; materializes at resolution - release via graft_release_materialized()") { args =>
       require(args.length >= 1 && args.length <= 3,
         s"graft_page_rank expects (edgesTable[, damping, iters]), got ${args.length} args")
       val spark = org.apache.spark.sql.SparkSession.active
@@ -438,7 +432,8 @@ object GraftSparkExtensions {
     tvf("graft_label_propagation",
       "graft_label_propagation(edgesTable[, iters]) - synchronous " +
         "label-propagation communities over an (src, dst) edge table " +
-        "(self-vote, count-desc/min-label ties); output (node, label)") { args =>
+        "(self-vote, count-desc/min-label ties); output (node, label)" +
+        "; materializes at resolution - release via graft_release_materialized()") { args =>
       require(args.length == 1 || args.length == 2,
         s"graft_label_propagation expects (edgesTable[, iters]), got ${args.length} args")
       val spark = org.apache.spark.sql.SparkSession.active
@@ -595,8 +590,9 @@ object GraftSparkExtensions {
     tvf("graft_commit_log",
       "graft_commit_log(tablePath) - commit history of a staged-publish " +
         "ingest table: one row per marker (token, mtime_ms, kind " +
-        "commit|compaction, live); live=false means a compaction " +
-        "superseded the token (its files are vacuum candidates). Rows " +
+        "commit|compaction|unknown, live); live=false means a compaction " +
+        "superseded the token (its files are vacuum candidates) or the " +
+        "file is not a protocol marker (kind unknown). Rows " +
         "and live flags come from ONE snapshot of the marker dir, " +
         "taken at resolution time") { args =>
       require(args.length == 1,

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.Commit
 
@@ -189,4 +190,27 @@ private[graft] object AppendLedger {
         append(st == Repair)
         finish(spark, path, tok)
     }
+
+  /** The foreachBatch wrapper of every suppressor stream: survivors
+    * land under `outPath/batch=<id>/` and are released; every
+    * `compactEveryBatches`-th batch (> 0) compacts the store and
+    * [[vacuum]]s this ledger. Superseded store versions are NOT vacuumed
+    * — searchers may still hold a pre-swap resolution. */
+  def suppressStream(stream: DataFrame, indexPath: String, outPath: String,
+                     checkpointDir: String, compactEveryBatches: Int,
+                     ledgerKeepLast: Int)(suppress: DataFrame => DataFrame)(
+                     compact: (SparkSession, String) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val keep = suppress(batch)
+        try keep.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+        finally PlanAudit.release(keep)
+        if (compactEveryBatches > 0 && (batchId + 1) % compactEveryBatches == 0) {
+          compact(batch.sparkSession, indexPath)
+          vacuum(batch.sparkSession, indexPath, ledgerKeepLast)
+          ()
+        }
+      }
+      .start()
 }

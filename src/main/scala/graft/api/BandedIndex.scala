@@ -2,7 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** One payload table of a [[BandedIndex]]: its directory under the
@@ -163,11 +162,10 @@ private[api] abstract class BandedIndex(val name: String,
   private def writeSignatures(docs: DataFrame, idCol: String, valueCol: String,
                               p: Seq[Int], root: String, mode: String): Unit = {
     val sig = sigFrame(docs, idCol, valueCol, p)
-    val ck = if (tables.size > 1) Some(PlanAudit.checkpoint(sig)) else None
-    try {
-      val v = views(ck.getOrElse(sig))
+    PlanAudit.scope { s =>
+      val v = views(if (tables.size > 1) s.checkpoint(sig) else sig)
       tables.foreach(t => write(v(t.name), t, root, mode))
-    } finally ck.foreach(Dedup.releaseMaterialized)
+    }
   }
 
   /** Rewrite the current version into one file per partition directory
@@ -200,10 +198,10 @@ private[api] abstract class BandedIndex(val name: String,
     // cast the DELETE side to the stored id dtype — the index accepts any
     // id type at build, so casting the index side (or hard-casting to
     // long) would silently match nothing for e.g. string ids
-    val del = PlanAudit.checkpoint(ids
-      .select(col(idCol).cast(idTab.schema("doc_id").dataType).as("__del_id"))
-      .distinct())
-    try {
+    PlanAudit.scope { s =>
+      val del = s.checkpoint(ids
+        .select(col(idCol).cast(idTab.schema("doc_id").dataType).as("__del_id"))
+        .distinct())
       val nDel = countDocs(idTab, del, "__del_id")
       if (nDel > 0) VersionedIndex.rewrite(spark, path) { vdir =>
         copyParams(spark, root, vdir)
@@ -211,7 +209,7 @@ private[api] abstract class BandedIndex(val name: String,
           write(inOrder(without(tabs(t.name), del, "__del_id"), t), t, vdir, "overwrite"))
       }
       nDel
-    } finally Dedup.releaseMaterialized(del)
+    }
   }
 
   /** Both indexes resolved and read, after the guards every cross-index
@@ -252,11 +250,11 @@ private[api] abstract class BandedIndex(val name: String,
     // params must match even without dedupAcross: a merged index keyed
     // two ways silently misses one input's docs
     val (rootA, tA, tB, p) = both(spark, pathA, pathB, "the merged index cannot serve both")
-    val dropB =
-      if (dedupAcross) PlanAudit.checkpoint(pairs(tA, tB, p, threshold, within = false)
-        .select(col("doc_b").as("__drop_id")).distinct())
-      else spark.range(0).select(col("id").as("__drop_id"))
-    try {
+    PlanAudit.scope { s =>
+      val dropB =
+        if (dedupAcross) s.checkpoint(pairs(tA, tB, p, threshold, within = false)
+          .select(col("doc_b").as("__drop_id")).distinct())
+        else spark.range(0).select(col("id").as("__drop_id"))
       val nDrop = if (dedupAcross) countDocs(tB(idTable.name), dropB, "__drop_id") else 0L
       VersionedIndex.rewrite(spark, outPath) { target =>
         copyParams(spark, rootA, target)
@@ -264,7 +262,7 @@ private[api] abstract class BandedIndex(val name: String,
           .unionByName(without(tB(t.name), dropB, "__drop_id")), t), t, target, "overwrite"))
       }
       nDrop
-    } finally Dedup.releaseMaterialized(dropB)
+    }
   }
 
   /** The batch rows with no verified match in the index, original
@@ -304,39 +302,36 @@ private[api] abstract class BandedIndex(val name: String,
     val observed = batch.observe(obs, tokAggs.head.as("c"),
       tokAggs(1).as("h1"), tokAggs(2).as("h2"))
     val sketch = batchSketch(valueCol, p)
-    val ck = PlanAudit.checkpoint(sketch.fold(observed)(observed.withColumn("__gsig", _)))
-    val b = if (sketch.isEmpty) ck else ck.drop("__gsig")
-    val fresh = batchViews(ck, idCol, valueCol, p)
-    try {
+    PlanAudit.scope { s =>
+      val ck = s.checkpoint(sketch.fold(observed)(observed.withColumn("__gsig", _)))
+      val b = if (sketch.isEmpty) ck else ck.drop("__gsig")
+      val fresh = batchViews(ck, idCol, valueCol, p)
       val afterIndex = b.join(
         matched(fresh, indexExcluding(spark, root, b, idCol), p, threshold,
           within = false, "__dup_id"),
         b(idCol) === col("__dup_id"), "left_anti")
       val rest = restrict(fresh, afterIndex, idCol)
-      val keep = PlanAudit.checkpoint(afterIndex.join(
+      // the caller's to release, or the scope's if the append fails
+      val keep = s.keep(s.checkpoint(afterIndex.join(
         matched(rest, rest, p, threshold, within = true, "__drop_id"),
-        afterIndex(idCol) === col("__drop_id"), "left_anti"))
-      // keep is the caller's to release — but on an append failure no
-      // caller holds it, so release here
-      try {
-        val keepIds = keep.select(col(idCol).as("doc_id"))
-        val tok = AppendLedger.tokenFromParts(obs.get("c").asInstanceOf[Long],
-          obs.get("h1").asInstanceOf[java.math.BigDecimal],
-          obs.get("h2").asInstanceOf[java.math.BigDecimal])
-        AppendLedger.appendOnce(spark, path, tok) { repair =>
-          tables.foreach { t =>
-            val rows = fresh(t.name).join(keepIds, "doc_id")
-            val keys = "doc_id" +: t.partitionBy.toSeq
-            val missing = if (!repair) rows else rows.join(
-              spark.read.parquet(s"$root/${t.name}")
-                .select(keys.map(k => col(k).as(s"__have_$k")): _*),
-              keys.map(k => col(k) === col(s"__have_$k")).reduce(_ && _), "left_anti")
-            write(inOrder(missing, t), t, root, "append")
-          }
+        afterIndex(idCol) === col("__drop_id"), "left_anti")))
+      val keepIds = keep.select(col(idCol).as("doc_id"))
+      val tok = AppendLedger.tokenFromParts(obs.get("c").asInstanceOf[Long],
+        obs.get("h1").asInstanceOf[java.math.BigDecimal],
+        obs.get("h2").asInstanceOf[java.math.BigDecimal])
+      AppendLedger.appendOnce(spark, path, tok) { repair =>
+        tables.foreach { t =>
+          val rows = fresh(t.name).join(keepIds, "doc_id")
+          val keys = "doc_id" +: t.partitionBy.toSeq
+          val missing = if (!repair) rows else rows.join(
+            spark.read.parquet(s"$root/${t.name}")
+              .select(keys.map(k => col(k).as(s"__have_$k")): _*),
+            keys.map(k => col(k) === col(s"__have_$k")).reduce(_ && _), "left_anti")
+          write(inOrder(missing, t), t, root, "append")
         }
-      } catch { case e: Throwable => Dedup.releaseMaterialized(keep); throw e }
+      }
       keep
-    } finally Dedup.releaseMaterialized(ck)
+    }
   }
 
   /** Dry run of [[suppressAndIndex]], no side effects: (idCol,
@@ -346,21 +341,18 @@ private[api] abstract class BandedIndex(val name: String,
               threshold: Double = 0.0): DataFrame = {
     val spark = batch.sparkSession
     val (root, p) = resolve(spark, path)
-    val b = PlanAudit.checkpoint(batch)
-    val sig = PlanAudit.checkpoint(sigFrame(b, idCol, valueCol, p))
-    val fresh = views(sig)
     val (self, other) = explainNames
-    var idxBestChk: Option[DataFrame] = None
-    try {
-      val idxBest = PlanAudit.checkpoint(best(pairs(fresh,
+    PlanAudit.scope { s =>
+      val b = s.checkpoint(batch)
+      val fresh = views(s.checkpoint(sigFrame(b, idCol, valueCol, p)))
+      val idxBest = s.checkpoint(best(pairs(fresh,
         indexExcluding(spark, root, b, idCol), p, threshold, within = false, self, other)))
-      idxBestChk = Some(idxBest)
       val rest = restrict(fresh, b.join(idxBest, b(idCol) === idxBest(self), "left_anti"), idCol)
       val batchBest = best(pairs(rest, rest, p, threshold, within = true, self, other))
       // evidence aliases: __i<s>/__b<s> for the index and batch score
       val (is, bs) = (s"__i${scoreCol.head}", s"__b${scoreCol.head}")
-      // materialize BEFORE the finally releases the inputs it reads
-      PlanAudit.checkpoint(b.select(col(idCol))
+      // materialize BEFORE the scope releases the inputs it reads
+      s.keep(s.checkpoint(b.select(col(idCol))
         .join(idxBest.select(col(self).as(idCol), col("match_id").as("__im"),
           col(scoreCol).as(is)), Seq(idCol), "left")
         .join(batchBest.select(col(self).as(idCol), col("match_id").as("__bm"),
@@ -370,27 +362,7 @@ private[api] abstract class BandedIndex(val name: String,
             .when(col("__bm").isNotNull, lit("batch_dup"))
             .otherwise(lit("kept")).as("verdict"),
           coalesce(col("__im"), col("__bm")).as("match_id"),
-          coalesce(col(is), col(bs)).as(scoreCol)))
-    } finally (Seq(b, sig) ++ idxBestChk).foreach(Dedup.releaseMaterialized)
+          coalesce(col(is), col(bs)).as(scoreCol))))
+    }
   }
-
-  /** foreachBatch wrapper ([[Dedup.nearDupSuppressStream]]).
-    * Superseded versions are NOT vacuumed here — searchers may still
-    * hold a pre-swap resolution. */
-  def stream(stream: DataFrame, indexPath: String, outPath: String,
-             checkpointDir: String, compactEveryBatches: Int, ledgerKeepLast: Int)
-            (suppress: DataFrame => DataFrame): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keep = suppress(batch)
-        try keep.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally Dedup.releaseMaterialized(keep)
-        if (compactEveryBatches > 0 && (batchId + 1) % compactEveryBatches == 0) {
-          compact(batch.sparkSession, indexPath)
-          AppendLedger.vacuum(batch.sparkSession, indexPath, ledgerKeepLast)
-          ()
-        }
-      }
-      .start()
 }

@@ -181,18 +181,15 @@ object Dedup {
     * filter in the join, verify candidates with exact Jaccard.
     * Output: (doc_a, doc_b, jaccard), doc_a < doc_b, unordered.
     *
-    * Returns MATERIALIZED pairs (the suppressor contract,
-    * [[releaseMaterialized]]): the shingle sets feed four subplans, so
-    * they materialize once and are RELEASED before returning — the old
-    * internal `.cache()` pinned corpus-sized blocks for the JVM's
-    * lifetime in long-lived sessions. Consume the result, then call
-    * [[releaseMaterialized]]. */
+    * The shingle sets feed four subplans, so they materialize once.
+    * Returns MATERIALIZED pairs: consume, then [[releaseMaterialized]]. */
   def nearDupPairsExact(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", threshold: Double = 0.8,
                         shingle: Int = 3): DataFrame = {
-    val sets = PlanAudit.checkpoint(shingleSets(docs, idCol, textCol, shingle))
-    try PlanAudit.checkpoint(pairsFromSets(sets, threshold))
-    finally releaseMaterialized(sets)
+    PlanAudit.scope { s =>
+      val sets = s.checkpoint(shingleSets(docs, idCol, textCol, shingle))
+      s.keep(s.checkpoint(pairsFromSets(sets, threshold)))
+    }
   }
 
   /** The PPJoin body of [[nearDupPairsExact]] over an ALREADY-built
@@ -259,11 +256,9 @@ object Dedup {
                        shingle: Int = 3): DataFrame = {
     // sets feed the verify joins twice, the posting table feeds BOTH
     // candidate sides (prefix slice and full index): each materializes
-    // once and is released at exit; the result is returned MATERIALIZED
-    // under the [[releaseMaterialized]] contract (internal `.cache()`
-    // would pin corpus-sized blocks for the session)
-    val sets = PlanAudit.checkpoint(shingleSets(docs, idCol, textCol, shingle))
-    try {
+    // once; MATERIALIZED result
+    PlanAudit.scope { s =>
+      val sets = s.checkpoint(shingleSets(docs, idCol, textCol, shingle))
       val toks = sets.select(col("doc_id"), col("n"), explode(col("sh")).as("tok"))
       // ranked postings without the partition-wide window sort (r18,
       // guide §2.4/§1.2 — the buildContainmentIndex shape): dfc joins
@@ -277,38 +272,36 @@ object Dedup {
       // set) so the struct(dfc, tok) order is total — exactly the old
       // window's orderBy(dfc, tok) − 1.
       val dfc = toks.groupBy("tok").agg(count(lit(1)).as("dfc"))
-      val ranked = PlanAudit.checkpoint(
+      val ranked = s.checkpoint(
         toks.join(dfc, "tok")
           .groupBy(col("doc_id"), col("n"))
           .agg(sort_array(collect_list(struct(col("dfc"), col("tok")))).as("arr"))
           .select(col("doc_id"), col("n"), posexplode(col("arr")))
           .select(col("doc_id"), col("n"), col("col.tok").as("tok"),
             col("pos").cast("int").as("pos")))
-      try {
-        // candEps slack: see pairsFromSets — inexact t makes n·(1−t) land
-        // below exact integers; padding only loosens candidate generation
-        val prefix = ranked.filter(
-          col("pos") <= floor(col("n") * (1 - threshold) + candEps))
-        val cand = prefix.as("a").join(ranked.as("b"),
-            col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id") &&
-              col("b.n") >= col("a.n") * threshold - candEps &&
-              least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
-                col("a.n") * threshold - candEps)
-          .select(col("a.doc_id").as("doc_inner"), col("b.doc_id").as("doc_outer"))
-          .distinct()
-        PlanAudit.checkpoint(cand
-          .join(sets.select(col("doc_id").as("doc_inner"), col("sh").as("sh_a"),
-            col("n").as("n_inner")), "doc_inner")
-          .join(sets.select(col("doc_id").as("doc_outer"), col("sh").as("sh_b"),
-            col("n").as("n_outer")), "doc_outer")
-          .withColumn("inter", sortedIntersectCount(col("sh_a"), col("sh_b")))
-          .filter(col("inter").cast("double") / col("n_inner") >= threshold)
-          .select(col("doc_inner"), col("doc_outer"), col("n_inner"),
-            col("n_outer"),
-            round(col("inter").cast("double") / col("n_inner"), 6)
-              .as("containment")))
-      } finally releaseMaterialized(ranked)
-    } finally releaseMaterialized(sets)
+      // candEps slack: see pairsFromSets — inexact t makes n·(1−t) land
+      // below exact integers; padding only loosens candidate generation
+      val prefix = ranked.filter(
+        col("pos") <= floor(col("n") * (1 - threshold) + candEps))
+      val cand = prefix.as("a").join(ranked.as("b"),
+          col("a.tok") === col("b.tok") && col("a.doc_id") =!= col("b.doc_id") &&
+            col("b.n") >= col("a.n") * threshold - candEps &&
+            least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
+              col("a.n") * threshold - candEps)
+        .select(col("a.doc_id").as("doc_inner"), col("b.doc_id").as("doc_outer"))
+        .distinct()
+      s.keep(s.checkpoint(cand
+        .join(sets.select(col("doc_id").as("doc_inner"), col("sh").as("sh_a"),
+          col("n").as("n_inner")), "doc_inner")
+        .join(sets.select(col("doc_id").as("doc_outer"), col("sh").as("sh_b"),
+          col("n").as("n_outer")), "doc_outer")
+        .withColumn("inter", sortedIntersectCount(col("sh_a"), col("sh_b")))
+        .filter(col("inter").cast("double") / col("n_inner") >= threshold)
+        .select(col("doc_inner"), col("doc_outer"), col("n_inner"),
+          col("n_outer"),
+          round(col("inter").cast("double") / col("n_inner"), 6)
+            .as("containment"))))
+    }
   }
 
   /** Incremental form of [[containmentPairs]] — the ingestion filter:
@@ -332,14 +325,14 @@ object Dedup {
                                threshold: Double = 0.8,
                                shingle: Int = 3): DataFrame = {
     // one-shot form: both shingle-set frames and the ranked posting
-    // table feed multiple subplans — materialize once, RELEASE at exit,
-    // return MATERIALIZED survivors ([[releaseMaterialized]] contract).
+    // table feed multiple subplans — materialize once; MATERIALIZED
+    // survivors.
     // For a RECURRING ingestion filter use the persisted index
     // ([[buildContainmentIndex]] → [[containmentFilterAgainstIndex]]):
     // this form re-shingles the corpus per call by construction.
-    val cs = PlanAudit.checkpoint(shingleSets(corpus, idCol, textCol, shingle))
-    val fs = PlanAudit.checkpoint(shingleSets(fresh, idCol, textCol, shingle))
-    try {
+    PlanAudit.scope { s =>
+      val cs = s.checkpoint(shingleSets(corpus, idCol, textCol, shingle))
+      val fs = s.checkpoint(shingleSets(fresh, idCol, textCol, shingle))
       val toks = cs.select(col("doc_id"), col("n"), explode(col("sh")).as("tok"))
         .withColumn("side", lit("c"))
         .union(fs.select(col("doc_id"), col("n"), explode(col("sh")).as("tok"))
@@ -351,35 +344,33 @@ object Dedup {
       // length; positions bit-identical (tok unique per (side, doc);
       // struct(dfc, tok) order total = the old window's orderBy)
       val dfc = toks.groupBy("tok").agg(count(lit(1)).as("dfc"))
-      val ranked = PlanAudit.checkpoint(
+      val ranked = s.checkpoint(
         toks.join(dfc, "tok")
           .groupBy(col("side"), col("doc_id"), col("n"))
           .agg(sort_array(collect_list(struct(col("dfc"), col("tok")))).as("arr"))
           .select(col("side"), col("doc_id"), col("n"), posexplode(col("arr")))
           .select(col("side"), col("doc_id"), col("n"),
             col("col.tok").as("tok"), col("pos").cast("int").as("pos")))
-      try {
-        val freshPrefix = ranked.filter(col("side") === "f" &&
-          col("pos") <= floor(col("n") * (1 - threshold) + candEps))
-        val corpusPost = ranked.filter(col("side") === "c")
-        val cand = freshPrefix.as("a").join(corpusPost.as("b"),
-            col("a.tok") === col("b.tok") &&
-              col("b.n") >= col("a.n") * threshold - candEps &&
-              least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
-                col("a.n") * threshold - candEps)
-          .select(col("a.doc_id").as("doc_f"), col("b.doc_id").as("doc_c"))
-          .distinct()
-        val flagged = cand
-          .join(fs.select(col("doc_id").as("doc_f"), col("sh").as("sh_a"),
-            col("n").as("n_f")), "doc_f")
-          .join(cs.select(col("doc_id").as("doc_c"), col("sh").as("sh_b")),
-            "doc_c")
-          .filter(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
-            col("n_f") >= threshold)
-          .select(col("doc_f").as(idCol)).distinct()
-        PlanAudit.checkpoint(fresh.join(flagged, Seq(idCol), "left_anti"))
-      } finally releaseMaterialized(ranked)
-    } finally Seq(cs, fs).foreach(releaseMaterialized)
+      val freshPrefix = ranked.filter(col("side") === "f" &&
+        col("pos") <= floor(col("n") * (1 - threshold) + candEps))
+      val corpusPost = ranked.filter(col("side") === "c")
+      val cand = freshPrefix.as("a").join(corpusPost.as("b"),
+          col("a.tok") === col("b.tok") &&
+            col("b.n") >= col("a.n") * threshold - candEps &&
+            least(col("a.n") - col("a.pos"), col("b.n") - col("b.pos")) >=
+              col("a.n") * threshold - candEps)
+        .select(col("a.doc_id").as("doc_f"), col("b.doc_id").as("doc_c"))
+        .distinct()
+      val flagged = cand
+        .join(fs.select(col("doc_id").as("doc_f"), col("sh").as("sh_a"),
+          col("n").as("n_f")), "doc_f")
+        .join(cs.select(col("doc_id").as("doc_c"), col("sh").as("sh_b")),
+          "doc_c")
+        .filter(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
+          col("n_f") >= threshold)
+        .select(col("doc_f").as(idCol)).distinct()
+      s.keep(s.checkpoint(fresh.join(flagged, Seq(idCol), "left_anti")))
+    }
   }
 
   /** Persisted CONTAINMENT posting index — the artifact
@@ -518,14 +509,14 @@ object Dedup {
     val root = VersionedIndex.resolveRoot(spark, path)
     val shingle = readContainmentParams(spark, root)
     val dfreq = spark.read.parquet(s"$root/dfreq")
-    val sets = PlanAudit.checkpoint(shingleSets(docs, idCol, textCol, shingle))
-    try {
+    PlanAudit.scope { s =>
+      val sets = s.checkpoint(shingleSets(docs, idCol, textCol, shingle))
       sets.write.mode("append").parquet(s"$root/sketches")
       rankUnderFrozenOrder(
           sets.select(col("doc_id"), col("n"), explode(col("sh")).as("tok")),
           dfreq)
         .write.mode("append").parquet(s"$root/postings")
-    } finally releaseMaterialized(sets)
+    }
   }
 
   /** The containment INGESTION filter against a persisted index: drop
@@ -551,9 +542,9 @@ object Dedup {
     val root = VersionedIndex.resolveRoot(spark, path)
     val shingle = readContainmentParams(spark, root)
     val dfreq = spark.read.parquet(s"$root/dfreq")
-    val b = PlanAudit.checkpoint(fresh)
-    val fs = PlanAudit.checkpoint(shingleSets(b, idCol, textCol, shingle))
-    try {
+    PlanAudit.scope { s =>
+      val b = s.checkpoint(fresh)
+      val fs = s.checkpoint(shingleSets(b, idCol, textCol, shingle))
       val franked = rankUnderFrozenOrder(
         fs.select(col("doc_id"), col("n"), explode(col("sh")).as("tok")), dfreq)
       val freshPrefix = franked.filter(
@@ -576,9 +567,9 @@ object Dedup {
         .filter(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
           col("n_f") >= threshold)
         .select(col("doc_f").as("__flagged")).distinct()
-      PlanAudit.checkpoint(
-        b.join(flagged, b(idCol) === col("__flagged"), "left_anti"))
-    } finally Seq(b, fs).foreach(releaseMaterialized)
+      s.keep(s.checkpoint(
+        b.join(flagged, b(idCol) === col("__flagged"), "left_anti")))
+    }
   }
 
   /** Delete documents from a persisted containment index (takedowns):
@@ -595,13 +586,11 @@ object Dedup {
     readContainmentParams(spark, root) // loud on a missing index
     val sketches = spark.read.parquet(s"$root/sketches")
     val idType = sketches.schema("doc_id").dataType
-    val del = ids.select(col(idCol).cast(idType).as("__del_id")).distinct()
-      .localCheckpoint()
-    try {
+    PlanAudit.scope { s =>
+      val del = s.checkpoint(ids.select(col(idCol).cast(idType).as("__del_id")).distinct())
       val nDel = sketches
         .join(del, sketches("doc_id") === del("__del_id"), "left_semi").count()
-      if (nDel == 0) return 0L
-      VersionedIndex.rewrite(spark, path) { vdir =>
+      if (nDel > 0) VersionedIndex.rewrite(spark, path) { vdir =>
         spark.read.parquet(s"$root/params")
           .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
         spark.read.parquet(s"$root/dfreq")
@@ -615,7 +604,7 @@ object Dedup {
           .write.mode("overwrite").parquet(s"$vdir/postings")
       }
       nDel
-    } finally releaseMaterialized(del)
+    }
   }
 
   /** Compact a persisted containment index: per-batch appends leave a
@@ -769,15 +758,16 @@ object Dedup {
     // sets verify twice and the banded signatures feed both sides of
     // the candidate self-join: ONE combined-sketch pass materializes
     // both representations (r17 — two separate checkpoints re-shingled
-    // the corpus twice and cost two materialization jobs); released at
-    // exit; MATERIALIZED result, [[releaseMaterialized]]
-    val sk = PlanAudit.checkpoint(
-      sketchSig(docs, idCol, textCol, shingle, hashes, bands))
-    val sets = setsFromSig(sk)
-    val bb = bandsFromSig(sk)
-    try PlanAudit.checkpoint(verify(joinBack(
-      bandCandidates(bb, bb, ordered = true), sets, sets), threshold))
-    finally releaseMaterialized(sk)
+    // the corpus twice and cost two materialization jobs); MATERIALIZED
+    // result
+    PlanAudit.scope { s =>
+      val sk = s.checkpoint(
+        sketchSig(docs, idCol, textCol, shingle, hashes, bands))
+      val sets = setsFromSig(sk)
+      val bb = bandsFromSig(sk)
+      s.keep(s.checkpoint(verify(joinBack(
+        bandCandidates(bb, bb, ordered = true), sets, sets), threshold)))
+    }
   }
 
   /** Distinct (doc_a, doc_b) pairs colliding in some (band, bkey)
@@ -971,9 +961,10 @@ object Dedup {
                             compactEveryBatches: Int = 0,
                             ledgerKeepLast: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    NearDupIndex.stream(stream, indexPath, outPath, checkpointDir,
+    AppendLedger.suppressStream(stream, indexPath, outPath, checkpointDir,
       compactEveryBatches, ledgerKeepLast)(
-      nearDupSuppressAndIndex(_, indexPath, threshold, idCol, textCol))
+      nearDupSuppressAndIndex(_, indexPath, threshold, idCol, textCol))(
+      compactNearDupIndex(_, _))
 
   /** Integrity report for a persisted near-dup index — the check an
     * operator runs before trusting a store that outlived crashes,
@@ -1085,26 +1076,14 @@ object Dedup {
                           dedupAcross: Boolean = true): Long =
     NearDupIndex.merge(spark, pathA, pathB, outPath, dedupAcross, threshold)
 
-  /** Release the storage behind a MATERIALIZED result frame returned
-    * by [[nearDupSuppressAndIndex]] /
-    * [[graft.api.Similarity.semanticSuppressAndIndex]] once it has
-    * been consumed (written out / collected). The suppressors return
-    * `localCheckpoint()`'d survivors — necessary so callers can read
-    * them without re-planning over the already-grown index — and
-    * those blocks stay pinned until released: a long-running
-    * daily-batch JVM that never releases accumulates storage
-    * proportional to every survivor it ever processed. The streaming
-    * wrappers release automatically after the sink write; batch
-    * callers own the call. Reads the RDD id off the frame's OWN plan
-    * (LogicalRDD) — unpersisting by a global getPersistentRDDs diff
-    * would race concurrent threads caching on the same session and
-    * could truncate THEIR only copy of a checkpointed lineage. No-op
-    * on frames that are not checkpoint-backed. */
-  def releaseMaterialized(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.foreach(id => df.sparkSession.sparkContext.getPersistentRDDs
-      .get(id).foreach(_.unpersist(false)))
+  /** Release the storage behind a MATERIALIZED result frame (the
+    * `graft.api` package contract) once it has been consumed (written
+    * out / collected): a long-running JVM that never releases
+    * accumulates storage proportional to every result it ever made.
+    * The streaming wrappers release after each sink write; batch
+    * callers own the call. Idempotent, a no-op on frames that are not
+    * checkpoint-backed ([[PlanAudit.release]]). */
+  def releaseMaterialized(df: DataFrame): Unit = PlanAudit.release(df)
 
   /** Pigeonhole chunk layout: 64 bits partitioned into `chunksN`
     * NONEMPTY contiguous chunks, as (shift, mask) pairs. Bits are
@@ -1166,19 +1145,18 @@ object Dedup {
                    sigCol: String = "sig", maxHamming: Int = 3): DataFrame = {
     // the signature frame feeds both sides of the chunk self-join (and
     // may itself be an expensive projection, e.g. simHash64 over text):
-    // materialize once, release at exit; MATERIALIZED result,
-    // [[releaseMaterialized]]
-    val sg = PlanAudit.checkpoint(sigs.select(col(idCol), col(sigCol)))
-    try {
+    // materialize once; MATERIALIZED result
+    PlanAudit.scope { s =>
+      val sg = s.checkpoint(sigs.select(col(idCol), col(sigCol)))
       val chunks = sigChunks(sg, idCol, sigCol, maxHamming)
-      PlanAudit.checkpoint(chunks.as("a").join(chunks.as("b"),
+      s.keep(s.checkpoint(chunks.as("a").join(chunks.as("b"),
           col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
             col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
         .distinct()
-        .filter(col("hamming") <= maxHamming))
-    } finally releaseMaterialized(sg)
+        .filter(col("hamming") <= maxHamming)))
+    }
   }
 
   /** The hamming family of [[BandedIndex]]: the corpus' pigeonhole
@@ -1304,9 +1282,10 @@ object Dedup {
                             compactEveryBatches: Int = 0,
                             ledgerKeepLast: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    HammingIndex.stream(stream, indexPath, outPath, checkpointDir,
+    AppendLedger.suppressStream(stream, indexPath, outPath, checkpointDir,
       compactEveryBatches, ledgerKeepLast)(
-      hammingSuppressAndIndex(_, indexPath, idCol, sigCol))
+      hammingSuppressAndIndex(_, indexPath, idCol, sigCol))(
+      compactHammingIndex)
 
   /** [[nearDupIndexIntegrity]] for the hamming chunk store: exactly
     * maxHamming+1 chunk rows per doc (a missing chunk breaks the
@@ -1703,65 +1682,62 @@ object Dedup {
     val np = pairs.sparkSession.sessionState.conf.numShufflePartitions
     val sym = pairs.select(col("doc_a"), col("doc_b"))
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val edges = PlanAudit.checkpointHash(sym
-      .union(sym.select(col("doc_a"), col("doc_a").as("doc_b")).distinct())
-      .repartition(np, col("doc_b")), np, Seq("doc_b"))
-    var prev: Option[DataFrame] = None
-    var labels = edges.select(col("doc_a").as("node")).distinct()
-      .withColumn("label", col("node"))
-    // decimal(38,0) exact convergence sum: strictly decreasing until
-    // fixpoint (ids can be any long; 1e10 rows × 9e18 ids still fits
-    // 38 digits). r18: the sum rides the chase2 checkpoint job as an
-    // observe metric — the standalone labelSum aggregation was one
-    // extra job and one extra pass over the labels frame per iteration.
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // neighborhood min over the self-looped edges: the self-loop row
-      // carries the node's own label into the same aggregation,
-      // partially aggregated map-side before the exchange
-      val stepped = PlanAudit.checkpoint(edges
-        .join(labels, edges("doc_b") === labels("node"))
-        .groupBy(col("doc_a").as("node")).agg(min("label").as("label")))
-      // pointer doubling, chased twice: label := min(label,
-      // label(label)) — the join is keyed on the label (a member id
-      // whose row always exists, so exactly one match). As labels
-      // converge this key distribution degenerates toward the
-      // component minima (a giant component funnels its rows onto one
-      // key) — deliberately un-hinted so AQE's skew-join split (on by
-      // default) re-splits those partitions; the per-key match side is
-      // a single row, the duplicable case the splitter handles.
-      def chase(df: DataFrame,
-                obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
-        val byNode = df.select(col("node").as("pnode"), col("label").as("plabel"))
-        val joined = df
-          .join(byNode, df("label") === byNode("pnode"))
-          .select(df("node"), least(df("label"), col("plabel")).as("label"))
-        PlanAudit.checkpoint(obs.fold(joined)(o => joined.observe(o,
-          sum(col("label").cast("decimal(38,0)")).as("s"))))
+    PlanAudit.scope { s =>
+      val edges = s.checkpointHash(sym
+        .union(sym.select(col("doc_a"), col("doc_a").as("doc_b")).distinct())
+        .repartition(np, col("doc_b")), np, Seq("doc_b"))
+      var labels = edges.select(col("doc_a").as("node")).distinct()
+        .withColumn("label", col("node"))
+      // decimal(38,0) exact convergence sum: strictly decreasing until
+      // fixpoint (ids can be any long; 1e10 rows × 9e18 ids still fits
+      // 38 digits). r18: the sum rides the chase2 checkpoint job as an
+      // observe metric — the standalone labelSum aggregation was one
+      // extra job and one extra pass over the labels frame per iteration.
+      var prevSum: java.math.BigDecimal = null
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        // neighborhood min over the self-looped edges: the self-loop row
+        // carries the node's own label into the same aggregation,
+        // partially aggregated map-side before the exchange
+        val stepped = s.checkpoint(edges
+          .join(labels, edges("doc_b") === labels("node"))
+          .groupBy(col("doc_a").as("node")).agg(min("label").as("label")))
+        // pointer doubling, chased twice: label := min(label,
+        // label(label)) — the join is keyed on the label (a member id
+        // whose row always exists, so exactly one match). As labels
+        // converge this key distribution degenerates toward the
+        // component minima (a giant component funnels its rows onto one
+        // key) — deliberately un-hinted so AQE's skew-join split (on by
+        // default) re-splits those partitions; the per-key match side is
+        // a single row, the duplicable case the splitter handles.
+        def chase(df: DataFrame,
+                  obs: Option[org.apache.spark.sql.Observation]): DataFrame = {
+          val byNode = df.select(col("node").as("pnode"), col("label").as("plabel"))
+          val joined = df
+            .join(byNode, df("label") === byNode("pnode"))
+            .select(df("node"), least(df("label"), col("plabel")).as("label"))
+          s.checkpoint(obs.fold(joined)(o => joined.observe(o,
+            sum(col("label").cast("decimal(38,0)")).as("s"))))
+        }
+        val chased1 = chase(stepped, None)
+        s.release(stepped)
+        val sumObs = org.apache.spark.sql.Observation()
+        val next = chase(chased1, Some(sumObs))
+        s.release(chased1)
+        val labelSum = sumObs.get("s").asInstanceOf[java.math.BigDecimal]
+        converged = (labelSum == null && prevSum == null) ||
+          (labelSum != null && prevSum != null && labelSum.compareTo(prevSum) == 0)
+        prevSum = labelSum
+        s.release(labels)
+        labels = next
+        iter += 1
       }
-      val chased1 = chase(stepped, None)
-      releaseMaterialized(stepped)
-      val sumObs = org.apache.spark.sql.Observation()
-      val next = chase(chased1, Some(sumObs))
-      releaseMaterialized(chased1)
-      val s = sumObs.get("s").asInstanceOf[java.math.BigDecimal]
-      converged = (s == null && prevSum == null) ||
-        (s != null && prevSum != null && s.compareTo(prevSum) == 0)
-      prevSum = s
-      prev.foreach(releaseMaterialized)
-      prev = Some(next)
-      labels = next
-      iter += 1
+      require(converged,
+        s"connected-components did not converge within $maxIter iterations")
+      // the final labels stay MATERIALIZED for the caller
+      s.keep(labels).select(col("node").as("doc_id"), col("label").as("canonical_id"))
     }
-    // the edge materialization only feeds the loop — release it; the
-    // final labels stay MATERIALIZED for the caller
-    // ([[releaseMaterialized]] contract)
-    releaseMaterialized(edges)
-    require(converged,
-      s"connected-components did not converge within $maxIter iterations")
-    labels.select(col("node").as("doc_id"), col("label").as("canonical_id"))
   }
 
   /** Quality-aware survivor election over near-dup components: label
@@ -2245,10 +2221,10 @@ object Dedup {
     * are cliques of duplicate count, not corpus-sized); wedges are one
     * integer aggregation over the degree table, no float moments. */
   def triangleStats(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
+    val e = PlanAudit.checkpoint(pairs.select(
         least(col("doc_a"), col("doc_b")).as("lo"),
         greatest(col("doc_a"), col("doc_b")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct().localCheckpoint()
+      .filter(col("lo") =!= col("hi")).distinct())
     val deg = e.select(col("lo").as("node"))
       .union(e.select(col("hi").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))

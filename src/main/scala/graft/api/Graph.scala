@@ -47,62 +47,59 @@ object Graph {
     // edge rows now shuffle ONCE for the whole run; an iteration moves
     // only node-sized frames.
     val np = spark.sessionState.conf.numShufflePartitions
-    val e = PlanAudit.checkpointHash(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .repartition(np, col("src")), np, Seq("src"))
-    // repartition BEFORE distinct: HashPartitioning(node) satisfies the
-    // distinct's ClusteredDistribution, so the dedup aggregate runs on
-    // the pinned layout with no second exchange
-    val nodes = PlanAudit.checkpointHash(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .repartition(np, col("node")).distinct(), np, Seq("node"))
-    val n = nodes.count()
-    // exchange-free on top of e's declared (src, np) layout, which the
-    // aggregation preserves — declared again past its own checkpoint
-    val outDeg = PlanAudit.checkpointHash(
-      e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), np, Seq("src"))
-    // (1 − d) via exact decimals: 1 − 0.85 in DOUBLE is
-    // 0.15000000000000002, while every SQL engine's literal 0.15 is
-    // the nearest double to decimal 0.15 — BigDecimal.valueOf keeps
-    // the decimal form so both sides evaluate the SAME base constant
-    val oneMinusD = (java.math.BigDecimal.ONE
-      .subtract(java.math.BigDecimal.valueOf(damping))).doubleValue()
-    var ranks = nodes.select(col("node"),
-      round(lit(1.0) / lit(n.toDouble), 12).as("score"))
-    // the LOOP-OWNED checkpoint behind `ranks` — None for the initial
-    // frame, whose first LogicalRDD is the shared `nodes` checkpoint
-    // and must never be truncated from here
-    var ranksOwned: Option[DataFrame] = None
-    (1 to iters).foreach { _ =>
-      val contribs = e.join(ranks, e("src") === ranks("node"))
-        .join(outDeg, "src")
-        .select(col("dst").as("node"),
-          round(col("score") / col("out_deg"), 12)
-            .cast("decimal(28,12)").as("c"))
-      // the ONE edge-sized exchange an iteration fundamentally needs
-      // (mass moves from src-partitioning to dst-keying), partially
-      // aggregated map-side; the planner exchanges it straight to
-      // nodes' declared (node, np) layout, so the left join below adds
-      // no further shuffle
-      val sums = contribs.groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-      // eager checkpoint: `next` is materialized HERE, so the
-      // superseded iteration's blocks are safe to release below
-      val next = PlanAudit.checkpoint(nodes.join(sums, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(oneMinusD / n.toDouble) + lit(damping) *
-            coalesce(col("in_sum").cast("double"), lit(0.0)), 12).as("score")))
-      ranksOwned.foreach(Dedup.releaseMaterialized)
-      ranksOwned = Some(next)
-      ranks = next
+    PlanAudit.scope { s =>
+      val e = s.checkpointHash(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+          .repartition(np, col("src")), np, Seq("src"))
+      // repartition BEFORE distinct: HashPartitioning(node) satisfies the
+      // distinct's ClusteredDistribution, so the dedup aggregate runs on
+      // the pinned layout with no second exchange
+      val nodes = s.checkpointHash(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node")))
+        .repartition(np, col("node")).distinct(), np, Seq("node"))
+      val n = nodes.count()
+      // exchange-free on top of e's declared (src, np) layout, which the
+      // aggregation preserves — declared again past its own checkpoint
+      val outDeg = s.checkpointHash(
+        e.groupBy(col("src")).agg(count(lit(1)).as("out_deg")), np, Seq("src"))
+      // (1 − d) via exact decimals: 1 − 0.85 in DOUBLE is
+      // 0.15000000000000002, while every SQL engine's literal 0.15 is
+      // the nearest double to decimal 0.15 — BigDecimal.valueOf keeps
+      // the decimal form so both sides evaluate the SAME base constant
+      val oneMinusD = (java.math.BigDecimal.ONE
+        .subtract(java.math.BigDecimal.valueOf(damping))).doubleValue()
+      var ranks = nodes.select(col("node"),
+        round(lit(1.0) / lit(n.toDouble), 12).as("score"))
+      (1 to iters).foreach { _ =>
+        val contribs = e.join(ranks, e("src") === ranks("node"))
+          .join(outDeg, "src")
+          .select(col("dst").as("node"),
+            round(col("score") / col("out_deg"), 12)
+              .cast("decimal(28,12)").as("c"))
+        // the ONE edge-sized exchange an iteration fundamentally needs
+        // (mass moves from src-partitioning to dst-keying), partially
+        // aggregated map-side; the planner exchanges it straight to
+        // nodes' declared (node, np) layout, so the left join below adds
+        // no further shuffle
+        val sums = contribs.groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
+        // eager checkpoint: `next` is materialized HERE, so the
+        // superseded iterate is safe to release (the initial frame is no pin)
+        val next = s.checkpoint(nodes.join(sums, Seq("node"), "left")
+          .select(col("node"),
+            round(lit(oneMinusD / n.toDouble) + lit(damping) *
+              coalesce(col("in_sum").cast("double"), lit(0.0)), 12).as("score")))
+        s.release(ranks)
+        ranks = next
+      }
+      // Final scores project at 6 decimals (the package rule): engines
+      // agree on a double's shortest representation but can disagree on
+      // ROUNDING it at digit 12 (half-up over the decimal string vs
+      // scaled float math) — the 12-digit intermediate keeps per-
+      // iteration error ~1e-12, far below the 6-digit output grain, so
+      // the output is bit-stable cross-engine while iteration dynamics
+      // stay fine-grained. The loop-invariant pins are released on exit.
+      s.keep(ranks).select(col("node"), round(col("score"), 6).as("score"))
     }
-    // Final scores project at 6 decimals (the package rule): engines
-    // agree on a double's shortest representation but can disagree on
-    // ROUNDING it at digit 12 (half-up over the decimal string vs
-    // scaled float math) — the 12-digit intermediate keeps per-
-    // iteration error ~1e-12, far below the 6-digit output grain, so
-    // the output is bit-stable cross-engine while iteration dynamics
-    // stay fine-grained.
-    ranks.select(col("node"), round(col("score"), 6).as("score"))
   }
 
   /** Fixed-iteration SYNCHRONOUS label propagation — community
@@ -146,43 +143,43 @@ object Graph {
     // under AQE). The edge rows shuffle ONCE for the whole run instead
     // of once per iteration.
     val np = spark.sessionState.conf.numShufflePartitions
-    val e0 = PlanAudit.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // repartition BEFORE distinct: HashPartitioning(node) satisfies the
-    // distinct's ClusteredDistribution, so the dedup aggregate runs on
-    // the pinned layout with no second exchange (same for `e` on src)
-    val nodes = PlanAudit.checkpointHash(e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node")))
-      .repartition(np, col("node")).distinct(), np, Seq("node"))
-    // the self-vote: one implicit self-loop per node (deduped against
-    // any explicit ones so a self-edge never double-counts)
-    val e = PlanAudit.checkpointHash(e0.union(nodes.select(col("node").as("src"),
-      col("node").as("dst")))
-      .repartition(np, col("src")).distinct(), np, Seq("src"))
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    var labelsOwned: Option[DataFrame] = None
-    (1 to iters).foreach { _ =>
-      val cand = e.join(labels, e("src") === labels("node"))
-        .groupBy(col("dst").as("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      // argmax by (cnt desc, label asc) as ONE partially-aggregating
-      // min(struct(-cnt, label)) — selects exactly the row the previous
-      // row_number window picked (count desc, then SMALLEST label; the
-      // struct order is total, so no tie can flap), without the
-      // window's node-keyed sort and with map-side partial aggregation
-      // ahead of the exchange.
-      val best = cand
-        .groupBy(col("node"))
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("b"))
-        .select(col("node"), col("b.l").as("new_label"))
-      val next = PlanAudit.checkpoint(labels.join(best, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("new_label"), col("label")).as("label")))
-      labelsOwned.foreach(Dedup.releaseMaterialized)
-      labelsOwned = Some(next)
-      labels = next
+    PlanAudit.scope { s =>
+      val e0 = s.checkpoint(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+      // repartition BEFORE distinct: HashPartitioning(node) satisfies the
+      // distinct's ClusteredDistribution, so the dedup aggregate runs on
+      // the pinned layout with no second exchange (same for `e` on src)
+      val nodes = s.checkpointHash(e0.select(col("src").as("node"))
+        .union(e0.select(col("dst").as("node")))
+        .repartition(np, col("node")).distinct(), np, Seq("node"))
+      // the self-vote: one implicit self-loop per node (deduped against
+      // any explicit ones so a self-edge never double-counts)
+      val e = s.checkpointHash(e0.union(nodes.select(col("node").as("src"),
+        col("node").as("dst")))
+        .repartition(np, col("src")).distinct(), np, Seq("src"))
+      var labels = nodes.select(col("node"), col("node").as("label"))
+      (1 to iters).foreach { _ =>
+        val cand = e.join(labels, e("src") === labels("node"))
+          .groupBy(col("dst").as("node"), col("label"))
+          .agg(count(lit(1)).as("cnt"))
+        // argmax by (cnt desc, label asc) as ONE partially-aggregating
+        // min(struct(-cnt, label)) — selects exactly the row the previous
+        // row_number window picked (count desc, then SMALLEST label; the
+        // struct order is total, so no tie can flap), without the
+        // window's node-keyed sort and with map-side partial aggregation
+        // ahead of the exchange.
+        val best = cand
+          .groupBy(col("node"))
+          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l"))).as("b"))
+          .select(col("node"), col("b.l").as("new_label"))
+        val next = s.checkpoint(labels.join(best, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("new_label"), col("label")).as("label")))
+        s.release(labels)
+        labels = next
+      }
+      s.keep(labels)
     }
-    labels
   }
 
   /** Per-node degree profile: out/in degrees and the dangling flag —

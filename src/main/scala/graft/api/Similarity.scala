@@ -148,43 +148,43 @@ object Similarity {
                         // 12 is the knee (q70 contracts recall ≥ 0.3)
                         tables: Int = 12, planes: Int = 6): DataFrame = {
     // normed vectors feed the signature projection plus two re-attach
-    // joins: materialize once, release at exit (Dedup's batch-operator
-    // discipline); MATERIALIZED result, Dedup.releaseMaterialized
-    val e = PlanAudit.checkpoint(withNorm(emb, idCol, vecCol))
-    try {
-    // dimension probe: one metadata-sized lookup so the plane weights
-    // can be precomputed as literals (hyperplaneSignatureFast). An
-    // empty corpus short-circuits to an empty result with the standard
-    // schema — head() on nothing would throw, unlike the exact baseline
-    val probe = e.select(size(col("embedding"))).head(1)
-    if (probe.isEmpty) return emptyTopK(emb.sparkSession, e)
-    val dim = probe.head.getInt(0)
-    // Signature rows carry ONLY (vec_id, tbl, sig): an A/B that carried
-    // the embedding + norm through the collision join (to skip the
-    // re-attach joins below) was ~2× slower — the join materializes
-    // both payloads into every candidate row (candidates × 2×256 B of
-    // row copying), which dwarfs the two id-only candidate shuffles it
-    // saves. Ids through the collision join, payloads re-attached by
-    // keyed join, is the right shape at every scale.
-    val sigs = e.select(col("vec_id"),
-        explode(array((0 until tables).map(t => struct(lit(t).as("tbl"),
-          hyperplaneSignatureFast(col("embedding"), planes, t, dim).as("sig"))): _*)).as("ts"))
-      .select(col("vec_id"), col("ts.tbl").as("tbl"), col("ts.sig").as("sig"))
-    // no distinct() on the candidate pairs: a pair colliding in t tables
-    // appears t times with the SAME deterministic cosine, and the top-k
-    // aggregator dedupes ids inside its bounded buffers — skipping a
-    // full exchange of the multi-million-row pair set at the price of
-    // re-scoring duplicates (one codegen'd dot each)
-    val cand = sigs.as("a").join(sigs.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"))
-    val pairs = cand
-      .join(e.select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na")), "vec_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"), col("nrm").as("nb")), "neighbor_id")
-      .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
-    PlanAudit.checkpoint(topK(pairs, k))
-    } finally Dedup.releaseMaterialized(e)
+    // joins: materialize once; MATERIALIZED result
+    PlanAudit.scope { s =>
+      val e = s.checkpoint(withNorm(emb, idCol, vecCol))
+      // dimension probe: one metadata-sized lookup so the plane weights
+      // can be precomputed as literals (hyperplaneSignatureFast). An
+      // empty corpus short-circuits to an empty result with the standard
+      // schema — head() on nothing would throw, unlike the exact baseline
+      val probe = e.select(size(col("embedding"))).head(1)
+      if (probe.isEmpty) emptyTopK(emb.sparkSession, e) else {
+        val dim = probe.head.getInt(0)
+        // Signature rows carry ONLY (vec_id, tbl, sig): an A/B that carried
+        // the embedding + norm through the collision join (to skip the
+        // re-attach joins below) was ~2× slower — the join materializes
+        // both payloads into every candidate row (candidates × 2×256 B of
+        // row copying), which dwarfs the two id-only candidate shuffles it
+        // saves. Ids through the collision join, payloads re-attached by
+        // keyed join, is the right shape at every scale.
+        val sigs = e.select(col("vec_id"),
+            explode(array((0 until tables).map(t => struct(lit(t).as("tbl"),
+              hyperplaneSignatureFast(col("embedding"), planes, t, dim).as("sig"))): _*)).as("ts"))
+          .select(col("vec_id"), col("ts.tbl").as("tbl"), col("ts.sig").as("sig"))
+        // no distinct() on the candidate pairs: a pair colliding in t tables
+        // appears t times with the SAME deterministic cosine, and the top-k
+        // aggregator dedupes ids inside its bounded buffers — skipping a
+        // full exchange of the multi-million-row pair set at the price of
+        // re-scoring duplicates (one codegen'd dot each)
+        val cand = sigs.as("a").join(sigs.as("b"),
+            col("a.tbl") === col("b.tbl") && col("a.sig") === col("b.sig") &&
+              col("a.vec_id") =!= col("b.vec_id"))
+          .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"))
+        val pairs = cand
+          .join(e.select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na")), "vec_id")
+          .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("eb"), col("nrm").as("nb")), "neighbor_id")
+          .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
+        s.keep(s.checkpoint(topK(pairs, k)))
+      }
+    }
   }
 
   /** Fit the coarse k-means quantizer DRIVER-SIDE on a bounded,
@@ -288,30 +288,30 @@ object Similarity {
                  seed: Long = 42, maxIter: Int = 5): DataFrame = {
     require(nprobe >= 1 && nprobe <= cells)
     // normed vectors feed the quantizer sample, the assignment, and
-    // both join sides: materialize once, release at exit;
-    // MATERIALIZED result, Dedup.releaseMaterialized
-    val e = PlanAudit.checkpoint(withNorm(emb, idCol, vecCol))
-    try {
+    // both join sides: materialize once; MATERIALIZED result
+    PlanAudit.scope { s =>
+      val e = s.checkpoint(withNorm(emb, idCol, vecCol))
       // empty corpus → empty result (there is nothing to fit)
-      if (e.head(1).isEmpty) return emptyTopK(emb.sparkSession, e)
-      val centroids = fitCentroids(e, cells, seed, maxIter)
-      val withCell = e.withColumn("cell", nearestCell(col("embedding"), centroids))
-      val probeSide =
-        if (nprobe == 1)
-          withCell.select(col("cell"), col("vec_id"),
-            col("embedding").as("ea"), col("nrm").as("na"))
-        else
-          e.select(col("vec_id"), col("embedding"), col("nrm"),
-              explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
-            .select(col("cell"), col("vec_id"),
+      if (e.head(1).isEmpty) emptyTopK(emb.sparkSession, e) else {
+        val centroids = fitCentroids(e, cells, seed, maxIter)
+        val withCell = e.withColumn("cell", nearestCell(col("embedding"), centroids))
+        val probeSide =
+          if (nprobe == 1)
+            withCell.select(col("cell"), col("vec_id"),
               col("embedding").as("ea"), col("nrm").as("na"))
-      val b = withCell.select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("eb"), col("nrm").as("nb"))
-      val pairs = probeSide.join(b, Seq("cell"))
-        .filter(col("vec_id") =!= col("neighbor_id"))
-        .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
-      PlanAudit.checkpoint(topK(pairs, k))
-    } finally Dedup.releaseMaterialized(e)
+          else
+            e.select(col("vec_id"), col("embedding"), col("nrm"),
+                explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
+              .select(col("cell"), col("vec_id"),
+                col("embedding").as("ea"), col("nrm").as("na"))
+        val b = withCell.select(col("cell"), col("vec_id").as("neighbor_id"),
+          col("embedding").as("eb"), col("nrm").as("nb"))
+        val pairs = probeSide.join(b, Seq("cell"))
+          .filter(col("vec_id") =!= col("neighbor_id"))
+          .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
+        s.keep(s.checkpoint(topK(pairs, k)))
+      }
+    }
   }
 
   /** Build a PERSISTENT IVF index under `path`: fit the coarse
@@ -750,19 +750,18 @@ object Similarity {
     // the batch and its probed/assigned projections each feed 2+
     // subplans (probed-cells collect + flag join; both sides of the
     // cell-keyed within-batch join; the append) — materialize once,
-    // release at exit, like the text-side twin. r18: the append
-    // ledger's token aggregates ride this checkpoint as observe
-    // metrics instead of a standalone aggregation job per commit.
+    // like the text-side twin. r18: the append ledger's token
+    // aggregates ride this checkpoint as observe metrics instead of a
+    // standalone aggregation job per commit.
     val tokObs = org.apache.spark.sql.Observation()
     val tokAggs = AppendLedger.tokenAggs(idCol)
-    val b = PlanAudit.checkpoint(batch.observe(tokObs, tokAggs.head.as("c"),
-      tokAggs(1).as("h1"), tokAggs(2).as("h2")))
-    val q = PlanAudit.checkpoint(
-      withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
-        .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
-          explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
-    var afterIndexChk: Option[DataFrame] = None
-    try {
+    PlanAudit.scope { s =>
+      val b = s.checkpoint(batch.observe(tokObs, tokAggs.head.as("c"),
+        tokAggs(1).as("h1"), tokAggs(2).as("h2")))
+      val q = s.checkpoint(
+        withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
+          .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
+            explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
       val bIds = b.select(col(idCol).as("__bid")).distinct()
       val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
       val index = spark.read.parquet(s"$root/vectors")
@@ -785,69 +784,59 @@ object Similarity {
       // operator. One commit-sized localCheckpoint buys flag-join-
       // exactly-once; results are identical (same rows, same plan
       // below the checkpoint).
-      val afterIndex = PlanAudit.checkpoint(
+      val afterIndex = s.checkpoint(
         b.join(flagged, b(idCol) === col("__dup_id"), "left_anti"))
-      afterIndexChk = Some(afterIndex)
       // step-1 survivors at their ASSIGNED cell — the indexed role for
       // the within-batch pass, and (restricted to the final survivors)
       // exactly the rows the append writes
-      val aAssigned = PlanAudit.checkpoint(
+      val aAssigned = s.checkpoint(
         withNorm(afterIndex.filter(col(vecCol).isNotNull), idCol, vecCol)
           .withColumn("cell", nearestCell(col("embedding"), centroids)))
-      val keep =
-        try {
-          // step 2 — cell-keyed, never pairwise: the higher-id side
-          // probes via the assignments already computed in q; the
-          // lower-id side sits at its assigned cell, as if indexed
-          val xProbe = q.join(
-            afterIndex.select(col(idCol).as("vec_id")), Seq("vec_id"))
-          val dropped = xProbe.as("x").join(aAssigned.as("y"),
-              col("x.cell") === col("y.cell") &&
-                col("y.vec_id") < col("x.vec_id") &&
-                roundedAtLeast(cosinePrenormed(
-                  dot(col("x.ea"), col("y.embedding")),
-                  col("x.na"), col("y.nrm")), threshold))
-            .select(col("x.vec_id").as("__drop_id")).distinct()
-          PlanAudit.checkpoint(afterIndex
-            .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti"))
-        } catch {
-          case t: Throwable => Dedup.releaseMaterialized(aAssigned); throw t
-        }
-      // keep is the caller's to consume then releaseMaterialized; on
-      // an append failure no caller holds it — release here
-      try {
-        val toIndex = aAssigned.join(
-          keep.select(col(idCol).as("vec_id")), Seq("vec_id"))
-        AppendLedger.appendOnce(spark, path,
-            AppendLedger.tokenFromParts(
-              tokObs.get("c").asInstanceOf[Long],
-              tokObs.get("h1").asInstanceOf[java.math.BigDecimal],
-              tokObs.get("h2").asInstanceOf[java.math.BigDecimal])) { repair =>
-          val rows =
-            if (!repair) toIndex
-            else {
-              // crash-window repair: write only ids missing from their
-              // assigned cells (cell-pruned id-column read). Unlike the
-              // band/chunk stores this needs NO committer atomicity: a
-              // vector has exactly ONE row, at its deterministically
-              // assigned cell, so a doc-granular diff pruned to the
-              // batch's assigned cells is row-exact.
-              val assigned = toIndex.select("cell").distinct()
-                .collect().map(_.getInt(0)).toSeq
-              val have = spark.read.parquet(s"$root/vectors")
-                .filter(if (assigned.isEmpty) lit(false)
-                        else col("cell").isin(assigned: _*))
-                .select(col("vec_id").as("__have")).distinct()
-              toIndex.join(have, col("vec_id") === col("__have"), "left_anti")
-            }
-          rows.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-            .repartition(col("cell")) // one file set per cell per batch
-            .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
-        }
-      } catch { case t: Throwable => Dedup.releaseMaterialized(keep); throw t }
-      finally Dedup.releaseMaterialized(aAssigned)
+      // step 2 — cell-keyed, never pairwise: the higher-id side
+      // probes via the assignments already computed in q; the
+      // lower-id side sits at its assigned cell, as if indexed
+      val xProbe = q.join(
+        afterIndex.select(col(idCol).as("vec_id")), Seq("vec_id"))
+      val dropped = xProbe.as("x").join(aAssigned.as("y"),
+          col("x.cell") === col("y.cell") &&
+            col("y.vec_id") < col("x.vec_id") &&
+            roundedAtLeast(cosinePrenormed(
+              dot(col("x.ea"), col("y.embedding")),
+              col("x.na"), col("y.nrm")), threshold))
+        .select(col("x.vec_id").as("__drop_id")).distinct()
+      // the caller's to release, or the scope's if the append fails
+      val keep = s.keep(s.checkpoint(afterIndex
+        .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti")))
+      val toIndex = aAssigned.join(
+        keep.select(col(idCol).as("vec_id")), Seq("vec_id"))
+      AppendLedger.appendOnce(spark, path,
+          AppendLedger.tokenFromParts(
+            tokObs.get("c").asInstanceOf[Long],
+            tokObs.get("h1").asInstanceOf[java.math.BigDecimal],
+            tokObs.get("h2").asInstanceOf[java.math.BigDecimal])) { repair =>
+        val rows =
+          if (!repair) toIndex
+          else {
+            // crash-window repair: write only ids missing from their
+            // assigned cells (cell-pruned id-column read). Unlike the
+            // band/chunk stores this needs NO committer atomicity: a
+            // vector has exactly ONE row, at its deterministically
+            // assigned cell, so a doc-granular diff pruned to the
+            // batch's assigned cells is row-exact.
+            val assigned = toIndex.select("cell").distinct()
+              .collect().map(_.getInt(0)).toSeq
+            val have = spark.read.parquet(s"$root/vectors")
+              .filter(if (assigned.isEmpty) lit(false)
+                      else col("cell").isin(assigned: _*))
+              .select(col("vec_id").as("__have")).distinct()
+            toIndex.join(have, col("vec_id") === col("__have"), "left_anti")
+          }
+        rows.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
+          .repartition(col("cell")) // one file set per cell per batch
+          .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
+      }
       keep
-    } finally (Seq(b, q) ++ afterIndexChk).foreach(Dedup.releaseMaterialized)
+    }
   }
 
   /** DRY-RUN of [[semanticSuppressAndIndex]] —
@@ -875,13 +864,12 @@ object Similarity {
     val centroids = readCentroids(spark, root)
     require(nprobe >= 1 && nprobe <= centroids.length,
       s"nprobe must be in [1, ${centroids.length}]")
-    val b = PlanAudit.checkpoint(batch)
-    val q = PlanAudit.checkpoint(
-      withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
-        .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
-          explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
-    var idxBestChk: Option[DataFrame] = None
-    try {
+    PlanAudit.scope { s =>
+      val b = s.checkpoint(batch)
+      val q = s.checkpoint(
+        withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
+          .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
+            explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
       val bIds = b.select(col(idCol).as("__bid")).distinct()
       val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
       val index = spark.read.parquet(s"$root/vectors")
@@ -895,7 +883,7 @@ object Similarity {
           min(struct((lit(1d) - col("cos")).as("negc"),
             col("mid").as("mid"))).as("w"))
         .select(col("vec_id"), col("w.mid").as("match_id"), col("score"))
-      val idxBest = PlanAudit.checkpoint(bestMatch(q.join(index, Seq("cell"))
+      val idxBest = s.checkpoint(bestMatch(q.join(index, Seq("cell"))
         .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")),
           col("na"), col("nb")))
         // cheap unrounded pre-filter, then the exact rounded compare —
@@ -904,7 +892,6 @@ object Similarity {
         .withColumn("cos", round(col("cos"), 6))
         .filter(col("cos") >= threshold)
         .select(col("vec_id"), col("__iid").as("mid"), col("cos"))))
-      idxBestChk = Some(idxBest)
       val afterIndex =
         b.join(idxBest, b(idCol) === idxBest("vec_id"), "left_anti")
       // within-batch candidates: the real pass's cell-keyed geometry —
@@ -926,7 +913,7 @@ object Similarity {
         .filter(col("cos") >= threshold)
         .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("mid"),
           col("cos")))
-      PlanAudit.checkpoint(b.select(col(idCol))
+      s.keep(s.checkpoint(b.select(col(idCol))
         .join(idxBest.select(col("vec_id").as(idCol),
           col("match_id").as("__im"), col("score").as("__is")), Seq(idCol), "left")
         .join(batchBest.select(col("vec_id").as(idCol),
@@ -936,8 +923,8 @@ object Similarity {
             .when(col("__bm").isNotNull, lit("batch_dup"))
             .otherwise(lit("kept")).as("verdict"),
           coalesce(col("__im"), col("__bm")).as("match_id"),
-          coalesce(col("__is"), col("__bs")).as("score")))
-    } finally (Seq(b, q) ++ idxBestChk).foreach(Dedup.releaseMaterialized)
+          coalesce(col("__is"), col("__bs")).as("score"))))
+    }
   }
 
   /** Compact a persisted IVF index — layout-only maintenance for the
@@ -1090,12 +1077,12 @@ object Similarity {
     require(nprobe >= 1 && nprobe <= cA.length,
       s"nprobe must be in [1, ${cA.length}]")
     requireDisjointVecIds(spark, rootA, rootB, pathA, pathB)
-    val dropB =
-      if (dedupAcross)
-        crossSemanticPairsCore(spark, rootA, rootB, cA, threshold, nprobe)
-          .select(col("vec_b").as("__drop_id")).distinct().localCheckpoint()
-      else spark.range(0).select(col("id").as("__drop_id"))
-    try {
+    PlanAudit.scope { s =>
+      val dropB =
+        if (dedupAcross)
+          s.checkpoint(crossSemanticPairsCore(spark, rootA, rootB, cA, threshold, nprobe)
+            .select(col("vec_b").as("__drop_id")).distinct())
+        else spark.range(0).select(col("id").as("__drop_id"))
       val nDrop = if (dedupAcross) dropB.count() else 0L
       VersionedIndex.rewrite(spark, outPath) { target =>
         spark.read.parquet(s"$rootA/centroids")
@@ -1111,7 +1098,7 @@ object Similarity {
           .write.mode("overwrite").partitionBy("cell").parquet(s"$target/vectors")
       }
       nDrop
-    } finally Dedup.releaseMaterialized(dropB)
+    }
   }
 
   /** Streaming semantic suppression — [[graft.api.Dedup.nearDupSuppressStream]]
@@ -1137,22 +1124,10 @@ object Similarity {
                              compactEveryBatches: Int = 0,
                              ledgerKeepLast: Int = 100000)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val keep = semanticSuppressAndIndex(batch, indexPath, threshold,
-          nprobe, idCol, vecCol)
-        try keep.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-        finally Dedup.releaseMaterialized(keep)
-        if (compactEveryBatches > 0 &&
-            (batchId + 1) % compactEveryBatches == 0) {
-          compactIvfIndex(batch.sparkSession, indexPath)
-          Dedup.vacuumSuppressorAppendLedger(batch.sparkSession, indexPath,
-            ledgerKeepLast)
-          ()
-        }
-      }
-      .start()
+    AppendLedger.suppressStream(stream, indexPath, outPath, checkpointDir,
+      compactEveryBatches, ledgerKeepLast)(
+      semanticSuppressAndIndex(_, indexPath, threshold, nprobe, idCol, vecCol))(
+      compactIvfIndex)
 
   /** Integrity report for a persisted IVF index
     * ([[graft.api.Dedup.nearDupIndexIntegrity]] for the cell store):
@@ -1228,10 +1203,10 @@ object Similarity {
     * cells (anti-join + dynamic partition overwrite), and explicitly
     * remove cells the delete empties — dynamic overwrite writes no
     * rows for them, and a leftover directory would keep serving the
-    * old rows. The survivor frame is localCheckpoint'd: the rewrite
+    * old rows. The survivor frame is checkpointed: the rewrite
     * overwrites the very partitions it reads (Spark rejects a
     * file-source self-overwrite) and materialization stays bounded at
-    * the affected cells; released with [[Dedup.releaseMaterialized]]. */
+    * the affected cells; released when the rewrite's scope exits. */
   private def deleteByIdFromCellStore(spark: org.apache.spark.sql.SparkSession,
                                       store: String, del: DataFrame,
                                       idName: String): Long = {
@@ -1242,10 +1217,9 @@ object Similarity {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (affected.isEmpty) return 0L
     val cells = affected.keys.toSeq
-    val survivors = rows.filter(col("cell").isin(cells: _*))
-      .join(del, col(idName) === del("__del_id"), "left_anti")
-      .localCheckpoint()
-    try {
+    PlanAudit.scope { s =>
+      val survivors = s.checkpoint(rows.filter(col("cell").isin(cells: _*))
+        .join(del, col(idName) === del("__del_id"), "left_anti"))
       val present = survivors.select(col("cell")).distinct()
         .collect().map(_.getInt(0)).toSet
       if (present.nonEmpty)
@@ -1260,7 +1234,7 @@ object Similarity {
           p.getFileSystem(conf).delete(p, true)
         }
       }
-    } finally Dedup.releaseMaterialized(survivors)
+    }
     affected.values.sum
   }
 
@@ -1753,13 +1727,13 @@ object Similarity {
     // edges materialized ONCE (id pairs only — bounded by the actual
     // near-dup count, not the corpus): the emptiness probe and the
     // component resolution would otherwise each evaluate the cell
-    // self-join; blocks are freed when the frame is GC'd (the keepOne
-    // pattern, api cache contract)
-    val pairs = a.join(b, Seq("cell")).filter(col("doc_a") < col("doc_b"))
+    // self-join. The returned frame reads this pin lazily, so its blocks
+    // are freed when the frame is GC'd (the api package's GC-owned
+    // exception)
+    val pairs = PlanAudit.checkpoint(a.join(b, Seq("cell")).filter(col("doc_a") < col("doc_b"))
       .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")))
       .filter(col("cos") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint()
+      .select(col("doc_a"), col("doc_b")))
     if (pairs.isEmpty) return emb
     val dropped = graft.api.Dedup.keepOne(pairs)
       .filter(col("doc_id") =!= col("canonical_id"))

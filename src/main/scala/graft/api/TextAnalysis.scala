@@ -1220,14 +1220,12 @@ object TextAnalysis {
     require(alpha > 0, s"alpha must be positive for smoothing, got $alpha")
     val buckets = math.pow(2.0, 32) // 16^8 hashed feature space
     // the raw corpus' gram table feeds its OWN count fit AND the
-    // scoring join — materialize it once (the batch-operator
-    // checkpoint-and-release discipline) instead of exploding +
-    // md5-hashing the corpus text twice in one plan; released at exit,
-    // result returned MATERIALIZED ([[graft.api.Dedup.releaseMaterialized]])
-    val grams = graft.api.PlanAudit.checkpoint(
-      raw.select(col(idCol).as("__id"),
-        explode(hashedNgramFeatures(col(textCol))).as("f")))
-    try {
+    // scoring join — materialize it once instead of exploding +
+    // md5-hashing the corpus text twice in one plan; MATERIALIZED result
+    PlanAudit.scope { s =>
+      val grams = s.checkpoint(
+        raw.select(col(idCol).as("__id"),
+          explode(hashedNgramFeatures(col(textCol))).as("f")))
       val tgtCounts = hashedFeatureCounts(target, textCol)
         .withColumnRenamed("c", "ct")
       // identical by construction to hashedFeatureCounts(raw): the same
@@ -1247,12 +1245,12 @@ object TextAnalysis {
         .groupBy("__id")
         .agg(sum(col("__w")).cast("double").as("dsir_logw"),
              count(lit(1)).as("n_features"))
-      graft.api.PlanAudit.checkpoint(
+      s.keep(s.checkpoint(
         raw.join(scored, raw(idCol) === scored("__id"), "left")
           .drop("__id")
           .withColumn("dsir_logw", coalesce(col("dsir_logw"), lit(0.0)))
-          .withColumn("n_features", coalesce(col("n_features"), lit(0L))))
-    } finally graft.api.Dedup.releaseMaterialized(grams)
+          .withColumn("n_features", coalesce(col("n_features"), lit(0L)))))
+    }
   }
 
   /** Freeze the DSIR model: per-feature 6dp-rounded log-ratio terms as

@@ -36,6 +36,13 @@ private[graft] object CommitLog {
 
   def isRewrite(token: String): Boolean = Rewrite.pattern.matcher(token).matches()
 
+  /** A marker's kind: `commit`, `compaction` (a rewrite) or `unknown`
+    * (a foreign file, never live). */
+  def kind(token: String): String =
+    if (isRewrite(token)) "compaction"
+    else if (Plain.pattern.matcher(token).matches()) "commit"
+    else "unknown"
+
   /** The tag of commit group i. */
   def groupTag(i: Int): String = s"g$i"
 

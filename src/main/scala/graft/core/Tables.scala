@@ -290,17 +290,18 @@ object Tables {
       org.apache.spark.sql.types.BooleanType, nullable = false)))
 
   /** Commit history of a staged-publish ingest table: one row per
-    * marker file — (token, mtime_ms, kind ∈ commit|compaction, live).
-    * `live=false` means a compaction superseded the token (its files
-    * are vacuum candidates) or the file is not a protocol marker.
+    * marker file — (token, mtime_ms, kind ∈ commit|compaction|unknown,
+    * live), kind by [[CommitLog.kind]]. `live=false` means a compaction
+    * superseded the token (its files are vacuum candidates) or the file
+    * is not a protocol marker (kind `unknown`).
     * A local frame built from ONE commit-log snapshot, so a marker row
     * can never pair with a liveness flag from another moment, and
     * nothing executes or stays pinned: no release needed. */
   def commitLog(spark: SparkSession, path: String): DataFrame = {
     val log = commitLogOf(spark, path)
     val rows = log.markers.map { m =>
-      org.apache.spark.sql.Row(m.token, m.stampMs,
-        if (m.isRewrite) "compaction" else "commit", log.live(m.token))
+      org.apache.spark.sql.Row(m.token, m.stampMs, CommitLog.kind(m.token),
+        log.live(m.token))
     }
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), commitLogSchema)
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.api.PlanAudit
 import graft.core.{Commit, CommitLog}
 
 /** Job configuration, mirroring the reference CLI's twelve knobs and
@@ -375,12 +376,13 @@ object Ingest {
     // Near-dup suppression FIRST (cfg.suppressNearDups): rows a prior
     // commit (or an earlier row of this batch) already admitted under
     // the same content fingerprint are dropped before anything else
-    // sees them — they neither publish, nor quarantine, nor count.
+    // sees them — they neither publish, nor quarantine, nor count. Its
+    // checkpoints live until the marker lands (or the commit fails).
+    PlanAudit.scope { pins =>
     val dedupInfo =
       if (cfg.suppressNearDups.isEmpty) None
       else Some(CommitPhases.timed(CommitPhases.dedupNs) {
-        suppressNearDupRows(cfg, path, token, batch, fs) })
-    try {
+        suppressNearDupRows(cfg, path, token, batch, fs, pins) })
     // PII scrub FIRST (policy is absolute: quarantined rows persist
     // too, so they must be as redacted as published ones), then the
     // expectations split on the scrubbed frame.
@@ -489,7 +491,7 @@ object Ingest {
       CommitLog.markCommitted(fs, root, token)
     }
     nCommitted
-    } finally dedupInfo.foreach(_.release.unpersist(blocking = false))
+    }
   }
 
   private val partNumberRe = "part-(\\d+)".r
@@ -521,10 +523,7 @@ object Ingest {
     * consulted filter version, and the accounting triple. */
   private final case class DedupDecision(
       kept: DataFrame, keptFps: DataFrame, basedOn: Option[String],
-      nWithin: Long, nSeen: Long, nKept: Long,
-      // the commit-sized checkpoint both frames derive from —
-      // unpersisted by commitBatch after the marker lands
-      release: DataFrame)
+      nWithin: Long, nSeen: Long, nKept: Long)
 
   /** Per-filter-path suppression locks: concurrent commit groups are
     * parallel streaming queries in THIS process, so a JVM lock is the
@@ -568,8 +567,8 @@ object Ingest {
     * publish is indistinguishable from one before the append. */
   private def suppressNearDupRows(cfg: IngestConfig, path: String,
                                   token: String, batch: DataFrame,
-                                  fs: org.apache.hadoop.fs.FileSystem)
-      : DedupDecision = {
+                                  fs: org.apache.hadoop.fs.FileSystem,
+                                  pins: PlanAudit.Scope): DedupDecision = {
     import org.apache.hadoop.fs.Path
     val spark = batch.sparkSession
     val colName = cfg.suppressNearDups.get
@@ -584,80 +583,70 @@ object Ingest {
     // keep-first rank, materialized once (the commit's expensive
     // suppression pass; without a checkpoint every downstream reader
     // re-ran the window shuffle — measured 3.5× input-rate cost).
-    val ranked = batch.withColumn("__fp", fp)
-      .withColumn("__rn", row_number().over(w))
-      .localCheckpoint()
-    try {
-      // Phase B — the critical section: consult, flag, account, pin,
-      // append. Serialized per filter path across commit groups.
-      suppressorLocks.computeIfAbsent(fpPath, _ => new Object).synchronized {
-        // replay: a prior attempt's ledger pins the filter version it
-        // consulted — re-consult THAT state, not whatever is current
-        // now (our own crashed append may already have advanced it)
-        val ledger = new Path(s"$path/_dedup/$token")
-        val replayed = fs.exists(ledger)
-        val basedOn: Option[String] =
-          if (replayed) {
-            val pinned = readLedger(fs, ledger).get("basedOnVersion")
-            // the ledger is written atomically, so a crash cannot leave
-            // one without its pin line; a file that has none was written
-            // or edited outside the protocol. Treating it as "consulted
-            // no filter" would silently disable cross-batch suppression
-            // for the replay and re-admit duplicates forever (review
-            // r16) — fail loudly instead
-            if (pinned.isEmpty) throw new IllegalStateException(
-              s"_dedup ledger $ledger exists but carries no basedOnVersion " +
-                "line (not written by the commit protocol) — delete it to " +
-                "let the replay re-consult the current filter state")
-            pinned.filter(_ != "none")
-          } else graft.api.VersionedIndex.current(spark, fpPath)
-        // flagged reads the CHECKPOINTED rank — one cheap codegen'd
-        // Bloom pass; its own checkpoint is what the staged write
-        // consumes, and the accounting rides that checkpoint's job as
-        // observe metrics. Released by commitBatch after the marker
-        // lands.
-        val acc = org.apache.spark.sql.Observation()
-        val flagged = (basedOn match {
-          case Some(v) => graft.api.Dedup.markSeen(spark, ranked, "__fp",
-            fpPath, "__seen", version = Some(v))
-          case None => ranked.withColumn("__seen", lit(false))
-        }).observe(acc,
-            sum(when(col("__rn") > 1, 1L).otherwise(0L)).as("w"),
-            sum(when(col("__rn") === 1 && col("__seen"), 1L).otherwise(0L)).as("s"),
-            count(lit(1)).as("t"))
-          .localCheckpoint()
-        try {
-          val m = observed(acc)
-          val (nWithin, nSeen, total) = (m("w"), m("s"), m("t"))
-          val keptFlagged = flagged.filter(col("__rn") === 1 && !col("__seen"))
-          val keptFps = keptFlagged.select(col("__fp").as("fp"))
-          val nKept = total - nWithin - nSeen
-          // ledger BEFORE the append (the pin must exist before the
-          // filter can move past it). A replay keeps the ledger it read
-          // its pin from, so no crash of the replay can lose the pin
-          if (!replayed)
-            Commit.writeAtomically(fs, ledger,
-              (s"basedOnVersion=${basedOn.getOrElse("none")}\n" +
-                s"suppressed_within=$nWithin\n" +
-                s"suppressed_seen=$nSeen\n" +
-                s"kept=$nKept").getBytes("UTF-8"))
-          if (nKept > 0)
-            graft.api.Dedup.buildOrAppendSeenFilter(keptFps, "fp", fpPath,
-              expectedItems = cfg.nearDupFilterExpectedItems)
-          DedupDecision(
-            kept = keptFlagged.drop("__fp", "__rn", "__seen"),
-            keptFps = keptFps,
-            basedOn = basedOn, nWithin = nWithin, nSeen = nSeen,
-            nKept = nKept, release = flagged)
-        } catch {
-          // an accounting/append failure must not leak the commit-sized
-          // checkpoint: commitBatch's finally only sees a RETURNED
-          // decision
-          case t: Throwable =>
-            flagged.unpersist(blocking = false); throw t
-        }
-      }
-    } finally ranked.unpersist(blocking = false)
+    val ranked = pins.checkpoint(batch.withColumn("__fp", fp)
+      .withColumn("__rn", row_number().over(w)))
+    // Phase B — the critical section: consult, flag, account, pin,
+    // append. Serialized per filter path across commit groups.
+    suppressorLocks.computeIfAbsent(fpPath, _ => new Object).synchronized {
+      // replay: a prior attempt's ledger pins the filter version it
+      // consulted — re-consult THAT state, not whatever is current
+      // now (our own crashed append may already have advanced it)
+      val ledger = new Path(s"$path/_dedup/$token")
+      val replayed = fs.exists(ledger)
+      val basedOn: Option[String] =
+        if (replayed) {
+          val pinned = readLedger(fs, ledger).get("basedOnVersion")
+          // the ledger is written atomically, so a crash cannot leave
+          // one without its pin line; a file that has none was written
+          // or edited outside the protocol. Treating it as "consulted
+          // no filter" would silently disable cross-batch suppression
+          // for the replay and re-admit duplicates forever (review
+          // r16) — fail loudly instead
+          if (pinned.isEmpty) throw new IllegalStateException(
+            s"_dedup ledger $ledger exists but carries no basedOnVersion " +
+              "line (not written by the commit protocol) — delete it to " +
+              "let the replay re-consult the current filter state")
+          pinned.filter(_ != "none")
+        } else graft.api.VersionedIndex.current(spark, fpPath)
+      // flagged reads the CHECKPOINTED rank — one cheap codegen'd
+      // Bloom pass; its own checkpoint is what the staged write
+      // consumes, and the accounting rides that checkpoint's job as
+      // observe metrics. Released when commitBatch's scope exits,
+      // after the marker lands.
+      val acc = org.apache.spark.sql.Observation()
+      val flagged = pins.checkpoint((basedOn match {
+        case Some(v) => graft.api.Dedup.markSeen(spark, ranked, "__fp",
+          fpPath, "__seen", version = Some(v))
+        case None => ranked.withColumn("__seen", lit(false))
+      }).observe(acc,
+          sum(when(col("__rn") > 1, 1L).otherwise(0L)).as("w"),
+          sum(when(col("__rn") === 1 && col("__seen"), 1L).otherwise(0L)).as("s"),
+          count(lit(1)).as("t")))
+      // flagged has read the rank for the last time
+      pins.release(ranked)
+      val m = observed(acc)
+      val (nWithin, nSeen, total) = (m("w"), m("s"), m("t"))
+      val keptFlagged = flagged.filter(col("__rn") === 1 && !col("__seen"))
+      val keptFps = keptFlagged.select(col("__fp").as("fp"))
+      val nKept = total - nWithin - nSeen
+      // ledger BEFORE the append (the pin must exist before the
+      // filter can move past it). A replay keeps the ledger it read
+      // its pin from, so no crash of the replay can lose the pin
+      if (!replayed)
+        Commit.writeAtomically(fs, ledger,
+          (s"basedOnVersion=${basedOn.getOrElse("none")}\n" +
+            s"suppressed_within=$nWithin\n" +
+            s"suppressed_seen=$nSeen\n" +
+            s"kept=$nKept").getBytes("UTF-8"))
+      if (nKept > 0)
+        graft.api.Dedup.buildOrAppendSeenFilter(keptFps, "fp", fpPath,
+          expectedItems = cfg.nearDupFilterExpectedItems)
+      DedupDecision(
+        kept = keptFlagged.drop("__fp", "__rn", "__seen"),
+        keptFps = keptFps,
+        basedOn = basedOn, nWithin = nWithin, nSeen = nSeen,
+        nKept = nKept)
+    }
   }
 
   /** The `_dedup` suppression ledger of an ingest table: one row per

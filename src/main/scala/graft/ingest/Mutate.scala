@@ -124,10 +124,11 @@ object Mutate {
         "change set is not key-unique on (" + keyCols.mkString(", ") +
           ") - duplicate upsert keys, or a key both upserted and deleted, " +
           "have no deterministic outcome")
-    // cache per the api package contract: the key set drives the
-    // affected-file probe, the anti-join, and the accounting counts
+    // cached for the call (the api package contract): the key set
+    // drives the affected-file probe, the anti-join, and the accounting
     val src = upserts.cache()
     val keys = changeKeys.distinct().cache()
+    try {
     val st = affectedState(spark, path, format) { df =>
       df.join(keys, keyCols, "left_semi")
     }
@@ -173,6 +174,7 @@ object Mutate {
           MutateResult("", Seq.empty, 0L, 0L, 0L)
         else append(spark, path, src, partitionCols, format, compression)
     }
+    } finally { src.unpersist(); keys.unpersist(); () }
   }
 
   /** Continuously apply a change stream to the committed table: each

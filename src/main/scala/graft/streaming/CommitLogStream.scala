@@ -42,17 +42,16 @@ import graft.core.{CommitLog, Tables}
 object CommitLogStream {
 
   /** Streaming frame of newly landed commit markers, one row per
-    * marker file: (token, kind ∈ commit|compaction|unknown,
-    * committed_at). Read through the `graft-commits` source, which
-    * emits every marker file, the EMPTY plain-commit markers included
-    * (a file-content source would emit no row for them). */
+    * marker file: (token, kind ∈ commit|compaction|unknown by
+    * [[CommitLog.kind]], committed_at). Read through the
+    * `graft-commits` source, which emits every marker file, the EMPTY
+    * plain-commit markers included (a file-content source would emit
+    * no row for them). */
   def markers(spark: SparkSession, table: String): DataFrame =
     spark.readStream.format("graft-commits").load(s"$table/_commits")
       .select(
         col("token"),
-        when(col("token").rlike(CommitLog.Rewrite.regex), "compaction")
-          .when(col("token").rlike(CommitLog.Plain.regex), "commit")
-          .otherwise("unknown").as("kind"),
+        udf(CommitLog.kind _).apply(col("token")).as("kind"),
         timestamp_millis(col("mtime_ms")).as("committed_at"))
 
   /** Run `f(batchRows, tokens, epochId)` for every micro-batch of

@@ -82,7 +82,7 @@ class CommitLogSpec extends AnyFunSuite {
     assert(rows == Map(
       "0" -> ("commit", false), "1" -> ("commit", false),
       "g1-0" -> ("commit", false), c -> ("compaction", true),
-      "2" -> ("commit", true), "notes.txt" -> ("commit", false)))
+      "2" -> ("commit", true), "notes.txt" -> ("unknown", false)))
     val snap = CommitLog.read(fs(dir), new Path(dir))
     assert(snap.tokens == Set("0", "1", "g1-0", c, "2"))
     assert(snap.superseded == Set("0", "1", "g1-0"))

@@ -100,12 +100,25 @@ class GraphSpec extends AnyFunSuite {
 
   test("iteration loop releases superseded checkpoint blocks") {
     val edges = (1L to 100L).map(i => (i, i % 100 + 1)).toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.size
+    // ids, not counts: the context cleaner may unpin earlier tests'
+    // garbage meanwhile
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     Graph.pageRank(edges, iters = 8).collect()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    // edges + nodes + outDeg + the final ranks stay; the 7 superseded
-    // iterates must not
-    assert(after - before <= 4, s"leaked checkpoints: ${after - before}")
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    // only the final ranks stay: neither the 7 superseded iterates nor
+    // the loop-invariant edges, nodes and out-degrees
+    assert(added.size == 1, s"leaked checkpoints: ${added.size - 1}")
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  test("labelPropagation leaves only its result pinned") {
+    val edges = (1L to 100L).map(i => (i, i % 100 + 1)).toDF("src", "dst")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val labels = Graph.labelPropagation(edges, iters = 6)
+    labels.collect()
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"leaked checkpoints: ${added.size - 1}")
+    graft.api.Dedup.releaseMaterialized(labels)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 }

@@ -442,6 +442,48 @@ class PlanShapeSpec extends AnyFunSuite {
         s"$q left pinned storage after consume + releaseMaterialized: " +
           spark.sparkContext.getPersistentRDDs.keys.mkString(","))
     }
+    // the same contract called directly on every suppress-and-index and
+    // explain operator, the graph loops and the containment filter:
+    // consume the result, release it, and nothing stays pinned
+    import spark.implicits._
+    import graft.api.{Dedup, Graph, Similarity}
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    val docs = Seq(1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "a completely different sentence about spark jobs").toDF("doc_id", "text")
+    val batch = Seq(3L -> "the quick brown fox jumps over the lazy dog",
+      4L -> "yet another unrelated line of plain text here",
+      5L -> "yet another unrelated line of plain text here").toDF("doc_id", "text")
+    val sigs = Seq(1L -> 0L, 2L -> -1L).toDF("doc_id", "sig")
+    val sigBatch = Seq(3L -> 1L, 4L -> 0x0F0F0F0F0F0F0F0FL, 5L -> 0x0F0F0F0F0F0F0F0EL)
+      .toDF("doc_id", "sig")
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (7L, 9L)).toDF("src", "dst")
+    val (nd, ham, ivf, cont) = (tmp("graft-release-nd"), tmp("graft-release-ham"),
+      tmp("graft-release-ivf"), tmp("graft-release-cont"))
+    Dedup.buildNearDupIndex(docs, nd)
+    Dedup.buildHammingIndex(sigs, ham)
+    Similarity.buildIvfIndex(emb.filter($"vec_id" < 100), ivf, cells = 4)
+    Dedup.buildContainmentIndex(docs, cont)
+    val embBatch = emb.filter($"vec_id" >= 100 && $"vec_id" < 140)
+    for ((name, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "nearDupSuppressExplain" -> (() => Dedup.nearDupSuppressExplain(batch, nd)),
+        "nearDupSuppressAndIndex" -> (() => Dedup.nearDupSuppressAndIndex(batch, nd)),
+        "hammingSuppressExplain" -> (() => Dedup.hammingSuppressExplain(sigBatch, ham)),
+        "hammingSuppressAndIndex" -> (() => Dedup.hammingSuppressAndIndex(sigBatch, ham)),
+        "semanticSuppressExplain" -> (() => Similarity.semanticSuppressExplain(embBatch, ivf)),
+        "semanticSuppressAndIndex" -> (() => Similarity.semanticSuppressAndIndex(embBatch, ivf)),
+        "pageRank" -> (() => Graph.pageRank(edges)),
+        "labelPropagation" -> (() => Graph.labelPropagation(edges)),
+        "connectedComponents" -> (() => Graph.connectedComponents(edges)),
+        "containmentFilterAgainstIndex" ->
+          (() => Dedup.containmentFilterAgainstIndex(batch, cont)))) {
+      val df = op()
+      df.queryExecution.toRdd.count()
+      Dedup.releaseMaterialized(df)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"$name left pinned storage after consume + releaseMaterialized: " +
+          spark.sparkContext.getPersistentRDDs.keys.mkString(","))
+    }
   }
 
   test("q178 hybrid RRF: broadcast query side, keyed fusion, no cartesian") {

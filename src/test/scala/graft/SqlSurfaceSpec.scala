@@ -441,4 +441,18 @@ class SqlSurfaceSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM graft_release_materialized()")
       .collect().head.getInt(0) == 0)
   }
+
+  test("graft_release_materialized leaves a lazy TVF's input checkpoint alone") {
+    import org.apache.spark.sql.functions.col
+    spark.sql("SELECT * FROM graft_release_materialized()").collect()
+    // the caller's own checkpoint, read by a TVF that pins nothing
+    val v = spark.range(100).select(col("id").cast("string").as("c")).localCheckpoint()
+    v.createOrReplaceTempView("lazy_tvf_input")
+    assert(spark.sql("SELECT * FROM graft_column_profile('lazy_tvf_input', 'c')")
+      .collect().head.getAs[Long]("n_rows") == 100L)
+    assert(spark.sql("SELECT released_rdds FROM graft_release_materialized()")
+      .collect().head.getInt(0) == 0, "a lazy TVF registered its input's checkpoint")
+    assert(spark.sql("SELECT count(*) FROM lazy_tvf_input").collect().head.getLong(0) == 100L)
+    graft.api.Dedup.releaseMaterialized(v)
+  }
 }

@@ -118,9 +118,26 @@ class CommitPointSpec extends AnyFunSuite {
     }
   }
 
+  private def unpinAll(): Unit =
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+
+  private def assertNothingPinned(after: String): Unit =
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"$after left pinned RDDs: " +
+        spark.sparkContext.getPersistentRDDs.keys.mkString(","))
+
+  test("a near-dup-suppressing ingest run leaves nothing pinned") {
+    val dir = Files.createTempDirectory("graft-commit-neardup-pins").toString
+    unpinAll()
+    Ingest.runBatchCommitted(spark, IngestConfig(outputPath = Some(dir),
+      parallelism = 2, suppressNearDups = Some("ip_address")), 200, batches = 2)
+    assertNothingPinned("runBatchCommitted with suppressNearDups")
+  }
+
   test("a crash at every rename of a near-dup-suppressing replay keeps the pinned filter version") {
     val cfg = IngestConfig(outputPath = None, parallelism = 1,
       suppressNearDups = Some("ip_address"))
+    unpinAll()
     def table(path: String) = (
       rows(graft.core.Tables.committedView(spark, path)),
       rows(Ingest.dedupLedger(spark, path)))
@@ -146,6 +163,7 @@ class CommitPointSpec extends AnyFunSuite {
       (1L to replayRenames).foreach { n =>
         val path = replayFromCrash()
         commitFailingAt(cfg, path, n) // the replay crashes too
+        assertNothingPinned(s"a replay crashed at rename $n")
         commit(cfg, path)
         assert(table(path) == expected, s"second replay after a replay crash at rename $n")
       }

@@ -199,6 +199,19 @@ class MutateSpec extends AnyFunSuite {
     assert(noop.token == "" && noop.rewrittenRows == 0)
   }
 
+  test("applyChanges leaves nothing cached") {
+    val dir = tmp()
+    import spark.implicits._
+    Mutate.append(spark, dir, spark.range(0, 10, 1, 1).selectExpr("id as k", "id as v"),
+      partitionCols = Seq.empty)
+    spark.catalog.clearCache()
+    Mutate.applyChanges(spark, dir, Seq((1L, 5L), (20L, 1L)).toDF("k", "v"),
+      Some(Seq(Tuple1(2L)).toDF("k")), Seq("k"), partitionCols = Seq.empty)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "applyChanges left its change set cached")
+    assert(Tables.committedView(spark, dir).count() == 10L)
+  }
+
   test("mergeStream with an op column applies upserts and deletes as one CDC commit") {
     val dir = tmp()
     val srcDir = tmp()
