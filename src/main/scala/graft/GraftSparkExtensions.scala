@@ -271,7 +271,9 @@ object GraftSparkExtensions {
     tvf("graft_index_integrity",
       "graft_index_integrity(kind, path) - one-row integrity report " +
         "(n_docs, structure_ok, consistency_ok) for a persisted index; " +
-        "kind in ('neardup', 'hamming', 'ivf', 'containment')") { args =>
+        "kind in ('neardup', 'hamming', 'ivf', 'containment'); on an IVF+PQ " +
+        "index consistency_ok also requires the codes half to hold exactly " +
+        "the vectors half's ids, at the same cells") { args =>
       require(args.length == 2,
         s"graft_index_integrity expects (kind, path), got ${args.length} args")
       val spark = org.apache.spark.sql.SparkSession.active

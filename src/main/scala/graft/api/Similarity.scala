@@ -38,6 +38,11 @@ object Similarity {
   private def roundedAtLeast(cos: Column, threshold: Double): Column =
     cos >= lit(threshold - 2e-6) && round(cos, 6) >= threshold
 
+  /** The `pairs` whose cosine clears `threshold` ([[roundedAtLeast]]),
+    * with `cos` rounded to the 6-decimal grid. */
+  private def clearing(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.filter(roundedAtLeast(col("cos"), threshold)).withColumn("cos", round(col("cos"), 6))
+
   /** Empty result with the top-k output schema (id types preserved). */
   private def emptyTopK(s: org.apache.spark.sql.SparkSession, e: DataFrame): DataFrame = {
     val idType = e.schema("vec_id").dataType
@@ -330,65 +335,21 @@ object Similarity {
       cells, None, seed, maxIter))
 
   /** The complete tree of an IVF index over (vec_id, embedding) rows,
-    * into the version directory `root` — `centroids` and `vectors/`,
-    * plus, with `pq` = (m, ksub), the IVF+PQ half: `codebooks` and
-    * `codes/`. ONE bounded sample feeds both the coarse quantizer and
-    * the residual codebooks (deterministic in (seed, corpus), without
-    * re-running the TakeOrdered sample job per model). Shared by the
-    * builds and [[reindex]]. */
+    * into the version directory `root` ([[IvfIndex.write]]), with `pq` =
+    * (m, ksub) in the IVF+PQ form. ONE bounded sample feeds both the
+    * coarse quantizer and the residual codebooks (deterministic in
+    * (seed, corpus), without re-running the TakeOrdered sample job per
+    * model). Shared by the builds and [[reindex]]. */
   private def writeIvfTree(e: DataFrame, root: String, cells: Int,
                            pq: Option[(Int, Int)], seed: Long, maxIter: Int): Unit = {
-    val spark = e.sparkSession
-    import spark.implicits._
     require(e.head(1).nonEmpty,
       s"cannot build an ${if (pq.isEmpty) "IVF" else "IVF+PQ"} index over an empty corpus")
     val sample = sampleVectors(e, math.max(cells, pq.fold(0)(_._2)), seed, 4096)
     val centroids = lloyds(sample, cells, seed, maxIter)
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/centroids")
-    writeVectors(e, centroids, root, "overwrite")
-    pq.foreach { case (m, ksub) =>
-      val codebooks = fitResidualCodebooks(sample, centroids, m, ksub, seed, maxIter)
-      codebooks.zipWithIndex.flatMap { case (cb, i) =>
-        cb.zipWithIndex.map { case (w, c) => (i, c, w.toSeq) }
-      }.toSeq.toDF("subspace", "codeword", "weights")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/codebooks")
-      // Encode pass from the JUST-WRITTEN cell-partitioned vectors
-      // (sketch-first, r17): the pre-r17 build re-scanned the SOURCE,
-      // re-ran the cells × dim assignment dots over the whole corpus,
-      // and paid a SECOND corpus exchange — but vectors/ already holds
-      // every row cell-local (one file set per cell), so the encode
-      // reads cell-clustered splits, needs no assignment, and shuffles
-      // nothing at all. The stored cell is by construction the same
-      // assignment the second pass would have recomputed.
-      val stored = spark.read.parquet(s"$root/vectors")
-        .select(col("vec_id"), col("embedding"), col("cell"))
-      writeCodes(stored, centroids, codebooks, root, "overwrite",
-        exchangeByCell = false)
-    }
+    IvfIndex.write(e, root, centroids, pq.map { case (m, ksub) =>
+      fitResidualCodebooks(sample, centroids, m, ksub, seed, maxIter)
+    })
   }
-
-  /** The cell-partitioned `vectors/` write shared by the IVF builds
-    * (sketch-first discipline, r17): assignment is one narrow
-    * codegen'd projection over centroid literals — no fit/assignment
-    * joins — and the ONE corpus exchange carries only (vec_id,
-    * embedding, cell); the stored norm is computed POST-shuffle, so a
-    * derived column never rides the wire (recomputing 16–64 mults per
-    * row is cheaper than shuffling 8 more bytes × corpus). The
-    * exchange is keyed on cell so the layout stays one file set per
-    * cell (the compactIvfIndex shape) instead of the ~tasks × cells
-    * files (65k at a 2048-cell 32-thread build) an unkeyed dynamic
-    * write emits. On-disk schema identical to the pre-r17 layout. */
-  private def writeVectors(e: DataFrame, centroids: Array[Array[Float]],
-                           path: String, mode: String): Unit =
-    e.withColumn("cell", nearestCell(col("embedding"), centroids))
-      .repartition(col("cell"))
-      .withColumn("nrm", norm(col("embedding")))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/vectors")
 
   /** Search a persisted IVF index: each query row ranks the stored
     * centroids inline (literal expressions), probes its `nprobe`
@@ -401,32 +362,13 @@ object Similarity {
     * magnitude smaller than the index, which is the point of an index.
     * Output: (vec_id, rank, neighbor_id, cos) — same contract as the
     * other top-k operators. */
-  /** Load a persisted index's coarse quantizer — a KB-sized model. */
-  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Float]] = {
-    val c = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).sortBy(_._1)
-      .map(_._2)
-    require(c.nonEmpty, s"no IVF index at $path")
-    c
-  }
-
-  /** Load a persisted index's PQ codebooks: codebooks(i)(c) = codeword
-    * c of subspace i. */
-  private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Array[Array[Array[Float]]] =
-    spark.read.parquet(s"$path/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-      .groupBy(_._1).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_._2).map(_._3))
-
   def ivfSearchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, idCol: String = "vec_id",
                      vecCol: String = "embedding", k: Int = 3,
                      nprobe: Int = 2): DataFrame = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    require(nprobe >= 1 && nprobe <= centroids.length)
+    val idx = IvfIndex.open(spark, path)
+    idx.requireNprobe(nprobe)
+    val centroids = idx.centroids
     val q = withNorm(queries, idCol, vecCol)
       .select(col("vec_id"), col("embedding"), col("nrm"),
         explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell"))
@@ -445,7 +387,7 @@ object Similarity {
     val probed = queries
       .select(explode(nearestCells(col(vecCol), centroids, nprobe)).as("cell"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val index = spark.read.parquet(s"$root/vectors")
+    val index = idx.vectors
       .filter(col("cell").isin(probed: _*))
       .select(col("cell"), col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("nrm").as("nb"))
@@ -565,122 +507,35 @@ object Similarity {
       emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")), _,
       cells, Some((m, ksub)), seed, maxIter))
 
-  /** The IVF+PQ encode pass: residual codes + reconstruction norm per
-    * vector, written partitionBy(cell) under `path`/codes with the
-    * given save mode ("overwrite" on build, "append" on incremental
-    * add).
-    *
-    * This is the one operator in the package written as mapPartitions
-    * rather than Catalyst expressions, deliberately: the expression
-    * formulation (m × ksub nearest-codeword distances as least(struct)
-    * trees over codebook literals) generates more Java than janino's
-    * 64 KB method limit and silently drops the whole projection to
-    * interpreted evaluation — the expression compiler is the wrong
-    * tool for a fixed KB-sized model applied as dense per-row math.
-    * The closure ships centroids+codebooks (a few KB); per row it runs
-    * the same m·ksub·sub flops a codegen'd projection would, in one
-    * tight loop with zero allocation beyond the output arrays.
-    *
-    * `assigned` must carry (vec_id, embedding, cell) — the caller owns
-    * the assignment (the builds read it back from the cell-partitioned
-    * vectors/ they just wrote; appends compute it inline). With
-    * `exchangeByCell` the input is pre-clustered by one cell exchange
-    * so the partitionBy write emits one file per (task, cell) instead
-    * of every task writing into all `cells` directories; pass false
-    * when the input is ALREADY cell-clustered (a read of vectors/ —
-    * one file set per cell) and the encode pass then shuffles nothing
-    * at all (r17: the build previously paid a redundant post-encode
-    * exchange of the code rows on top of a second corpus exchange). */
-  private def writeCodes(assigned: DataFrame, centroids: Array[Array[Float]],
-                         codebooks: Array[Array[Array[Float]]],
-                         path: String, mode: String,
-                         exchangeByCell: Boolean = true): Unit = {
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val dim = centroids.head.length
-    val sub = dim / m
-    val inRows0 = assigned.select(col("vec_id"), col("embedding"), col("cell"))
-    val inRows =
-      if (exchangeByCell) inRows0.repartition(col("cell")) else inRows0
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("neighbor_id",
-        inRows.schema("vec_id").dataType),
-      org.apache.spark.sql.types.StructField("codes",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.IntegerType, containsNull = false)),
-      org.apache.spark.sql.types.StructField("rnorm",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType)))
-    val (cents, cbs, mm, kk, ss, dd) = (centroids, codebooks, m, ksub, sub, dim)
-    inRows.mapPartitions { rows =>
-      rows.map { r =>
-        val emb = r.getSeq[Float](1)
-        val cell = r.getInt(2)
-        val cent = cents(cell)
-        val codes = new Array[Int](mm)
-        val recon = new Array[Double](dd)
-        var i = 0
-        while (i < mm) {
-          var best = 0; var bd = Double.MaxValue; var c = 0
-          while (c < kk) {
-            val w = cbs(i)(c)
-            var s = 0.0; var j = 0
-            while (j < ss) {
-              val d = (emb(i * ss + j) - cent(i * ss + j)).toDouble - w(j)
-              s += d * d; j += 1
-            }
-            if (s < bd) { bd = s; best = c } // strict < : ties keep the lowest code
-            c += 1
-          }
-          codes(i) = best
-          var j = 0
-          while (j < ss) {
-            recon(i * ss + j) = cent(i * ss + j).toDouble + cbs(i)(best)(j)
-            j += 1
-          }
-          i += 1
-        }
-        var rn = 0.0; var j = 0
-        while (j < dd) { rn += recon(j) * recon(j); j += 1 }
-        org.apache.spark.sql.Row(r.get(0), codes.toSeq, math.sqrt(rn), cell)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-      // no exchange here: mapPartitions preserves the cell-clustered
-      // input partitioning, so the dynamic writer already emits one
-      // file set per cell
-      .write.mode(mode).partitionBy("cell").parquet(s"$path/codes")
-  }
-
-  /** Append vectors to a persisted IVF index WITHOUT refitting: the
-    * stored centroids define cell assignment for the life of the index
-    * (the standard add() contract — a quantizer is fit once, adding
-    * re-trains nothing), so an append is one narrow codegen'd
-    * assignment pass plus an append-mode partitioned write. Searches
-    * see the new vectors on their next run; cell partition pruning
-    * keeps working because the on-disk layout is unchanged. When the
-    * corpus drifts far enough that the fixed cells skew, rebuild —
-    * that trade (cheap adds, periodic rebuild) is how every production
-    * IVF deployment runs. */
+  /** Append vectors to a persisted IVF or IVF+PQ index WITHOUT
+    * refitting: the stored centroids (and, PQ-coded, codebooks) define
+    * cell assignment and codes for the life of the index (the standard
+    * add() contract — a quantizer is fit once, adding re-trains
+    * nothing), so an append is one narrow codegen'd assignment pass
+    * plus an append-mode partitioned write per half: `vectors/`, and
+    * `codes/` when the index's layout holds codebooks — the caller
+    * never picks the form. Searches see the new vectors on their next
+    * run; cell partition pruning keeps working because the on-disk
+    * layout is unchanged. When the corpus drifts far enough that the
+    * fixed cells skew, rebuild — that trade (cheap adds, periodic
+    * rebuild) is how every production IVF deployment runs. */
   def appendToIvfIndex(emb: DataFrame, path: String,
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
-    val spark = emb.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
+    val idx = IvfIndex.open(emb.sparkSession, path)
     val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
     e.head(1).foreach { r =>
       val d = r.getSeq[Float](1).length
-      require(d == centroids.head.length,
-        s"appended dim $d != index dim ${centroids.head.length}")
+      require(d == idx.dim, s"appended dim $d != index dim ${idx.dim}")
     }
-    writeVectors(e, centroids, root, "append")
+    idx.append(e)
   }
 
-  /** Maintain a persisted IVF index FROM A STREAM — index maintenance
-    * at ingest: each micro-batch runs [[appendToIvfIndex]] (narrow
-    * assignment under the frozen quantizer, append-mode partitioned
-    * write), so searches see a batch as soon as its files land and
+  /** Maintain a persisted IVF or IVF+PQ index FROM A STREAM — index
+    * maintenance at ingest: each micro-batch runs [[appendToIvfIndex]]
+    * (narrow assignment under the frozen quantizer, append-mode
+    * partitioned write to every half), so searches see a batch as soon
+    * as its files land and
     * cell pruning never breaks. Returns the started query; the caller
     * owns its lifecycle. Delivery is the standard foreachBatch
     * contract: at-least-once on crash-replay (a replayed batch
@@ -704,7 +559,7 @@ object Similarity {
 
   /** One commit unit of CONTINUOUS SEMANTIC curation —
     * [[graft.api.Dedup.nearDupSuppressAndIndex]] for the embedding
-    * space, against a persisted IVF index:
+    * space, against a persisted IVF or IVF+PQ index:
     *  1. drop every batch vector whose cosine against an
     *     ALREADY-indexed vector (probed at `nprobe` cells; batch ids
     *     excluded from the index side for replay safety) clears
@@ -716,12 +571,15 @@ object Similarity {
     *     vector probes its `nprobe` nearest cells — the exact geometry
     *     step 1 applies to the real index, as if the batch had arrived
     *     one row at a time;
-    *  3. append the survivors under the FROZEN quantizer; a per-batch
+    *  3. append the survivors under the FROZEN quantizer to every half
+    *     the index holds ([[appendToIvfIndex]]'s write: `vectors/`, and
+    *     `codes/` under the frozen codebooks when PQ-coded); a per-batch
     *     idempotence marker (content-hash of the batch's id set, the
     *     ingest `_commits` pattern) makes a replayed batch skip the
     *     append in O(1), and a crash INSIDE a previous append window
-    *     falls back to the id-diff repair (write only ids missing from
-    *     their assigned cells) — so a re-run changes nothing.
+    *     falls back to the id-diff repair (each half writes only the ids
+    *     it lacks at their assigned cells — `vectors` by vec_id, `codes`
+    *     by neighbor_id) — so a re-run changes nothing.
     *
     * Null-embedding rows pass through unsuppressed and unindexed (no
     * evidence either way); zero-norm vectors never flag (cosine
@@ -743,10 +601,8 @@ object Similarity {
                                vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}]")
+    val idx = IvfIndex.open(spark, path)
+    idx.requireNprobe(nprobe)
     // the batch and its probed/assigned projections each feed 2+
     // subplans (probed-cells collect + flag join; both sides of the
     // cell-keyed within-batch join; the append) — materialize once,
@@ -758,19 +614,8 @@ object Similarity {
     PlanAudit.scope { s =>
       val b = s.checkpoint(batch.observe(tokObs, tokAggs.head.as("c"),
         tokAggs(1).as("h1"), tokAggs(2).as("h2")))
-      val q = s.checkpoint(
-        withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
-          .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
-            explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-      val index = spark.read.parquet(s"$root/vectors")
-        .filter(if (probed.isEmpty) lit(false) else col("cell").isin(probed: _*))
-        .join(bIds, col("vec_id") === col("__bid"), "left_anti")
-        .select(col("cell"), col("embedding").as("eb"), col("nrm").as("nb"))
-      val flagged = q.join(index, Seq("cell"))
-        .filter(roundedAtLeast(cosinePrenormed(dot(col("ea"), col("eb")),
-          col("na"), col("nb")), threshold))
+      val (q, index) = flagSides(s, idx, b, idCol, vecCol, nprobe)
+      val flagged = indexPairs(q, index, threshold)
         .select(col("vec_id").as("__dup_id")).distinct()
       // step-1 survivors MATERIALIZE here (r17, guide §5): afterIndex
       // feeds three consumers — the assigned-cell projection, the
@@ -789,55 +634,72 @@ object Similarity {
       // step-1 survivors at their ASSIGNED cell — the indexed role for
       // the within-batch pass, and (restricted to the final survivors)
       // exactly the rows the append writes
-      val aAssigned = s.checkpoint(
-        withNorm(afterIndex.filter(col(vecCol).isNotNull), idCol, vecCol)
-          .withColumn("cell", nearestCell(col("embedding"), centroids)))
-      // step 2 — cell-keyed, never pairwise: the higher-id side
-      // probes via the assignments already computed in q; the
-      // lower-id side sits at its assigned cell, as if indexed
-      val xProbe = q.join(
-        afterIndex.select(col(idCol).as("vec_id")), Seq("vec_id"))
-      val dropped = xProbe.as("x").join(aAssigned.as("y"),
-          col("x.cell") === col("y.cell") &&
-            col("y.vec_id") < col("x.vec_id") &&
-            roundedAtLeast(cosinePrenormed(
-              dot(col("x.ea"), col("y.embedding")),
-              col("x.na"), col("y.nrm")), threshold))
-        .select(col("x.vec_id").as("__drop_id")).distinct()
+      val aAssigned = s.checkpoint(assigned(idx, afterIndex, idCol, vecCol))
+      // step 2 — cell-keyed, never pairwise (see batchPairs)
+      val dropped = batchPairs(q, afterIndex, aAssigned, idCol, threshold)
+        .select(col("vec_id").as("__drop_id")).distinct()
       // the caller's to release, or the scope's if the append fails
       val keep = s.keep(s.checkpoint(afterIndex
         .join(dropped, afterIndex(idCol) === col("__drop_id"), "left_anti")))
       val toIndex = aAssigned.join(
         keep.select(col(idCol).as("vec_id")), Seq("vec_id"))
+        .select(col("vec_id"), col("embedding"))
+      // crash-window repair needs NO committer atomicity, unlike the
+      // band/chunk stores: a vector has exactly ONE row per half
       AppendLedger.appendOnce(spark, path,
           AppendLedger.tokenFromParts(
             tokObs.get("c").asInstanceOf[Long],
             tokObs.get("h1").asInstanceOf[java.math.BigDecimal],
-            tokObs.get("h2").asInstanceOf[java.math.BigDecimal])) { repair =>
-        val rows =
-          if (!repair) toIndex
-          else {
-            // crash-window repair: write only ids missing from their
-            // assigned cells (cell-pruned id-column read). Unlike the
-            // band/chunk stores this needs NO committer atomicity: a
-            // vector has exactly ONE row, at its deterministically
-            // assigned cell, so a doc-granular diff pruned to the
-            // batch's assigned cells is row-exact.
-            val assigned = toIndex.select("cell").distinct()
-              .collect().map(_.getInt(0)).toSeq
-            val have = spark.read.parquet(s"$root/vectors")
-              .filter(if (assigned.isEmpty) lit(false)
-                      else col("cell").isin(assigned: _*))
-              .select(col("vec_id").as("__have")).distinct()
-            toIndex.join(have, col("vec_id") === col("__have"), "left_anti")
-          }
-        rows.select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-          .repartition(col("cell")) // one file set per cell per batch
-          .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
-      }
+            tokObs.get("h2").asInstanceOf[java.math.BigDecimal]))(idx.append(toIndex, _))
       keep
     }
   }
+
+  /** The flag geometry [[semanticSuppressAndIndex]] and its dry run
+    * share: the batch's non-null vectors `q` (vec_id, ea, na) at each of
+    * their `nprobe` nearest cells (materialized: the probed-cell collect
+    * and both joins read it), and the indexed vectors (cell, __iid, eb,
+    * nb) in those cells minus the batch's own ids, so rows a crashed
+    * attempt already appended never flag their own replay. */
+  private def flagSides(s: PlanAudit.Scope, idx: IvfIndex, b: DataFrame, idCol: String,
+                        vecCol: String, nprobe: Int): (DataFrame, DataFrame) = {
+    val q = s.checkpoint(
+      withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
+        .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
+          explode(nearestCells(col("embedding"), idx.centroids, nprobe)).as("cell")))
+    val bIds = b.select(col(idCol).as("__bid")).distinct()
+    val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    (q, idx.vectors
+      .filter(if (probed.isEmpty) lit(false) else col("cell").isin(probed: _*))
+      .join(bIds, col("vec_id") === col("__bid"), "left_anti")
+      .select(col("cell"), col("vec_id").as("__iid"),
+        col("embedding").as("eb"), col("nrm").as("nb")))
+  }
+
+  /** The non-null vectors of `rows` (vec_id, embedding, nrm) at their
+    * assigned cell — the indexed role in the within-batch pass. */
+  private def assigned(idx: IvfIndex, rows: DataFrame, idCol: String,
+                       vecCol: String): DataFrame =
+    withNorm(rows.filter(col(vecCol).isNotNull), idCol, vecCol)
+      .withColumn("cell", nearestCell(col("embedding"), idx.centroids))
+
+  /** Batch-vs-index pairs (vec_id, mid = index id, cos) of [[flagSides]]
+    * that clear `threshold`. */
+  private def indexPairs(q: DataFrame, index: DataFrame, threshold: Double): DataFrame =
+    clearing(q.join(index, Seq("cell")).select(col("vec_id"), col("__iid").as("mid"),
+      cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")).as("cos")), threshold)
+
+  /** Within-batch pairs (vec_id, mid, cos) among the `rows` that clear
+    * `threshold`, cell-keyed, never pairwise: the higher-id vector
+    * probes via its `q` cells, the strictly-lower-id `mid` sits at its
+    * assigned cell (`assignedRows`), as if indexed. */
+  private def batchPairs(q: DataFrame, rows: DataFrame, assignedRows: DataFrame,
+                         idCol: String, threshold: Double): DataFrame =
+    clearing(q.join(rows.select(col(idCol).as("vec_id")), Seq("vec_id")).as("x")
+      .join(assignedRows.as("y"),
+        col("x.cell") === col("y.cell") && col("y.vec_id") < col("x.vec_id"))
+      .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("mid"), cosinePrenormed(
+        dot(col("x.ea"), col("y.embedding")), col("x.na"), col("y.nrm")).as("cos")), threshold)
 
   /** DRY-RUN of [[semanticSuppressAndIndex]] —
     * [[graft.api.Dedup.nearDupSuppressExplain]] for the embedding
@@ -860,59 +722,25 @@ object Similarity {
                               vecCol: String = "embedding"): DataFrame = {
     val spark = batch.sparkSession
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    require(nprobe >= 1 && nprobe <= centroids.length,
-      s"nprobe must be in [1, ${centroids.length}]")
+    val idx = IvfIndex.open(spark, path)
+    idx.requireNprobe(nprobe)
     PlanAudit.scope { s =>
       val b = s.checkpoint(batch)
-      val q = s.checkpoint(
-        withNorm(b.filter(col(vecCol).isNotNull), idCol, vecCol)
-          .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"),
-            explode(nearestCells(col("embedding"), centroids, nprobe)).as("cell")))
-      val bIds = b.select(col(idCol).as("__bid")).distinct()
-      val probed = q.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-      val index = spark.read.parquet(s"$root/vectors")
-        .filter(if (probed.isEmpty) lit(false) else col("cell").isin(probed: _*))
-        .join(bIds, col("vec_id") === col("__bid"), "left_anti")
-        .select(col("cell"), col("vec_id").as("__iid"),
-          col("embedding").as("eb"), col("nrm").as("nb"))
+      val (q, index) = flagSides(s, idx, b, idCol, vecCol, nprobe)
       def bestMatch(pairs: DataFrame): DataFrame = pairs
         .groupBy(col("vec_id"))
         .agg(max(col("cos")).as("score"),
           min(struct((lit(1d) - col("cos")).as("negc"),
             col("mid").as("mid"))).as("w"))
         .select(col("vec_id"), col("w.mid").as("match_id"), col("score"))
-      val idxBest = s.checkpoint(bestMatch(q.join(index, Seq("cell"))
-        .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")),
-          col("na"), col("nb")))
-        // cheap unrounded pre-filter, then the exact rounded compare —
-        // see roundedAtLeast; round() runs only on near-threshold pairs
-        .filter(col("cos") >= lit(threshold - 2e-6))
-        .withColumn("cos", round(col("cos"), 6))
-        .filter(col("cos") >= threshold)
-        .select(col("vec_id"), col("__iid").as("mid"), col("cos"))))
+      val idxBest = s.checkpoint(bestMatch(indexPairs(q, index, threshold)))
       val afterIndex =
         b.join(idxBest, b(idCol) === idxBest("vec_id"), "left_anti")
-      // within-batch candidates: the real pass's cell-keyed geometry —
-      // lower-id side at its assigned cell, higher-id side probing via
-      // the q assignments (each pair appears at most once: y has ONE
+      // within-batch candidates: the real pass's cell-keyed geometry
+      // (each pair appears at most once: the lower-id side has ONE
       // assigned cell, so max/min argmax aggregates are unaffected)
-      val aAssigned = withNorm(afterIndex.filter(col(vecCol).isNotNull),
-          idCol, vecCol)
-        .withColumn("cell", nearestCell(col("embedding"), centroids))
-      val xProbe = q.join(
-        afterIndex.select(col(idCol).as("vec_id")), Seq("vec_id"))
-      val batchBest = bestMatch(xProbe.as("x").join(aAssigned.as("y"),
-          col("x.cell") === col("y.cell") && col("y.vec_id") < col("x.vec_id"))
-        .withColumn("cos", cosinePrenormed(
-          dot(col("x.ea"), col("y.embedding")),
-          col("x.na"), col("y.nrm")))
-        .filter(col("cos") >= lit(threshold - 2e-6))
-        .withColumn("cos", round(col("cos"), 6))
-        .filter(col("cos") >= threshold)
-        .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("mid"),
-          col("cos")))
+      val batchBest = bestMatch(batchPairs(q, afterIndex,
+        assigned(idx, afterIndex, idCol, vecCol), idCol, threshold))
       s.keep(s.checkpoint(b.select(col(idCol))
         .join(idxBest.select(col("vec_id").as(idCol),
           col("match_id").as("__im"), col("score").as("__is")), Seq(idCol), "left")
@@ -936,34 +764,13 @@ object Similarity {
     * cell stores into one file per cell under the SAME frozen
     * quantizer (data and assignments identical — unlike [[reindex]],
     * nothing re-clusters) and commits it as a fresh version; a crash
-    * leaves the old version fully live. Compacts the
-    * PQ `codes` half too when present. Vacuum afterwards to reclaim
+    * leaves the old version fully live. Compacts the PQ `codes` half
+    * too when the layout holds it. Vacuum afterwards to reclaim
     * superseded versions, only once no searcher holds a pre-swap
     * resolution. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val cells = readCentroids(spark, root).length // loud on missing index
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    VersionedIndex.rewrite(spark, path) { vdir =>
-      spark.read.parquet(s"$root/centroids")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
-      spark.read.parquet(s"$root/vectors")
-        .repartition(cells, col("cell"))
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/vectors")
-      if (fs.exists(new Path(root, "codebooks"))) {
-        spark.read.parquet(s"$root/codebooks")
-          .coalesce(1).write.mode("overwrite").parquet(s"$vdir/codebooks")
-        val codes = spark.read.parquet(s"$root/codes")
-        codes.repartition(cells, col("cell"))
-          .select(codes.columns.filterNot(_ == "cell").map(col) :+ col("cell"): _*)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$vdir/codes")
-      }
-    }
-  }
+                      path: String): Unit =
+    IvfIndex.open(spark, path).compact()
 
   /** Near-dup pairs ACROSS two persisted IVF indexes, from stored
     * state alone — [[graft.api.Dedup.crossIndexNearDupPairs]] for the
@@ -988,51 +795,25 @@ object Similarity {
                               threshold: Double = 0.9,
                               nprobe: Int = 2): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val cA = readCentroids(spark, rootA)
-    val dimB = readCentroids(spark, rootB).head.length
-    require(cA.head.length == dimB,
-      s"index dimensions differ: $pathA has ${cA.head.length}, $pathB has " +
-        s"$dimB — cross-index cosines are undefined")
-    require(nprobe >= 1 && nprobe <= cA.length,
-      s"nprobe must be in [1, ${cA.length}]")
-    requireDisjointVecIds(spark, rootA, rootB, pathA, pathB)
-    crossSemanticPairsCore(spark, rootA, rootB, cA, threshold, nprobe)
+    val (a, b) = IvfIndex.both(spark, pathA, pathB, nprobe,
+      "cross-index cosines are undefined")
+    crossSemanticPairsCore(a, b, threshold, nprobe)
   }
 
-  /** [[crossIndexSemanticPairs]] body over ALREADY-resolved, verified
-    * roots. */
-  private def crossSemanticPairsCore(
-      spark: org.apache.spark.sql.SparkSession, rootA: String, rootB: String,
-      cA: Array[Array[Float]], threshold: Double, nprobe: Int): DataFrame = {
-    val a = spark.read.parquet(s"$rootA/vectors")
+  /** [[crossIndexSemanticPairs]] body over indexes [[IvfIndex.both]]
+    * verified. */
+  private def crossSemanticPairsCore(idxA: IvfIndex, idxB: IvfIndex,
+                                     threshold: Double, nprobe: Int): DataFrame = {
+    val a = idxA.vectors
       .select(col("cell"), col("vec_id").as("vec_a"),
         col("embedding").as("ea"), col("nrm").as("na"))
-    val b = spark.read.parquet(s"$rootB/vectors")
+    val b = idxB.vectors
       .select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
         col("nrm").as("nb"),
-        explode(nearestCells(col("embedding"), cA, nprobe)).as("cell"))
-    b.join(a, Seq("cell"))
-      .withColumn("cos", cosinePrenormed(dot(col("ea"), col("eb")),
-        col("na"), col("nb")))
-      // cheap unrounded pre-filter before the exact rounded compare —
-      // see roundedAtLeast; identical pairs, round() off the hot path
-      .filter(col("cos") >= lit(threshold - 2e-6))
-      .withColumn("cos", round(col("cos"), 6))
-      .filter(col("cos") >= threshold)
-      .select(col("vec_a"), col("vec_b"), col("cos"))
-  }
-
-  private def requireDisjointVecIds(spark: org.apache.spark.sql.SparkSession,
-                                    rootA: String, rootB: String,
-                                    pathA: String, pathB: String): Unit = {
-    val shared = spark.read.parquet(s"$rootA/vectors").select("vec_id").distinct()
-      .join(spark.read.parquet(s"$rootB/vectors").select("vec_id").distinct(),
-        "vec_id", "left_semi").count()
-    require(shared == 0,
-      s"$shared vec ids appear in both $pathA and $pathB — cross-index " +
-        "semantics would be ambiguous; re-id one side")
+        explode(nearestCells(col("embedding"), idxA.centroids, nprobe)).as("cell"))
+    clearing(b.join(a, Seq("cell"))
+      .select(col("vec_a"), col("vec_b"),
+        cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb")).as("cos")), threshold)
   }
 
   /** Merge two IVF indexes into a NEW index at `outPath` —
@@ -1057,42 +838,28 @@ object Similarity {
                       pathA: String, pathB: String, outPath: String,
                       threshold: Double = 0.9, nprobe: Int = 2,
                       dedupAcross: Boolean = true): Long = {
-    import org.apache.hadoop.fs.Path
     Dedup.requireDistinctOutPath(spark, outPath, pathA, pathB)
-    val rootA = VersionedIndex.resolveRoot(spark, pathA)
-    val rootB = VersionedIndex.resolveRoot(spark, pathB)
-    val fs = new Path(pathA)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(pathA -> rootA, pathB -> rootB).foreach { case (p, r) =>
-      require(!fs.exists(new Path(r, "codebooks")),
-        s"$p is PQ-coded — its codes are valid only under its own " +
-          "codebooks and cannot re-encode from stored state; rebuild the " +
-          "merged index from vectors instead")
-    }
-    val cA = readCentroids(spark, rootA)
-    val dimB = readCentroids(spark, rootB).head.length
-    require(cA.head.length == dimB,
-      s"index dimensions differ: $pathA has ${cA.head.length}, $pathB has " +
-        s"$dimB — the merged index cannot serve both")
-    require(nprobe >= 1 && nprobe <= cA.length,
-      s"nprobe must be in [1, ${cA.length}]")
-    requireDisjointVecIds(spark, rootA, rootB, pathA, pathB)
+    val (idxA, idxB) = IvfIndex.both(spark, pathA, pathB, nprobe,
+      "the merged index cannot serve both")
+    Seq(idxA, idxB).foreach(i => require(!i.pq,
+      s"${i.path} is PQ-coded — its codes are valid only under its own " +
+        "codebooks and cannot re-encode from stored state; rebuild the " +
+        "merged index from vectors instead"))
     PlanAudit.scope { s =>
       val dropB =
         if (dedupAcross)
-          s.checkpoint(crossSemanticPairsCore(spark, rootA, rootB, cA, threshold, nprobe)
+          s.checkpoint(crossSemanticPairsCore(idxA, idxB, threshold, nprobe)
             .select(col("vec_b").as("__drop_id")).distinct())
         else spark.range(0).select(col("id").as("__drop_id"))
       val nDrop = if (dedupAcross) dropB.count() else 0L
       VersionedIndex.rewrite(spark, outPath) { target =>
-        spark.read.parquet(s"$rootA/centroids")
-          .coalesce(1).write.mode("overwrite").parquet(s"$target/centroids")
-        val a = spark.read.parquet(s"$rootA/vectors")
+        idxA.copyModel(target)
+        val a = idxA.vectors
           .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-        val bKeep = spark.read.parquet(s"$rootB/vectors")
+        val bKeep = idxB.vectors
           .join(dropB, col("vec_id") === col("__drop_id"), "left_anti")
           .select(col("vec_id"), col("embedding"), col("nrm"),
-            nearestCell(col("embedding"), cA).as("cell"))
+            nearestCell(col("embedding"), idxA.centroids).as("cell"))
         a.unionByName(bKeep)
           .repartition(col("cell")) // one file set per cell, not per task x cell
           .write.mode("overwrite").partitionBy("cell").parquet(s"$target/vectors")
@@ -1136,13 +903,17 @@ object Similarity {
     * [[appendStreamToIvfIndex]] path duplicates rows — and every cell
     * id inside [0, cells)), and consistency_ok (the stored norm
     * matches the embedding it rides with, to the 6-decimal grid — a
-    * corrupted norm silently skews every cosine the index serves).
-    * One aggregation over the vectors table; no pair joins. */
+    * corrupted norm silently skews every cosine the index serves — and,
+    * PQ-coded, every `vectors` row has exactly one `codes` row in the
+    * same cell and the reverse: a diverged half makes ADC search miss
+    * live vectors or serve deleted ones). One aggregation over the
+    * vectors table, plus on a PQ index one (id, cell) keyed join of
+    * the two halves; no pair joins. */
   def ivfIndexIntegrity(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val cells = readCentroids(spark, root).length
-    val v = spark.read.parquet(s"$root/vectors")
+    val idx = IvfIndex.open(spark, path)
+    val cells = idx.cells
+    val v = idx.vectors
     val perDoc = v.groupBy("vec_id").agg(count(lit(1)).as("n_rows"))
       .agg(count(lit(1)).as("n_docs"),
         (coalesce(sum(when(col("n_rows") =!= 1L, 1L).otherwise(0L)),
@@ -1153,121 +924,41 @@ object Similarity {
       (coalesce(sum(when(round(col("nrm"), 6) =!=
           round(norm(col("embedding")), 6), 1L)
         .otherwise(0L)), lit(0L)) === 0L).as("norms_match"))
-    perDoc.crossJoin(rowChecks)
+    def rowsPerCell(half: DataFrame, id: String, n: String) =
+      half.groupBy(col(id).as("vec_id"), col("cell")).agg(count(lit(1)).as(n))
+    val checks =
+      if (!idx.pq) rowChecks.withColumn("halves_match", lit(true))
+      else rowChecks.crossJoin(rowsPerCell(v, "vec_id", "nv")
+        .join(rowsPerCell(idx.codes, "neighbor_id", "nc"), Seq("vec_id", "cell"), "full_outer")
+        .agg((coalesce(sum(when(col("nv") === 1L && col("nc") === 1L, 0L)
+          .otherwise(1L)), lit(0L)) === 0L).as("halves_match")))
+    perDoc.crossJoin(checks)
       .select(lit("ivf").as("store"), col("n_docs"),
         (col("ids_unique") && col("cells_in_range")).as("structure_ok"),
-        col("norms_match").as("consistency_ok"))
+        (col("norms_match") && col("halves_match")).as("consistency_ok"))
   }
 
-  /** Delete vectors from a persisted IVF index by id — the lifecycle
-    * step between append and rebuild. Touches ONLY the cells that
-    * actually hold deleted ids: an id-column-pruned scan finds the
-    * affected cells (a handful of ints — no embedding bytes read),
-    * the rewrite reads just those cells back partition-pruned,
-    * anti-joins the delete set, and lands via DYNAMIC partition
-    * overwrite, so untouched cells' files are never listed, read, or
-    * replaced. A cell emptied by the delete is removed explicitly:
-    * dynamic overwrite cannot clear a partition it writes no rows for
-    * — without this, a fully-deleted cell would keep serving its old
-    * vectors (the silent-resurrection failure; IndexLifecycleSpec pins
-    * it). Searches stay correct throughout because the quantizer is
-    * frozen: pruning never routes a query to a cell that could hold a
-    * surviving copy of a deleted id. Returns the number of vectors
-    * deleted. */
+  /** Delete vectors from a persisted IVF or IVF+PQ index by id — the
+    * lifecycle step between append and rebuild. Every half the index's
+    * layout holds drops the ids: `vectors/`, and `codes/` when PQ-coded.
+    * The ids are cast to the stored id type, so any id type the build
+    * accepted deletes. Each half touches ONLY the cells that actually
+    * hold deleted ids: an id-column-pruned scan finds the affected
+    * cells (a handful of ints — no embedding bytes read), the rewrite
+    * reads just those cells back partition-pruned, anti-joins the
+    * delete set, and lands via DYNAMIC partition overwrite, so
+    * untouched cells' files are never listed, read, or replaced. A cell
+    * emptied by the delete is removed explicitly: dynamic overwrite
+    * cannot clear a partition it writes no rows for — without this, a
+    * fully-deleted cell would keep serving its old vectors (the
+    * silent-resurrection failure; IndexLifecycleSpec pins it). Searches
+    * stay correct throughout because the quantizer is frozen: pruning
+    * never routes a query to a cell that could hold a surviving copy of
+    * a deleted id. Returns the number of vectors deleted. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, ids: DataFrame,
-                         idCol: String = "vec_id"): Long = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val del = ids.select(col(idCol).cast("long").as("__del_id")).distinct()
-    deleteByIdFromCellStore(spark, s"$root/vectors", del, "vec_id")
-  }
-
-  /** [[deleteFromIvfIndex]] for the IVF+PQ form: both halves of the
-    * index — the exact-rescore `vectors/` and the ADC `codes/` — drop
-    * the ids, each rewriting only its affected cells. Returns the
-    * vector-half count (the halves hold the same ids by construction;
-    * a discrepancy would mean an interrupted earlier maintenance op,
-    * and the delete converges them for the given ids either way). */
-  def deleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, ids: DataFrame,
-                           idCol: String = "vec_id"): Long = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val del = ids.select(col(idCol).cast("long").as("__del_id")).distinct()
-    val n = deleteByIdFromCellStore(spark, s"$root/vectors", del, "vec_id")
-    deleteByIdFromCellStore(spark, s"$root/codes", del, "neighbor_id")
-    n
-  }
-
-  /** Delete-by-id inside one cell-partitioned parquet store: find the
-    * affected cells off an id-column-pruned scan, rewrite ONLY those
-    * cells (anti-join + dynamic partition overwrite), and explicitly
-    * remove cells the delete empties — dynamic overwrite writes no
-    * rows for them, and a leftover directory would keep serving the
-    * old rows. The survivor frame is checkpointed: the rewrite
-    * overwrites the very partitions it reads (Spark rejects a
-    * file-source self-overwrite) and materialization stays bounded at
-    * the affected cells; released when the rewrite's scope exits. */
-  private def deleteByIdFromCellStore(spark: org.apache.spark.sql.SparkSession,
-                                      store: String, del: DataFrame,
-                                      idName: String): Long = {
-    val rows = spark.read.parquet(store)
-    val affected = rows.select(col(idName), col("cell"))
-      .join(del, col(idName) === del("__del_id"))
-      .groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (affected.isEmpty) return 0L
-    val cells = affected.keys.toSeq
-    PlanAudit.scope { s =>
-      val survivors = s.checkpoint(rows.filter(col("cell").isin(cells: _*))
-        .join(del, col(idName) === del("__del_id"), "left_anti"))
-      val present = survivors.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (present.nonEmpty)
-        survivors.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell").parquet(store)
-      val emptied = cells.filterNot(present)
-      if (emptied.nonEmpty) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        emptied.foreach { c =>
-          val p = new org.apache.hadoop.fs.Path(s"$store/cell=$c")
-          p.getFileSystem(conf).delete(p, true)
-        }
-      }
-    }
-    affected.values.sum
-  }
-
-  /** Append vectors to a persisted IVF+PQ index: raw vectors land in
-    * `vectors/` (exact-rescore half) and their residual codes in
-    * `codes/` (ADC half), both under the index's FROZEN quantizer and
-    * codebooks — same add-don't-refit contract as [[appendToIvfIndex]],
-    * same narrow encode pass as the build. */
-  def appendToIvfPqIndex(emb: DataFrame, path: String,
-                         idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit = {
-    val spark = emb.sparkSession
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    val codebooks = readCodebooks(spark, root)
-    val e = emb.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    e.head(1).foreach { r =>
-      val d = r.getSeq[Float](1).length
-      require(d == centroids.head.length,
-        s"appended dim $d != index dim ${centroids.head.length}")
-    }
-    // one explicit cell exchange feeds BOTH appends (batch-sized, so
-    // the encode re-derives the assignment rather than re-reading the
-    // whole vectors/ store); the encode pass adds no further exchange
-    val assigned = e
-      .withColumn("cell", nearestCell(col("embedding"), centroids))
-      .repartition(col("cell"))
-    assigned.withColumn("nrm", norm(col("embedding")))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$root/vectors")
-    writeCodes(assigned, centroids, codebooks, root, "append",
-      exchangeByCell = false)
-  }
+                         idCol: String = "vec_id"): Long =
+    IvfIndex.open(spark, path).delete(ids, idCol)
 
   /** Search a persistent IVF+PQ index by ASYMMETRIC DISTANCE: the query
     * side stays exact, residents are their PQ codes. Per QUERY row a
@@ -1287,7 +978,7 @@ object Similarity {
                        queries: DataFrame, idCol: String = "vec_id",
                        vecCol: String = "embedding", k: Int = 3,
                        nprobe: Int = 2, rescoreDepth: Int = 0): DataFrame = {
-    val (rankedRaw, probed, q0, root) =
+    val (rankedRaw, probed, q0, idx) =
       pqAdcRanked(spark, path, queries, idCol, vecCol,
         math.max(k, rescoreDepth), nprobe)
     rankedRaw match {
@@ -1295,7 +986,7 @@ object Similarity {
       case Some(ranked) =>
         if (rescoreDepth <= 0)
           ranked.withColumn("cos", round(col("cos"), 6))
-        else pqRescoreTopK(spark, root,
+        else pqRescoreTopK(idx,
           ranked.select(col("vec_id"), col("neighbor_id")), q0, probed, k)
     }
   }
@@ -1314,7 +1005,7 @@ object Similarity {
                            vecCol: String = "embedding", k: Int = 3,
                            nprobe: Int = 2, rescoreDepth: Int = 10): (DataFrame, DataFrame) = {
     require(rescoreDepth >= k, s"rescoreDepth=$rescoreDepth must be >= k=$k")
-    val (rankedRaw, probed, q0, root) =
+    val (rankedRaw, probed, q0, idx) =
       pqAdcRanked(spark, path, queries, idCol, vecCol, rescoreDepth, nprobe)
     rankedRaw match {
       case None => (emptyTopK(spark, q0), emptyTopK(spark, q0))
@@ -1322,7 +1013,7 @@ object Similarity {
         val shared = ranked
         val adc = shared.filter(col("rank") <= k)
           .withColumn("cos", round(col("cos"), 6))
-        val rescored = pqRescoreTopK(spark, root,
+        val rescored = pqRescoreTopK(idx,
           shared.select(col("vec_id"), col("neighbor_id")), q0, probed, k)
         (adc, rescored)
     }
@@ -1332,15 +1023,15 @@ object Similarity {
     * table + probed-cell join + bounded top-`depth` ranking, cos left
     * UNROUNDED so callers derive either output from it. Returns
     * (ranked (None when the query side is empty), probed cells, normed
-    * queries, resolved index root). */
+    * queries, opened index). */
   private def pqAdcRanked(spark: org.apache.spark.sql.SparkSession, path: String,
                           queries: DataFrame, idCol: String, vecCol: String,
                           depth: Int, nprobe: Int)
-      : (Option[DataFrame], Seq[Int], DataFrame, String) = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    require(nprobe >= 1 && nprobe <= centroids.length)
-    val codebooks = readCodebooks(spark, root)
+      : (Option[DataFrame], Seq[Int], DataFrame, IvfIndex) = {
+    val idx = IvfIndex.open(spark, path)
+    val codebooks = idx.codebooks // a plain IVF index fails here, by name
+    idx.requireNprobe(nprobe)
+    val centroids = idx.centroids
     val m = codebooks.length
     val ksub = codebooks.head.length
     val sub = codebooks.head.head.length
@@ -1376,8 +1067,8 @@ object Similarity {
     val probed = queries
       .select(explode(nearestCells(col(vecCol), centroids, nprobe)).as("cell"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    if (probed.isEmpty) return (None, probed, q0, root)
-    val index = spark.read.parquet(s"$root/codes")
+    if (probed.isEmpty) return (None, probed, q0, idx)
+    val index = idx.codes
       .filter(col("cell").isin(probed: _*))
     val adc = (0 until m).map(i =>
         element_at(col("lut"), lit(i * ksub + 1) + element_at(col("codes"), i + 1)))
@@ -1387,16 +1078,15 @@ object Similarity {
       .withColumn("cos", when(col("nrm") * col("rnorm") === 0.0, 0.0)
         .otherwise(adc / (col("nrm") * col("rnorm"))))
       .select(col("vec_id"), col("neighbor_id"), col("cos"))
-    (Some(topK(pairs, depth, roundCos = false)), probed, q0, root)
+    (Some(topK(pairs, depth, roundCos = false)), probed, q0, idx)
   }
 
   /** Exact rescore of the bounded PQ-survivor set: raw vectors come
     * from the index (partition-pruned to the probed cells), queries
     * re-attach by keyed join — both joins keyed, no broadcast hints. */
-  private def pqRescoreTopK(spark: org.apache.spark.sql.SparkSession, root: String,
-                            rankedIds: DataFrame, q0: DataFrame,
+  private def pqRescoreTopK(idx: IvfIndex, rankedIds: DataFrame, q0: DataFrame,
                             probed: Seq[Int], k: Int): DataFrame = {
-    val raw = spark.read.parquet(s"$root/vectors")
+    val raw = idx.vectors
       .filter(col("cell").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"),
         col("embedding").as("eb"), col("nrm").as("nb"))
@@ -1427,13 +1117,13 @@ object Similarity {
     * max_err) where err = 1 − cos(vector, its centroid). */
   def ivfDriftProfile(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame = {
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
+    val idx = IvfIndex.open(spark, path)
+    val centroids = idx.centroids
     val cells = centroids.length
     val cLit = typedLit(centroids.map(_.toSeq).toSeq)
     val cNorms = lit(centroids.map(c =>
       math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble))))
-    val per = spark.read.parquet(s"$root/vectors")
+    val per = idx.vectors
       .withColumn("err", lit(1.0) - cosinePrenormed(
         dot(col("embedding"), element_at(cLit, col("cell") + 1)),
         col("nrm"), element_at(cNorms, col("cell") + 1)))
@@ -1455,21 +1145,16 @@ object Similarity {
     * committed version — concurrent searchers resolve either the old
     * version or the new one, never a half-built tree (the old version's
     * files are untouched until [[vacuumIndexVersions]]). Refits the coarse
-    * quantizer (and, for an IVF+PQ index — detected by the presence of
-    * codebooks — the residual codebooks, preserving m/ksub) on the
+    * quantizer (and, for an IVF+PQ index, the residual codebooks,
+    * preserving m/ksub) on the
     * current corpus. `cells` = 0 keeps the current cell count.
     * Returns the new version name. */
   def reindex(spark: org.apache.spark.sql.SparkSession, path: String,
               cells: Int = 0, seed: Long = 42, maxIter: Int = 5): String = {
-    import org.apache.hadoop.fs.Path
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nCells = if (cells > 0) cells else readCentroids(spark, root).length
-    val pq = if (!fs.exists(new Path(root, "codebooks"))) None else {
-      val cb = readCodebooks(spark, root)
-      Some((cb.length, cb.head.length))
-    }
-    val live = spark.read.parquet(s"$root/vectors")
+    val idx = IvfIndex.open(spark, path)
+    val nCells = if (cells > 0) cells else idx.cells
+    val pq = if (idx.pq) Some((idx.codebooks.length, idx.codebooks.head.length)) else None
+    val live = idx.vectors
       .select(col("vec_id"), col("embedding"))
     VersionedIndex.rewrite(spark, path)(writeIvfTree(live, _, nCells, pq, seed, maxIter))
   }
@@ -1591,9 +1276,9 @@ object Similarity {
       benchIdCol: String = "vec_id", benchVecCol: String = "embedding",
       threshold: Double = 0.9, nprobe: Int = 2): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val root = VersionedIndex.resolveRoot(spark, path)
-    val centroids = readCentroids(spark, root)
-    require(nprobe >= 1 && nprobe <= centroids.length)
+    val idx = IvfIndex.open(spark, path)
+    idx.requireNprobe(nprobe)
+    val centroids = idx.centroids
     val q = withNorm(benchmark.filter(col(benchVecCol).isNotNull),
         benchIdCol, benchVecCol)
       .select(col("vec_id").as("bench_id"), col("embedding"), col("nrm"),
@@ -1603,22 +1288,14 @@ object Similarity {
       .repartition(col("cell"))
     val probed = q.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val index = spark.read.parquet(s"$root/vectors")
+    val index = idx.vectors
       .filter(if (probed.isEmpty) lit(false) else col("cell").isin(probed: _*))
       .select(col("cell"), col("vec_id"),
         col("embedding").as("eb"), col("nrm").as("nb"))
-    q.join(index, Seq("cell"))
-      .withColumn("cos",
-        cosinePrenormed(dot(col("ea"), col("eb")),
-          col("na"), col("nb")))
-      // threshold BEFORE the argmax: the aggregation sees only the
-      // (rare) contaminated candidates, not every scored pair — and the
-      // cheap unrounded pre-filter runs before the exact rounded
-      // compare (roundedAtLeast), so round() never touches the
-      // far-below-threshold bulk
-      .filter(col("cos") >= lit(threshold - 2e-6))
-      .withColumn("cos", round(col("cos"), 6))
-      .filter(col("cos") >= threshold)
+    // threshold BEFORE the argmax: the aggregation sees only the (rare)
+    // contaminated candidates, not every scored pair
+    clearing(q.join(index, Seq("cell")).withColumn("cos",
+        cosinePrenormed(dot(col("ea"), col("eb")), col("na"), col("nb"))), threshold)
       .groupBy(col("vec_id"))
       .agg(max(col("cos")).as("max_bench_cos"),
         min(struct((lit(0d) - col("cos")).as("negc"),
@@ -1710,9 +1387,8 @@ object Similarity {
                              vecCol: String = "embedding",
                              threshold: Double = 0.9): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
-    val centroids = readCentroids(spark, VersionedIndex.resolveRoot(spark, path))
-    semanticDedupAssigned(emb, withNorm(emb, idCol, vecCol), centroids,
-      idCol, threshold)
+    semanticDedupAssigned(emb, withNorm(emb, idCol, vecCol),
+      IvfIndex.open(spark, path).centroids, idCol, threshold)
   }
 
   private def semanticDedupAssigned(emb: DataFrame, e: DataFrame,

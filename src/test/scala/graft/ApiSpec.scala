@@ -532,10 +532,14 @@ class ApiSpec extends AnyFunSuite {
 
     val pq = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString
     Similarity.buildIvfPqIndex(base, pq)
-    Similarity.appendToIvfPqIndex(held, pq)
+    Similarity.appendToIvfIndex(held, pq)
     // both halves grow in lockstep: ADC codes and exact-rescore vectors
     assert(spark.read.parquet(s"$pq/v1/vectors").count() == emb.count())
     assert(spark.read.parquet(s"$pq/v1/codes").count() == emb.count())
+    def pqIds(half: String, id: String) = spark.read.parquet(s"$pq/v1/$half")
+      .select(id).collect().map(_.getLong(0)).toSet
+    assert(pqIds("vectors", "vec_id") == pqIds("codes", "neighbor_id"),
+      "the two halves hold the same ids")
     val adc = Similarity.ivfPqSearchIndex(spark, pq, emb, k = 3, nprobe = 2)
     assert(adc.collect().exists(r => heldIds.contains(r.getLong(2))),
       "appended vectors must surface through ADC search")

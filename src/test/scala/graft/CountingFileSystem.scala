@@ -28,7 +28,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * It is also a failpoint filesystem: with `failRenameAt` = N, the Nth
   * rename since `reset()` throws, and with `failCreateAt` = N the Nth
   * file create, which is how CommitPointSpec crashes an ingest commit
-  * at every rename and create it makes. */
+  * at every rename and create it makes; `createdPaths` says which file
+  * the Nth create was. */
 class CountingFileSystem extends RawLocalFileSystem {
   import CountingFileSystem._
 
@@ -91,6 +92,7 @@ class CountingFileSystem extends RawLocalFileSystem {
       : java.io.OutputStream = {
     if (!append) {
       val n = createCalls.incrementAndGet()
+      createdPaths.add(f.toUri.getPath)
       if (n == failCreateAt.get)
         throw new java.io.IOException(s"injected failure at create $n: $f")
     }
@@ -115,6 +117,8 @@ object CountingFileSystem {
   /** The path part of every listed path or glob pattern since reset(),
     * without a trailing slash. */
   val listedPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** The path part of every file created since reset(), in call order. */
+  val createdPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   /** 0 = no failpoint; N = the Nth rename after reset() throws. */
   val failRenameAt = new AtomicLong(0L)
   /** 0 = no failpoint; N = the Nth create after reset() throws. */
@@ -127,6 +131,6 @@ object CountingFileSystem {
     executorListCalls.set(0L); executorStatCalls.set(0L)
     renameCalls.set(0L); failRenameAt.set(0L)
     createCalls.set(0L); failCreateAt.set(0L)
-    listedPaths.clear()
+    listedPaths.clear(); createdPaths.clear()
   }
 }

@@ -95,7 +95,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-lifecycle-pq").toString
     val emb = graft.core.Tables.embeddings(spark, sf)
     Similarity.buildIvfPqIndex(emb, dir, m = 8, ksub = 8)
-    Similarity.appendToIvfPqIndex(hotBlob(emb, 100), dir)
+    Similarity.appendToIvfIndex(hotBlob(emb, 100), dir)
     assert(Similarity.reindex(spark, dir) == "v2")
     // the rebuilt version carries both halves of the index
     assert(new java.io.File(s"$dir/v2/codebooks").exists())
@@ -250,7 +250,7 @@ class IndexLifecycleSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val s = spark
     import s.implicits._
-    val n = Similarity.deleteFromIvfPqIndex(spark, dir, doomed.toDF("vec_id"))
+    val n = Similarity.deleteFromIvfIndex(spark, dir, doomed.toDF("vec_id"))
     assert(n == doomed.length)
     val liveVec = spark.read.parquet(s"$dir/v1/vectors")
       .select("vec_id").collect().map(_.getLong(0)).toSet

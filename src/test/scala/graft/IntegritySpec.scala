@@ -86,4 +86,23 @@ class IntegritySpec extends AnyFunSuite {
     val (_, _, co2) = report(Similarity.ivfIndexIntegrity(spark, idx))
     assert(!co2)
   }
+
+  test("ivf+pq integrity: a codes cell missing flips consistency_ok") {
+    val dir = Files.createTempDirectory("graft-integ-ivfpq").toString
+    val idx = s"$dir/idx"
+    val r = new java.util.Random(5L)
+    val emb = (1L to 12L).map(i => (i, Array.fill(8)(r.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    Similarity.buildIvfPqIndex(emb, idx, cells = 2, m = 2, ksub = 2)
+    assert(report(Similarity.ivfIndexIntegrity(spark, idx)) == (12L, true, true))
+    // drop every code row of one cell: its vectors lose their ADC half
+    val codes = spark.read.parquet(s"$idx/v1/codes")
+    val cell = codes.select(min("cell")).head().getInt(0)
+    val rows = codes.filter(col("cell") =!= cell).collect()
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.toIndexedSeq), codes.schema)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$idx/v1/codes")
+    val (n, st, co) = report(Similarity.ivfIndexIntegrity(spark, idx))
+    assert(n == 12L && st && !co)
+  }
 }
